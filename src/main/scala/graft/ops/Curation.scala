@@ -208,7 +208,7 @@ object Curation {
 }
 
 /** Bounded n-smallest aggregator over ((strat,) skey, docno) — the
-  * sampling sibling of the search TopKAgg: ascending (skey, docno) order,
+  * sampling sibling of the search TopK collector: ascending (skey, docno) order,
   * buffer capped at n with amortized compaction, mergeable partials.
   */
 final class BoundedMinAgg(n: Int,

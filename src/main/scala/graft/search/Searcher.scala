@@ -85,13 +85,13 @@ final case class SynonymClause(qid: String, qidx: Int,
   *
   *   postings lookup (bucket partition pruning + term predicate pushdown)
   *     → streaming blob decode → per-clause Float partial scores
-  *     → per-(query, doc) sum in deterministic clause order (Float addition
+  *     → one docid-partitioned shuffle, sorted by (query, doc, clause):
+  *       a streaming per-(query, doc) sum in clause order (Float addition
   *       is not associative; SURVEY.md §7.5)
-  *     → per-query bounded top-k via a typed Aggregator (map-side partial
-  *       heaps merge like Lucene's collector, so no single reducer ever
-  *       holds a full candidate list)
-  *     → docno attach (broadcast of the tiny result set against the doc
-  *       table) → dedup-by-docno keeping the first pre-dedup rank
+  *     → in the same stage, a per-partition bounded top-k heap ([[TopK]])
+  *     → driver merge of the ≤ k rows per query per partition, ranks
+  *     → docno attach (one pruned point-lookup job over the doc table)
+  *       → dedup-by-docno keeping the first pre-dedup rank
   *       (`BatchSearch.java:290,296-304` — the FR-collection duplicate
   *       workaround; ranks skip after a duplicate, replicated faithfully).
   *
@@ -498,15 +498,14 @@ final class Searcher(val index: BuiltIndex) {
     * topHits returns a bounded hit list under EVERY key — the "best
     * examples per repository / per language" drill-down a search UI pairs
     * with [[facetCounts]]. `keys` is a (docid, ckey) table from
-    * [[collapseKeyTable]]. The per-(qid, ckey) heap is bounded
-    * ([[TopKAgg]] over a composite group key, map-side partials), so the
-    * shuffle moves ≤ n rows per group per partition; the docno attach
-    * collects the n×|groups| hit list to the driver (r6 — the same row
-    * set the pre-r6 plan broadcast to every executor) and point-looks-up
-    * docnos. Bounded for the facet-shaped key cardinalities this surface
-    * serves; a key column with unbounded cardinality needs a distributed
-    * tail instead (keep the scored join and rank distributively), exactly
-    * as the old broadcast variant did.
+    * [[collapseKeyTable]]. The per-(qid, ckey) heaps are the search
+    * collector's ([[TopK.distributed]]: per-partition heaps merged under a
+    * group key), so the shuffle moves ≤ n rows per group per partition
+    * and only the merged n×|groups| hit list reaches the driver for the
+    * docno attach. That list grows with the key column's cardinality, so
+    * the collect stops at [[Searcher.MaxDriverHits]] + 1 rows and fails
+    * loudly past the bound; an unbounded key column needs a distributed
+    * tail (keep the scored join and rank distributively) instead.
     * Docs without a key row are omitted, like Lucene facets. Returns
     * (qid, ckey, docno, hit_rank) with hit_rank 0-based within the group.
     */
@@ -514,53 +513,52 @@ final class Searcher(val index: BuiltIndex) {
               scorerName: String = "bm25"): DataFrame = {
     requireDistinctQids(topics)
     import spark.implicits._
-    val agg = new TopKAgg(n, implicitly[Encoder[Seq[(Long, Float)]]],
-      implicitly[Encoder[Seq[(Long, Float)]]])
     val keyed = scoredTopics(topics, scorerName).toDF("qid", "docid", "score")
       .join(keys.select($"docid", $"ckey"), Seq("docid"))
       .select(concat($"qid", lit("\u0000"), $"ckey").as("gk"),
         $"docid", $"score")
       .as[(String, Long, Float)]
-    val top = keyed.groupByKey(_._1).agg(agg.toColumn)
-    val ranked = top.collect().flatMap { case (gk, hits) =>
+    val rows = TopK.distributed(keyed, n).take(Searcher.MaxDriverHits + 1)
+    require(rows.length <= Searcher.MaxDriverHits,
+      s"topHits would collect more than ${Searcher.MaxDriverHits} hit rows " +
+        s"(n=$n per (qid, key) group) to the driver; lower n or use a " +
+        "lower-cardinality key column")
+    // each group's rows arrive contiguous and best-first from one partition
+    val ranked = rows.groupBy(_._1).toSeq.flatMap { case (gk, hits) =>
       val i = gk.indexOf('\u0000')
       val (qid, ckey) = (gk.substring(0, i), gk.substring(i + 1))
-      hits.iterator.zipWithIndex.map { case ((docid, _), r) =>
+      hits.iterator.zipWithIndex.map { case ((_, docid, _), r) =>
         (qid, ckey, docid, r.toLong)
       }
     }
-    // r6: driver-side docno attach (see collectTopK) — n×|groups| rows,
-    // bounded for the facet-shaped key cardinalities this surface serves
-    // (the old plan broadcast the same row set).
-    val byId = docnoLookup(ranked.map(_._3).toSeq)
-    ranked.toSeq.flatMap { case (qid, ckey, docid, r) =>
+    val byId = docnoLookup(ranked.map(_._3))
+    ranked.flatMap { case (qid, ckey, docid, r) =>
       byId.get(docid).map(docno => (qid, ckey, docno, r))
     }.toDF("qid", "ckey", "docno", "hit_rank")
   }
 
-  /** docid → docno point lookup for a driver-bounded docid set: grp
-    * partition pruning + docid pushdown over the docid-sorted doc files —
-    * the pruned read the old grp equi-joins achieved, minus the broadcast
-    * build (r6).
+  /** docid → docno point lookup for a driver-bounded docid set, one job:
+    * grp partition pruning over the docid-sorted doc files, plus either a
+    * pushed-down docid literal list (≤ 4,096 ids) or, for a large topic
+    * batch that must never build a million-literal expression tree, an
+    * in-scan filter against a broadcast sorted docid array.
     */
   private def docnoLookup(ids: Seq[Long]): Map[Long, String] = {
     import spark.implicits._
     if (ids.isEmpty) return Map.empty
     val docShift = index.cfg.groupShift + index.cfg.mergeShift
-    val distinctIds = ids.distinct
-    val grps = distinctIds.map(_ >> docShift).distinct
-    // grp partition pruning stays an isin (bounded by the index's grp
-    // count); the docid predicate switches from literals to a broadcast
-    // semi-join above a threshold so a very large topic batch never
-    // builds a million-literal expression tree (review r6) — the row
-    // volume is the same either way, only the plan-side encoding changes
+    val sorted = ids.distinct.sorted.toArray
+    val grps = sorted.map(_ >> docShift).distinct.toSeq
     val base = index.docs.where(col("grp").isin(grps: _*))
-    val looked =
-      if (distinctIds.size <= 4096)
-        base.where(col("docid").isin(distinctIds: _*))
-      else
-        base.join(broadcast(distinctIds.toDF("docid")), Seq("docid"))
-    looked.select("docid", "docno").as[(Long, String)].collect().toMap
+      .select("docid", "docno").as[(Long, String)]
+    if (sorted.length <= 4096)
+      base.where(col("docid").isin(sorted.toSeq: _*)).collect().toMap
+    else {
+      val idsB = spark.sparkContext.broadcast(sorted)
+      try base.filter(t => java.util.Arrays.binarySearch(idsB.value, t._1) >= 0)
+        .collect().toMap
+      finally idsB.destroy()
+    }
   }
 
   /** Per-document numeric boost table for [[searchFunctionScore]]: index
@@ -614,13 +612,6 @@ final class Searcher(val index: BuiltIndex) {
     searchClauses(clauses, k, scorerName, mode = "and")
   }
 
-  /** Retrieval over explicit weighted clauses (≙ boosted TermQuerys — used
-    * by the relevance-feedback path, which emits `term^weight` pairs,
-    * `ExplicitFeedbackM1PreProcessor.java:321-352`). `excludeDocnos` removes
-    * documents per query BEFORE ranking (≙ `FeedbackDocumentFilter`
-    * rewriting TopDocs before ranks are assigned,
-    * `BatchSearch.java:238-249,286-287`).
-    */
   /** Pruning accumulators of the most recent pruned search (blocks decoded
     * vs skipped), populated once the returned Dataset is acted on — for
     * tests and diagnostics.
@@ -1163,8 +1154,9 @@ final class Searcher(val index: BuiltIndex) {
     * — a doc outside the window can never jump in, which is the point
     * (the expensive clause runs against a bounded candidate set). Here
     * the rescorer is a phrase clause batch (the classic "proximity
-    * rescore" pattern). The window lives in the same bounded TopKAgg the
-    * collector uses — never on the driver.
+    * rescore" pattern). The window is the search collector's own heap
+    * ([[TopK.distributed]]: per-partition heaps merged under a qid
+    * group), so it stays on the cluster — never on the driver.
     */
   def searchRescore(topics: Seq[Topic], rescoreClauses: Seq[PhraseClause],
                     window: Int, weight: Float, k: Int = 1000,
@@ -1177,13 +1169,7 @@ final class Searcher(val index: BuiltIndex) {
         WeightedClause(t.qid, i, term, 1.0f)
       }
     }
-    val base = scoredClauses(clauses, window, scorerName)
-    val agg = new TopKAgg(window,
-      implicitly[org.apache.spark.sql.Encoder[Seq[(Long, Float)]]],
-      implicitly[org.apache.spark.sql.Encoder[Seq[(Long, Float)]]])
-    val windowRows: Dataset[(String, Long, Float)] = base
-      .groupByKey(_._1).agg(agg.toColumn)
-      .flatMap { case (qid, hits) => hits.iterator.map(h => (qid, h._1, h._2)) }
+    val windowRows = TopK.distributed(scoredClauses(clauses, window, scorerName), window)
     val ph = scoredClauses(Nil, window, scorerName,
       phraseClauses = rescoreClauses)
     val w = weight
@@ -1484,7 +1470,14 @@ final class Searcher(val index: BuiltIndex) {
     base.where(col("term").rlike(s"^(?:$pattern)$$"))
   }
 
-  /** `mode = "or"` (default): disjunctive bag-of-words, the reference topic
+  /** Retrieval over explicit weighted clauses (≙ boosted TermQuerys — used
+    * by the relevance-feedback path, which emits `term^weight` pairs,
+    * `ExplicitFeedbackM1PreProcessor.java:321-352`). `excludeDocnos` removes
+    * documents per query BEFORE ranking (≙ `FeedbackDocumentFilter`
+    * rewriting TopDocs before ranks are assigned,
+    * `BatchSearch.java:238-249,286-287`).
+    *
+    * `mode = "or"` (default): disjunctive bag-of-words, the reference topic
     * behavior. `mode = "and"`: conjunctive — only docs matching EVERY
     * clause survive (posting-list intersection; available in the
     * reference's SimpleQueryParser `+` syntax but unused by its batch
@@ -2032,11 +2025,15 @@ final class Searcher(val index: BuiltIndex) {
       if (liveSynonyms.isEmpty) None else Some(synPartials)
     ).flatten.reduce(_ union _)
 
-    // Per-(query, doc) scoring. Flat mode: float sum in clause order
-    // (≙ boolean scorer sum) with optional require-all and top-level coord.
-    // Tree mode: BooleanQuery-faithful recursive evaluation of the query's
-    // broadcast tree over the gathered (clause → score) map — queryNorm
-    // folded into the match-all constants here, per-node coord inside eval.
+    // Per-(query, doc) scoring. Flat mode: one docid-partitioned shuffle
+    // (by count, so AQE keeps it on every core) sorted by (qid, docid,
+    // qidx), then a streaming pass that sums each (qid, docid) run in
+    // clause order (≙ boolean scorer sum) with optional require-all / msm
+    // and top-level coord; nothing is buffered per doc and the sort can
+    // spill. Tree mode: BooleanQuery-faithful recursive evaluation of the
+    // query's broadcast tree over the gathered (clause → score) map —
+    // queryNorm folded into the match-all constants here, per-node coord
+    // inside eval.
     val excluded = excludedByQid
     val maxOv = maxOverlap
     val requireAll = conjunctive
@@ -2080,26 +2077,35 @@ final class Searcher(val index: BuiltIndex) {
     val scores: Dataset[(String, Long, Float)] =
       if (trees.nonEmpty) evaluated.filter(t => !t._3.isNaN)
       else filtered
-        .groupByKey(t => (t._1, t._2))
-        .mapGroups[(String, Long, Float)] {
-          (key: (String, Long), it: Iterator[(String, Long, Int, Float)]) =>
-          val arr = it.toArray.sortBy(_._3)
-          // distinct matched clauses: AND needs all of them, msm needs at
-          // least `msm` of them (score stays the plain sum over matches —
-          // bm25's coord is 1, like Lucene's BooleanWeight without coord)
-          val nMatched = arr.iterator.map(_._3).toSet.size
-          val needed =
-            if (requireAll) maxOv.getOrElse(key._1, 0) else msm
-          if (nMatched < needed) {
-            (key._1, key._2, Float.NaN) // dropped below
-          } else {
-            var s = 0.0f
-            arr.foreach(s += _._4)
-            val c = scorer.coord(arr.length, maxOv.getOrElse(key._1, arr.length))
-            (key._1, key._2, if (c == 1.0f) s else s * c)
-          }
+        .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("_2"))
+        .sortWithinPartitions("_1", "_2", "_3")
+        .mapPartitions { rows =>
+          val in = rows.buffered
+          new Iterator[Option[(String, Long, Float)]] {
+            def hasNext: Boolean = in.hasNext
+            def next(): Option[(String, Long, Float)] = {
+              val (qid, docid) = (in.head._1, in.head._2)
+              var s = 0.0f
+              var n = 0 // partial rows: coord's overlap
+              var nMatched = 0 // distinct clauses: AND needs all, msm ≥ msm of them
+              var lastQidx = -1
+              while (in.hasNext && in.head._2 == docid && in.head._1 == qid) {
+                val r = in.next()
+                s += r._4
+                n += 1
+                if (r._3 != lastQidx) { nMatched += 1; lastQidx = r._3 }
+              }
+              val needed = if (requireAll) maxOv.getOrElse(qid, 0) else msm
+              // the score stays the plain sum over matches: bm25's coord is
+              // 1, like Lucene's BooleanWeight without coord
+              if (nMatched < needed) None
+              else {
+                val c = scorerB.coord(n, maxOv.getOrElse(qid, n))
+                Some((qid, docid, if (c == 1.0f) s else s * c))
+              }
+            }
+          }.flatten
         }
-        .filter(t => !t._3.isNaN)
 
     // Match-all complement (tree mode): a query whose tree matches a
     // document containing NO query leaf (pure negation, explicit `*`)
@@ -2176,43 +2182,28 @@ final class Searcher(val index: BuiltIndex) {
   /** Bounded top-k collector + docno attach + first-occurrence docno dedup
     * over a scored (qid, docid, score) stream — the shared tail of every
     * search entry point (score desc, docid asc tie-break — the Lucene
-    * collector contract, SURVEY.md §2.5).
+    * collector contract, SURVEY.md §2.5). The per-partition heaps run in
+    * the stage that produced the scores (for a flat search, the combine
+    * stage); the driver merges their ≤ k rows per topic per partition,
+    * assigns pre-dedup ranks, attaches docnos with one pruned point-lookup
+    * job and drops a docno's later duplicates.
     */
   private[search] def collectTopK(scored: Dataset[(String, Long, Float)],
                                   k: Int, runtag: String): Dataset[RunLine] = {
     import spark.implicits._
-    val agg = new TopKAgg(k, implicitly[Encoder[Seq[(Long, Float)]]],
-      implicitly[Encoder[Seq[(Long, Float)]]])
-    // r6: driver-side tail. The bounded collector's output is ≤ k rows per
-    // topic BY CONSTRUCTION — the exact row set the old plan broadcast to
-    // every executor for the docno join — so collecting it to the driver
-    // is the same O(k·|topics|) footprint with two fewer cluster-side
-    // steps: the docno attach becomes ONE pruned point-lookup job (grp
-    // partition pruning + docid pushdown on the docid-sorted doc files,
-    // the same pruning the old grp equi-join achieved) with no broadcast
-    // build job, and the first-occurrence-by-rank docno dedup — logic
-    // unchanged — runs over the driver rows instead of a third shuffle.
-    val top: Array[(String, Seq[(Long, Float)])] =
-      scored.groupByKey(_._1).agg(agg.toColumn).collect()
-    val ranked: Seq[(String, Long, Int, Float)] = top.toSeq.flatMap {
-      case (qid, hits) =>
-        hits.iterator.zipWithIndex.map { case ((docid, score), i) =>
-          (qid, docid, i, score)
+    val top = TopK.toDriver(scored, k)
+    if (top.isEmpty) return spark.emptyDataset[RunLine]
+    val docnoById = docnoLookup(top.flatMap(_._2.iterator.map(_._1)))
+    val lines: Seq[RunLine] = top.flatMap { case (qid, hits) =>
+      val seen = scala.collection.mutable.HashSet.empty[String]
+      hits.iterator.zipWithIndex.flatMap { case ((docid, score), rank) =>
+        // inner-join semantics: a docid absent from the doc table drops
+        docnoById.get(docid) match {
+          case Some(docno) if seen.add(docno) =>
+            Some(RunLine(qid, docno, rank, score, runtag))
+          case _ => None
         }
-    }
-    if (ranked.isEmpty) return spark.emptyDataset[RunLine]
-    val docnoById: Map[Long, String] = docnoLookup(ranked.map(_._2))
-    val lines: Seq[RunLine] = ranked.groupBy(_._1).toSeq.flatMap {
-      case (_, hits) =>
-        val seen = scala.collection.mutable.HashSet.empty[String]
-        hits.sortBy(_._3).iterator.flatMap { case (qid, docid, rank, score) =>
-          // inner-join semantics: a docid absent from the doc table drops
-          docnoById.get(docid) match {
-            case Some(docno) if seen.add(docno) =>
-              Some(RunLine(qid, docno, rank, score, runtag))
-            case _ => None
-          }
-        }
+      }
     }
     spark.createDataset(lines)
   }
@@ -2255,10 +2246,8 @@ final class Searcher(val index: BuiltIndex) {
           qs.iterator.map { case (qid, boost) => (qid, p.docid, s * boost) }
         }
     }
-    val agg = new TopKAgg(k, implicitly[Encoder[Seq[(Long, Float)]]],
-      implicitly[Encoder[Seq[(Long, Float)]]])
-    partials.groupByKey(_._1).agg(agg.toColumn).collect()
-      .collect { case (qid, hits) if hits.size >= k => qid -> hits.last._2 }
+    TopK.toDriver(partials, k)
+      .collect { case (qid, hits) if hits.length >= k => qid -> hits.last._2 }
       .toMap
   }
 
@@ -2359,7 +2348,9 @@ final class Searcher(val index: BuiltIndex) {
     * qid plus the prefix of partitions actually read (partition-pruned via
     * the grp predicate) — replaces round 4's maxComplementDocs
     * fail-loudly cap with the bounded scan the cap was guarding against
-    * needing. Driver state stays ≤ k docids per complement qid, the same
+    * needing. Each batch runs the search collector ([[TopK.toDriver]]):
+    * per-partition heaps bring ≤ k rows per qid per partition to the
+    * driver, whose merge keeps ≤ k docids per complement qid — the same
     * magnitude the final collector returns.
     *
     * `evaluated` is the pre-NaN-drop candidate stream: eval-rejected docs
@@ -2383,10 +2374,8 @@ final class Searcher(val index: BuiltIndex) {
     val cands = evaluated.map(t => (t._1, t._2)).toDF("qid", "docid")
     val acc = scala.collection.mutable.LinkedHashMap(
       complementQids.map { case (q, s) => q -> (s, Vector.empty[Long]) }: _*)
-    // constant score per qid → TopKAgg's (score desc, docid asc) order is
-    // exactly the docid-asc min-k this tail needs, map-side bounded
-    val agg = new TopKAgg(k, implicitly[Encoder[Seq[(Long, Float)]]],
-      implicitly[Encoder[Seq[(Long, Float)]]])
+    // constant score per qid → the collector's (score desc, docid asc)
+    // order is exactly the docid-asc min-k this tail needs
     val excl = excluded
     val tombL = tombstonesBc // deleted docs don't match-all either
     var idx = 0
@@ -2402,7 +2391,7 @@ final class Searcher(val index: BuiltIndex) {
       // closed range prunes exactly the same partitions as isin(gs) while
       // keeping the predicate O(1) literals — a late doubling batch can
       // span thousands of grps, and an In() that size bloats the plan
-      val got = index.docs
+      val got = TopK.toDriver(index.docs
         .where(col("grp") >= gs.head && col("grp") <= gs.last)
         .select(col("docid"))
         .crossJoin(need.toDF("qid", "cscore"))
@@ -2410,10 +2399,7 @@ final class Searcher(val index: BuiltIndex) {
         .select(col("qid"), col("docid"), col("cscore"))
         .as[(String, Long, Float)]
         .filter(t => Searcher.liveDoc(tombL, t._2) &&
-          excl.get(t._1).forall(!_.contains(t._2)))
-        .groupByKey(_._1)
-        .agg(agg.toColumn)
-        .collect()
+          excl.get(t._1).forall(!_.contains(t._2))), k)
       got.foreach { case (q, hits) =>
         val (s, have) = acc(q)
         // batches ascend in docid and each batch's hits arrive docid-asc,
@@ -2445,32 +2431,9 @@ final class Searcher(val index: BuiltIndex) {
     lines.map(l => s"${l.qid} Q0 ${l.docno} ${l.rank} ${l.score} ${l.runtag}")
 }
 
-/** Bounded top-k typed aggregator: buffers stay ≤ 4k entries, partial
-  * buffers merge associatively (map-side combine), final order is
-  * (score desc, docid asc).
-  */
-final class TopKAgg(k: Int,
-                    bufEnc: Encoder[Seq[(Long, Float)]],
-                    outEnc: Encoder[Seq[(Long, Float)]])
-    extends Aggregator[(String, Long, Float), Seq[(Long, Float)], Seq[(Long, Float)]] {
-  private def better(a: (Long, Float), b: (Long, Float)): Boolean =
-    a._2 > b._2 || (a._2 == b._2 && a._1 < b._1)
-  private def compact(s: Seq[(Long, Float)]): Seq[(Long, Float)] =
-    s.sortWith(better).take(k)
-  def zero: Seq[(Long, Float)] = Vector.empty
-  def reduce(buf: Seq[(Long, Float)], in: (String, Long, Float)): Seq[(Long, Float)] = {
-    val b2 = buf :+ ((in._2, in._3))
-    if (b2.size >= 4 * k) compact(b2) else b2
-  }
-  def merge(a: Seq[(Long, Float)], b: Seq[(Long, Float)]): Seq[(Long, Float)] =
-    compact(a ++ b)
-  def finish(buf: Seq[(Long, Float)]): Seq[(Long, Float)] = compact(buf)
-  def bufferEncoder: Encoder[Seq[(Long, Float)]] = bufEnc
-  def outputEncoder: Encoder[Seq[(Long, Float)]] = outEnc
-}
-
 /** Bounded top-k by (key asc, docid asc) — the TopFieldCollector analog of
-  * [[TopKAgg]]: buffers stay ≤ 4k entries, partials merge associatively.
+  * the score collector [[TopK]]: buffers stay ≤ 4k entries, partials
+  * merge associatively.
   */
 final class SortTopKAgg(k: Int,
                         bufEnc: Encoder[Seq[(String, Long)]],
@@ -2495,6 +2458,13 @@ final class SortTopKAgg(k: Int,
 }
 
 object Searcher {
+  /** Most hit rows a driver-side hit list of unbounded group count
+    * ([[Searcher.topHits]]: n × |(qid, key) groups|) may collect before
+    * the call fails loudly — 2^20 rows, about 100 MB of driver heap. A
+    * constant, not a setting: it guards the driver, it is not a tuning knob.
+    */
+  val MaxDriverHits: Int = 1 << 20
+
   /** Per-index-identity term-stat memos (see the instance field): an
     * index snapshot's term statistics are immutable, so every Searcher on
     * the same [[BuiltIndex.statsKey]] shares one memo for the life of the
