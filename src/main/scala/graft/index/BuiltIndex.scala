@@ -3,10 +3,12 @@ package graft.index
 import graft.analysis.AnalyzerConfig
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.charset.StandardCharsets
 import java.util.Properties
+import scala.collection.concurrent.TrieMap
 
 /** Handle on a persisted index directory — the engine-side analog of
   * `DirectoryReader.open(FSDirectory)` (`BatchSearch.java:181-184`). The
@@ -40,6 +42,37 @@ class BuiltIndex(val spark: SparkSession, val dir: String, val cfg: IndexConfig)
   def docs: DataFrame = docsDF
   def postings: DataFrame = postingsDF
   def termStats: DataFrame = termStatsDF
+
+  /** The rows of a term-keyed table — any postings view or [[termStats]] —
+    * for `terms`: the `bucket = hash(term) % buckets` partition filter
+    * prunes parquet directories and the term `IN` is pushed into the scan.
+    * The read side's one user of [[IndexLayout.bucketOf]]. An empty term
+    * set is an empty relation: no scan runs.
+    */
+  def forTerms(table: DataFrame, terms: Iterable[String]): DataFrame = {
+    val ts = terms.toSeq.distinct
+    if (ts.isEmpty) table.where(lit(false))
+    else table.where(col("bucket").isin(ts.map(bucketOf(_, cfg.buckets)).distinct: _*) &&
+      col("term").isin(ts: _*))
+  }
+
+  /** Per-term (docFreq, collectionFreq) of the indexed `terms` (≙ Lucene's
+    * `TermStatistics`, consumed at `BM25.java:61`); absent terms have no
+    * entry. Memoized per [[statsKey]] for the life of the JVM: an index's
+    * term statistics never change, so only terms the memo has not seen —
+    * hits and misses alike — cost one pruned term_stats lookup job.
+    */
+  def termStatsOf(terms: Iterable[String]): Map[String, (Long, Long)] = {
+    val memo = BuiltIndex.statsMemo(statsKey)
+    val ts = terms.toSeq.distinct
+    val missing = ts.filterNot(memo.contains)
+    if (missing.nonEmpty) {
+      forTerms(termStats, missing).select("term", "df", "cf").collect()
+        .foreach(r => memo.put(r.getString(0), Some((r.getLong(1), r.getLong(2)))))
+      missing.foreach(memo.putIfAbsent(_, None)) // negative entries
+    }
+    ts.flatMap(t => memo.get(t).flatten.map(t -> _)).toMap
+  }
 
   /** Postings view for paths that never read positions (scoring, WAND,
     * counting, negation): the position columns are replaced by empty
@@ -152,6 +185,15 @@ class BuiltIndex(val spark: SparkSession, val dir: String, val cfg: IndexConfig)
 
 object BuiltIndex {
   private val PropsFile = IndexLayout.PropsFile
+
+  /** Term-stat memos of [[BuiltIndex.termStatsOf]], one per
+    * [[BuiltIndex.statsKey]]: every handle on the same immutable statistics
+    * surface (fresh searchers, delete overlays) shares one.
+    */
+  private val statsMemos = TrieMap.empty[String, TrieMap[String, Option[(Long, Long)]]]
+
+  private def statsMemo(key: String): TrieMap[String, Option[(Long, Long)]] =
+    statsMemos.getOrElseUpdate(key, TrieMap.empty)
 
   /** grp partition values under one docs directory, sorted ascending. */
   private[graft] def listGrps(spark: SparkSession, docsDir: String): Seq[Long] = {

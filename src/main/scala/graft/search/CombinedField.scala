@@ -2,7 +2,7 @@ package graft.search
 
 import graft.analysis.Analyzer
 import graft.codec.PostingCodec
-import graft.index.{IndexLayout, PostingRun}
+import graft.index.PostingRun
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -82,10 +82,7 @@ object CombinedField {
     // view — no positions, no block metadata in the scan.
     val streams: Seq[DataFrame] = fields.zipWithIndex.map { case ((sr, _, _), i) =>
       val idx = sr.index
-      val buckets = terms.map(IndexLayout.bucketOf(_, idx.cfg.buckets)).distinct
-      idx.postingsDecode
-        .where(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-        .as[PostingRun]
+      idx.forTerms(idx.postingsDecode, terms).as[PostingRun]
         .flatMap { run =>
           PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
             .map(p => (run.term, p.docid, p.tf, p.dl))

@@ -1,9 +1,7 @@
 package graft.search
 
 import graft.analysis.Analyzer
-import graft.index.IndexLayout
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions.col
 
 /** Lucene `MoreLikeThis` analog — "find documents similar to this one",
   * the search-UI companion the reference's stack inherits from Lucene's
@@ -15,8 +13,8 @@ import org.apache.spark.sql.functions.col
   * and [[Searcher.searchClauses]] paths.
   *
   * Scale shape: driver state is ONE document's vocabulary (the corpus
-  * point lookup Feedback already bounds); df comes from the pruned
-  * term_stats lookup; the search is the ordinary distributed clause path.
+  * point lookup Feedback already bounds); df comes from the index's
+  * memoized term-stats lookup; the search is the ordinary distributed clause path.
   */
 object MoreLikeThis {
 
@@ -34,16 +32,11 @@ object MoreLikeThis {
     val (tfs, _) = an.termFreqs(text)
     val tfMap = tfs.toMap
     if (tfMap.isEmpty) return Nil
-    val termSeq = tfMap.keys.toSeq
-    val buckets = termSeq.map(IndexLayout.bucketOf(_, idx.cfg.buckets)).distinct
-    import idx.spark.implicits._
-    val dfs = idx.termStats
-      .where(col("bucket").isin(buckets: _*) && col("term").isin(termSeq: _*))
-      .select(col("term"), col("df")).as[(String, Long)].collect().toMap
+    val dfs = idx.termStatsOf(tfMap.keys)
     val n = idx.stats.max_doc.toDouble
     tfMap.toSeq
       .flatMap { case (t, tf) =>
-        dfs.get(t).map(df => t -> tf * (1.0 + math.log(n / (df + 1).toDouble)))
+        dfs.get(t).map { case (df, _) => t -> tf * (1.0 + math.log(n / (df + 1).toDouble)) }
       }
       .sortBy { case (t, s) => (-s, t) }
       .take(max)

@@ -2,7 +2,7 @@ package graft.search
 
 import graft.analysis.Analyzer
 import graft.codec.PostingCodec
-import graft.index.{BuiltIndex, IndexLayout, PostingRun}
+import graft.index.{BuiltIndex, PostingRun}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
@@ -101,12 +101,6 @@ final case class SynonymClause(qid: String, qidx: Int,
 final class Searcher(val index: BuiltIndex) {
   private val spark: SparkSession = index.spark
   private val analyzer = new Analyzer(index.cfg.analyzer)
-  // term → Some((df, cf)) | None for terms absent from the index — shared
-  // ACROSS Searcher instances per immutable index identity (r6): entries
-  // construct fresh Searchers on the same snapshot (delete overlays,
-  // purge handles), and an index's term statistics never change, so the
-  // memo belongs to the index, not the handle.
-  private val statsCache = Searcher.statsCacheFor(index)
 
   /** Sorted tombstone docids (equality-delete overlay, [[graft.index
     * .Deletes]]), broadcast once per searcher; None on a delete-free index
@@ -121,9 +115,6 @@ final class Searcher(val index: BuiltIndex) {
     else Some(spark.sparkContext.broadcast(t))
   }
 
-  /** Top-k retrieval for a batch of topics. Default k mirrors the
-    * reference's `returnedResultCount` (`LTRSettings.java:14`).
-    */
   // every topic-batch entry point: clause/weight state is keyed (qid,
   // qidx), so two topics sharing a qid would silently blend their clause
   // sets (maxOverlap, requireAll counts, weights) — fail loudly instead
@@ -131,19 +122,54 @@ final class Searcher(val index: BuiltIndex) {
     require(topics.map(_.qid).distinct.size == topics.size,
       s"topics must have distinct qids, got: ${topics.map(_.qid).mkString(", ")}")
 
+  /** ≙ SimpleQueryParser over analyzed text: one unboosted SHOULD clause
+    * per token occurrence, in token order (`BatchSearch.java:189-190,252`).
+    */
+  private def topicClauses(topics: Seq[Topic]): Seq[WeightedClause] =
+    topics.flatMap { t =>
+      analyzer.analyze(t.text).zipWithIndex.map { case (term, i) =>
+        WeightedClause(t.qid, i, term, 1.0f)
+      }
+    }
+
+  /** (qid, term) for each distinct analyzed term of each topic. */
+  private def topicTerms(topics: Seq[Topic]): Seq[(String, String)] =
+    topics.flatMap(t => analyzer.analyze(t.text).distinct.map(term => (t.qid, term)))
+
+  /** term → the distinct keys of its (key, term) pairs. */
+  private def keysByTerm(pairs: Seq[(String, String)]): Map[String, Seq[String]] =
+    pairs.groupBy(_._2).map { case (term, xs) => term -> xs.map(_._1).distinct }
+
+  /** Distinct live (key, docid) pairs of the documents matching each term
+    * of `byTerm` (term → the keys it matches for): the match-only read of
+    * facets, sorted retrieval, adjacency, negation and match counting. The
+    * scan reads docid runs alone ([[BuiltIndex.postingsMatch]]); tombstoned
+    * docs are dropped at decode time. Columns (key, docid).
+    */
+  private def matchPairs(byTerm: Map[String, Seq[String]]): DataFrame = {
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(byTerm)
+    val tombL = tombstonesBc
+    index.forTerms(index.postingsMatch, byTerm.keys)
+      .as[PostingRun]
+      .flatMap { run =>
+        val keys = bc.value(run.term)
+        PostingCodec.decodeDocids(run.ndocs, run.doc_blob)
+          .filter(d => Searcher.liveDoc(tombL, d))
+          .flatMap(d => keys.iterator.map(k => (k, d)))
+      }
+      .toDF("key", "docid").distinct()
+  }
+
+  /** Top-k retrieval for a batch of topics. Default k mirrors the
+    * reference's `returnedResultCount` (`LTRSettings.java:14`).
+    */
   def search(topics: Seq[Topic], k: Int = 1000,
              scorerName: String = "bm25",
              pruning: Boolean = false,
              minShouldMatch: Int = 0): Dataset[RunLine] = {
     requireDistinctQids(topics)
-    // ≙ SimpleQueryParser over analyzed text: one SHOULD clause per token
-    // occurrence, in token order (`BatchSearch.java:189-190,252`).
-    val clauses = topics.flatMap { t =>
-      analyzer.analyze(t.text).zipWithIndex.map { case (term, i) =>
-        WeightedClause(t.qid, i, term, 1.0f)
-      }
-    }
-    searchClauses(clauses, k, scorerName, pruning = pruning,
+    searchClauses(topicClauses(topics), k, scorerName, pruning = pruning,
       minShouldMatch = minShouldMatch)
   }
 
@@ -187,7 +213,8 @@ final class Searcher(val index: BuiltIndex) {
     * float-free. The hit set is the collector's (bounded, ≤ k×|topics|
     * rows on the driver — same point-lookup seam as docno exclusions);
     * the component attach decodes ONLY the query terms' postings,
-    * bucket-pruned and filtered to the explained docids in-row.
+    * bucket-pruned and filtered to the explained docids in-row, and df
+    * comes from the term-stats memo ([[BuiltIndex.termStatsOf]]).
     */
   def explainStats(topics: Seq[Topic], k: Int = 5,
                    scorerName: String = "bm25"): DataFrame = {
@@ -200,8 +227,7 @@ final class Searcher(val index: BuiltIndex) {
       if (hitDocnos.isEmpty) Map.empty
       else index.docs.where(col("docno").isin(hitDocnos: _*))
         .select("docno", "docid").as[(String, Long)].collect().toMap
-    val qterms: Seq[(String, String)] = topics.flatMap(t =>
-      analyzer.analyze(t.text).distinct.map(term => (t.qid, term)))
+    val qterms = topicTerms(topics)
     // (docid → (qid, docno)) pairs for the explained hits, broadcast-sized
     val wanted: Map[Long, Array[(String, String)]] = byQid.toSeq
       .flatMap { case (q, ds) => ds.flatMap(d => ids.get(d).map(id => (id, (q, d)))) }
@@ -210,26 +236,20 @@ final class Searcher(val index: BuiltIndex) {
     val termsByQid: Map[String, Set[String]] =
       qterms.groupBy(_._1).map { case (q, ts) => q -> ts.map(_._2).toSet }
     val termsByQidB = spark.sparkContext.broadcast(termsByQid)
-    val terms = qterms.map(_._2).distinct
-    val buckets = terms.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-    val comp = index.postingsDecode
-      .where(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
+    val dfs: Map[String, Long] =
+      index.termStatsOf(qterms.map(_._2)).map { case (t, (df, _)) => t -> df }
+    index.forTerms(index.postingsDecode, dfs.keys)
       .as[PostingRun]
       .flatMap { run =>
+        val df = dfs(run.term)
         PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
           .flatMap { p =>
             wantedB.value.getOrElse(p.docid, Array.empty[(String, String)])
               .iterator
               .filter { case (q, _) => termsByQidB.value(q).contains(run.term) }
-              .map { case (q, d) => (q, d, run.term, p.tf.toLong, p.dl.toLong) }
+              .map { case (q, d) => (q, d, run.term, p.tf.toLong, p.dl.toLong, df) }
           }
-      }.toDF("qid", "docno", "term", "tf", "dl")
-    val dfs = index.termStats
-      .where(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-      .select(col("term"), col("df").cast("long").as("df"))
-    comp.join(dfs, Seq("term"))
-      .select(col("qid"), col("docno"), col("term"),
-        col("tf"), col("dl"), col("df"))
+      }.toDF("qid", "docno", "term", "tf", "dl", "df")
   }
 
   /** Learning-to-rank feature extraction — the training-data surface a
@@ -269,12 +289,7 @@ final class Searcher(val index: BuiltIndex) {
                                    scorerName: String = "bm25")
       : Dataset[(String, Long, Float)] = {
     requireDistinctQids(topics)
-    val clauses = topics.flatMap { t =>
-      analyzer.analyze(t.text).zipWithIndex.map { case (term, i) =>
-        WeightedClause(t.qid, i, term, 1.0f)
-      }
-    }
-    scoredClauses(clauses, scorerName = scorerName)
+    scoredClauses(topicClauses(topics), scorerName = scorerName)
   }
 
   /** Field-collapsed top-k (≙ Lucene's grouping module /
@@ -289,12 +304,7 @@ final class Searcher(val index: BuiltIndex) {
   def searchCollapsed(topics: Seq[Topic], keys: DataFrame, k: Int = 1000,
                       scorerName: String = "bm25"): Dataset[RunLine] = {
     requireDistinctQids(topics)
-    val clauses = topics.flatMap { t =>
-      analyzer.analyze(t.text).zipWithIndex.map { case (term, i) =>
-        WeightedClause(t.qid, i, term, 1.0f)
-      }
-    }
-    searchClauses(clauses, k, scorerName, collapseKeys = Some(keys))
+    searchClauses(topicClauses(topics), k, scorerName, collapseKeys = Some(keys))
   }
 
   /** Attribute-filtered search (≙ a BooleanQuery FILTER clause over a
@@ -306,12 +316,7 @@ final class Searcher(val index: BuiltIndex) {
   def searchFiltered(topics: Seq[Topic], filter: DataFrame, k: Int = 1000,
                      scorerName: String = "bm25"): Dataset[RunLine] = {
     requireDistinctQids(topics)
-    val clauses = topics.flatMap { t =>
-      analyzer.analyze(t.text).zipWithIndex.map { case (term, i) =>
-        WeightedClause(t.qid, i, term, 1.0f)
-      }
-    }
-    searchClauses(clauses, k, scorerName, filterDocids = Some(filter))
+    searchClauses(topicClauses(topics), k, scorerName, filterDocids = Some(filter))
   }
 
   /** The (docid, ckey) doc-values table for [[searchCollapsed]]: index docs
@@ -341,27 +346,11 @@ final class Searcher(val index: BuiltIndex) {
   def facetCounts(topics: Seq[Topic], keys: DataFrame): DataFrame = {
     requireDistinctQids(topics)
     import spark.implicits._
-    val termQids: Map[String, Seq[String]] = topics
-      .flatMap(t => analyzer.analyze(t.text).distinct.map(_ -> t.qid))
-      .groupBy(_._1).view.mapValues(_.map(_._2).distinct).toMap
+    val termQids = keysByTerm(topicTerms(topics))
     if (termQids.isEmpty)
       return Seq.empty[(String, String, Long)].toDF("qid", "ckey", "n_docs")
-    val buckets =
-      termQids.keySet.map(IndexLayout.bucketOf(_, index.cfg.buckets)).toSeq
-    val bc = spark.sparkContext.broadcast(termQids)
-    val tombL = tombstonesBc
-    val matched = index.postingsMatch
-      .where(col("bucket").isin(buckets: _*) &&
-        col("term").isin(termQids.keys.toSeq: _*))
-      .as[PostingRun]
-      .flatMap { run =>
-        val qids = bc.value(run.term)
-        PostingCodec.decodeDocids(run.ndocs, run.doc_blob)
-          .filter(d => Searcher.liveDoc(tombL, d))
-          .flatMap(d => qids.map(q => (q, d)))
-      }
-      .toDF("qid", "docid").distinct()
-    matched.join(keys, Seq("docid"))
+    matchPairs(termQids).withColumnRenamed("key", "qid")
+      .join(keys, Seq("docid"))
       .groupBy("qid", "ckey").agg(count(lit(1)).as("n_docs"))
   }
 
@@ -375,17 +364,7 @@ final class Searcher(val index: BuiltIndex) {
     import spark.implicits._
     val terms = analyzer.analyze(text).distinct.toSeq
     require(terms.size == 1, s"termDocnos expects one analyzed term, got $terms")
-    val term = terms.head
-    val tombL = tombstonesBc
-    val matched = index.postingsMatch
-      .where(col("bucket") === IndexLayout.bucketOf(term, index.cfg.buckets) &&
-        col("term") === term)
-      .as[PostingRun]
-      .flatMap { run =>
-        PostingCodec.decodeDocids(run.ndocs, run.doc_blob)
-          .filter(d => Searcher.liveDoc(tombL, d))
-      }
-      .toDF("docid")
+    val matched = matchPairs(Map(terms.head -> Seq(terms.head))).select($"docid")
     val docShift = index.cfg.groupShift + index.cfg.mergeShift
     index.docs.select($"docid", $"docno", $"grp")
       .join(matched.withColumn("grp", shiftright($"docid", docShift)),
@@ -400,40 +379,24 @@ final class Searcher(val index: BuiltIndex) {
     * topics' docid runs ([[BuiltIndex.postingsMatch]]). Matching is the
     * disjunctive bag-of-words match of [[search]]; `keys` is a
     * (docid, ckey) table from [[collapseKeyTable]]. Docs without a key row
-    * are omitted (Lucene would sort missing-value docs last). The per-qid
-    * heap is bounded ([[SortTopKAgg]], map-side partials), so the shuffle
-    * moves ≤ 4k rows per partition regardless of match count. Returns
-    * (qid, docno, rank, ckey).
+    * or with a null key are omitted (Lucene would sort missing-value docs
+    * last). The per-qid heap is bounded ([[SortTopKAgg]], map-side
+    * partials), so the shuffle moves ≤ 4k rows per partition regardless of
+    * match count. Returns (qid, docno, rank, ckey).
     */
   def searchSorted(topics: Seq[Topic], keys: DataFrame, k: Int = 1000): DataFrame = {
     requireDistinctQids(topics)
     import spark.implicits._
-    val termQids: Map[String, Seq[String]] = topics
-      .flatMap(t => analyzer.analyze(t.text).distinct.map(_ -> t.qid))
-      .groupBy(_._1).view.mapValues(_.map(_._2).distinct).toMap
+    val termQids = keysByTerm(topicTerms(topics))
     if (termQids.isEmpty)
       return Seq.empty[(String, String, Long, String)]
         .toDF("qid", "docno", "rank", "ckey")
-    val buckets =
-      termQids.keySet.map(IndexLayout.bucketOf(_, index.cfg.buckets)).toSeq
-    val bc = spark.sparkContext.broadcast(termQids)
-    val tombL = tombstonesBc
-    val matched = index.postingsMatch
-      .where(col("bucket").isin(buckets: _*) &&
-        col("term").isin(termQids.keys.toSeq: _*))
-      .as[PostingRun]
-      .flatMap { run =>
-        val qids = bc.value(run.term)
-        PostingCodec.decodeDocids(run.ndocs, run.doc_blob)
-          .filter(d => Searcher.liveDoc(tombL, d))
-          .flatMap(d => qids.map(q => (q, d)))
-      }
-      .toDF("qid", "docid").distinct()
     val agg = new SortTopKAgg(k,
       implicitly[Encoder[Seq[(String, Long)]]],
       implicitly[Encoder[Seq[(String, Long)]]])
-    val top = matched.join(keys.select($"docid", $"ckey"), Seq("docid"))
-      .select($"qid", $"docid", $"ckey")
+    val top = matchPairs(termQids)
+      .join(keys.where($"ckey".isNotNull).select($"docid", $"ckey"), Seq("docid"))
+      .select($"key", $"docid", $"ckey")
       .as[(String, Long, String)]
       .groupByKey(_._1).agg(agg.toColumn)
     // r6: driver-side docno attach (see collectTopK) — the agg output is
@@ -506,15 +469,16 @@ final class Searcher(val index: BuiltIndex) {
     * the collect stops at [[Searcher.MaxDriverHits]] + 1 rows and fails
     * loudly past the bound; an unbounded key column needs a distributed
     * tail (keep the scored join and rank distributively) instead.
-    * Docs without a key row are omitted, like Lucene facets. Returns
-    * (qid, ckey, docno, hit_rank) with hit_rank 0-based within the group.
+    * Docs without a key row or with a null key are omitted, like Lucene
+    * facets. Returns (qid, ckey, docno, hit_rank) with hit_rank 0-based
+    * within the group.
     */
   def topHits(topics: Seq[Topic], keys: DataFrame, n: Int = 3,
               scorerName: String = "bm25"): DataFrame = {
     requireDistinctQids(topics)
     import spark.implicits._
     val keyed = scoredTopics(topics, scorerName).toDF("qid", "docid", "score")
-      .join(keys.select($"docid", $"ckey"), Seq("docid"))
+      .join(keys.where($"ckey".isNotNull).select($"docid", $"ckey"), Seq("docid"))
       .select(concat($"qid", lit("\u0000"), $"ckey").as("gk"),
         $"docid", $"score")
       .as[(String, Long, Float)]
@@ -604,12 +568,7 @@ final class Searcher(val index: BuiltIndex) {
   def searchAnd(topics: Seq[Topic], k: Int = 1000,
                 scorerName: String = "bm25"): Dataset[RunLine] = {
     requireDistinctQids(topics)
-    val clauses = topics.flatMap { t =>
-      analyzer.analyze(t.text).zipWithIndex.map { case (term, i) =>
-        WeightedClause(t.qid, i, term, 1.0f)
-      }
-    }
-    searchClauses(clauses, k, scorerName, mode = "and")
+    searchClauses(topicClauses(topics), k, scorerName, mode = "and")
   }
 
   /** Pruning accumulators of the most recent pruned search (blocks decoded
@@ -840,13 +799,10 @@ final class Searcher(val index: BuiltIndex) {
     require(inputs.nonEmpty, "suggest needs at least one input term")
     require(maxEdits >= 1 && maxEdits <= 4, s"maxEdits out of range: $maxEdits")
     import spark.implicits._
-    // df of the inputs themselves: tiny bucket-pruned point lookup
-    val inBuckets = inputs.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-    val knownDf: Map[String, Long] = index.termStats
-      .where(col("bucket").isin(inBuckets: _*) && col("term").isin(inputs: _*))
-      .select("term", "df").as[(String, Long)].collect().toMap
+    // df of the inputs themselves: the memoized point lookup
+    val knownDf = index.termStatsOf(inputs)
     val active = inputs.distinct
-      .filter(t => knownDf.getOrElse(t, 0L) <= maxQueryFrequency)
+      .filter(t => knownDf.get(t).fold(0L)(_._1) <= maxQueryFrequency)
     val empty = Seq.empty[(String, String, Long, Long, Long)]
       .toDF("q", "suggestion", "dist", "df", "rank")
     if (active.isEmpty) return empty
@@ -891,23 +847,7 @@ final class Searcher(val index: BuiltIndex) {
       require(ts.length == 1, s"filter '$n' must analyze to one term, got ${ts.toSeq}")
       (n, ts.head)
     }
-    val byTerm: Map[String, Array[String]] = termsByName.groupBy(_._2)
-      .map { case (t, xs) => t -> xs.map(_._1).toArray }
-    val buckets =
-      byTerm.keySet.map(IndexLayout.bucketOf(_, index.cfg.buckets)).toSeq
-    val bc = spark.sparkContext.broadcast(byTerm)
-    val tombL = tombstonesBc
-    val matched = index.postingsMatch
-      .where(col("bucket").isin(buckets: _*) &&
-        col("term").isin(byTerm.keys.toSeq: _*))
-      .as[PostingRun]
-      .flatMap { run =>
-        val names = bc.value(run.term)
-        PostingCodec.decodeDocids(run.ndocs, run.doc_blob)
-          .filter(d => Searcher.liveDoc(tombL, d))
-          .flatMap(d => names.iterator.map(n => (n, d)))
-      }
-      .toDF("name", "docid").distinct()
+    val matched = matchPairs(keysByTerm(termsByName)).withColumnRenamed("key", "name")
     matched.as("a")
       .join(matched.as("b"),
         col("a.docid") === col("b.docid") && col("a.name") <= col("b.name"))
@@ -986,16 +926,11 @@ final class Searcher(val index: BuiltIndex) {
       return Seq.empty[(String, String, Long)].toDF("qid", "suggestion", "rank")
     val uniCf: Map[String, Long] =
       ranked.values.flatten.toMap
-    // bigram collection frequencies: one bucket-pruned point lookup on the
+    // bigram collection frequencies: one memoized point lookup on the
     // shingle index for every adjacent pair any sequence uses
-    val pairs = seqs.flatMap { case (_, ws) =>
+    val bigCf: Map[String, Long] = shingleIdx.termStatsOf(seqs.flatMap { case (_, ws) =>
       ws.sliding(2).map(p => p.head + " " + p(1))
-    }.distinct
-    val pairBuckets =
-      pairs.map(IndexLayout.bucketOf(_, shingleIdx.cfg.buckets)).distinct
-    val bigCf: Map[String, Long] = shingleIdx.termStats
-      .where(col("bucket").isin(pairBuckets: _*) && col("term").isin(pairs: _*))
-      .select("term", "cf").as[(String, Long)].collect().toMap
+    }).map { case (pair, (_, cf)) => pair -> cf }
     def log2(x: Double): Double = math.log(x) / math.log(2.0)
     val scoredRows = seqs.map { case (qid, ws) =>
       var score = log2(uniCf(ws.head) / totalT)
@@ -1048,12 +983,7 @@ final class Searcher(val index: BuiltIndex) {
     import spark.implicits._
     val scorer = Scorer.byName(scorerName)
     val stats = CollStats(index.stats.max_doc, index.stats.sum_total_term_freq)
-    val terms = spans.flatMap(s => Seq(s._2, s._3)).distinct
-    val buckets = terms.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-    val dfs: Map[String, (Long, Long)] = index.termStats
-      .where(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-      .select("term", "df", "cf").as[(String, Long, Long)].collect()
-      .map(t => t._1 -> (t._2, t._3)).toMap
+    val dfs = index.termStatsOf(spans.flatMap(s => Seq(s._2, s._3)))
     // span index -> accumulated weight (both terms must be indexed)
     val spanArr = spans.toArray
     val weights: Map[Int, Float] = spanArr.zipWithIndex.collect {
@@ -1067,15 +997,10 @@ final class Searcher(val index: BuiltIndex) {
       .filter { case (_, si) => weights.contains(si) }
       .flatMap { case ((_, ta, tb, _), si) => Seq((ta, si, 0), (tb, si, 1)) }
       .groupBy(_._1).map { case (t, xs) => t -> xs.map(x => (x._2, x._3)).toArray }
-    val sBuckets = slots.keys.toSeq
-      .map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-    val posts = index.postings
-      .where(col("bucket").isin(sBuckets: _*) &&
-        col("term").isin(slots.keys.toSeq: _*))
-      .as[graft.index.PostingRun]
+    val posts = index.forTerms(index.postings, slots.keys).as[PostingRun]
     val occ: Dataset[(Int, Long, Int, Array[Int], Int)] = posts.flatMap { run =>
       val ss = slots(run.term)
-      graft.codec.PostingCodec.decodeBlobs(run.ndocs, run.doc_blob,
+      PostingCodec.decodeBlobs(run.ndocs, run.doc_blob,
           run.tf_blob, run.dl_blob, run.pos_blob)
         .flatMap { p =>
           ss.iterator.map { case (si, slot) => (si, p.docid, slot, p.pos, p.dl) }
@@ -1164,12 +1089,8 @@ final class Searcher(val index: BuiltIndex) {
     requireDistinctQids(topics)
     require(k <= window, s"k=$k exceeds the rescore window=$window")
     import spark.implicits._
-    val clauses = topics.flatMap { t =>
-      analyzer.analyze(t.text).zipWithIndex.map { case (term, i) =>
-        WeightedClause(t.qid, i, term, 1.0f)
-      }
-    }
-    val windowRows = TopK.distributed(scoredClauses(clauses, window, scorerName), window)
+    val windowRows =
+      TopK.distributed(scoredClauses(topicClauses(topics), window, scorerName), window)
     val ph = scoredClauses(Nil, window, scorerName,
       phraseClauses = rescoreClauses)
     val w = weight
@@ -1209,12 +1130,7 @@ final class Searcher(val index: BuiltIndex) {
         WeightedClause(t.qid, i, term, 1.0f)
       }
     }
-    val terms = clauses.map(_.term).distinct
-    val buckets = terms.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-    val dfs: Map[String, (Long, Long)] = index.termStats
-      .where(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-      .select("term", "df", "cf").as[(String, Long, Long)].collect()
-      .map(t => t._1 -> (t._2, t._3)).toMap
+    val dfs = index.termStatsOf(clauses.map(_.term))
     val plan: Map[String, (Float, Array[(String, Int)])] =
       clauses.groupBy(_.term).flatMap { case (term, cs) =>
         dfs.get(term).map { case (df, cf) =>
@@ -1223,20 +1139,14 @@ final class Searcher(val index: BuiltIndex) {
         }
       }
     if (plan.isEmpty) return spark.emptyDataset[RunLine]
-    val pBuckets = plan.keys.toSeq
-      .map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-    val posts = index.postingsDecode
-      .where(col("bucket").isin(pBuckets: _*) &&
-        col("term").isin(plan.keys.toSeq: _*))
-      .as[graft.index.PostingRun]
+    val posts = index.forTerms(index.postingsDecode, plan.keys).as[PostingRun]
     val scorerB = scorer
     val statsB = stats
     val tombL = tombstonesBc
     val tie = tieBreaker
     val partials: Dataset[(String, Long, Int, Float)] = posts.flatMap { run =>
       val (idf, cs) = plan(run.term)
-      graft.codec.PostingCodec.decodeBlobs(run.ndocs, run.doc_blob,
-          run.tf_blob, run.dl_blob)
+      PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
         .flatMap { p =>
           if (!Searcher.liveDoc(tombL, p.docid)) Iterator.empty
           else {
@@ -1272,26 +1182,9 @@ final class Searcher(val index: BuiltIndex) {
     require(negativeBoost > 0.0f && negativeBoost < 1.0f,
       s"negativeBoost must demote, got $negativeBoost")
     import spark.implicits._
-    val clauses = topics.flatMap { t =>
-      analyzer.analyze(t.text).zipWithIndex.map { case (term, i) =>
-        WeightedClause(t.qid, i, term, 1.0f)
-      }
-    }
-    val scores = scoredClauses(clauses, k, scorerName)
-    val negByTerm: Map[String, Array[String]] =
-      negTerms.groupBy(_._2).map { case (t, qs) => t -> qs.map(_._1).distinct.toArray }
-    val negBuckets = negByTerm.keys.toSeq
-      .map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-    val negPosts = index.postingsDecode
-      .where(col("bucket").isin(negBuckets: _*) &&
-        col("term").isin(negByTerm.keys.toSeq: _*))
-      .as[graft.index.PostingRun]
-    val negPairs = negPosts.flatMap { run =>
-      val qids = negByTerm(run.term)
-      graft.codec.PostingCodec.decodeBlobs(run.ndocs, run.doc_blob,
-          run.tf_blob, run.dl_blob)
-        .flatMap(p => qids.iterator.map(q => (q, p.docid)))
-    }.toDF("qid", "docid").distinct() // two neg terms ⇒ one demotion, not two rows
+    val scores = scoredClauses(topicClauses(topics), k, scorerName)
+    // distinct pairs: two neg terms ⇒ one demotion, not two rows
+    val negPairs = matchPairs(keysByTerm(negTerms)).toDF("qid", "docid")
       .withColumn("neg", lit(true))
     val nb = negativeBoost
     val demoted = scores.toDF("qid", "docid", "score")
@@ -1307,8 +1200,9 @@ final class Searcher(val index: BuiltIndex) {
     * top-`topN` indexed terms with that prefix by popularity — collection
     * frequency desc, term asc. The candidate set is the same pruned
     * prefix scan as [[expandPrefix]] (pushed StringStartsWith + len
-    * bound), weights attach via the bucket-pruned term_stats lookup;
-    * driver state is the expansion cap, like every other vocab query.
+    * bound), weights attach via ONE memoized term-stats lookup for the
+    * whole batch ([[BuiltIndex.termStatsOf]]); driver state is the
+    * expansion cap, like every other vocab query.
     * Returns (qid, term, cf, rank).
     */
   def complete(prefixes: Seq[(String, String)], topN: Int = 5): DataFrame = {
@@ -1316,23 +1210,15 @@ final class Searcher(val index: BuiltIndex) {
     require(prefixes.map(_._1).distinct.size == prefixes.size,
       "duplicate qids in one completion batch")
     import spark.implicits._
-    val rows: Seq[(String, String, Long, Long)] = prefixes.flatMap {
-      case (qid, prefix) =>
-        val exp = expandPrefix(prefix)
-        if (exp.isEmpty) Nil
-        else {
-          val buckets = exp.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-          val cfs: Map[String, Long] = index.termStats
-            .where(col("bucket").isin(buckets: _*) && col("term").isin(exp: _*))
-            .select("term", "cf").as[(String, Long)].collect().toMap
-          exp.flatMap(t => cfs.get(t).map(t -> _))
-            .sortBy { case (t, cf) => (-cf, t) }
-            .take(topN)
-            .zipWithIndex
-            .map { case ((t, cf), r) => (qid, t, cf, r.toLong) }
-        }
-    }
-    rows.toDF("qid", "term", "cf", "rank")
+    val exps = prefixes.map { case (qid, prefix) => qid -> expandPrefix(prefix) }
+    val stats = index.termStatsOf(exps.flatMap(_._2))
+    exps.flatMap { case (qid, exp) =>
+      exp.flatMap(t => stats.get(t).map { case (_, cf) => t -> cf })
+        .sortBy { case (t, cf) => (-cf, t) }
+        .take(topN)
+        .zipWithIndex
+        .map { case ((t, cf), r) => (qid, t, cf, r.toLong) }
+    }.toDF("qid", "term", "cf", "rank")
   }
 
   /** SpanFirstQuery: the term restricted to the first `end` positions of
@@ -1354,12 +1240,7 @@ final class Searcher(val index: BuiltIndex) {
     import spark.implicits._
     val scorer = Scorer.byName(scorerName)
     val stats = CollStats(index.stats.max_doc, index.stats.sum_total_term_freq)
-    val terms = spans.map(_._2).distinct
-    val buckets = terms.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-    val dfs: Map[String, (Long, Long)] = index.termStats
-      .where(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-      .select("term", "df", "cf").as[(String, Long, Long)].collect()
-      .map(t => t._1 -> (t._2, t._3)).toMap
+    val dfs = index.termStatsOf(spans.map(_._2))
     // term -> [(qid, end, idf)], only for indexed terms
     val byTerm: Map[String, Array[(String, Int, Float)]] = spans
       .flatMap { case (qid, t, end) =>
@@ -1369,18 +1250,13 @@ final class Searcher(val index: BuiltIndex) {
       }
       .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).toArray }
     if (byTerm.isEmpty) return spark.emptyDataset[RunLine]
-    val sBuckets = byTerm.keys.toSeq
-      .map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-    val posts = index.postings
-      .where(col("bucket").isin(sBuckets: _*) &&
-        col("term").isin(byTerm.keys.toSeq: _*))
-      .as[graft.index.PostingRun]
+    val posts = index.forTerms(index.postings, byTerm.keys).as[PostingRun]
     val scorerB = scorer
     val statsB = stats
     val tombL = tombstonesBc
     val scored: Dataset[(String, Long, Float)] = posts.flatMap { run =>
       val qs = byTerm(run.term)
-      graft.codec.PostingCodec.decodeBlobs(run.ndocs, run.doc_blob,
+      PostingCodec.decodeBlobs(run.ndocs, run.doc_blob,
           run.tf_blob, run.dl_blob, run.pos_blob)
         .flatMap { p =>
           qs.iterator.flatMap { case (qid, end, idf) =>
@@ -1621,28 +1497,13 @@ final class Searcher(val index: BuiltIndex) {
         excludeDocnos.map { case (qid, ds) => qid -> ds.flatMap(ids.get) }
       }
 
-    val phraseTerms = phraseClauses.flatMap(_.terms.map(_._1)).distinct
-    val blendTerms = blendedClauses.flatMap(_.terms.map(_._1)).distinct
-    val synTerms = synonymClauses.flatMap(_.terms).distinct
-    val terms =
-      (clauses.map(_.term) ++ phraseTerms ++ blendTerms ++ synTerms).distinct
-    val buckets = terms.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
     val stats = CollStats(index.stats.max_doc, index.stats.sum_total_term_freq)
 
-    // Per-term (docFreq, collectionFreq) from the tiny pruned term_stats
-    // lookup (≙ TermStatistics consumed at `BM25.java:61`), memoized per
-    // searcher — an index is immutable, so repeated topics skip the job.
-    val missing = terms.filterNot(statsCache.contains)
-    if (missing.nonEmpty) {
-      val missingBuckets = missing.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-      index.termStats
-        .where(col("bucket").isin(missingBuckets: _*) && col("term").isin(missing: _*))
-        .select("term", "df", "cf").as[(String, Long, Long)].collect()
-        .foreach(t => statsCache.put(t._1, Some((t._2, t._3))))
-      missing.foreach(t => statsCache.putIfAbsent(t, None)) // negative cache
-    }
-    val dfs: Map[String, (Long, Long)] =
-      terms.flatMap(t => statsCache.get(t).flatten.map(t -> _)).toMap
+    // Per-term (docFreq, collectionFreq) of every clause term, memoized per
+    // index: repeated topics skip the lookup job.
+    val dfs = index.termStatsOf(clauses.map(_.term) ++
+      phraseClauses.flatMap(_.terms.map(_._1)) ++
+      blendedClauses.flatMap(_.terms.map(_._1)) ++ synonymClauses.flatMap(_.terms))
 
     // Per-query normalization (1.0 for all reference models, which override
     // queryNorm — only classic TF-IDF uses it): sumOfSquaredWeights over
@@ -1747,9 +1608,8 @@ final class Searcher(val index: BuiltIndex) {
     // Postings lookup: bucket prunes parquet partitions, term pushes
     // down. Only the WAND main pass reads block metadata — the exhaustive
     // decode drops those columns from the scan too (postingsDecode).
-    val posts = (if (prune) index.postingsScoring else index.postingsDecode)
-      .where(col("bucket").isin(buckets: _*) && col("term").isin(plan.keys.toSeq: _*))
-      .as[PostingRun]
+    val posts = index.forTerms(
+      if (prune) index.postingsScoring else index.postingsDecode, plan.keys).as[PostingRun]
 
     // Block-max WAND (north-star extension, SURVEY.md §2.7): a seed pass
     // scores each query's cheapest (lowest-df) clause exactly, giving a
@@ -1832,11 +1692,7 @@ final class Searcher(val index: BuiltIndex) {
             pc.terms.map { case (term, off) => (term, pi, offsU.indexOf(off)) }
           }.distinct
             .groupBy(_._1).map { case (t, xs) => t -> xs.map(x => (x._2, x._3)).toArray }
-        val pTerms = termSlots.keys.toSeq
-        val pBuckets = pTerms.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-        val pPosts = index.postings
-          .where(col("bucket").isin(pBuckets: _*) && col("term").isin(pTerms: _*))
-          .as[PostingRun]
+        val pPosts = index.forTerms(index.postings, termSlots.keys).as[PostingRun]
         val occ: Dataset[(Int, Long, Int, Array[Int], Int)] = pPosts.flatMap { run =>
           val slots = termSlots(run.term)
           PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob,
@@ -1922,11 +1778,7 @@ final class Searcher(val index: BuiltIndex) {
         val byTerm: Map[String, Array[(String, Int, Float)]] = liveExpansions
           .flatMap(e => e.terms.map(t => (t, (e.qid, e.qidx, e.boost * qnByQid(e.qid)))))
           .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).toArray }
-        val eTerms = byTerm.keys.toSeq
-        val eBuckets = eTerms.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-        val ePosts = index.postingsDecode
-          .where(col("bucket").isin(eBuckets: _*) && col("term").isin(eTerms: _*))
-          .as[PostingRun]
+        val ePosts = index.forTerms(index.postingsDecode, byTerm.keys).as[PostingRun]
         ePosts.flatMap { run =>
           val cs = byTerm(run.term)
           PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
@@ -1951,11 +1803,7 @@ final class Searcher(val index: BuiltIndex) {
               (term, (bc.qid, bc.qidx, r, w, fb * bc.boost * qnByQid(bc.qid)))
             }
           }.groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).toArray }
-        val bTerms = byTerm.keys.toSeq
-        val bBuckets = bTerms.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-        val bPosts = index.postingsDecode
-          .where(col("bucket").isin(bBuckets: _*) && col("term").isin(bTerms: _*))
-          .as[PostingRun]
+        val bPosts = index.forTerms(index.postingsDecode, byTerm.keys).as[PostingRun]
         val scorerB = scorer
         val statsB = stats
         bPosts.flatMap { run =>
@@ -1990,11 +1838,7 @@ final class Searcher(val index: BuiltIndex) {
           .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).toArray }
         val synBoost: Map[(String, Int), Float] = liveSynonyms
           .map(sc => (sc.qid, sc.qidx) -> sc.boost * qnByQid(sc.qid)).toMap
-        val sTerms = byTerm.keys.toSeq
-        val sBuckets = sTerms.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-        val sPosts = index.postingsDecode
-          .where(col("bucket").isin(sBuckets: _*) && col("term").isin(sTerms: _*))
-          .as[PostingRun]
+        val sPosts = index.forTerms(index.postingsDecode, byTerm.keys).as[PostingRun]
         val weights = synWeights
         val scorerB = scorer
         val statsB = stats
@@ -2121,28 +1965,16 @@ final class Searcher(val index: BuiltIndex) {
 
     // MUST_NOT terms (a true sibling MUST_NOT clause in one BooleanQuery —
     // the programmatic hard exclusion, unlike SimpleQueryParser's `-`
-    // match-all wrap): decode the negated terms' postings into (qid, docid)
-    // pairs and anti-join the score stream — excluded docs never reach the
-    // collector (ranks close up, unlike the post-hoc feedback filter).
+    // match-all wrap): the negated terms' live (qid, docid) pairs
+    // ([[matchPairs]]) anti-join the score stream — excluded docs never
+    // reach the collector (ranks close up, unlike the post-hoc feedback
+    // filter).
     val scoresKept: Dataset[(String, Long, Float)] =
       if (negTerms.isEmpty) scoresWithComplement
-      else {
-        val negByTerm: Map[String, Array[String]] =
-          negTerms.groupBy(_._2).map { case (t, qs) => t -> qs.map(_._1).distinct.toArray }
-        val negTermSeq = negByTerm.keys.toSeq
-        val negBuckets = negTermSeq.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-        val negPosts = index.postingsDecode
-          .where(col("bucket").isin(negBuckets: _*) && col("term").isin(negTermSeq: _*))
-          .as[PostingRun]
-        val negPairs = negPosts.flatMap { run =>
-          val qids = negByTerm(run.term)
-          PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
-            .flatMap(p => qids.iterator.map(q => (q, p.docid)))
-        }.toDF("qid", "docid")
-        scoresWithComplement.toDF("qid", "docid", "score")
-          .join(negPairs, Seq("qid", "docid"), "left_anti")
-          .as[(String, Long, Float)]
-      }
+      else scoresWithComplement.toDF("qid", "docid", "score")
+        .join(matchPairs(keysByTerm(negTerms)).toDF("qid", "docid"),
+          Seq("qid", "docid"), "left_anti")
+        .as[(String, Long, Float)]
 
     // Attribute filter (≙ a BooleanQuery FILTER clause over a doc-values
     // field — code search's "lang:java" facet): a semi-join removes
@@ -2229,10 +2061,7 @@ final class Searcher(val index: BuiltIndex) {
       val (df, cf) = dfs(t)
       t -> scorer.termWeight(df, cf, stats)
     }.toMap
-    val buckets = byTerm.keys.map(IndexLayout.bucketOf(_, index.cfg.buckets)).toSeq.distinct
-    val posts = index.postingsDecode
-      .where(col("bucket").isin(buckets: _*) && col("term").isin(byTerm.keys.toSeq: _*))
-      .as[PostingRun]
+    val posts = index.forTerms(index.postingsDecode, byTerm.keys).as[PostingRun]
     // tombstoned docs must not seed θ: a deleted doc's score could push the
     // lower bound past the true live kth score and over-prune live blocks
     val tombL = tombstonesBc
@@ -2293,34 +2122,20 @@ final class Searcher(val index: BuiltIndex) {
 
   /** Distinct matching DOCNOS per query under OR semantics (≙ the
     * `TopDocs.totalHits` the reference's paging demo prints,
-    * `SearchFiles.java:149-150`): a pruned postings decode → docno attach →
-    * distinct count, no scoring, no driver-side doc sets. Counting docnos
-    * (not docids) keeps the paging invariant `totalHits ≥ collected hits`
-    * on indexes holding re-ingested duplicate docnos (streaming deltas /
-    * compactions), because [[search]] dedups its output by docno.
+    * `SearchFiles.java:149-150`): a docid-run decode ([[matchPairs]]) →
+    * docno attach → distinct count, no scoring, no driver-side doc sets.
+    * Counting docnos (not docids) keeps the paging invariant `totalHits ≥
+    * collected hits` on indexes holding re-ingested duplicate docnos
+    * (streaming deltas / compactions), because [[search]] dedups its
+    * output by docno.
     */
   def matchCounts(topics: Seq[Topic]): Map[String, Long] = {
     import spark.implicits._
     requireDistinctQids(topics)
-    val pairs = topics.flatMap(t =>
-      analyzer.analyze(t.text).distinct.map(term => (t.qid, term)))
+    val pairs = topicTerms(topics)
     if (pairs.isEmpty) return topics.map(_.qid -> 0L).toMap
-    val byTerm: Map[String, Array[String]] =
-      pairs.groupBy(_._2).map { case (t, qs) => t -> qs.map(_._1).distinct.toArray }
-    val termSeq = byTerm.keys.toSeq
-    val buckets = termSeq.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
     val docShift = index.cfg.groupShift + index.cfg.mergeShift
-    val tombL = tombstonesBc
-    val matched = index.postingsDecode
-      .where(col("bucket").isin(buckets: _*) && col("term").isin(termSeq: _*))
-      .as[PostingRun]
-      .flatMap { run =>
-        val qids = byTerm(run.term)
-        PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
-          .filter(p => Searcher.liveDoc(tombL, p.docid))
-          .flatMap(p => qids.iterator.map(q => (q, p.docid)))
-      }.toDF("qid", "docid").distinct()
-    val counts = matched
+    val counts = matchPairs(keysByTerm(pairs)).toDF("qid", "docid")
       .withColumn("grp", shiftright(col("docid"), docShift))
       .join(index.docs.select(col("docid"), col("docno"), col("grp")),
         Seq("docid", "grp"))
@@ -2464,19 +2279,6 @@ object Searcher {
     * constant, not a setting: it guards the driver, it is not a tuning knob.
     */
   val MaxDriverHits: Int = 1 << 20
-
-  /** Per-index-identity term-stat memos (see the instance field): an
-    * index snapshot's term statistics are immutable, so every Searcher on
-    * the same [[BuiltIndex.statsKey]] shares one memo for the life of the
-    * JVM.
-    */
-  private val statsCaches = scala.collection.concurrent.TrieMap
-    .empty[String, scala.collection.concurrent.TrieMap[String, Option[(Long, Long)]]]
-
-  private[search] def statsCacheFor(index: BuiltIndex)
-      : scala.collection.concurrent.TrieMap[String, Option[(Long, Long)]] =
-    statsCaches.getOrElseUpdate(index.statsKey,
-      new scala.collection.concurrent.TrieMap[String, Option[(Long, Long)]]())
 
   /** True iff `docid` survives the broadcast tombstone overlay (None =
     * delete-free index). Static so executor closures capture only the

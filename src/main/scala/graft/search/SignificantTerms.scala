@@ -1,9 +1,7 @@
 package graft.search
 
 import graft.analysis.Analyzer
-import graft.index.IndexLayout
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** Significant-terms aggregation (≙ Elasticsearch `significant_terms`):
   * for each query, the terms whose document frequency in the query's HIT
@@ -19,7 +17,7 @@ import org.apache.spark.sql.functions.col
   * Scale shape: the hit set is the collector's (≤ k docs/query on the
   * driver — the explainStats/MLT point-lookup seam), the foreground term
   * vectors re-analyze just those k documents via the corpus point
-  * lookup, and background dfs come from the bucket-pruned term_stats
+  * lookup, and background dfs come from the index's memoized term-stats
   * lookup. Nothing here scans the corpus or the postings.
   */
 object SignificantTerms {
@@ -49,11 +47,8 @@ object SignificantTerms {
       ds.flatMap(d => termsByDoc(d).map(t => (q, t)))
     }.groupBy(identity).map { case (k, v) => k -> v.size.toLong }
 
-    val allTerms = fg.keys.map(_._2).toSeq.distinct
-    val buckets = allTerms.map(IndexLayout.bucketOf(_, idx.cfg.buckets)).distinct
-    val bg: Map[String, Long] = idx.termStats
-      .where(col("bucket").isin(buckets: _*) && col("term").isin(allTerms: _*))
-      .select(col("term"), col("df")).as[(String, Long)].collect().toMap
+    val bg: Map[String, Long] =
+      idx.termStatsOf(fg.keys.map(_._2)).map { case (t, (df, _)) => t -> df }
 
     val n = idx.stats.max_doc
     val rows: Seq[(String, String, Long, Long, Long, Long)] =

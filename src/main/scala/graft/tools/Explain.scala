@@ -25,21 +25,13 @@ object Explain {
 
     println("\n========== postings lookup (should show bucket partition pruning + term PushedFilters) ==========")
     val terms = Seq("hash", "join", "merge")
-    val buckets = terms.map(graft.index.IndexLayout.bucketOf(_, idx.cfg.buckets))
-    idx.postings
-      .where(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-      .explain("formatted")
+    idx.forTerms(idx.postings, terms).explain("formatted")
 
     println("\n========== scoring postings view (pos_blob/block_pos_off pruned out of ReadSchema) ==========")
-    idx.postingsScoring
-      .where(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-      .explain("formatted")
+    idx.forTerms(idx.postingsScoring, terms).explain("formatted")
 
     println("\n========== term_stats lookup ==========")
-    idx.termStats
-      .where(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-      .select("term", "df")
-      .explain("formatted")
+    idx.forTerms(idx.termStats, terms).select("term", "df", "cf").explain("formatted")
 
     println("\n========== full search plan ==========")
     new graft.search.Searcher(idx)

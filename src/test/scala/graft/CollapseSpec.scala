@@ -110,4 +110,18 @@ class CollapseSpec extends AnyFunSuite {
       .collect().map(_.getString(1)).toSeq
     assert(noRa == Seq("b-1"))
   }
+
+  test("null collapse keys are omitted by sort-by-field and top hits") {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    val (s, keys) = fixture
+    // a corpus attribute missing for repo B's docs: (docid, null) rows
+    val nullB = keys.withColumn("ckey",
+      when(col("ckey") === "rb", lit(null).cast("string")).otherwise(col("ckey")))
+    val sorted = s.searchSorted(Seq(Topic("1", "hot cold")), nullB, k = 100)
+      .collect().map(r => (r.getString(1), r.getString(3))).sortBy(_._1).toSeq
+    assert(sorted == Seq(("a-1", "ra"), ("a-2", "ra"), ("a-3", "ra")))
+    val hits = s.topHits(Seq(Topic("1", "hot cold")), nullB, 5)
+      .collect().map(r => (r.getString(1), r.getString(2))).toSet
+    assert(hits == Set(("ra", "a-1"), ("ra", "a-2"), ("ra", "a-3")))
+  }
 }

@@ -80,4 +80,16 @@ class DisMaxBoostSpec extends AnyFunSuite {
       searcher.searchDisMax(Seq(topic), 10, tieBreaker = 2.0f)
     }
   }
+
+  test("job count: a memo-warm dismax search reads term stats from the memo") {
+    searcher.searchDisMax(Seq(topic), k = 10).collect() // warms the memo
+    var lines = Array.empty[graft.search.RunLine]
+    val jobs = TestSpark.jobsOf {
+      lines = searcher.searchDisMax(Seq(topic), k = 10).collect()
+    }
+    assert(lines.nonEmpty)
+    // the groupByKey shuffle's map stage, the combine/collector stage and
+    // the docno lookup; no term_stats job
+    assert(jobs == 3, s"jobs=$jobs")
+  }
 }

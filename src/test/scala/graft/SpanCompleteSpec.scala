@@ -161,4 +161,24 @@ class SpanCompleteSpec extends AnyFunSuite {
     val all = searcher.complete(Seq(("q", "a")), 2).collect()
     assert(all.map(_.getString(1)).toSeq == Seq("alpha"))
   }
+
+  test("job count: a repeated complete over 3 prefixes runs 0 jobs") {
+    val prefixes = Seq(("q1", "b"), ("q2", "de"), ("q3", "g"))
+    val first = searcher.complete(prefixes).collect()
+    var again = Array.empty[org.apache.spark.sql.Row]
+    val jobs = TestSpark.jobsOf { again = searcher.complete(prefixes).collect() }
+    assert(again.toSeq == first.toSeq)
+    // expansions and their collection frequencies both come from memos
+    assert(jobs == 0, s"jobs=$jobs")
+  }
+
+  test("job count: a memo-warm span-first search reads term stats from the memo") {
+    val spans = Seq(("s", "alpha", 3))
+    searcher.searchSpanFirst(spans, k = 10).collect() // warms the memo
+    var lines = Array.empty[graft.search.RunLine]
+    val jobs = TestSpark.jobsOf { lines = searcher.searchSpanFirst(spans, k = 10).collect() }
+    assert(lines.nonEmpty)
+    // the scoring + collector stage and the docno lookup; no term_stats job
+    assert(jobs == 2, s"jobs=$jobs")
+  }
 }

@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 /** Shared local session for specs (one JVM-wide session; sbt forks tests). */
 object TestSpark {
@@ -20,5 +24,36 @@ object TestSpark {
     val d = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("/root/repo/target"), prefix)
     d.toString
+  }
+
+  /** Spark jobs `body` starts on this thread. A sentinel job in a second
+    * group follows it; the listener bus delivers in order, so once the
+    * sentinel's start arrives every measured job has been counted.
+    */
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"job-pin-${System.nanoTime()}"
+    val jobs = new AtomicInteger
+    val sentinel = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(g) if g == group => jobs.incrementAndGet()
+          case Some(g) if g == group + "-end" => sentinel.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      body
+      sc.setJobGroup(group + "-end", "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(sentinel.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 }

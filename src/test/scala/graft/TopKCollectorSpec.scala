@@ -4,12 +4,8 @@ import graft.analysis.{Analyzer, AnalyzerConfig}
 import graft.index._
 import graft.search._
 import graft.streaming.StreamFixtures
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
-
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 /** The search collector ([[TopK]]) and the flat-mode pipeline it closes:
   * docid-partitioned sorted combine → per-partition heap → driver merge.
@@ -201,43 +197,12 @@ class TopKCollectorSpec extends AnyFunSuite {
 
   // ---- job-count pins --------------------------------------------------
 
-  /** Spark jobs `body` starts on this thread. A sentinel job in a second
-    * group follows it; the listener bus delivers in order, so once the
-    * sentinel's start arrives every measured job has been counted.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"topk-pin-${System.nanoTime()}"
-    val jobs = new AtomicInteger
-    val sentinel = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(g) if g == group => jobs.incrementAndGet()
-          case Some(g) if g == group + "-end" => sentinel.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "measured")
-      body
-      sc.setJobGroup(group + "-end", "sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      assert(sentinel.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-      jobs.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("job count: memo-warm single-topic OR search at k=10 runs 3 jobs") {
     val s = new Searcher(fullIdx)
     val topic = Seq(Topic("w", "v3 v8"))
     s.search(topic, k = 10).collect() // warms the term-stats memo
     var lines = Array.empty[RunLine]
-    val jobs = jobsOf { lines = s.search(topic, k = 10).collect() }
+    val jobs = TestSpark.jobsOf { lines = s.search(topic, k = 10).collect() }
     assert(lines.length == 10)
     // scoring: the docid-partitioned shuffle's map stage + the combine/heap
     // result stage; then one docno point lookup
@@ -250,7 +215,7 @@ class TopKCollectorSpec extends AnyFunSuite {
     val batch = (0 until 5).map(g => Topic(s"g$g", s"grp$g"))
     s.search(batch, k = 1000).collect()
     var lines = Array.empty[RunLine]
-    val jobs = jobsOf { lines = s.search(batch, k = 1000).collect() }
+    val jobs = TestSpark.jobsOf { lines = s.search(batch, k = 1000).collect() }
     assert(lines.map(_.docno).distinct.length > 4096)
     assert(jobs == 3, s"jobs=$jobs")
   }
