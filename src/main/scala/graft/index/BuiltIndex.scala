@@ -212,10 +212,15 @@ object BuiltIndex {
     p.setProperty("tokenizer", cfg.analyzer.tokenizer)
     p.setProperty("stemmer", cfg.analyzer.stemmer)
     p.setProperty("stopWords", cfg.analyzer.stopWords.toSeq.sorted.mkString(" "))
+    p.setProperty("foldAscii", cfg.analyzer.foldAscii.toString)
+    p.setProperty("shingleSize", cfg.analyzer.shingleSize.toString)
     p.setProperty("buckets", cfg.buckets.toString)
     p.setProperty("groupShift", cfg.groupShift.toString)
     p.setProperty("mergeShift", cfg.mergeShift.toString)
+    p.setProperty("rangePartitions", cfg.rangePartitions.toString)
+    p.setProperty("twoPhase", cfg.twoPhase.toString)
     p.setProperty("indexPositions", cfg.indexPositions.toString)
+    p.setProperty("docidEpoch", cfg.docidEpoch.toString)
     val out = new ByteArrayOutputStream()
     p.store(out, "graft index config")
     val path = new Path(dir, PropsFile)
@@ -225,7 +230,9 @@ object BuiltIndex {
     finally o.close()
   }
 
-  /** Open an existing index, reconstructing its config from disk. */
+  /** Open an existing index, reconstructing its config from disk. A key
+    * absent from an older props file reads as the config default.
+    */
   def open(spark: SparkSession, dir: String): BuiltIndex = {
     val path = new Path(dir, PropsFile)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -238,11 +245,16 @@ object BuiltIndex {
       analyzer = AnalyzerConfig(
         tokenizer = p.getProperty("tokenizer", "whitespace"),
         stopWords = if (stop.isEmpty) Set.empty else stop.split("\\s+").toSet,
-        stemmer = p.getProperty("stemmer", "none")),
+        stemmer = p.getProperty("stemmer", "none"),
+        foldAscii = p.getProperty("foldAscii", "false").toBoolean,
+        shingleSize = p.getProperty("shingleSize", "1").toInt),
       buckets = p.getProperty("buckets", "64").toInt,
       groupShift = p.getProperty("groupShift", "18").toInt,
       mergeShift = p.getProperty("mergeShift", "4").toInt,
-      indexPositions = p.getProperty("indexPositions", "false").toBoolean)
+      rangePartitions = p.getProperty("rangePartitions", "0").toInt,
+      twoPhase = p.getProperty("twoPhase", "false").toBoolean,
+      indexPositions = p.getProperty("indexPositions", "false").toBoolean,
+      docidEpoch = p.getProperty("docidEpoch", "0").toInt)
     new BuiltIndex(spark, dir, cfg)
   }
 }

@@ -32,7 +32,8 @@ import org.apache.spark.sql.functions._
   * each bounded by the query terms' posting sizes; the joined stream is
   * locally checkpointed because it feeds BOTH the df aggregation and the
   * scoring pass (typed lineage defeats exchange reuse); df-per-term is a
-  * ≤|query terms| driver map; the collector is the shared bounded heap.
+  * ≤|query terms| driver map; the per-(query, doc) sum is the searcher's
+  * shared sorted combine pass and the collector its bounded heap.
   * Float accumulation runs in ascending-term order per (query, doc), so
   * equal-stat documents get bit-identical scores and tie-break on docno —
   * the same determinism contract as the single-field engine.
@@ -114,24 +115,22 @@ object CombinedField {
       }.toMap
     val idfB = spark.sparkContext.broadcast(idfByTerm)
     val qtermsB = spark.sparkContext.broadcast(qterms)
+    // a term's clause index is its rank in ascending term order, so the
+    // shared combine pass sums each (query, doc) in ascending-term order
+    val rankB = spark.sparkContext.broadcast(terms.sorted.zipWithIndex.toMap)
 
-    val contrib: Dataset[(String, Long, String, Float)] =
+    val contrib: Dataset[(String, Long, Int, Float)] =
       combined.as[(String, Long, Double)].flatMap { case (term, docid, tfb) =>
         val idf = idfB.value(term)
         val sat = idf * tfb / (k1 + tfb)
+        val rank = rankB.value(term)
         qtermsB.value(term).iterator.map { case (qid, w) =>
-          (qid, docid, term, (w * sat).toFloat)
+          (qid, docid, rank, (w * sat).toFloat)
         }
       }
-    val scores: Dataset[(String, Long, Float)] = contrib
-      .groupByKey(t => (t._1, t._2))
-      .mapGroups[(String, Long, Float)] {
-        (key: (String, Long), it: Iterator[(String, Long, String, Float)]) =>
-        val arr = it.toArray.sortBy(_._3)
-        var s = 0.0f
-        arr.foreach(s += _._4)
-        (key._1, key._2, s)
-      }
+    // the flat OR sum (bm25's coord is 1)
+    val scores = Searcher.combineRuns(contrib,
+      () => new Searcher.FlatRuns(Map.empty, requireAll = false, msm = 0, Bm25Scorer))
     fields.head._1.collectTopK(scores, k, "bm25f")
   }
 }

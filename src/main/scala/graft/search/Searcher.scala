@@ -949,25 +949,13 @@ final class Searcher(val index: BuiltIndex) {
     }.toDF("qid", "suggestion", "rank")
   }
 
-  /** SpanNearQuery over two single-term spans, both directions.
-    *
-    * `ordered = true` is the faithful NearSpansOrdered enumeration:
-    * repeatedly stretch to order (first B strictly after the current A),
-    * shrink to the shortest match (the LARGEST A before that B), emit
-    * slop factor 1/(1+gap) when the gap is within `slop`, then advance
-    * the first span past the shrunk A. Note the shrink step makes this
-    * genuinely different from the sloppy phrase's event walk: each B
-    * pairs with at most its closest A, and skipped A's are consumed.
-    *
-    * `ordered = false` is the faithful NearSpansUnordered enumeration:
-    * visit every cursor state reachable by advancing the min-start span,
-    * match when maxEnd − minStart − totalSpanLength ≤ slop, slop factor
-    * from width() = the start-position difference (Lucene's unordered
-    * width, distinct from the ordered walk's gap).
-    *
-    * Scored like phrases: the walk's freq through the similarity's TF
-    * saturation against the accumulated two-term weight. One
-    * bucket-pruned positional scan serves the batch.
+  /** SpanNearQuery over two single-term spans, both directions: `ordered`
+    * picks the faithful NearSpansOrdered or NearSpansUnordered walk
+    * ([[SpanNear.freq]]), whose freq is scored like a phrase — through the
+    * similarity's TF saturation against the accumulated two-term weight.
+    * Each span is a two-slot clause of the positional co-group (one
+    * bucket-pruned positional scan serves the batch); one clause per qid
+    * needs no further combine.
     */
   def searchSpanNear(spans: Seq[(String, String, String, Int)], k: Int = 1000,
                      scorerName: String = "bm25",
@@ -984,93 +972,15 @@ final class Searcher(val index: BuiltIndex) {
     val scorer = Scorer.byName(scorerName)
     val stats = CollStats(index.stats.max_doc, index.stats.sum_total_term_freq)
     val dfs = index.termStatsOf(spans.flatMap(s => Seq(s._2, s._3)))
-    // span index -> accumulated weight (both terms must be indexed)
-    val spanArr = spans.toArray
-    val weights: Map[Int, Float] = spanArr.zipWithIndex.collect {
-      case ((_, ta, tb, _), si) if dfs.contains(ta) && dfs.contains(tb) =>
-        si -> scorer.phraseWeight(
-          Seq(dfs(ta), dfs(tb)), stats)
-    }.toMap
-    if (weights.isEmpty) return spark.emptyDataset[RunLine]
-    // term -> [(span index, slot 0=A/1=B)]
-    val slots: Map[String, Array[(Int, Int)]] = spanArr.zipWithIndex.toSeq
-      .filter { case (_, si) => weights.contains(si) }
-      .flatMap { case ((_, ta, tb, _), si) => Seq((ta, si, 0), (tb, si, 1)) }
-      .groupBy(_._1).map { case (t, xs) => t -> xs.map(x => (x._2, x._3)).toArray }
-    val posts = index.forTerms(index.postings, slots.keys).as[PostingRun]
-    val occ: Dataset[(Int, Long, Int, Array[Int], Int)] = posts.flatMap { run =>
-      val ss = slots(run.term)
-      PostingCodec.decodeBlobs(run.ndocs, run.doc_blob,
-          run.tf_blob, run.dl_blob, run.pos_blob)
-        .flatMap { p =>
-          ss.iterator.map { case (si, slot) => (si, p.docid, slot, p.pos, p.dl) }
-        }
+    // both terms must be indexed
+    val clauses = spans.collect {
+      case (qid, ta, tb, slop) if dfs.contains(ta) && dfs.contains(tb) =>
+        Searcher.PositionalClause(qid, 0, Seq((ta, 0), (tb, 1)), slop, Some(ordered),
+          scorer.phraseWeight(Seq(dfs(ta), dfs(tb)), stats), 1.0f)
     }
-    val scorerB = scorer
-    val statsB = stats
-    val tombL = tombstonesBc
-    val spanArrB = spanArr
-    val weightsB = weights
-    val orderedB = ordered
-    val scored: Dataset[(String, Long, Float)] = occ
-      .groupByKey(t => (t._1, t._2))
-      .flatMapGroups[(String, Long, Float)] {
-        (key: (Int, Long), it: Iterator[(Int, Long, Int, Array[Int], Int)]) =>
-        var la: Array[Int] = null
-        var lb: Array[Int] = null
-        var dl = 0
-        it.foreach { r =>
-          if (r._3 == 0) la = r._4 else lb = r._4
-          dl = r._5
-        }
-        if (la == null || lb == null || !Searcher.liveDoc(tombL, key._2))
-          Iterator.empty
-        else {
-          val (qid, _, _, slop) = spanArrB(key._1)
-          var freq = 0.0f
-          if (orderedB) {
-            var i = 0
-            while (i < la.length) {
-              val a = la(i)
-              // first B strictly after a (stretchToOrder)
-              var bi = java.util.Arrays.binarySearch(lb, a + 1)
-              if (bi < 0) bi = -bi - 1
-              if (bi >= lb.length) { i = la.length } // exhausted: stop
-              else {
-                val b = lb(bi)
-                // shrink: the largest A before b; ai = count of A's < b
-                var ai = java.util.Arrays.binarySearch(la, b)
-                if (ai < 0) ai = -ai - 1
-                val aShrunk = la(ai - 1) // ai ≥ i+1 > 0 since la(i) < b
-                val gap = b - aShrunk - 1
-                if (gap <= slop) freq += 1.0f / (1 + gap)
-                i = ai // advance the first span past the shrunk A
-              }
-            }
-          } else {
-            // NearSpansUnordered: visit every state reachable by advancing
-            // the min-start span; a state matches when maxEnd − minStart −
-            // totalSpanLength ≤ slop (⇔ width − 1 ≤ slop for single-term
-            // spans), contributing the slop factor of width() = the START
-            // position difference — NOT the ordered walk's gap (Lucene's
-            // ordered width is lastStart − firstEnd; the asymmetry is the
-            // reference behavior, spec-locked)
-            var i = 0
-            var j = 0
-            while (i < la.length && j < lb.length) {
-              val pa = la(i)
-              val pb = lb(j)
-              val width = math.abs(pa - pb)
-              if (width - 1 <= slop) freq += 1.0f / (1 + width)
-              if (pa <= pb) i += 1 else j += 1
-            }
-          }
-          if (freq == 0.0f) Iterator.empty
-          else Iterator.single((qid, key._2,
-            scorerB.score(freq, dl, weightsB(key._1), statsB)))
-        }
-      }
-    collectTopK(scored, k, scorer.name)
+    if (clauses.isEmpty) return spark.emptyDataset[RunLine]
+    collectTopK(positionalPartials(clauses, scorer, stats).map(t => (t._1, t._2, t._4)),
+      k, scorer.name)
   }
 
   /** Query rescorer (≙ Elasticsearch `rescore`, score_mode total): the
@@ -1107,9 +1017,10 @@ final class Searcher(val index: BuiltIndex) {
     * others contribute `tieBreaker` times their score —
     * `max + tie·(sum − max)` (tie 0 = pure max, tie 1 = the OR sum).
     * Lucene's remedy for the "same word in many fields" inflation; here
-    * over the analyzed topic terms as the sub-queries. The partial stream
-    * is the ordinary bucket-pruned decode; the combiner folds in clause
-    * order so the float result is deterministic.
+    * over the analyzed topic terms as the sub-queries. The partials come
+    * from the plain-term decode every OR search runs (unboosted, no
+    * queryNorm); the shared combine pass folds each doc's clauses in
+    * clause order, so the float result is deterministic.
     */
   def searchDisMax(topics: Seq[Topic], k: Int = 1000,
                    tieBreaker: Float = 0.0f,
@@ -1131,41 +1042,17 @@ final class Searcher(val index: BuiltIndex) {
       }
     }
     val dfs = index.termStatsOf(clauses.map(_.term))
-    val plan: Map[String, (Float, Array[(String, Int)])] =
+    val plan: Map[String, (Float, Array[(String, Int, Float)])] =
       clauses.groupBy(_.term).flatMap { case (term, cs) =>
         dfs.get(term).map { case (df, cf) =>
           term -> (scorer.termWeight(df, cf, stats),
-            cs.map(c => (c.qid, c.qidx)).toArray)
+            cs.map(c => (c.qid, c.qidx, 1.0f)).toArray)
         }
       }
     if (plan.isEmpty) return spark.emptyDataset[RunLine]
-    val posts = index.forTerms(index.postingsDecode, plan.keys).as[PostingRun]
-    val scorerB = scorer
-    val statsB = stats
-    val tombL = tombstonesBc
     val tie = tieBreaker
-    val partials: Dataset[(String, Long, Int, Float)] = posts.flatMap { run =>
-      val (idf, cs) = plan(run.term)
-      PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
-        .flatMap { p =>
-          if (!Searcher.liveDoc(tombL, p.docid)) Iterator.empty
-          else {
-            val s = scorerB.score(p.tf, p.dl, idf, statsB)
-            cs.iterator.map { case (qid, qidx) => (qid, p.docid, qidx, s) }
-          }
-        }
-    }
-    val scored: Dataset[(String, Long, Float)] = partials
-      .groupByKey(t => (t._1, t._2))
-      .mapGroups[(String, Long, Float)] {
-        (key: (String, Long), it: Iterator[(String, Long, Int, Float)]) =>
-        val arr = it.toArray.sortBy(_._3)
-        var max = Float.NegativeInfinity
-        var sum = 0.0f
-        arr.foreach { r => sum += r._4; if (r._4 > max) max = r._4 }
-        (key._1, key._2, max + tie * (sum - max))
-      }
-    collectTopK(scored, k, scorer.name)
+    collectTopK(Searcher.combineRuns(termPartials(plan, scorer, stats),
+      () => new Searcher.DisMaxRuns(tie)), k, scorer.name)
   }
 
   /** Boosting query (≙ Elasticsearch `boosting`): the positive query
@@ -1605,12 +1492,6 @@ final class Searcher(val index: BuiltIndex) {
         trees.isEmpty) // a tree may still match-all
       return spark.emptyDataset[(String, Long, Float)]
 
-    // Postings lookup: bucket prunes parquet partitions, term pushes
-    // down. Only the WAND main pass reads block metadata — the exhaustive
-    // decode drops those columns from the scan too (postingsDecode).
-    val posts = index.forTerms(
-      if (prune) index.postingsScoring else index.postingsDecode, plan.keys).as[PostingRun]
-
     // Block-max WAND (north-star extension, SURVEY.md §2.7): a seed pass
     // scores each query's cheapest (lowest-df) clause exactly, giving a
     // lower bound θ on the final kth score; the main pass then skips any
@@ -1621,154 +1502,59 @@ final class Searcher(val index: BuiltIndex) {
       if (!prune) Map.empty
       else seedThresholds(clauses.filter(c => pruneQids(c.qid)), dfs, k,
         scorer, stats, qnByQid)
-    val (boostSum, othersSum) =
-      if (!prune || theta.isEmpty) (Map.empty[(String, String), Float], Map.empty[(String, String), Float])
-      else wandBounds(posts, plan, clauses.filter(c => pruneQids(c.qid)),
-        qnByQid, scorer, stats)
-
     val decodedAcc = spark.sparkContext.longAccumulator("wand_blocks_decoded")
     val prunedAcc = spark.sparkContext.longAccumulator("wand_blocks_pruned")
     if (prune) pruningAccs = Some((decodedAcc, prunedAcc))
 
-    // Decode → per-clause partial scores (qid, docid, clauseIdx, partial);
-    // clause boost multiplies like a Lucene query-term boost.
+    // Per-clause partial scores (qid, docid, clauseIdx, partial); clause
+    // boost multiplies like a Lucene query-term boost. Only the WAND main
+    // pass reads block metadata ([[BuiltIndex.postingsScoring]]); the
+    // exhaustive decode drops those columns from the scan.
     val partials: Dataset[(String, Long, Int, Float)] =
       if (plan.isEmpty) spark.emptyDataset[(String, Long, Int, Float)]
-      else if (!prune || theta.isEmpty) posts.flatMap { run =>
-        val (idf, cs) = plan(run.term)
-        PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
-          .flatMap { p =>
-            val s = scorer.score(p.tf, p.dl, idf, stats)
-            cs.iterator.map { case (qid, qidx, boost) =>
-              (qid, p.docid, qidx, if (boost == 1.0f) s else s * boost)
-            }
-          }
-      } else posts.flatMap { run =>
-        val (idf, cs) = plan(run.term)
-        val nBlocks = run.block_last_docid.length
-        (0 until nBlocks).iterator.flatMap { bi =>
-          val ub = scorer.score(run.block_max_tf(bi), run.block_min_dl(bi), idf, stats)
-          val alive = cs.filter { case (qid, _, _) =>
-            theta.get(qid) match {
-              case Some(th) =>
-                ub * boostSum.getOrElse((qid, run.term), 0.0f) +
-                  othersSum.getOrElse((qid, run.term), 0.0f) >= th
-              case None => true
-            }
-          }
-          if (alive.isEmpty) { prunedAcc.add(1); Iterator.empty }
-          else {
-            decodedAcc.add(1)
-            PostingCodec.decodeBlock(bi, run.ndocs,
-                run.doc_blob, run.tf_blob, run.dl_blob,
-                run.block_last_docid, run.block_doc_off, run.block_tf_off,
-                run.block_dl_off)
-              .flatMap { p =>
-                val s = scorer.score(p.tf, p.dl, idf, stats)
-                alive.iterator.map { case (qid, qidx, boost) =>
-                  (qid, p.docid, qidx, if (boost == 1.0f) s else s * boost)
-                }
+      else if (theta.isEmpty) termPartials(plan, scorer, stats)
+      else {
+        val posts = index.forTerms(index.postingsScoring, plan.keys).as[PostingRun]
+        val (boostSum, othersSum) = wandBounds(posts, plan,
+          clauses.filter(c => pruneQids(c.qid)), qnByQid, scorer, stats)
+        posts.flatMap { run =>
+          val (idf, cs) = plan(run.term)
+          val nBlocks = run.block_last_docid.length
+          (0 until nBlocks).iterator.flatMap { bi =>
+            val ub = scorer.score(run.block_max_tf(bi), run.block_min_dl(bi), idf, stats)
+            val alive = cs.filter { case (qid, _, _) =>
+              theta.get(qid) match {
+                case Some(th) =>
+                  ub * boostSum.getOrElse((qid, run.term), 0.0f) +
+                    othersSum.getOrElse((qid, run.term), 0.0f) >= th
+                case None => true
               }
+            }
+            if (alive.isEmpty) { prunedAcc.add(1); Iterator.empty }
+            else {
+              decodedAcc.add(1)
+              PostingCodec.decodeBlock(bi, run.ndocs,
+                  run.doc_blob, run.tf_blob, run.dl_blob,
+                  run.block_last_docid, run.block_doc_off, run.block_tf_off,
+                  run.block_dl_off)
+                .flatMap { p =>
+                  val s = scorer.score(p.tf, p.dl, idf, stats)
+                  alive.iterator.map { case (qid, qidx, boost) =>
+                    (qid, p.docid, qidx, if (boost == 1.0f) s else s * boost)
+                  }
+                }
+            }
           }
         }
       }
 
-    // Phrase clause partials: decode the phrase terms' postings WITH
-    // positions, co-group per (phrase, doc), count exact phrase occurrences
-    // (anchor scan from the sparsest slot, binary-search the rest — the
-    // distributed analog of Lucene's ExactPhraseScorer), score phraseFreq
-    // against the accumulated multi-term weight. One extra shuffle, paid
-    // only by queries that contain phrases.
+    // Phrase clause partials from the positional co-group, weighted by the
+    // accumulated multi-term phrase weight. One extra shuffle, paid only by
+    // queries that contain phrases.
     val phrasePartials: Dataset[(String, Long, Int, Float)] =
-      if (livePhrases.isEmpty) spark.emptyDataset[(String, Long, Int, Float)]
-      else {
-        val phArr = livePhrases.toArray
-        // slot = DISTINCT offset (ascending): several terms sharing an
-        // offset form one union slot (≙ MultiPhraseQuery.add(Term[], pos));
-        // with unique offsets this degenerates to the plain phrase layout
-        val termSlots: Map[String, Array[(Int, Int)]] =
-          phArr.zipWithIndex.toSeq.flatMap { case (pc, pi) =>
-            val offsU = pc.terms.map(_._2).distinct.sorted
-            pc.terms.map { case (term, off) => (term, pi, offsU.indexOf(off)) }
-          }.distinct
-            .groupBy(_._1).map { case (t, xs) => t -> xs.map(x => (x._2, x._3)).toArray }
-        val pPosts = index.forTerms(index.postings, termSlots.keys).as[PostingRun]
-        val occ: Dataset[(Int, Long, Int, Array[Int], Int)] = pPosts.flatMap { run =>
-          val slots = termSlots(run.term)
-          PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob,
-              run.dl_blob, run.pos_blob)
-            .flatMap { p =>
-              slots.iterator.map { case (pi, si) => (pi, p.docid, si, p.pos, p.dl) }
-            }
-        }
-        val weights = phraseWeights
-        val qnB = qnByQid
-        val scorerB = scorer
-        val statsB = stats
-        occ.groupByKey(t => (t._1, t._2))
-          .flatMapGroups[(String, Long, Int, Float)] {
-            (key: (Int, Long), it: Iterator[(Int, Long, Int, Array[Int], Int)]) =>
-            val pc = phArr(key._1)
-            val offsU = pc.terms.map(_._2).distinct.sorted
-            val nSlots = offsU.length
-            val posBySlot = new Array[Array[Int]](nSlots)
-            var dl = 0
-            var matched = 0
-            it.foreach { r =>
-              if (posBySlot(r._3) == null) { matched += 1; posBySlot(r._3) = r._4 }
-              else posBySlot(r._3) = Searcher.mergeSorted(posBySlot(r._3), r._4)
-              dl = r._5
-            }
-            if (matched < nSlots) Iterator.empty
-            else {
-              val offs = offsU.toArray
-              val slop = pc.slop
-              // slop 0 (ExactPhraseScorer analog): freq = integer count of
-              // full-phrase starts, anchored on the sparsest slot (the
-              // count is anchor-invariant). slop > 0: the faithful
-              // SloppyPhraseScorer event walk (SloppyPhrase.freq) — each
-              // match window contributes the reference similarity's slop
-              // factor 1/(matchLength+1) (`BM25.java:110-114`), with
-              // repeated terms pinned to distinct occurrences.
-              var freq = 0.0f
-              if (slop > 0) {
-                // slop > 0 ⇒ unique offsets (required above), so each slot
-                // has exactly one term; align the term array to slot order
-                freq = SloppyPhrase.freq(
-                  offsU.map(o => pc.terms.find(_._2 == o).get._1).toArray,
-                  posBySlot, offs, slop)
-              } else {
-                var minSlot = 0
-                var s = 1
-                while (s < nSlots) {
-                  if (posBySlot(s).length < posBySlot(minSlot).length) minSlot = s
-                  s += 1
-                }
-                val anchorOff = offs(minSlot)
-                posBySlot(minSlot).foreach { p0 =>
-                  val base = p0 - anchorOff // phrase start position in doc
-                  var ok = base >= 0
-                  var j = 0
-                  while (ok && j < nSlots) {
-                    if (j != minSlot) {
-                      val arr = posBySlot(j)
-                      ok = java.util.Arrays.binarySearch(arr, base + offs(j)) >= 0
-                    }
-                    j += 1
-                  }
-                  if (ok) freq += 1.0f
-                }
-              }
-              if (freq == 0.0f) Iterator.empty
-              else {
-                val boost = pc.boost * qnB(pc.qid)
-                val sc = scorerB.score(freq, dl, weights((pc.qid, pc.qidx)), statsB)
-                Iterator.single((pc.qid, key._2, pc.qidx,
-                  if (boost == 1.0f) sc else sc * boost))
-              }
-            }
-          }
-      }
+      positionalPartials(livePhrases.map(pc =>
+        Searcher.PositionalClause(pc.qid, pc.qidx, pc.terms, pc.slop, None,
+          phraseWeights((pc.qid, pc.qidx)), pc.boost * qnByQid(pc.qid))), scorer, stats)
     // Expansion clause partials (CONSTANT_SCORE): decode the expanded
     // terms' postings; a doc matching several expanded terms of one clause
     // still scores the boost ONCE (distinct on the identical partial rows).
@@ -1869,20 +1655,13 @@ final class Searcher(val index: BuiltIndex) {
       if (liveSynonyms.isEmpty) None else Some(synPartials)
     ).flatten.reduce(_ union _)
 
-    // Per-(query, doc) scoring. Flat mode: one docid-partitioned shuffle
-    // (by count, so AQE keeps it on every core) sorted by (qid, docid,
-    // qidx), then a streaming pass that sums each (qid, docid) run in
-    // clause order (≙ boolean scorer sum) with optional require-all / msm
-    // and top-level coord; nothing is buffered per doc and the sort can
-    // spill. Tree mode: BooleanQuery-faithful recursive evaluation of the
-    // query's broadcast tree over the gathered (clause → score) map —
-    // queryNorm folded into the match-all constants here, per-node coord
-    // inside eval.
+    // Per-(query, doc) scoring on the shared sorted pass
+    // ([[Searcher.combineRuns]]). Flat mode sums each run in clause order
+    // (≙ boolean scorer sum) with optional require-all / msm and top-level
+    // coord. Tree mode is the BooleanQuery-faithful recursive evaluation of
+    // the query's broadcast tree over the run's clause scores — queryNorm
+    // folded into the match-all constants here, per-node coord inside eval.
     val excluded = excludedByQid
-    val maxOv = maxOverlap
-    val requireAll = conjunctive
-    val msm = minShouldMatch
-    val scorerB = scorer
     val treeEval: Map[String, BoolQuery.EvalNode] =
       trees.map { case (qid, ts) =>
         qid -> BoolQuery.foldQueryNorm(ts.root, qnByQid.getOrElse(qid, 1.0f))
@@ -1906,50 +1685,13 @@ final class Searcher(val index: BuiltIndex) {
     val evaluated: Dataset[(String, Long, Float)] =
       if (trees.isEmpty) spark.emptyDataset[(String, Long, Float)]
       else {
-        val ev = filtered
-          .groupByKey(t => (t._1, t._2))
-          .mapGroups[(String, Long, Float)] {
-            (key: (String, Long), it: Iterator[(String, Long, Int, Float)]) =>
-            val m = new scala.collection.mutable.HashMap[Int, Float]()
-            it.foreach(r => m.update(r._3, m.getOrElse(r._3, 0.0f) + r._4))
-            val s = BoolQuery.eval(treeEval(key._1),
-              q => m.getOrElse(q, Float.NaN), scorerB.coord)
-            (key._1, key._2, s)
-          }
+        val ev = Searcher.combineRuns(filtered, () => new Searcher.TreeRuns(treeEval, scorer))
         if (complementQids.isEmpty) ev else ev.localCheckpoint(eager = false)
       }
     val scores: Dataset[(String, Long, Float)] =
       if (trees.nonEmpty) evaluated.filter(t => !t._3.isNaN)
-      else filtered
-        .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("_2"))
-        .sortWithinPartitions("_1", "_2", "_3")
-        .mapPartitions { rows =>
-          val in = rows.buffered
-          new Iterator[Option[(String, Long, Float)]] {
-            def hasNext: Boolean = in.hasNext
-            def next(): Option[(String, Long, Float)] = {
-              val (qid, docid) = (in.head._1, in.head._2)
-              var s = 0.0f
-              var n = 0 // partial rows: coord's overlap
-              var nMatched = 0 // distinct clauses: AND needs all, msm ≥ msm of them
-              var lastQidx = -1
-              while (in.hasNext && in.head._2 == docid && in.head._1 == qid) {
-                val r = in.next()
-                s += r._4
-                n += 1
-                if (r._3 != lastQidx) { nMatched += 1; lastQidx = r._3 }
-              }
-              val needed = if (requireAll) maxOv.getOrElse(qid, 0) else msm
-              // the score stays the plain sum over matches: bm25's coord is
-              // 1, like Lucene's BooleanWeight without coord
-              if (nMatched < needed) None
-              else {
-                val c = scorerB.coord(n, maxOv.getOrElse(qid, n))
-                Some((qid, docid, if (c == 1.0f) s else s * c))
-              }
-            }
-          }.flatten
-        }
+      else Searcher.combineRuns(filtered,
+        () => new Searcher.FlatRuns(maxOverlap, conjunctive, minShouldMatch, scorer))
 
     // Match-all complement (tree mode): a query whose tree matches a
     // document containing NO query leaf (pure negation, explicit `*`)
@@ -2011,6 +1753,126 @@ final class Searcher(val index: BuiltIndex) {
     scoresCollapsed
   }
 
+  /** Exhaustive plain-term partials (qid, docid, qidx, partial): one
+    * bucket-pruned decode of `plan`'s terms (term → (weight, its clauses'
+    * (qid, qidx, boost))) with tombstoned docs dropped; a boost of 1 leaves
+    * the similarity's score untouched. Serves flat and tree searches,
+    * dismax and the WAND seed.
+    */
+  private def termPartials(plan: Map[String, (Float, Array[(String, Int, Float)])],
+                           scorer: Scorer, stats: CollStats)
+      : Dataset[(String, Long, Int, Float)] = {
+    import spark.implicits._
+    val tombL = tombstonesBc
+    index.forTerms(index.postingsDecode, plan.keys).as[PostingRun].flatMap { run =>
+      val (idf, cs) = plan(run.term)
+      val ps = PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
+      (if (tombL.isEmpty) ps else ps.filter(p => Searcher.liveDoc(tombL, p.docid)))
+        .flatMap { p =>
+          val s = scorer.score(p.tf, p.dl, idf, stats)
+          cs.iterator.map { case (qid, qidx, boost) =>
+            (qid, p.docid, qidx, if (boost == 1.0f) s else s * boost)
+          }
+        }
+    }
+  }
+
+  /** Positional clause partials (qid, docid, qidx, partial): decode the
+    * clause terms' postings WITH positions, co-group per (clause, doc) and
+    * score the clause's freq against its weight, tombstoned docs dropped.
+    * A phrase counts exact phrase occurrences (slop 0: anchor scan from the
+    * sparsest slot, binary-search the rest — the distributed analog of
+    * Lucene's ExactPhraseScorer) or runs the sloppy event walk
+    * ([[SloppyPhrase.freq]]); a span-near runs its span walk
+    * ([[SpanNear.freq]]). One shuffle: the co-group.
+    */
+  private def positionalPartials(clauses: Seq[Searcher.PositionalClause],
+                                 scorer: Scorer, stats: CollStats)
+      : Dataset[(String, Long, Int, Float)] = {
+    import spark.implicits._
+    if (clauses.isEmpty) return spark.emptyDataset[(String, Long, Int, Float)]
+    val pcs = clauses.toArray
+    // slot = DISTINCT offset (ascending): several terms sharing an offset
+    // form one union slot (≙ MultiPhraseQuery.add(Term[], pos)); with
+    // unique offsets this degenerates to the plain phrase layout
+    val termSlots: Map[String, Array[(Int, Int)]] =
+      pcs.zipWithIndex.toSeq.flatMap { case (pc, pi) =>
+        val offsU = pc.terms.map(_._2).distinct.sorted
+        pc.terms.map { case (term, off) => (term, pi, offsU.indexOf(off)) }
+      }.distinct
+        .groupBy(_._1).map { case (t, xs) => t -> xs.map(x => (x._2, x._3)).toArray }
+    val occ: Dataset[(Int, Long, Int, Array[Int], Int)] =
+      index.forTerms(index.postings, termSlots.keys).as[PostingRun].flatMap { run =>
+        val slots = termSlots(run.term)
+        PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob,
+            run.dl_blob, run.pos_blob)
+          .flatMap { p =>
+            slots.iterator.map { case (pi, si) => (pi, p.docid, si, p.pos, p.dl) }
+          }
+      }
+    val tombL = tombstonesBc
+    occ.groupByKey(t => (t._1, t._2))
+      .flatMapGroups[(String, Long, Int, Float)] {
+        (key: (Int, Long), it: Iterator[(Int, Long, Int, Array[Int], Int)]) =>
+        val pc = pcs(key._1)
+        val offsU = pc.terms.map(_._2).distinct.sorted
+        val nSlots = offsU.length
+        val posBySlot = new Array[Array[Int]](nSlots)
+        var dl = 0
+        var matched = 0
+        it.foreach { r =>
+          if (posBySlot(r._3) == null) { matched += 1; posBySlot(r._3) = r._4 }
+          else posBySlot(r._3) = Searcher.mergeSorted(posBySlot(r._3), r._4)
+          dl = r._5
+        }
+        if (matched < nSlots || !Searcher.liveDoc(tombL, key._2)) Iterator.empty
+        else {
+          val offs = offsU.toArray
+          val slop = pc.slop
+          // a sloppy match window contributes the reference similarity's
+          // slop factor 1/(matchLength+1) (`BM25.java:110-114`); an exact
+          // phrase counts full-phrase starts (the count is anchor-invariant)
+          var freq = 0.0f
+          if (pc.near.isDefined) {
+            freq = SpanNear.freq(posBySlot(0), posBySlot(1), slop, pc.near.get)
+          } else if (slop > 0) {
+            // slop > 0 ⇒ unique offsets (required by scoredClauses), so
+            // each slot has exactly one term; align the terms to slot order
+            freq = SloppyPhrase.freq(
+              offsU.map(o => pc.terms.find(_._2 == o).get._1).toArray,
+              posBySlot, offs, slop)
+          } else {
+            var minSlot = 0
+            var s = 1
+            while (s < nSlots) {
+              if (posBySlot(s).length < posBySlot(minSlot).length) minSlot = s
+              s += 1
+            }
+            val anchorOff = offs(minSlot)
+            posBySlot(minSlot).foreach { p0 =>
+              val base = p0 - anchorOff // phrase start position in doc
+              var ok = base >= 0
+              var j = 0
+              while (ok && j < nSlots) {
+                if (j != minSlot) {
+                  val arr = posBySlot(j)
+                  ok = java.util.Arrays.binarySearch(arr, base + offs(j)) >= 0
+                }
+                j += 1
+              }
+              if (ok) freq += 1.0f
+            }
+          }
+          if (freq == 0.0f) Iterator.empty
+          else {
+            val sc = scorer.score(freq, dl, pc.weight, stats)
+            Iterator.single((pc.qid, key._2, pc.qidx,
+              if (pc.boost == 1.0f) sc else sc * pc.boost))
+          }
+        }
+      }
+  }
+
   /** Bounded top-k collector + docno attach + first-occurrence docno dedup
     * over a scored (qid, docid, score) stream — the shared tail of every
     * search entry point (score desc, docid asc tie-break — the Lucene
@@ -2055,26 +1917,16 @@ final class Searcher(val index: BuiltIndex) {
       if (inIdx.isEmpty) None else Some(inIdx.minBy(c => dfs(c.term)._1))
     }.toSeq
     if (seeds.isEmpty) return Map.empty
-    val byTerm: Map[String, Array[(String, Float)]] = seeds.groupBy(_.term)
-      .map { case (t, cs) => t -> cs.map(c => (c.qid, c.boost * qn(c.qid))).toArray }
-    val weights: Map[String, Float] = byTerm.keys.map { t =>
-      val (df, cf) = dfs(t)
-      t -> scorer.termWeight(df, cf, stats)
-    }.toMap
-    val posts = index.forTerms(index.postingsDecode, byTerm.keys).as[PostingRun]
-    // tombstoned docs must not seed θ: a deleted doc's score could push the
-    // lower bound past the true live kth score and over-prune live blocks
-    val tombL = tombstonesBc
-    val partials = posts.flatMap { run =>
-      val w = weights(run.term)
-      val qs = byTerm(run.term)
-      PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
-        .filter(p => Searcher.liveDoc(tombL, p.docid))
-        .flatMap { p =>
-          val s = scorer.score(p.tf, p.dl, w, stats)
-          qs.iterator.map { case (qid, boost) => (qid, p.docid, s * boost) }
-        }
-    }
+    val plan: Map[String, (Float, Array[(String, Int, Float)])] = seeds.groupBy(_.term)
+      .map { case (t, cs) =>
+        val (df, cf) = dfs(t)
+        t -> (scorer.termWeight(df, cf, stats),
+          cs.map(c => (c.qid, c.qidx, c.boost * qn(c.qid))).toArray)
+      }
+    // tombstoned docs must not seed θ (termPartials drops them): a deleted
+    // doc's score could push the lower bound past the true live kth score
+    // and over-prune live blocks
+    val partials = termPartials(plan, scorer, stats).map(t => (t._1, t._2, t._4))
     TopK.toDriver(partials, k)
       .collect { case (qid, hits) if hits.length >= k => qid -> hits.last._2 }
       .toMap
@@ -2288,6 +2140,104 @@ object Searcher {
       tomb: Option[org.apache.spark.broadcast.Broadcast[Array[Long]]],
       docid: Long): Boolean =
     tomb.forall(b => java.util.Arrays.binarySearch(b.value, docid) < 0)
+
+  /** Folds one (qid, docid) run of [[combineRuns]]: `begin`, then `add`
+    * per partial in ascending qidx order; the run yields a row scored
+    * `score` iff `keep`. One instance serves a partition, so state lives in
+    * fields: the flat and dismax folds allocate nothing per run.
+    */
+  private[search] trait RunReducer {
+    def begin(qid: String): Unit
+    def add(qidx: Int, partial: Float): Unit
+    def keep: Boolean = true
+    def score: Float
+  }
+
+  /** The engine's one per-(qid, docid) combiner: a docid-partitioned
+    * shuffle (by count, so AQE keeps it on every core) sorted by (qid,
+    * docid, qidx), then a streaming pass folding each run through a
+    * per-partition `reducer` — nothing buffered per doc, the sort can
+    * spill, and the collector's heaps pipeline into the same stage.
+    */
+  private[search] def combineRuns(partials: Dataset[(String, Long, Int, Float)],
+                                  reducer: () => RunReducer): Dataset[(String, Long, Float)] = {
+    val spark = partials.sparkSession
+    import spark.implicits._
+    partials
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("_2"))
+      .sortWithinPartitions("_1", "_2", "_3")
+      .mapPartitions { rows =>
+        val in = rows.buffered
+        val r = reducer()
+        Iterator.continually(in).takeWhile(_.hasNext).map { _ =>
+          val qid = in.head._1
+          val docid = in.head._2
+          r.begin(qid)
+          while (in.hasNext && in.head._2 == docid && in.head._1 == qid) {
+            val row = in.next()
+            r.add(row._3, row._4)
+          }
+          if (r.keep) (qid, docid, r.score) else null
+        }.filter(_ != null)
+      }
+  }
+
+  /** Flat OR / AND / msm: the clause-order sum times coord(partial rows,
+    * maxOverlap); a run matching fewer distinct clauses than needed (all of
+    * them under AND, `msm` otherwise) is dropped.
+    */
+  private[search] final class FlatRuns(maxOv: Map[String, Int], requireAll: Boolean,
+                                       msm: Int, scorer: Scorer) extends RunReducer {
+    private var qid = ""
+    private var s = 0.0f
+    private var n = 0 // partial rows: coord's overlap
+    private var nMatched = 0 // distinct clauses
+    private var lastQidx = -1
+    def begin(q: String): Unit = { qid = q; s = 0.0f; n = 0; nMatched = 0; lastQidx = -1 }
+    def add(qidx: Int, partial: Float): Unit = {
+      s += partial
+      n += 1
+      if (qidx != lastQidx) { nMatched += 1; lastQidx = qidx }
+    }
+    override def keep: Boolean =
+      nMatched >= (if (requireAll) maxOv.getOrElse(qid, 0) else msm)
+    def score: Float = { // bm25's coord is 1: the plain sum
+      val c = scorer.coord(n, maxOv.getOrElse(qid, n))
+      if (c == 1.0f) s else s * c
+    }
+  }
+
+  /** DisjunctionMaxQuery: `max + tie·(Σ − max)`, Σ from 0, max from −∞. */
+  private[search] final class DisMaxRuns(tie: Float) extends RunReducer {
+    private var max = Float.NegativeInfinity
+    private var sum = 0.0f
+    def begin(qid: String): Unit = { max = Float.NegativeInfinity; sum = 0.0f }
+    def add(qidx: Int, partial: Float): Unit = { sum += partial; if (partial > max) max = partial }
+    def score: Float = max + tie * (sum - max)
+  }
+
+  /** [[BoolQuery.eval]] of each run against its query's tree, a clause's
+    * partials summed from 0 and a clause without one a NaN leaf. NaN
+    * (no-match) rows are kept for the match-all complement.
+    */
+  private[search] final class TreeRuns(trees: Map[String, BoolQuery.EvalNode],
+                                       scorer: Scorer) extends RunReducer {
+    private val m = new scala.collection.mutable.HashMap[Int, Float]()
+    private var root: BoolQuery.EvalNode = _
+    private val leaf: Int => Float = q => m.getOrElse(q, Float.NaN)
+    private val coord: (Int, Int) => Float = scorer.coord
+    def begin(qid: String): Unit = { m.clear(); root = trees(qid) }
+    def add(qidx: Int, partial: Float): Unit = m.update(qidx, m.getOrElse(qidx, 0.0f) + partial)
+    def score: Float = BoolQuery.eval(root, leaf, coord)
+  }
+
+  /** A clause of the positional co-group: phrase slots (term, offset) and
+    * slop, or with `near = Some(ordered)` a span-near of the single-term
+    * spans at offsets 0 and 1; scored at `weight`, times `boost`.
+    */
+  private[search] final case class PositionalClause(qid: String, qidx: Int,
+      terms: Seq[(String, Int)], slop: Int, near: Option[Boolean],
+      weight: Float, boost: Float)
 
   /** Deduplicating merge of two sorted int arrays — a MultiPhraseQuery
     * union slot's position list (≙ UnionPostingsEnum). Static so the

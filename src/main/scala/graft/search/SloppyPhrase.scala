@@ -132,3 +132,63 @@ object SloppyPhrase {
     freqAcc
   }
 }
+
+/** Span-near frequency of two single-term spans A and B, summing the slop
+  * factor of each match (the span walks of Lucene 5.4).
+  *
+  * `ordered = true` is the faithful NearSpansOrdered enumeration:
+  * repeatedly stretch to order (first B strictly after the current A),
+  * shrink to the shortest match (the LARGEST A before that B), emit slop
+  * factor 1/(1+gap) when the gap is within `slop`, then advance the first
+  * span past the shrunk A. Note the shrink step makes this genuinely
+  * different from the sloppy phrase's event walk: each B pairs with at
+  * most its closest A, and skipped A's are consumed.
+  *
+  * `ordered = false` is the faithful NearSpansUnordered enumeration: visit
+  * every cursor state reachable by advancing the min-start span, match
+  * when maxEnd − minStart − totalSpanLength ≤ slop, slop factor from
+  * width() = the start-position difference (Lucene's unordered width,
+  * distinct from the ordered walk's gap).
+  */
+object SpanNear {
+
+  /** Frequency for one doc from A's and B's ascending in-doc positions. */
+  def freq(la: Array[Int], lb: Array[Int], slop: Int, ordered: Boolean): Float = {
+    var freq = 0.0f
+    if (ordered) {
+      var i = 0
+      while (i < la.length) {
+        val a = la(i)
+        // first B strictly after a (stretchToOrder)
+        var bi = java.util.Arrays.binarySearch(lb, a + 1)
+        if (bi < 0) bi = -bi - 1
+        if (bi >= lb.length) { i = la.length } // exhausted: stop
+        else {
+          val b = lb(bi)
+          // shrink: the largest A before b; ai = count of A's < b
+          var ai = java.util.Arrays.binarySearch(la, b)
+          if (ai < 0) ai = -ai - 1
+          val aShrunk = la(ai - 1) // ai ≥ i+1 > 0 since la(i) < b
+          val gap = b - aShrunk - 1
+          if (gap <= slop) freq += 1.0f / (1 + gap)
+          i = ai // advance the first span past the shrunk A
+        }
+      }
+    } else {
+      // a state matches when width − 1 ≤ slop (single-term spans) and
+      // contributes the slop factor of the START position difference —
+      // NOT the ordered walk's gap (Lucene's ordered width is lastStart −
+      // firstEnd; the asymmetry is the reference behavior, spec-locked)
+      var i = 0
+      var j = 0
+      while (i < la.length && j < lb.length) {
+        val pa = la(i)
+        val pb = lb(j)
+        val width = math.abs(pa - pb)
+        if (width - 1 <= slop) freq += 1.0f / (1 + width)
+        if (pa <= pb) i += 1 else j += 1
+      }
+    }
+    freq
+  }
+}

@@ -3,7 +3,9 @@ package graft.tools
 import graft.Engine
 import graft.search.Topic
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Diagnostic: print formatted physical plans for the hot paths so
   * pushdown/pruning regressions are visible (`PushedFilters`, partition
@@ -12,6 +14,25 @@ import org.apache.spark.sql.functions._
   * Run: sbt "runMain graft.tools.Explain /root/testdata/sf0.001"
   */
 object Explain {
+  /** Runs `body` and prints the executed plans of its queries that scan
+    * postings: a search collects its top-k on the driver, so the Dataset it
+    * returns only plans a local relation.
+    */
+  private def printScoringPlans(spark: SparkSession)(body: => Unit): Unit = {
+    val seen = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    body
+    spark.range(1).toDF("explain_sentinel").collect() // delivered last, in order
+    Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+      .takeWhile(qe => qe != null && !qe.analyzed.output.exists(_.name == "explain_sentinel"))
+      .map(_.explainString(FormattedMode)).filter(_.contains("/postings")).foreach(println)
+    spark.listenerManager.unregister(listener)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = SparkSession.builder()
@@ -140,9 +161,20 @@ object Explain {
     graft.index.TrigramIndex.regexTopK(corp, gt,
       Seq(("g1", "merge (slow|fast)")), 20).explain("formatted")
 
-    println("\n========== dismax (same bucket-pruned decode as flat OR; combiner is the one (qid, docid) agg) ==========")
-    searcher.searchDisMax(Seq(Topic("1", "hash join merge")), 20, 0.3f)
-      .explain("formatted")
+    println("\n========== dismax (the flat OR's plain-term decode → the shared sorted combine pass, max + tie·rest reducer; no MapGroups) ==========")
+    printScoringPlans(spark) {
+      searcher.searchDisMax(Seq(Topic("1", "hash join merge")), 20, 0.3f).collect()
+    }
+
+    println("\n========== span-near (positional co-group, its one MapGroups, straight into the collector; no combine shuffle) ==========")
+    printScoringPlans(spark) {
+      searcher.searchSpanNear(Seq(("1", "hash", "join", 2)), 20).collect()
+    }
+
+    println("\n========== searchQuery term tree (plain-term decode → the shared sorted combine pass, tree reducer; no MapGroups) ==========")
+    printScoringPlans(spark) {
+      searcher.searchQuery(Seq(Topic("1", "hash +join -merge")), 20).collect()
+    }
 
     println("\n========== boosting (negative postings decode → distributed left join demote; no driver doc sets) ==========")
     searcher.searchBoosting(Seq(Topic("1", "hash join merge")),

@@ -50,6 +50,39 @@ class DisMaxBoostSpec extends AnyFunSuite {
     assert(got.toSet == Set("b-1", "b-2", "b-3", "b-4", "b-5"))
   }
 
+  test("tie=0.3 scores equal a brute-force max + 0.3·(Σ − max), bit for bit") {
+    import graft.analysis.Analyzer
+    import graft.search.{CollStats, Scorer}
+    val an = new Analyzer(AnalyzerConfig())
+    val docs = corpus.map { case (d, t) => (d, an.analyze(t).toSeq) }
+    val stats = CollStats(docs.size, docs.map(_._2.size.toLong).sum)
+    val bm25 = Scorer.byName("bm25")
+    // sub-queries in first-occurrence term order; a repeat adds nothing
+    val terms = an.analyze("pear apple pear plum").distinct.toSeq
+    val want: Map[String, Float] = docs.flatMap { case (d, ts) =>
+      val partials = terms.flatMap { t =>
+        val tf = ts.count(_ == t)
+        if (tf == 0) None
+        else {
+          val df = docs.count(_._2.contains(t)).toLong
+          val cf = docs.map(_._2.count(_ == t).toLong).sum
+          Some(bm25.score(tf.toFloat, ts.size, bm25.termWeight(df, cf, stats), stats))
+        }
+      }
+      if (partials.isEmpty) None
+      else {
+        var max = Float.NegativeInfinity
+        var sum = 0.0f
+        partials.foreach { p => sum += p; if (p > max) max = p }
+        Some(d -> (max + 0.3f * (sum - max)))
+      }
+    }.toMap
+    val got = searcher.searchDisMax(Seq(Topic("t", "pear apple pear plum")), 10,
+        tieBreaker = 0.3f).collect().map(l => l.docno -> l.score).toMap
+    def bits(m: Map[String, Float]) = m.map { case (d, s) => d -> java.lang.Float.floatToIntBits(s) }
+    assert(bits(got) == bits(want))
+  }
+
   test("a repeated topic term scores once (sub-queries are a set, like the oracle's DISTINCT)") {
     // tie=1 is the OR sum, where a double-counted clause would be visible:
     // "apple apple pear" must score exactly like "apple pear" (ADVICE r5 —
@@ -88,8 +121,8 @@ class DisMaxBoostSpec extends AnyFunSuite {
       lines = searcher.searchDisMax(Seq(topic), k = 10).collect()
     }
     assert(lines.nonEmpty)
-    // the groupByKey shuffle's map stage, the combine/collector stage and
-    // the docno lookup; no term_stats job
+    // the combine shuffle's map stage, the combine/collector stage and the
+    // docno lookup; no term_stats job
     assert(jobs == 3, s"jobs=$jobs")
   }
 }

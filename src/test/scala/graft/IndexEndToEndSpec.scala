@@ -301,11 +301,16 @@ class IndexEndToEndSpec extends AnyFunSuite {
 
   test("open() reconstructs the analyzer config from disk") {
     val dir = TestSpark.tmpDir("open")
-    IndexBuilder.build(corpusDF(unitDocs), dir,
-      cfg.copy(analyzer = cfg.analyzer.copy(stemmer = "porter")))
+    val built = IndexBuilder.build(corpusDF(unitDocs), dir,
+      cfg.copy(analyzer = cfg.analyzer.copy(stemmer = "porter", foldAscii = true,
+        shingleSize = 2), rangePartitions = 3))
     val reopened = BuiltIndex.open(spark, dir)
     assert(reopened.cfg.analyzer.stemmer == "porter")
     assert(reopened.cfg.analyzer.stopWords == Set("a", "the"))
+    assert(reopened.cfg.analyzer.foldAscii && reopened.cfg.analyzer.shingleSize == 2)
     assert(reopened.cfg.buckets == cfg.buckets)
+    assert(reopened.cfg.rangePartitions == 3)
+    // the same id, hence the same statsKey and term-stats memo
+    assert(reopened.cfg.id == built.cfg.id)
   }
 }

@@ -146,6 +146,31 @@ class SpanCompleteSpec extends AnyFunSuite {
     assert(!ord.contains("u-2") && !ord.contains("u-3"))
   }
 
+  test("span-near on a delete overlay drops the tombstoned doc, keeps every other score's bits") {
+    import spark.implicits._
+    val docs = Seq(
+      "d-1" -> "alpha beta",
+      "d-2" -> "beta x alpha",
+      "d-3" -> "alpha x beta alpha",
+      "d-4" -> "alpha beta beta",
+      "d-5" -> "beta alpha x x beta")
+    val idx = IndexBuilder.build(docs.toDF("docno", "content"), TestSpark.tmpDir("spandel"),
+      IndexConfig(analyzer = AnalyzerConfig(), indexPositions = true))
+    val ov = TestSpark.tmpDir("spandel-ovl") + "/ovl"
+    graft.index.Deletes.writeDeletes(idx, Seq("d-3").toDF("docno"), ov)
+    val full = new Searcher(idx)
+    val deleted = new Searcher(idx.withDeletes(ov))
+    Seq(true, false).foreach { ordered =>
+      def bits(sr: Searcher): Map[String, Int] =
+        sr.searchSpanNear(Seq(("n", "alpha", "beta", 2)), 10, ordered = ordered)
+          .collect().map(l => l.docno -> java.lang.Float.floatToIntBits(l.score)).toMap
+      val before = bits(full)
+      assert(before.contains("d-3"), s"ordered=$ordered")
+      // delete overlays keep the pre-delete statistics
+      assert(bits(deleted) == before - "d-3", s"ordered=$ordered")
+    }
+  }
+
   test("complete: prefix candidates ranked by cf desc, term asc") {
     // cfs: beta 6, alpha 5, gamma 4, delta 2, epsilon 2
     val rows = searcher.complete(

@@ -53,10 +53,12 @@ class TermAccessSpec extends AnyFunSuite {
     assert(cold == 1, s"jobs=$cold")
     // absent terms have no entry; df/cf match the term_stats table
     assert(first == Map("alpha" -> (2L, 2L), "beta" -> (1L, 2L)))
-    // a second handle on the same snapshot and a delete overlay share the
-    // memo (same statsKey): hits and the negative entry alike cost no job
+    // a second handle on the same snapshot, the handle open() reads back
+    // from disk and a delete overlay share the memo (same statsKey): hits
+    // and the negative entry alike cost no job
     val again = new BuiltIndex(spark, dir, idx.cfg)
-    Seq(idx, again, again.withDeletes(TestSpark.tmpDir("termaccess-del"))).foreach { h =>
+    Seq(idx, again, BuiltIndex.open(spark, dir),
+        again.withDeletes(TestSpark.tmpDir("termaccess-del"))).foreach { h =>
       var got = Map.empty[String, (Long, Long)]
       assert(TestSpark.jobsOf { got = h.termStatsOf(terms) } == 0)
       assert(got == first)
