@@ -16,7 +16,7 @@ import graft.analysis.KStemmer
   * in a `frz` flag.
   *
   * Cross-validated word-for-word against the Scala stemmer by
-  * `tools.KStemSqlCheck` + scripts/kstem_sql_check.
+  * `tools.StemSqlCheck kstem` + scripts/kstem_sql_check.
   */
 object KStemSql {
 

@@ -27,7 +27,7 @@ package graft
   *   never completes a VC pair, so m is identical.
   *
   * Cross-validated word-for-word against the Scala stemmer by
-  * `tools.PorterSqlCheck` + scripts/porter_sql_check (suffix battery +
+  * `tools.StemSqlCheck porter` + scripts/porter_sql_check (suffix battery +
   * corpus vocabulary).
   */
 object PorterSql {

@@ -24,7 +24,7 @@ package graft
   *  - the final select unmarks `Y → y`.
   *
   * Cross-validated word-for-word against the Scala stemmer by
-  * `tools.SnowballSqlCheck` + scripts/snowball_sql_check (suffix battery +
+  * `tools.StemSqlCheck snowball` + scripts/snowball_sql_check (suffix battery +
   * y-edge cases).
   */
 object SnowballSql {

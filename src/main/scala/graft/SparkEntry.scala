@@ -625,7 +625,7 @@ object SparkEntry {
     }),
     // stemmed-index df — oracled by a generated DuckDB replay of the full
     // Porter algorithm (graft.PorterSql; cross-validated word-for-word on a
-    // 6.9k suffix battery by tools.PorterSqlCheck)
+    // 6.9k suffix battery by tools.StemSqlCheck porter)
     "q_porter_df" -> ((s, dir) => {
       Engine.porterIndex(s, dir).termStats
         .select(col("term"), col("df").cast("long").as("df"))

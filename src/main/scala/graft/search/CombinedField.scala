@@ -128,9 +128,10 @@ object CombinedField {
           (qid, docid, rank, (w * sat).toFloat)
         }
       }
-    // the flat OR sum (bm25's coord is 1)
+    // the flat OR sum (bm25's coord is 1); each rank is its own clause
+    val slots = topics.map(_.qid -> terms.indices.toArray).toMap
     val scores = Searcher.combineRuns(contrib,
-      () => new Searcher.FlatRuns(Map.empty, requireAll = false, msm = 0, Bm25Scorer))
+      () => new Searcher.FlatRuns(slots, Map.empty, requireAll = false, msm = 0, Bm25Scorer))
     fields.head._1.collectTopK(scores, k, "bm25f")
   }
 }

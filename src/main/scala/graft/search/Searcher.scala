@@ -1,11 +1,12 @@
 package graft.search
 
 import graft.analysis.Analyzer
-import graft.codec.PostingCodec
+import graft.codec.{DecodedPosting, PostingCodec}
 import graft.index.{BuiltIndex, PostingRun}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 
 /** A batched topic query (≙ one `<top>` of the reference's query file,
   * parsed at `BatchSearch.java:193-233`).
@@ -84,8 +85,8 @@ final case class SynonymClause(qid: String, qidx: Int,
   * becomes:
   *
   *   postings lookup (bucket partition pruning + term predicate pushdown)
-  *     → streaming blob decode → per-clause Float partial scores
-  *     → one docid-partitioned shuffle, sorted by (query, doc, clause):
+  *     → streaming blob decode → per-slot Float partials ([[ClausePlan]])
+  *     → one docid-partitioned shuffle, sorted by (query, doc, slot):
   *       a streaming per-(query, doc) sum in clause order (Float addition
   *       is not associative; SURVEY.md §7.5)
   *     → in the same stage, a per-partition bounded top-k heap ([[TopK]])
@@ -123,11 +124,13 @@ final class Searcher(val index: BuiltIndex) {
       s"topics must have distinct qids, got: ${topics.map(_.qid).mkString(", ")}")
 
   /** ≙ SimpleQueryParser over analyzed text: one unboosted SHOULD clause
-    * per token occurrence, in token order (`BatchSearch.java:189-190,252`).
+    * per token occurrence — or per `distinct` term — in token order
+    * (`BatchSearch.java:189-190,252`).
     */
-  private def topicClauses(topics: Seq[Topic]): Seq[WeightedClause] =
+  private def topicClauses(topics: Seq[Topic], distinct: Boolean = false): Seq[WeightedClause] =
     topics.flatMap { t =>
-      analyzer.analyze(t.text).zipWithIndex.map { case (term, i) =>
+      val terms = analyzer.analyze(t.text)
+      (if (distinct) terms.distinct else terms).zipWithIndex.map { case (term, i) =>
         WeightedClause(t.qid, i, term, 1.0f)
       }
     }
@@ -219,23 +222,17 @@ final class Searcher(val index: BuiltIndex) {
   def explainStats(topics: Seq[Topic], k: Int = 5,
                    scorerName: String = "bm25"): DataFrame = {
     import spark.implicits._
-    val hits = search(topics, k, scorerName).collect()
-    val byQid: Map[String, Set[String]] =
-      hits.groupBy(_.qid).map { case (q, hs) => q -> hs.map(_.docno).toSet }
-    val hitDocnos = hits.map(_.docno).distinct.toSeq
-    val ids: Map[String, Long] =
-      if (hitDocnos.isEmpty) Map.empty
-      else index.docs.where(col("docno").isin(hitDocnos: _*))
-        .select("docno", "docid").as[(String, Long)].collect().toMap
+    val hits = search(topics, k, scorerName).collect().toSeq
+    val ids = docidLookup(hits.map(_.docno))
     val qterms = topicTerms(topics)
-    // (docid → (qid, docno)) pairs for the explained hits, broadcast-sized
-    val wanted: Map[Long, Array[(String, String)]] = byQid.toSeq
-      .flatMap { case (q, ds) => ds.flatMap(d => ids.get(d).map(id => (id, (q, d)))) }
-      .groupBy(_._1).map { case (id, xs) => id -> xs.map(_._2).toArray }
+    // (docid → (qid, docno)) pairs for the explained hits (one per qid and
+    // docno: the collector dedups docnos), broadcast-sized
+    val wanted: Map[Long, Array[(String, String)]] = hits
+      .flatMap(h => ids.get(h.docno).map(id => (id, (h.qid, h.docno))))
+      .groupMap(_._1)(_._2).map { case (id, xs) => id -> xs.toArray }
     val wantedB = spark.sparkContext.broadcast(wanted)
-    val termsByQid: Map[String, Set[String]] =
-      qterms.groupBy(_._1).map { case (q, ts) => q -> ts.map(_._2).toSet }
-    val termsByQidB = spark.sparkContext.broadcast(termsByQid)
+    val termsByQidB = spark.sparkContext.broadcast(
+      qterms.groupMap(_._1)(_._2).map { case (q, ts) => q -> ts.toSet })
     val dfs: Map[String, Long] =
       index.termStatsOf(qterms.map(_._2)).map { case (t, (df, _)) => t -> df }
     index.forTerms(index.postingsDecode, dfs.keys)
@@ -265,12 +262,9 @@ final class Searcher(val index: BuiltIndex) {
     */
   def ltrFeatures(topics: Seq[Topic], k: Int = 5,
                   scorerName: String = "bm25"): DataFrame = {
-    val nterms = topics.map(t =>
-      (t.qid, analyzer.analyze(t.text).distinct.length.toLong))
-    val ntDf = {
-      import spark.implicits._
-      nterms.toDF("qid", "nterms")
-    }
+    import spark.implicits._
+    val ntDf = topics.map(t => (t.qid, analyzer.analyze(t.text).distinct.length.toLong))
+      .toDF("qid", "nterms")
     explainStats(topics, k, scorerName)
       .groupBy(col("qid"), col("docno"))
       .agg(count(lit(1)).as("n_matched"),
@@ -434,11 +428,7 @@ final class Searcher(val index: BuiltIndex) {
                   k: Int = 1000, scorerName: String = "bm25"): Dataset[RunLine] = {
     requireDistinctQids(topics)
     import spark.implicits._
-    val docnos = cursors.values.map(_._2).toSeq.distinct
-    val ids: Map[String, Long] =
-      if (docnos.isEmpty) Map.empty
-      else index.docs.where(col("docno").isin(docnos: _*))
-        .select("docno", "docid").as[(String, Long)].collect().toMap
+    val ids = docidLookup(cursors.values.map(_._2).toSeq)
     val cur: Map[String, (Float, Long)] = cursors.map { case (q, (sc, dn)) =>
       q -> (sc, ids.getOrElse(dn,
         throw new IllegalArgumentException(s"cursor docno not in index: $dn")))
@@ -499,6 +489,16 @@ final class Searcher(val index: BuiltIndex) {
     ranked.flatMap { case (qid, ckey, docid, r) =>
       byId.get(docid).map(docno => (qid, ckey, docno, r))
     }.toDF("qid", "ckey", "docno", "hit_rank")
+  }
+
+  /** docno → docid for a driver-bounded docno set: one pushed-down point
+    * lookup on the doc table, no job for no docnos.
+    */
+  private def docidLookup(docnos: Seq[String]): Map[String, Long] = {
+    import spark.implicits._
+    if (docnos.isEmpty) Map.empty
+    else index.docs.where(col("docno").isin(docnos.distinct: _*))
+      .select("docno", "docid").as[(String, Long)].collect().toMap
   }
 
   /** docid → docno point lookup for a driver-bounded docid set, one job:
@@ -575,8 +575,7 @@ final class Searcher(val index: BuiltIndex) {
     * vs skipped), populated once the returned Dataset is acted on — for
     * tests and diagnostics.
     */
-  @volatile private var pruningAccs
-      : Option[(org.apache.spark.util.LongAccumulator, org.apache.spark.util.LongAccumulator)] = None
+  @volatile private var pruningAccs: Option[(LongAccumulator, LongAccumulator)] = None
   def lastPruning: (Long, Long) =
     pruningAccs.map { case (d, p) => (d.value.longValue, p.value.longValue) }
       .getOrElse((0L, 0L))
@@ -642,6 +641,7 @@ final class Searcher(val index: BuiltIndex) {
                   scorerName: String = "bm25",
                   pruning: Boolean = false): Dataset[RunLine] = {
     import BoolQuery._
+    import spark.implicits._
     // treeB is keyed by qid (last-wins): colliding qids would leave both
     // topics' clauses covered by one surviving TreeSpec (the uncovered-qid
     // check below cannot catch this case)
@@ -656,52 +656,46 @@ final class Searcher(val index: BuiltIndex) {
         var i = 0
         val prohibited = Set.newBuilder[Int]
         var nMatchAll = 0
-        def go(n: Node, underNot: Boolean): EvalNode = n match {
-          case MatchAllNode =>
-            if (!underNot) nMatchAll += 1
-            EConst(1.0f) // queryNorm folded in by searchClauses
-          case TermLeaf(term) =>
+        def go(n: Node, underNot: Boolean): EvalNode = {
+          // a leaf takes the next clause index
+          def leaf(add: Int => Unit): EvalNode = {
             val q = i; i += 1; if (underNot) prohibited += q
-            wc += WeightedClause(t.qid, q, term, 1.0f)
+            add(q)
             ELeaf(q)
-          case PhraseLeaf(slots, slop) =>
-            val q = i; i += 1; if (underNot) prohibited += q
-            pc += PhraseClause(t.qid, q, slots, 1.0f, slop)
-            ELeaf(q)
-          case PrefixLeaf(p) =>
-            val q = i; i += 1; if (underNot) prohibited += q
-            ec += ExpansionClause(t.qid, q, expandPrefix(p), 1.0f)
-            ELeaf(q)
-          case FuzzyLeaf(base, d) =>
-            val q = i; i += 1; if (underNot) prohibited += q
-            val baseCp = base.codePointCount(0, base.length)
-            val boosted = expandFuzzy(base, d).map { case (term, dist) =>
-              val termCp = term.codePointCount(0, term.length)
-              val boost = if (dist == 0) 1.0f
-                else 1.0f - dist.toFloat / math.min(baseCp, termCp).toFloat
-              (term, boost)
-            }
-            bc += BlendedClause(t.qid, q, boosted, 1.0f)
-            ELeaf(q)
-          case BoolNode(children) =>
-            EBool(children.map { case (occ, child) =>
-              val code = occ match {
-                case Must => 0
-                case Should => 1
-                case MustNot => 2
+          }
+          n match {
+            case MatchAllNode =>
+              if (!underNot) nMatchAll += 1
+              EConst(1.0f) // queryNorm folded in by searchClauses
+            case TermLeaf(term) => leaf(q => wc += WeightedClause(t.qid, q, term, 1.0f))
+            case PhraseLeaf(slots, slop) => leaf(q => pc += PhraseClause(t.qid, q, slots, 1.0f, slop))
+            case PrefixLeaf(p) => leaf(q => ec += ExpansionClause(t.qid, q, expandPrefix(p), 1.0f))
+            case FuzzyLeaf(base, d) =>
+              val baseCp = base.codePointCount(0, base.length)
+              val boosted = expandFuzzy(base, d).map { case (term, dist) =>
+                val termCp = term.codePointCount(0, term.length)
+                val boost = if (dist == 0) 1.0f
+                  else 1.0f - dist.toFloat / math.min(baseCp, termCp).toFloat
+                (term, boost)
               }
-              (code, go(child, underNot || occ == MustNot))
-            }.toArray)
+              leaf(q => bc += BlendedClause(t.qid, q, boosted, 1.0f))
+            case BoolNode(children) =>
+              EBool(children.map { case (occ, child) =>
+                val code = occ match {
+                  case Must => 0
+                  case Should => 1
+                  case MustNot => 2
+                }
+                (code, go(child, underNot || occ == MustNot))
+              }.toArray)
+          }
         }
         val root2 = go(root, underNot = false)
         treeB += t.qid -> TreeSpec(root2, prohibited.result(), nMatchAll)
       }
     }
     val trees = treeB.result()
-    if (trees.isEmpty) {
-      import spark.implicits._
-      return spark.emptyDataset[RunLine]
-    }
+    if (trees.isEmpty) return spark.emptyDataset[RunLine]
     searchClauses(wc.result(), k, scorerName, pruning = pruning,
       phraseClauses = pc.result(), expansionClauses = ec.result(),
       blendedClauses = bc.result(), trees = trees)
@@ -743,13 +737,16 @@ final class Searcher(val index: BuiltIndex) {
     new scala.collection.concurrent.TrieMap[(String, Int, Int), Seq[(String, Int)]]()
 
   def expandPrefix(prefix: String, cap: Int = 4096): Seq[String] =
-    prefixCache.getOrElseUpdate((prefix, cap), {
-      import spark.implicits._
-      val out = prefixScan(prefix).select("term").distinct()
-        .as[String].take(cap + 1).toSeq
-      require(out.size <= cap, s"prefix '$prefix*' expands past $cap terms")
-      out
-    })
+    prefixCache.getOrElseUpdate((prefix, cap),
+      vocabTerms(prefixScan(prefix), cap, s"prefix '$prefix*'"))
+
+  /** The distinct terms of a vocabulary scan, failing loudly past `cap`. */
+  private def vocabTerms(scan: DataFrame, cap: Int, what: => String): Seq[String] = {
+    import spark.implicits._
+    val out = scan.select("term").distinct().as[String].take(cap + 1).toSeq
+    require(out.size <= cap, s"$what expands past $cap terms")
+    out
+  }
 
   /** The pruned vocabulary scan behind [[expandPrefix]] (exposed so specs
     * can assert the plan pushes the prefix predicate and prunes the length
@@ -806,24 +803,30 @@ final class Searcher(val index: BuiltIndex) {
     val empty = Seq.empty[(String, String, Long, Long, Long)]
       .toDF("q", "suggestion", "dist", "df", "rank")
     if (active.isEmpty) return empty
-    val lens = active.map(_.length)
-    val cands = index.vocab
-      .where(col("len") >= lens.min - maxEdits &&
-        col("len") <= lens.max + maxEdits)
-      .join(broadcast(active.toDF("q")),
-        abs(col("len") - length(col("q"))) <= maxEdits &&
-          levenshtein(col("term"), col("q")) <= maxEdits)
-      .select(col("q"), col("term"),
-        levenshtein(col("term"), col("q")).cast("long").as("dist"))
-      .distinct() // a delta-union vocab may list a term once per delta
     val scored = index.termStats.select(col("term"), col("df"))
-      .join(broadcast(cands), Seq("term"))
+      .join(broadcast(editCandidates(active, maxEdits)), Seq("term"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q")).orderBy(col("dist").asc, col("df").desc, col("term").asc)
     scored.withColumn("rank", row_number().over(w).cast("long") - 1)
       .where(col("rank") < topN)
-      .select(col("q"), col("term").as("suggestion"), col("dist"),
+      .select(col("q"), col("term").as("suggestion"), col("dist").cast("long").as("dist"),
         col("df").cast("long").as("df"), col("rank"))
+  }
+
+  /** (q, term, dist) for every vocabulary term within `maxEdits` of an
+    * input: one length-band partition-pruned vocab scan serves the whole
+    * batch (inputs broadcast into a nested-loop join).
+    */
+  private def editCandidates(inputs: Seq[String], maxEdits: Int): DataFrame = {
+    import spark.implicits._
+    val lens = inputs.map(_.length)
+    index.vocab
+      .where(col("len") >= lens.min - maxEdits && col("len") <= lens.max + maxEdits)
+      .join(broadcast(inputs.toDF("q")),
+        abs(col("len") - length(col("q"))) <= maxEdits &&
+          levenshtein(col("term"), col("q")) <= maxEdits)
+      .select(col("q"), col("term"), levenshtein(col("term"), col("q")).as("dist"))
+      .distinct() // a delta-union vocab may list a term once per delta
   }
 
   /** Adjacency-matrix aggregation (≙ ES `adjacency_matrix`): given named
@@ -889,21 +892,10 @@ final class Searcher(val index: BuiltIndex) {
       require(ts.length >= 2 && ts.length <= 4,
         s"phraseSuggest input '$qid' must analyze to 2-4 terms, got ${ts.length}")
     }
-    val inTerms = slots.flatMap(_._2).distinct
     // one length-banded vocab scan serves every slot's candidate set
-    val lens = inTerms.map(_.length)
-    val cands = index.vocab
-      .where(col("len") >= lens.min - maxEdits &&
-        col("len") <= lens.max + maxEdits)
-      .join(broadcast(inTerms.toDF("q")),
-        abs(col("len") - length(col("q"))) <= maxEdits &&
-          levenshtein(col("term"), col("q")) <= maxEdits)
-      .select(col("q"), col("term"),
-        levenshtein(col("term"), col("q")).as("dist"))
-      .distinct()
     val ranked: Map[String, Seq[(String, Long)]] = index.termStats
       .select(col("term"), col("df"), col("cf"))
-      .join(broadcast(cands), Seq("term"))
+      .join(broadcast(editCandidates(slots.flatMap(_._2).distinct, maxEdits)), Seq("term"))
       .select("q", "term", "dist", "df", "cf")
       .as[(String, String, Int, Long, Long)]
       .collect()
@@ -949,6 +941,13 @@ final class Searcher(val index: BuiltIndex) {
     }.toDF("qid", "suggestion", "rank")
   }
 
+  private def requireSpans(entry: String, qids: Seq[String]): Unit = {
+    require(qids.nonEmpty, s"$entry needs at least one span")
+    require(qids.distinct.size == qids.size, "duplicate qids in one span batch")
+    require(index.cfg.indexPositions,
+      "span queries need a positions-enabled index (IndexConfig.indexPositions)")
+  }
+
   /** SpanNearQuery over two single-term spans, both directions: `ordered`
     * picks the faithful NearSpansOrdered or NearSpansUnordered walk
     * ([[SpanNear.freq]]), whose freq is scored like a phrase — through the
@@ -960,14 +959,10 @@ final class Searcher(val index: BuiltIndex) {
   def searchSpanNear(spans: Seq[(String, String, String, Int)], k: Int = 1000,
                      scorerName: String = "bm25",
                      ordered: Boolean = true): Dataset[RunLine] = {
-    require(spans.nonEmpty, "searchSpanNear needs at least one span")
-    require(spans.map(_._1).distinct.size == spans.size,
-      "duplicate qids in one span batch")
+    requireSpans("searchSpanNear", spans.map(_._1))
     require(spans.forall(_._4 >= 0), "slop must be non-negative")
     require(spans.forall(s => s._2 != s._3),
       "span near of a repeated term needs repeat-occurrence pinning; unsupported")
-    require(index.cfg.indexPositions,
-      "span queries need a positions-enabled index (IndexConfig.indexPositions)")
     import spark.implicits._
     val scorer = Scorer.byName(scorerName)
     val stats = CollStats(index.stats.max_doc, index.stats.sum_total_term_freq)
@@ -1036,22 +1031,14 @@ final class Searcher(val index: BuiltIndex) {
     // `SELECT DISTINCT qid, term` replays exactly that — a repeated topic
     // term must not add its score twice to the tie-broken sum (ADVICE r5;
     // DisMaxBoostSpec pins the repeated-term case)
-    val clauses = topics.flatMap { t =>
-      analyzer.analyze(t.text).distinct.zipWithIndex.map { case (term, i) =>
-        WeightedClause(t.qid, i, term, 1.0f)
-      }
-    }
+    val clauses = topicClauses(topics, distinct = true)
     val dfs = index.termStatsOf(clauses.map(_.term))
-    val plan: Map[String, (Float, Array[(String, Int, Float)])] =
-      clauses.groupBy(_.term).flatMap { case (term, cs) =>
-        dfs.get(term).map { case (df, cf) =>
-          term -> (scorer.termWeight(df, cf, stats),
-            cs.map(c => (c.qid, c.qidx, 1.0f)).toArray)
-        }
-      }
-    if (plan.isEmpty) return spark.emptyDataset[RunLine]
+    val terms = ClausePlan.termPlan(clauses.flatMap(c => dfs.get(c.term).map { case (df, cf) =>
+      (c.term, scorer.termWeight(df, cf, stats), (c.qid, c.qidx, 1.0f))
+    }))
+    if (terms.isEmpty) return spark.emptyDataset[RunLine]
     val tie = tieBreaker
-    collectTopK(Searcher.combineRuns(termPartials(plan, scorer, stats),
+    collectTopK(Searcher.combineRuns(termPartials(terms, scorer, stats),
       () => new Searcher.DisMaxRuns(tie)), k, scorer.name)
   }
 
@@ -1118,12 +1105,8 @@ final class Searcher(val index: BuiltIndex) {
     */
   def searchSpanFirst(spans: Seq[(String, String, Int)], k: Int = 1000,
                       scorerName: String = "bm25"): Dataset[RunLine] = {
-    require(spans.nonEmpty, "searchSpanFirst needs at least one span")
-    require(spans.map(_._1).distinct.size == spans.size,
-      "duplicate qids in one span batch")
+    requireSpans("searchSpanFirst", spans.map(_._1))
     require(spans.forall(_._3 > 0), "span end must be positive")
-    require(index.cfg.indexPositions,
-      "span queries need a positions-enabled index (IndexConfig.indexPositions)")
     import spark.implicits._
     val scorer = Scorer.byName(scorerName)
     val stats = CollStats(index.stats.max_doc, index.stats.sum_total_term_freq)
@@ -1175,13 +1158,8 @@ final class Searcher(val index: BuiltIndex) {
     * so SQL oracles can replay the match.
     */
   def expandRegex(pattern: String, cap: Int = 4096): Seq[String] =
-    regexCache.getOrElseUpdate((pattern, cap), {
-      import spark.implicits._
-      val out = regexScan(pattern).select("term").distinct()
-        .as[String].take(cap + 1).toSeq
-      require(out.size <= cap, s"regex '$pattern' expands past $cap terms")
-      out
-    })
+    regexCache.getOrElseUpdate((pattern, cap),
+      vocabTerms(regexScan(pattern), cap, s"regex '$pattern'"))
 
   /** Wildcard expansion (≙ WildcardQuery): `*` = any run, `?` = any one
     * char, everything else literal. Compiles to the shared regex scan —
@@ -1208,11 +1186,7 @@ final class Searcher(val index: BuiltIndex) {
     */
   def expandRange(lo: String, hi: String, cap: Int = 4096): Seq[String] = {
     require(lo <= hi, s"empty term range: ['$lo', '$hi']")
-    import spark.implicits._
-    val out = rangeScan(lo, hi).select("term").distinct()
-      .as[String].take(cap + 1).toSeq
-    require(out.size <= cap, s"range ['$lo','$hi'] expands past $cap terms")
-    out
+    vocabTerms(rangeScan(lo, hi), cap, s"range ['$lo','$hi']")
   }
 
   /** The vocabulary scan behind [[expandRange]] (exposed for plan
@@ -1289,7 +1263,9 @@ final class Searcher(val index: BuiltIndex) {
 
   /** The full scored candidate stream (qid, docid, score) BEFORE the top-k
     * collector — the seam multi-field retrieval combines per-field scores
-    * on ([[MultiField]]); parameters as [[searchClauses]].
+    * on ([[MultiField]]); parameters as [[searchClauses]]. It reads as
+    * plan ([[ClausePlan]]) → partials → [[Searcher.combineRuns]] →
+    * post-filters.
     */
   private[graft] def scoredClauses(clauses: Seq[WeightedClause],
                     k: Int = 1000,
@@ -1308,189 +1284,13 @@ final class Searcher(val index: BuiltIndex) {
                     minShouldMatch: Int = 0)
       : Dataset[(String, Long, Float)] = {
     import spark.implicits._
-    val scorer = Scorer.byName(scorerName)
-    // minimumNumberShouldMatch (≙ BooleanQuery.setMinimumNumberShouldMatch):
-    // flat-OR only — a tree carries its own occurs, AND already requires
-    // all, and WAND's seed θ is computed over the UNfiltered stream, so a
-    // doc the msm gate later removes could have seeded a θ that overshoots
-    // the true (post-gate) kth score — pruning would be unsound.
-    require(minShouldMatch == 0 ||
-        (mode == "or" && trees.isEmpty && !pruning),
-      "minShouldMatch requires flat OR mode without trees or pruning")
-    if (clauses.isEmpty && phraseClauses.isEmpty && expansionClauses.isEmpty &&
-        blendedClauses.isEmpty && synonymClauses.isEmpty && trees.isEmpty)
-      return spark.emptyDataset[(String, Long, Float)]
-    require(phraseClauses.isEmpty || index.cfg.indexPositions,
-      "phrase clauses need a positions-enabled index (IndexConfig.indexPositions)")
-    // MultiPhraseQuery union slots (several terms sharing one offset —
-    // match_phrase_prefix's expanded last slot): exact matching unions the
-    // slot's position lists; the sloppy event walk pins repeats by TERM
-    // identity per slot, which a union slot has no single answer for.
-    require(phraseClauses.forall(pc =>
-        pc.slop == 0 || pc.terms.map(_._2).distinct.size == pc.terms.size),
-      "slot alternatives (MultiPhraseQuery union slots) require slop == 0")
-    require(trees.isEmpty || (mode == "or" && negTerms.isEmpty),
-      "tree evaluation carries its own boolean structure: use mode=or and no negTerms")
-    require(collapseKeys.isEmpty || !pruning,
-      "field collapse cannot prune: WAND's seed θ bounds the global kth " +
-        "score, but a collapse key's winner may rank anywhere")
-    require(filterDocids.isEmpty || !pruning,
-      "attribute filters cannot prune: the seed pass computes θ over the " +
-        "UNfiltered stream, so the filtered kth score may sit in a " +
-        "block the overshooting θ skipped")
-    if (trees.nonEmpty) {
-      // fail at the driver, not as an executor-side lookup miss at job time
-      val uncovered = (clauses.map(_.qid) ++ phraseClauses.map(_.qid) ++
-        expansionClauses.map(_.qid) ++ blendedClauses.map(_.qid) ++
-        synonymClauses.map(_.qid))
-        .distinct.filterNot(trees.contains)
-      require(uncovered.isEmpty,
-        s"clauses reference qids without a TreeSpec: ${uncovered.mkString(", ")}")
-    }
-    val conjunctive = mode == "and"
-    // Pruning is sound per-QUERY only for pure disjunctive term scoring:
-    // exclusions (MUST_NOT terms or excluded docnos) remove docs AFTER the
-    // seed pass computed θ over the un-excluded stream, and phrase/
-    // expansion/blended partials are not covered by the term block bounds,
-    // so the true kth score of such a query could beat θ inside a skipped
-    // block. Those qids simply get no θ (every block stays alive for
-    // them); clean disjunctive qids in the same batch still prune. A TREE
-    // query prunes iff its tree is the flat OR in disguise — SHOULD-only
-    // over plain term leaves, no match-all constant
-    // (BoolQuery.prunableShape): with a coord-free scorer (implied by
-    // scorer.supportsPruning) its evaluation is exactly the NaN-skipping
-    // sum of leaf partials, so the seed lower bound stays valid. MUST /
-    // MUST_NOT / match-all / coord can reject or re-weight subsets, and
-    // those trees remain unprunable.
-    val unprunableQids: Set[String] =
-      (phraseClauses.map(_.qid) ++ expansionClauses.map(_.qid) ++
-        blendedClauses.map(_.qid) ++ synonymClauses.map(_.qid) ++
-        negTerms.map(_._1) ++
-        excludeDocnos.keys ++
-        trees.collect { case (qid, ts) if !BoolQuery.prunableShape(ts.root) => qid }).toSet
-    val pruneQids: Set[String] =
-      if (!pruning || !scorer.supportsPruning || conjunctive) Set.empty
-      else clauses.map(_.qid).filterNot(unprunableQids).toSet
-    val prune = pruneQids.nonEmpty
-
-    // Resolve excluded docnos → docids (tiny point lookup on the doc table,
-    // ≙ the reference's docno TermQuery lookups §2.3).
-    val excludedByQid: Map[String, Set[Long]] =
-      if (excludeDocnos.isEmpty) Map.empty
-      else {
-        val allDocnos = excludeDocnos.values.flatten.toSeq.distinct
-        val ids = index.docs.where(col("docno").isin(allDocnos: _*))
-          .select("docno", "docid").as[(String, Long)].collect().toMap
-        excludeDocnos.map { case (qid, ds) => qid -> ds.flatMap(ids.get) }
-      }
-
-    val stats = CollStats(index.stats.max_doc, index.stats.sum_total_term_freq)
-
-    // Per-term (docFreq, collectionFreq) of every clause term, memoized per
-    // index: repeated topics skip the lookup job.
-    val dfs = index.termStatsOf(clauses.map(_.term) ++
-      phraseClauses.flatMap(_.terms.map(_._1)) ++
-      blendedClauses.flatMap(_.terms.map(_._1)) ++ synonymClauses.flatMap(_.terms))
-
-    // Per-query normalization (1.0 for all reference models, which override
-    // queryNorm — only classic TF-IDF uses it): sumOfSquaredWeights over
-    // ALL clauses, including unmatched terms, like Lucene's weight phase.
-    // phrase clause weight = the reference's accumulate-from-1.0 multi-stats
-    // branch (`BM25.java:57,64-68`), duplicated phrase terms included
-    val phraseWeights: Map[(String, Int), Float] = phraseClauses.map { pc =>
-      (pc.qid, pc.qidx) ->
-        scorer.phraseWeight(pc.terms.map(t => dfs.getOrElse(t._1, (0L, 0L))), stats)
-    }.toMap
-
-    // Blended per-clause term weight (≙ BlendedTermQuery.adjustFrequencies):
-    // one idf from the MAX df (and max cf) across the clause's expanded
-    // terms that exist in the index.
-    val blendWeights: Map[(String, Int), Float] = blendedClauses.map { bc =>
-      val present = bc.terms.flatMap(t => dfs.get(t._1))
-      (bc.qid, bc.qidx) -> (if (present.isEmpty) 0.0f
-        else scorer.termWeight(present.map(_._1).max, present.map(_._2).max, stats))
-    }.toMap
-
-    // Synonym pseudo-term weight (≙ SynonymQuery.SynonymWeight's merged
-    // TermStatistics): max docFreq, summed collectionFreq over the group's
-    // indexed members.
-    val synWeights: Map[(String, Int), Float] = synonymClauses.map { sc =>
-      val present = sc.terms.flatMap(t => dfs.get(t))
-      (sc.qid, sc.qidx) -> (if (present.isEmpty) 0.0f
-        else scorer.termWeight(present.map(_._1).max, present.map(_._2).sum, stats))
-    }.toMap
-
-    // Tree mode mirrors Lucene's BooleanWeight recursion: prohibited
-    // (MUST_NOT-subtree) clauses never contribute to the norm sum, and each
-    // scoring match-all node contributes weight 1.
-    val normEntries: Seq[(String, Int, Float)] =
-      (clauses.map(c => (c.qid, c.qidx, {
-        val (df, cf) = dfs.getOrElse(c.term, (0L, 0L))
-        scorer.termWeight(df, cf, stats) * c.boost
-      })) ++ phraseClauses.map(pc =>
-        (pc.qid, pc.qidx, phraseWeights((pc.qid, pc.qidx)) * pc.boost)) ++
-        expansionClauses.map(e => (e.qid, e.qidx, e.boost)) ++ // constant weight
-        blendedClauses.map(bc =>
-          (bc.qid, bc.qidx, blendWeights((bc.qid, bc.qidx)) * bc.boost)) ++
-        synonymClauses.map(sc =>
-          (sc.qid, sc.qidx, synWeights((sc.qid, sc.qidx)) * sc.boost)))
-    val qnByQid: Map[String, Float] =
-      (if (trees.isEmpty) normEntries
-       else normEntries.filterNot { case (qid, qidx, _) =>
-         trees.get(qid).exists(_.prohibitedNorm(qidx))
-       } ++ trees.toSeq.flatMap { case (qid, ts) =>
-         Seq.fill(ts.nMatchAllNorm)((qid, Int.MaxValue, 1.0f))
-       })
-      .groupBy(_._1).map { case (qid, ws) =>
-        qid -> scorer.queryNorm(ws.sortBy(_._2).map(_._3))
-      }
-    val maxOverlap: Map[String, Int] =
-      (clauses.map(c => (c.qid, c.qidx)) ++
-        phraseClauses.map(pc => (pc.qid, pc.qidx)) ++
-        expansionClauses.map(e => (e.qid, e.qidx)) ++
-        blendedClauses.map(bc => (bc.qid, bc.qidx)) ++
-        synonymClauses.map(sc => (sc.qid, sc.qidx)))
-        .groupBy(_._1).map { case (q, cs) => q -> cs.size }
-
-    // AND mode: a query with any unindexed clause term (or phrase term, or
-    // empty expansion) can match nothing.
-    val deadQids: Set[String] =
-      if (!conjunctive) Set.empty
-      else (clauses.groupBy(_.qid)
-        .collect { case (q, cs) if cs.exists(c => !dfs.contains(c.term)) => q } ++
-        phraseClauses.groupBy(_.qid)
-          .collect { case (q, ps) if ps.exists(_.terms.exists(t => !dfs.contains(t._1))) => q } ++
-        expansionClauses.groupBy(_.qid)
-          .collect { case (q, es) if es.exists(_.terms.isEmpty) => q } ++
-        blendedClauses.groupBy(_.qid)
-          .collect { case (q, bs) if bs.exists(_.terms.forall(t => !dfs.contains(t._1))) => q } ++
-        synonymClauses.groupBy(_.qid)
-          .collect { case (q, ss) if ss.exists(_.terms.forall(t => !dfs.contains(t))) => q })
-        .toSet
-    val liveClauses = clauses.filterNot(c => deadQids(c.qid))
-    val livePhrases = phraseClauses.filterNot(pc => deadQids(pc.qid))
-    val liveExpansions = expansionClauses
-      .filterNot(e => deadQids(e.qid)).filter(_.terms.nonEmpty)
-    val liveBlended = blendedClauses.filterNot(bc => deadQids(bc.qid))
-      .map(bc => bc.copy(terms = bc.terms.filter(t => dfs.contains(t._1))))
-      .filter(_.terms.nonEmpty)
-    val liveSynonyms = synonymClauses.filterNot(sc => deadQids(sc.qid))
-      .map(sc => sc.copy(terms = sc.terms.filter(dfs.contains)))
-      .filter(_.terms.nonEmpty)
-
-    // Driver-side query plan: term → (idf, clauses using it), queryNorm
-    // folded into the clause boost.
-    val plan: Map[String, (Float, Array[(String, Int, Float)])] =
-      liveClauses.groupBy(_.term).flatMap { case (term, cs) =>
-        dfs.get(term).map { case (df, cf) =>
-          term -> (scorer.termWeight(df, cf, stats),
-                   cs.map(c => (c.qid, c.qidx, c.boost * qnByQid(c.qid))).toArray)
-        }
-      }
-    if (plan.isEmpty && livePhrases.isEmpty && liveExpansions.isEmpty &&
-        liveBlended.isEmpty && liveSynonyms.isEmpty &&
-        trees.isEmpty) // a tree may still match-all
-      return spark.emptyDataset[(String, Long, Float)]
+    val plan = new ClausePlan(clauses, phraseClauses, expansionClauses, blendedClauses,
+      synonymClauses, trees, mode, minShouldMatch, pruning, negTerms, excludeDocnos,
+      collapseKeys.nonEmpty, filterDocids.nonEmpty, index.cfg.indexPositions,
+      Scorer.byName(scorerName),
+      CollStats(index.stats.max_doc, index.stats.sum_total_term_freq), index.termStatsOf)
+    if (plan.isEmpty) return spark.emptyDataset[(String, Long, Float)]
+    val scorer = plan.scorer
 
     // Block-max WAND (north-star extension, SURVEY.md §2.7): a seed pass
     // scores each query's cheapest (lowest-df) clause exactly, giving a
@@ -1498,200 +1298,59 @@ final class Searcher(val index: BuiltIndex) {
     // (query, term, block) whose upper bound — block-max tf at block-min dl
     // plus the other clauses' global maxima — cannot strictly beat θ.
     // Sound because scores are monotone ↑tf ↓dl and pruning is strict (<).
-    val theta: Map[String, Float] =
-      if (!prune) Map.empty
-      else seedThresholds(clauses.filter(c => pruneQids(c.qid)), dfs, k,
-        scorer, stats, qnByQid)
-    val decodedAcc = spark.sparkContext.longAccumulator("wand_blocks_decoded")
-    val prunedAcc = spark.sparkContext.longAccumulator("wand_blocks_pruned")
-    if (prune) pruningAccs = Some((decodedAcc, prunedAcc))
+    val wandAccs = Option.when(plan.pruneQids.nonEmpty)(
+      (spark.sparkContext.longAccumulator("wand_blocks_decoded"),
+        spark.sparkContext.longAccumulator("wand_blocks_pruned")))
+    if (wandAccs.nonEmpty) pruningAccs = wandAccs
+    val theta = if (wandAccs.isEmpty) Map.empty[String, Float] else seedThresholds(plan, k)
 
-    // Per-clause partial scores (qid, docid, clauseIdx, partial); clause
-    // boost multiplies like a Lucene query-term boost. Only the WAND main
-    // pass reads block metadata ([[BuiltIndex.postingsScoring]]); the
-    // exhaustive decode drops those columns from the scan.
-    val partials: Dataset[(String, Long, Int, Float)] =
-      if (plan.isEmpty) spark.emptyDataset[(String, Long, Int, Float)]
-      else if (theta.isEmpty) termPartials(plan, scorer, stats)
-      else {
-        val posts = index.forTerms(index.postingsScoring, plan.keys).as[PostingRun]
-        val (boostSum, othersSum) = wandBounds(posts, plan,
-          clauses.filter(c => pruneQids(c.qid)), qnByQid, scorer, stats)
-        posts.flatMap { run =>
-          val (idf, cs) = plan(run.term)
-          val nBlocks = run.block_last_docid.length
-          (0 until nBlocks).iterator.flatMap { bi =>
-            val ub = scorer.score(run.block_max_tf(bi), run.block_min_dl(bi), idf, stats)
-            val alive = cs.filter { case (qid, _, _) =>
-              theta.get(qid) match {
-                case Some(th) =>
-                  ub * boostSum.getOrElse((qid, run.term), 0.0f) +
-                    othersSum.getOrElse((qid, run.term), 0.0f) >= th
-                case None => true
-              }
-            }
-            if (alive.isEmpty) { prunedAcc.add(1); Iterator.empty }
-            else {
-              decodedAcc.add(1)
-              PostingCodec.decodeBlock(bi, run.ndocs,
-                  run.doc_blob, run.tf_blob, run.dl_blob,
-                  run.block_last_docid, run.block_doc_off, run.block_tf_off,
-                  run.block_dl_off)
-                .flatMap { p =>
-                  val s = scorer.score(p.tf, p.dl, idf, stats)
-                  alive.iterator.map { case (qid, qidx, boost) =>
-                    (qid, p.docid, qidx, if (boost == 1.0f) s else s * boost)
-                  }
-                }
-            }
-          }
-        }
-      }
+    // (qid, docid, slot, partial) of every clause kind: term and blended
+    // clauses share the plain-term decode (or the WAND main pass)
+    val partials = Seq(
+      Option.when(plan.terms.nonEmpty)(
+        if (theta.isEmpty) termPartials(plan.terms, scorer, plan.stats)
+        else wandPartials(plan, theta, wandAccs.get)),
+      Option.when(plan.phrases.nonEmpty)(positionalPartials(plan.phrases, scorer, plan.stats)),
+      Option.when(plan.expansions.nonEmpty)(expansionPartials(plan.expansions)),
+      Option.when(plan.synonyms.nonEmpty)(synonymPartials(plan))
+    ).flatten.reduceOption(_ union _).getOrElse(spark.emptyDataset[(String, Long, Int, Float)])
 
-    // Phrase clause partials from the positional co-group, weighted by the
-    // accumulated multi-term phrase weight. One extra shuffle, paid only by
-    // queries that contain phrases.
-    val phrasePartials: Dataset[(String, Long, Int, Float)] =
-      positionalPartials(livePhrases.map(pc =>
-        Searcher.PositionalClause(pc.qid, pc.qidx, pc.terms, pc.slop, None,
-          phraseWeights((pc.qid, pc.qidx)), pc.boost * qnByQid(pc.qid))), scorer, stats)
-    // Expansion clause partials (CONSTANT_SCORE): decode the expanded
-    // terms' postings; a doc matching several expanded terms of one clause
-    // still scores the boost ONCE (distinct on the identical partial rows).
-    val expPartials: Dataset[(String, Long, Int, Float)] =
-      if (liveExpansions.isEmpty) spark.emptyDataset[(String, Long, Int, Float)]
-      else {
-        val byTerm: Map[String, Array[(String, Int, Float)]] = liveExpansions
-          .flatMap(e => e.terms.map(t => (t, (e.qid, e.qidx, e.boost * qnByQid(e.qid)))))
-          .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).toArray }
-        val ePosts = index.forTerms(index.postingsDecode, byTerm.keys).as[PostingRun]
-        ePosts.flatMap { run =>
-          val cs = byTerm(run.term)
-          PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
-            .flatMap(p => cs.iterator.map { case (qid, qidx, b) => (qid, p.docid, qidx, b) })
-        }.distinct()
-      }
-
-    // Blended clause partials (fuzzy): each expanded term scores as a real
-    // TermQuery against the clause's BLENDED idf, boosted by its fuzzy
-    // similarity; a doc matching several expanded terms of one clause sums
-    // them in deterministic expansion order (one extra tiny shuffle, paid
-    // only by fuzzy queries, so the per-(qid, doc, clause) float sum is
-    // reproducible regardless of posting-run arrival order).
-    val blendedPartials: Dataset[(String, Long, Int, Float)] =
-      if (liveBlended.isEmpty) spark.emptyDataset[(String, Long, Int, Float)]
-      else {
-        // term -> [(qid, qidx, expansionRank, blendedIdf, fullBoost)]
-        val byTerm: Map[String, Array[(String, Int, Int, Float, Float)]] =
-          liveBlended.flatMap { bc =>
-            val w = blendWeights((bc.qid, bc.qidx))
-            bc.terms.zipWithIndex.map { case ((term, fb), r) =>
-              (term, (bc.qid, bc.qidx, r, w, fb * bc.boost * qnByQid(bc.qid)))
-            }
-          }.groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).toArray }
-        val bPosts = index.forTerms(index.postingsDecode, byTerm.keys).as[PostingRun]
-        val scorerB = scorer
-        val statsB = stats
-        bPosts.flatMap { run =>
-          val cs = byTerm(run.term)
-          PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
-            .flatMap { p =>
-              cs.iterator.map { case (qid, qidx, r, w, boost) =>
-                (qid, p.docid, qidx, r, scorerB.score(p.tf, p.dl, w, statsB) * boost)
-              }
-            }
-        }
-        .groupByKey(t => (t._1, t._2, t._3))
-        .mapGroups[(String, Long, Int, Float)] {
-          (key: (String, Long, Int), it: Iterator[(String, Long, Int, Int, Float)]) =>
-            val arr = it.toArray.sortBy(_._4)
-            var s = 0.0f
-            arr.foreach(s += _._5)
-            (key._1, key._2, key._3, s)
-        }
-      }
-
-    // Synonym clause partials: decode the group members' postings, SUM the
-    // raw tfs per (query, doc, clause) — an integer sum, order-free — then
-    // apply the scorer's TF saturation ONCE against the blended weight
-    // (≙ SynonymScorer: one freq, one similarity call). One extra tiny
-    // shuffle, paid only by queries that carry synonym groups.
-    val synPartials: Dataset[(String, Long, Int, Float)] =
-      if (liveSynonyms.isEmpty) spark.emptyDataset[(String, Long, Int, Float)]
-      else {
-        val byTerm: Map[String, Array[(String, Int)]] = liveSynonyms
-          .flatMap(sc => sc.terms.map(t => (t, (sc.qid, sc.qidx))))
-          .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).toArray }
-        val synBoost: Map[(String, Int), Float] = liveSynonyms
-          .map(sc => (sc.qid, sc.qidx) -> sc.boost * qnByQid(sc.qid)).toMap
-        val sPosts = index.forTerms(index.postingsDecode, byTerm.keys).as[PostingRun]
-        val weights = synWeights
-        val scorerB = scorer
-        val statsB = stats
-        sPosts.flatMap { run =>
-          val cs = byTerm(run.term)
-          PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
-            .flatMap { p =>
-              cs.iterator.map { case (qid, qidx) => (qid, p.docid, qidx, p.tf, p.dl) }
-            }
-        }
-        .groupByKey(t => (t._1, t._2, t._3))
-        .mapGroups[(String, Long, Int, Float)] {
-          (key: (String, Long, Int), it: Iterator[(String, Long, Int, Int, Int)]) =>
-            var tf = 0
-            var dl = 0
-            it.foreach { r => tf += r._4; dl = r._5 }
-            val boost = synBoost((key._1, key._3))
-            val sc = scorerB.score(tf.toFloat, dl, weights((key._1, key._3)), statsB)
-            (key._1, key._2, key._3, if (boost == 1.0f) sc else sc * boost)
-        }
-      }
-
-    val allPartials = Seq(
-      Some(partials),
-      if (livePhrases.isEmpty) None else Some(phrasePartials),
-      if (liveExpansions.isEmpty) None else Some(expPartials),
-      if (liveBlended.isEmpty) None else Some(blendedPartials),
-      if (liveSynonyms.isEmpty) None else Some(synPartials)
-    ).flatten.reduce(_ union _)
-
-    // Per-(query, doc) scoring on the shared sorted pass
-    // ([[Searcher.combineRuns]]). Flat mode sums each run in clause order
-    // (≙ boolean scorer sum) with optional require-all / msm and top-level
-    // coord. Tree mode is the BooleanQuery-faithful recursive evaluation of
-    // the query's broadcast tree over the run's clause scores — queryNorm
-    // folded into the match-all constants here, per-node coord inside eval.
-    val excluded = excludedByQid
-    val treeEval: Map[String, BoolQuery.EvalNode] =
-      trees.map { case (qid, ts) =>
-        qid -> BoolQuery.foldQueryNorm(ts.root, qnByQid.getOrElse(qid, 1.0f))
-      }
+    // Resolve excluded docnos → docids (tiny point lookup on the doc table,
+    // ≙ the reference's docno TermQuery lookups §2.3).
+    val excluded: Map[String, Set[Long]] = {
+      val ids = docidLookup(excludeDocnos.values.flatten.toSeq)
+      excludeDocnos.map { case (qid, ds) => qid -> ds.flatMap(ids.get) }
+    }
     val tombL = tombstonesBc
-    val filtered = allPartials
+    val filtered = partials
       .filter(t => Searcher.liveDoc(tombL, t._2) &&
         excluded.get(t._1).forall(!_.contains(t._2)))
-    // Tree mode keeps the NaN (no-match) rows in `evaluated`: the match-all
-    // complement below needs the full candidate set. When a complement WILL
-    // be taken (computed up front from the trees' empty-document scores),
-    // the evaluated stream is lazily local-checkpointed so its two
-    // consumers (score filter + candidate anti-join) share ONE computation
-    // — typed-operator plans defeat Catalyst's exchange reuse, so without
-    // this the whole postings decode would run twice.
-    val complementQids: Seq[(String, Float)] =
-      treeEval.toSeq.flatMap { case (qid, folded) =>
-        val s = BoolQuery.eval(folded, _ => Float.NaN, scorer.coord)
-        if (s.isNaN) None else Some(qid -> s)
-      }
+
+    // Per-(query, doc) scoring on the shared sorted pass
+    // ([[Searcher.combineRuns]]). Flat mode sums each run clause by clause
+    // (≙ boolean scorer sum) with optional require-all / msm and top-level
+    // coord. Tree mode is the BooleanQuery-faithful recursive evaluation of
+    // the query's broadcast tree over the run's clause scores, and keeps
+    // the NaN (no-match) rows: the match-all complement below needs the
+    // full candidate set. When a complement WILL be taken, the evaluated
+    // stream is lazily local-checkpointed so its two consumers (score
+    // filter + candidate anti-join) share ONE computation — typed-operator
+    // plans defeat Catalyst's exchange reuse, so without this the whole
+    // postings decode would run twice.
+    val slots = plan.slots
     val evaluated: Dataset[(String, Long, Float)] =
       if (trees.isEmpty) spark.emptyDataset[(String, Long, Float)]
       else {
-        val ev = Searcher.combineRuns(filtered, () => new Searcher.TreeRuns(treeEval, scorer))
-        if (complementQids.isEmpty) ev else ev.localCheckpoint(eager = false)
+        val treeEval = plan.treeEval
+        val ev = Searcher.combineRuns(filtered, () => new Searcher.TreeRuns(treeEval, slots, scorer))
+        if (plan.complementQids.isEmpty) ev else ev.localCheckpoint(eager = false)
       }
     val scores: Dataset[(String, Long, Float)] =
       if (trees.nonEmpty) evaluated.filter(t => !t._3.isNaN)
-      else Searcher.combineRuns(filtered,
-        () => new Searcher.FlatRuns(maxOverlap, conjunctive, minShouldMatch, scorer))
+      else {
+        val (maxOv, and, msm) = (plan.maxOverlap, plan.conjunctive, minShouldMatch)
+        Searcher.combineRuns(filtered, () => new Searcher.FlatRuns(slots, maxOv, and, msm, scorer))
+      }
 
     // Match-all complement (tree mode): a query whose tree matches a
     // document containing NO query leaf (pure negation, explicit `*`)
@@ -1702,8 +1361,8 @@ final class Searcher(val index: BuiltIndex) {
     // a batch of pure-negation topics at 10^12 docs costs O(k) rows per
     // topic, not N corpus scans.
     val scoresWithComplement: Dataset[(String, Long, Float)] =
-      if (complementQids.isEmpty) scores
-      else scores union complementTail(complementQids, evaluated, excluded, k)
+      if (plan.complementQids.isEmpty) scores
+      else scores union complementTail(plan.complementQids, evaluated, excluded, k)
 
     // MUST_NOT terms (a true sibling MUST_NOT clause in one BooleanQuery —
     // the programmatic hard exclusion, unlike SimpleQueryParser's `-`
@@ -1739,7 +1398,7 @@ final class Searcher(val index: BuiltIndex) {
     // lexicographic struct max = highest score then smallest docid — with
     // map-side partial aggregation, so the (qid, key) shuffle moves one
     // row per key per partition, not the candidate stream.
-    val scoresCollapsed: Dataset[(String, Long, Float)] = collapseKeys match {
+    collapseKeys match {
       case None => scoresFiltered
       case Some(keys) =>
         scoresFiltered.toDF("qid", "docid", "score")
@@ -1749,35 +1408,105 @@ final class Searcher(val index: BuiltIndex) {
           .select($"qid", $"w.docid".as("docid"), $"w.score".as("score"))
           .as[(String, Long, Float)]
     }
-
-    scoresCollapsed
   }
 
-  /** Exhaustive plain-term partials (qid, docid, qidx, partial): one
-    * bucket-pruned decode of `plan`'s terms (term → (weight, its clauses'
-    * (qid, qidx, boost))) with tombstoned docs dropped; a boost of 1 leaves
-    * the similarity's score untouched. Serves flat and tree searches,
-    * dismax and the WAND seed.
+  /** Exhaustive plain-term partials (qid, docid, slot, partial): one
+    * bucket-pruned decode of `terms` ([[ClausePlan.termPlan]]) with
+    * tombstoned docs dropped, each posting scored once per weight group.
+    * Serves flat and tree searches (term and blended clauses), dismax and
+    * the WAND seed.
     */
-  private def termPartials(plan: Map[String, (Float, Array[(String, Int, Float)])],
+  private def termPartials(terms: Map[String, ClausePlan.TermGroups],
                            scorer: Scorer, stats: CollStats)
       : Dataset[(String, Long, Int, Float)] = {
     import spark.implicits._
     val tombL = tombstonesBc
-    index.forTerms(index.postingsDecode, plan.keys).as[PostingRun].flatMap { run =>
-      val (idf, cs) = plan(run.term)
+    index.forTerms(index.postingsDecode, terms.keys).as[PostingRun].flatMap { run =>
+      val groups = terms(run.term)
       val ps = PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
       (if (tombL.isEmpty) ps else ps.filter(p => Searcher.liveDoc(tombL, p.docid)))
-        .flatMap { p =>
-          val s = scorer.score(p.tf, p.dl, idf, stats)
-          cs.iterator.map { case (qid, qidx, boost) =>
-            (qid, p.docid, qidx, if (boost == 1.0f) s else s * boost)
-          }
-        }
+        .flatMap(p => Searcher.scoreGroups(groups, p, scorer, stats))
     }
   }
 
-  /** Positional clause partials (qid, docid, qidx, partial): decode the
+  /** The WAND main pass over `plan.terms`: per (run, block) and weight
+    * group, the clauses of a qid with a θ stay alive only while the block's
+    * upper bound can reach θ; a block with no live clause is skipped
+    * undecoded. `accs` counts decoded and skipped blocks.
+    */
+  private def wandPartials(plan: ClausePlan, theta: Map[String, Float],
+                           accs: (LongAccumulator, LongAccumulator))
+      : Dataset[(String, Long, Int, Float)] = {
+    import spark.implicits._
+    val (decodedAcc, prunedAcc) = accs
+    val (terms, scorer, stats) = (plan.terms, plan.scorer, plan.stats)
+    val posts = index.forTerms(index.postingsScoring, terms.keys).as[PostingRun]
+    val (boostSum, othersSum) = wandBounds(posts, plan)
+    posts.flatMap { run =>
+      val groups = terms(run.term)
+      (0 until run.block_last_docid.length).iterator.flatMap { bi =>
+        val alive = groups.map { case (w, cs) =>
+          val ub = scorer.score(run.block_max_tf(bi), run.block_min_dl(bi), w, stats)
+          (w, cs.filter { case (qid, _, _) =>
+            theta.get(qid).forall(th => ub * boostSum.getOrElse((qid, run.term), 0.0f) +
+              othersSum.getOrElse((qid, run.term), 0.0f) >= th)
+          })
+        }.filter(_._2.nonEmpty)
+        if (alive.isEmpty) { prunedAcc.add(1); Iterator.empty }
+        else {
+          decodedAcc.add(1)
+          PostingCodec.decodeBlock(bi, run.ndocs,
+              run.doc_blob, run.tf_blob, run.dl_blob,
+              run.block_last_docid, run.block_doc_off, run.block_tf_off,
+              run.block_dl_off)
+            .flatMap(p => Searcher.scoreGroups(alive, p, scorer, stats))
+        }
+      }
+    }
+  }
+
+  /** Constant-score expansion partials: decode the expanded terms'
+    * postings; a doc matching several expanded terms of one clause still
+    * scores the boost ONCE (distinct on the identical partial rows).
+    */
+  private def expansionPartials(byTerm: Map[String, Array[(String, Int, Float)]])
+      : Dataset[(String, Long, Int, Float)] = {
+    import spark.implicits._
+    index.forTerms(index.postingsDecode, byTerm.keys).as[PostingRun].flatMap { run =>
+      val cs = byTerm(run.term)
+      PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
+        .flatMap(p => cs.iterator.map { case (qid, slot, b) => (qid, p.docid, slot, b) })
+    }.distinct()
+  }
+
+  /** Synonym group partials: decode the group members' postings, SUM the
+    * raw tfs per (query, doc, slot) — an integer sum, order-free — then
+    * apply the scorer's TF saturation ONCE against the group weight
+    * (≙ SynonymScorer: one freq, one similarity call). One extra tiny
+    * shuffle, paid only by queries that carry synonym groups.
+    */
+  private def synonymPartials(plan: ClausePlan): Dataset[(String, Long, Int, Float)] = {
+    import spark.implicits._
+    val (byTerm, scoring, scorer, stats) =
+      (plan.synonyms, plan.synonymScoring, plan.scorer, plan.stats)
+    index.forTerms(index.postingsDecode, byTerm.keys).as[PostingRun].flatMap { run =>
+      val cs = byTerm(run.term)
+      PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
+        .flatMap(p => cs.iterator.map { case (qid, slot) => (qid, p.docid, slot, p.tf, p.dl) })
+    }
+      .groupByKey(t => (t._1, t._2, t._3))
+      .mapGroups[(String, Long, Int, Float)] {
+        (key: (String, Long, Int), it: Iterator[(String, Long, Int, Int, Int)]) =>
+          var tf = 0
+          var dl = 0
+          it.foreach { r => tf += r._4; dl = r._5 }
+          val (w, boost) = scoring((key._1, key._3))
+          val sc = scorer.score(tf.toFloat, dl, w, stats)
+          (key._1, key._2, key._3, if (boost == 1.0f) sc else sc * boost)
+      }
+  }
+
+  /** Positional clause partials (qid, docid, slot, partial): decode the
     * clause terms' postings WITH positions, co-group per (clause, doc) and
     * score the clause's freq against its weight, tombstoned docs dropped.
     * A phrase counts exact phrase occurrences (slop 0: anchor scan from the
@@ -1866,7 +1595,7 @@ final class Searcher(val index: BuiltIndex) {
           if (freq == 0.0f) Iterator.empty
           else {
             val sc = scorer.score(freq, dl, pc.weight, stats)
-            Iterator.single((pc.qid, key._2, pc.qidx,
+            Iterator.single((pc.qid, key._2, pc.slot,
               if (pc.boost == 1.0f) sc else sc * pc.boost))
           }
         }
@@ -1902,64 +1631,51 @@ final class Searcher(val index: BuiltIndex) {
     spark.createDataset(lines)
   }
 
-  /** Seed pass for WAND: exact-score each query's lowest-df clause only;
-    * the kth best partial score is a valid lower bound on the final kth
-    * total score (partials never exceed totals for non-negative boosts).
-    * Queries with fewer than k seed hits get no threshold (no pruning).
+  /** Seed pass for WAND: exact-score each pruned query's lowest-df clause
+    * only; the kth best partial score is a valid lower bound on the final
+    * kth total score (partials never exceed totals for non-negative
+    * boosts). Queries with fewer than k seed hits get no threshold (no
+    * pruning).
     */
-  private def seedThresholds(clauses: Seq[WeightedClause],
-                             dfs: Map[String, (Long, Long)], k: Int,
-                             scorer: Scorer, stats: CollStats,
-                             qn: Map[String, Float]): Map[String, Float] = {
+  private def seedThresholds(plan: ClausePlan, k: Int): Map[String, Float] = {
     import spark.implicits._
-    val seeds: Seq[WeightedClause] = clauses.groupBy(_.qid).flatMap { case (_, cs) =>
+    val dfs = plan.dfs
+    val seeds: Seq[WeightedClause] = plan.prunedClauses.groupBy(_.qid).flatMap { case (_, cs) =>
       val inIdx = cs.filter(c => dfs.contains(c.term) && c.boost > 0)
       if (inIdx.isEmpty) None else Some(inIdx.minBy(c => dfs(c.term)._1))
     }.toSeq
     if (seeds.isEmpty) return Map.empty
-    val plan: Map[String, (Float, Array[(String, Int, Float)])] = seeds.groupBy(_.term)
-      .map { case (t, cs) =>
-        val (df, cf) = dfs(t)
-        t -> (scorer.termWeight(df, cf, stats),
-          cs.map(c => (c.qid, c.qidx, c.boost * qn(c.qid))).toArray)
-      }
+    val terms = ClausePlan.termPlan(seeds.map(c =>
+      (c.term, plan.termWeight(c.term), (c.qid, c.qidx, c.boost * plan.qnByQid(c.qid)))))
     // tombstoned docs must not seed θ (termPartials drops them): a deleted
     // doc's score could push the lower bound past the true live kth score
     // and over-prune live blocks
-    val partials = termPartials(plan, scorer, stats).map(t => (t._1, t._2, t._4))
+    val partials = termPartials(terms, plan.scorer, plan.stats).map(t => (t._1, t._2, t._4))
     TopK.toDriver(partials, k)
       .collect { case (qid, hits) if hits.length >= k => qid -> hits.last._2 }
       .toMap
   }
 
   /** Driver-side WAND bounds: per-term global block-max score UB (one tiny
-    * metadata-only job over the pruned runs), then per (query, term) the
-    * sum of this term's clause boosts and the other clauses' UB total.
+    * metadata-only job collecting each run's best block bound — one row
+    * per run — maxed on the driver), then per (query, term) the sum of this
+    * term's clause boosts and the other clauses' UB total.
     */
-  private def wandBounds(posts: Dataset[PostingRun],
-                         plan: Map[String, (Float, Array[(String, Int, Float)])],
-                         clauses: Seq[WeightedClause], qn: Map[String, Float],
-                         scorer: Scorer, stats: CollStats)
+  private def wandBounds(posts: Dataset[PostingRun], plan: ClausePlan)
       : (Map[(String, String), Float], Map[(String, String), Float]) = {
     import spark.implicits._
-    val planB = plan
+    val (scorer, stats, qn) = (plan.scorer, plan.stats, plan.qnByQid)
+    val weights: Map[String, Float] = plan.terms.keys.map(t => t -> plan.termWeight(t)).toMap
     val termUB: Map[String, Float] = posts
       .map { run =>
-        val idf = planB(run.term)._1
-        var m = 0.0f
-        var i = 0
-        while (i < run.block_max_tf.length) {
+        val idf = weights(run.term)
+        (run.term, run.block_max_tf.indices.foldLeft(0.0f) { (m, i) =>
           val u = scorer.score(run.block_max_tf(i), run.block_min_dl(i), idf, stats)
-          if (u > m) m = u
-          i += 1
-        }
-        (run.term, m)
+          if (u > m) u else m
+        })
       }
-      .groupByKey(_._1)
-      .mapGroups[(String, Float)]((t: String, it: Iterator[(String, Float)]) =>
-        (t, it.map(_._2).max))
-      .collect().toMap
-    val inIdx = clauses.filter(c => termUB.contains(c.term))
+      .collect().groupBy(_._1).map { case (t, ms) => t -> ms.map(_._2).max }
+    val inIdx = plan.prunedClauses.filter(c => termUB.contains(c.term))
     val boostSum: Map[(String, String), Float] = inIdx
       .groupBy(c => (c.qid, c.term))
       .map { case (key, cs) => key -> cs.map(c => c.boost * qn(c.qid)).sum }
@@ -2142,20 +1858,21 @@ object Searcher {
     tomb.forall(b => java.util.Arrays.binarySearch(b.value, docid) < 0)
 
   /** Folds one (qid, docid) run of [[combineRuns]]: `begin`, then `add`
-    * per partial in ascending qidx order; the run yields a row scored
-    * `score` iff `keep`. One instance serves a partition, so state lives in
-    * fields: the flat and dismax folds allocate nothing per run.
+    * per partial in ascending slot order ([[ClausePlan]]); the run yields a
+    * row scored `score` iff `keep`. One instance serves a partition, so
+    * state lives in fields: the flat and dismax folds allocate nothing per
+    * run.
     */
   private[search] trait RunReducer {
     def begin(qid: String): Unit
-    def add(qidx: Int, partial: Float): Unit
+    def add(slot: Int, partial: Float): Unit
     def keep: Boolean = true
     def score: Float
   }
 
   /** The engine's one per-(qid, docid) combiner: a docid-partitioned
     * shuffle (by count, so AQE keeps it on every core) sorted by (qid,
-    * docid, qidx), then a streaming pass folding each run through a
+    * docid, slot), then a streaming pass folding each run through a
     * per-partition `reducer` — nothing buffered per doc, the sort can
     * spill, and the collector's heaps pipeline into the same stage.
     */
@@ -2182,28 +1899,31 @@ object Searcher {
       }
   }
 
-  /** Flat OR / AND / msm: the clause-order sum times coord(partial rows,
-    * maxOverlap); a run matching fewer distinct clauses than needed (all of
-    * them under AND, `msm` otherwise) is dropped.
+  /** Flat OR / AND / msm: each clause's slots (`slots`: qid → slot →
+    * qidx) sum from 0, the clause sums add in qidx order, times
+    * coord(matched clauses, maxOverlap); a run matching fewer clauses than
+    * needed (all of them under AND, `msm` otherwise) is dropped.
     */
-  private[search] final class FlatRuns(maxOv: Map[String, Int], requireAll: Boolean,
+  private[search] final class FlatRuns(slots: Map[String, Array[Int]],
+                                       maxOv: Map[String, Int], requireAll: Boolean,
                                        msm: Int, scorer: Scorer) extends RunReducer {
     private var qid = ""
-    private var s = 0.0f
-    private var n = 0 // partial rows: coord's overlap
-    private var nMatched = 0 // distinct clauses
-    private var lastQidx = -1
-    def begin(q: String): Unit = { qid = q; s = 0.0f; n = 0; nMatched = 0; lastQidx = -1 }
-    def add(qidx: Int, partial: Float): Unit = {
-      s += partial
-      n += 1
-      if (qidx != lastQidx) { nMatched += 1; lastQidx = qidx }
+    private var clauseOf: Array[Int] = _
+    private var s = 0.0f // the closed clauses' sum
+    private var c = 0.0f // the open clause's sum
+    private var n = 0 // clauses matched: coord's overlap
+    private var open = 0 // the open clause's qidx
+    def begin(q: String): Unit = { qid = q; clauseOf = slots(q); s = 0.0f; c = 0.0f; n = 0 }
+    def add(slot: Int, partial: Float): Unit = {
+      val q = clauseOf(slot)
+      if (n == 0 || q != open) { s += c; c = 0.0f; n += 1; open = q }
+      c += partial
     }
-    override def keep: Boolean =
-      nMatched >= (if (requireAll) maxOv.getOrElse(qid, 0) else msm)
+    override def keep: Boolean = n >= (if (requireAll) maxOv.getOrElse(qid, 0) else msm)
     def score: Float = { // bm25's coord is 1: the plain sum
-      val c = scorer.coord(n, maxOv.getOrElse(qid, n))
-      if (c == 1.0f) s else s * c
+      val t = s + c
+      val cf = scorer.coord(n, maxOv.getOrElse(qid, n))
+      if (cf == 1.0f) t else t * cf
     }
   }
 
@@ -2212,30 +1932,47 @@ object Searcher {
     private var max = Float.NegativeInfinity
     private var sum = 0.0f
     def begin(qid: String): Unit = { max = Float.NegativeInfinity; sum = 0.0f }
-    def add(qidx: Int, partial: Float): Unit = { sum += partial; if (partial > max) max = partial }
+    def add(slot: Int, partial: Float): Unit = { sum += partial; if (partial > max) max = partial }
     def score: Float = max + tie * (sum - max)
   }
 
   /** [[BoolQuery.eval]] of each run against its query's tree, a clause's
-    * partials summed from 0 and a clause without one a NaN leaf. NaN
+    * slots summed from 0 and a clause without one a NaN leaf. NaN
     * (no-match) rows are kept for the match-all complement.
     */
   private[search] final class TreeRuns(trees: Map[String, BoolQuery.EvalNode],
+                                       slots: Map[String, Array[Int]],
                                        scorer: Scorer) extends RunReducer {
     private val m = new scala.collection.mutable.HashMap[Int, Float]()
     private var root: BoolQuery.EvalNode = _
+    private var clauseOf: Array[Int] = _
     private val leaf: Int => Float = q => m.getOrElse(q, Float.NaN)
     private val coord: (Int, Int) => Float = scorer.coord
-    def begin(qid: String): Unit = { m.clear(); root = trees(qid) }
-    def add(qidx: Int, partial: Float): Unit = m.update(qidx, m.getOrElse(qidx, 0.0f) + partial)
+    def begin(qid: String): Unit = { m.clear(); root = trees(qid); clauseOf = slots(qid) }
+    def add(slot: Int, partial: Float): Unit = {
+      val q = clauseOf(slot)
+      m.update(q, m.getOrElse(q, 0.0f) + partial)
+    }
     def score: Float = BoolQuery.eval(root, leaf, coord)
   }
+
+  /** One posting scored once per weight group of a
+    * [[ClausePlan.TermGroups]], as (qid, docid, slot, partial) rows; a
+    * boost of 1 leaves the similarity's score untouched.
+    */
+  private[search] def scoreGroups(groups: ClausePlan.TermGroups, p: DecodedPosting,
+                                  scorer: Scorer, stats: CollStats)
+      : Iterator[(String, Long, Int, Float)] =
+    groups.iterator.flatMap { case (w, cs) =>
+      val s = scorer.score(p.tf, p.dl, w, stats)
+      cs.iterator.map { case (qid, slot, boost) => (qid, p.docid, slot, if (boost == 1.0f) s else s * boost) }
+    }
 
   /** A clause of the positional co-group: phrase slots (term, offset) and
     * slop, or with `near = Some(ordered)` a span-near of the single-term
     * spans at offsets 0 and 1; scored at `weight`, times `boost`.
     */
-  private[search] final case class PositionalClause(qid: String, qidx: Int,
+  private[graft] final case class PositionalClause(qid: String, slot: Int,
       terms: Seq[(String, Int)], slop: Int, near: Option[Boolean],
       weight: Float, boost: Float)
 

@@ -1,7 +1,8 @@
 package graft.tools
 
 import graft.Engine
-import graft.search.Topic
+import graft.search.{CombinedField, MultiField, PhraseClause, Searcher, SynonymClause, Topic,
+  WeightedClause}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.functions._
@@ -14,23 +15,66 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * Run: sbt "runMain graft.tools.Explain /root/testdata/sf0.001"
   */
 object Explain {
-  /** Runs `body` and prints the executed plans of its queries that scan
-    * postings: a search collects its top-k on the driver, so the Dataset it
-    * returns only plans a local relation.
+  /** Runs `body` and returns the formatted executed plans of its queries
+    * that scan postings: a search collects its top-k on the driver, so the
+    * Dataset it returns only plans a local relation.
     */
-  private def printScoringPlans(spark: SparkSession)(body: => Unit): Unit = {
+  private[graft] def scoringPlans(spark: SparkSession)(body: => Unit): Seq[String] = {
     val seen = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
     val listener = new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
-    body
-    spark.range(1).toDF("explain_sentinel").collect() // delivered last, in order
-    Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
-      .takeWhile(qe => qe != null && !qe.analyzed.output.exists(_.name == "explain_sentinel"))
-      .map(_.explainString(FormattedMode)).filter(_.contains("/postings")).foreach(println)
-    spark.listenerManager.unregister(listener)
+    try {
+      body
+      spark.range(1).toDF("explain_sentinel").collect() // delivered last, in order
+      Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(qe => qe != null && !qe.analyzed.output.exists(_.name == "explain_sentinel"))
+        .map(_.explainString(FormattedMode)).filter(_.contains("/postings")).toSeq
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** The search sections, (title, the search to run): each prints the
+    * scoring plans [[scoringPlans]] captures. `fields` are the two field
+    * indexes of the multi-field and BM25F sections.
+    */
+  private[graft] def searchSections(searcher: Searcher, shingle: Searcher,
+                                    fields: (Searcher, Searcher)): Seq[(String, () => Unit)] = {
+    val topic = Seq(Topic("1", "hash join merge"))
+    def query(text: String): () => Unit = () => searcher.searchQuery(Seq(Topic("1", text)), 20).collect()
+    Seq(
+      "full search plan" -> (() => searcher.search(topic, 20).collect()),
+      "fuzzy blended search plan (expanded terms in the plain-term decode → the shared sorted combine pass; no MapGroups)" ->
+        query("lin~2 window"),
+      "sloppy phrase search plan" -> query("\"hash merge\"~2"),
+      "boolean-tree group plan ((hash | merge) + scan)" -> query("(hash | merge) + scan"),
+      "faithful negation plan (complement anti-join should BROADCAST the candidate side)" ->
+        query("hash -window"),
+      "synonym-group search plan (group postings in the same bucket-pruned scan; one extra tiny shuffle for the tf sum)" ->
+        (() => searcher.searchClauses(Seq(WeightedClause("1", 0, "hash", 1.0f)), k = 20,
+          synonymClauses = Seq(SynonymClause("1", 1, Seq("scan", "window"), 1.0f))).collect()),
+      "multi-field most_fields (per-field bucket-pruned scans → ONE (qid, docid) full-outer join → bounded top-k)" ->
+        (() => MultiField.mostFields(Seq(fields._1 -> 1.0f, fields._2 -> 2.0f),
+          Seq(Topic("m1", "hash join txt")), 20).collect()),
+      "BM25F combined-field (per-field pruned postings scans → ONE (term, docid) full-outer join, checkpointed for the df agg + scoring double-read)" ->
+        (() => CombinedField.bm25f(Seq((fields._1, 1.0, 0.75), (fields._2, 2.0, 0.4)),
+          Seq(Topic("m1", "hash join txt")), 20).collect()),
+      "dismax (the flat OR's plain-term decode → the shared sorted combine pass, max + tie·rest reducer; no MapGroups)" ->
+        (() => searcher.searchDisMax(topic, 20, 0.3f).collect()),
+      "span-near (positional co-group, its one MapGroups, straight into the collector; no combine shuffle)" ->
+        (() => searcher.searchSpanNear(Seq(("1", "hash", "join", 2)), 20).collect()),
+      "searchQuery term tree (plain-term decode → the shared sorted combine pass, tree reducer; no MapGroups)" ->
+        query("hash +join -merge"),
+      "boosting (negative postings decode → distributed left join demote; no driver doc sets)" ->
+        (() => searcher.searchBoosting(topic, Seq(("1", "slow")), 0.5f, 20).collect()),
+      "rescore (bounded window agg → left join against the phrase partial stream → bounded top-k)" ->
+        (() => searcher.searchRescore(topic,
+          Seq(PhraseClause("1", 0, Seq(("hash", 0), ("join", 1)), 1.0f)), 50, 2.0f, 20).collect()),
+      "span-first (positional postings scan pruned to the span terms' buckets)" ->
+        (() => searcher.searchSpanFirst(Seq(("f1", "hash", 5)), 20).collect()),
+      "shingle-rewritten phrase (ONE bigram-term bucket-pruned scan; ReadSchema must NOT contain pos_blob)" ->
+        (() => shingle.searchPhraseShingle(Seq("1" -> "hash join"), 20).collect()))
   }
 
   def main(args: Array[String]): Unit = {
@@ -54,32 +98,15 @@ object Explain {
     println("\n========== term_stats lookup ==========")
     idx.forTerms(idx.termStats, terms).select("term", "df", "cf").explain("formatted")
 
-    println("\n========== full search plan ==========")
-    new graft.search.Searcher(idx)
-      .search(Seq(Topic("1", "hash join merge")), 20)
-      .explain("formatted")
-
     println("\n========== docs scan for doclens (column pruning: docno, dl only) ==========")
     idx.docs.select("docno", "dl").explain("formatted")
 
-    val searcher = new graft.search.Searcher(idx)
+    val searcher = new Searcher(idx)
     println("\n========== vocab prefix scan (StringStartsWith pushed + len partition bound) ==========")
     searcher.prefixScan("qu").explain("formatted")
 
     println("\n========== vocab fuzzy length band (len partition pruning) ==========")
     idx.vocab.where(col("len") >= 2 && col("len") <= 6).explain("formatted")
-
-    println("\n========== fuzzy blended search plan ==========")
-    searcher.searchQuery(Seq(Topic("1", "lin~2 window")), 20).explain("formatted")
-
-    println("\n========== sloppy phrase search plan ==========")
-    searcher.searchQuery(Seq(Topic("1", "\"hash merge\"~2")), 20).explain("formatted")
-
-    println("\n========== boolean-tree group plan ((hash | merge) + scan) ==========")
-    searcher.searchQuery(Seq(Topic("1", "(hash | merge) + scan")), 20).explain("formatted")
-
-    println("\n========== faithful negation plan (complement anti-join should BROADCAST the candidate side and reuse the aggregation exchange) ==========")
-    searcher.searchQuery(Seq(Topic("1", "hash -window")), 20).explain("formatted")
 
     println("\n========== IVF assignment (narrow codegen'd fold — no shuffle before the candidate join) ==========")
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -94,13 +121,6 @@ object Explain {
 
     println("\n========== seeded shuffle prefix sum (exactly ONE range exchange; both passes read the materialized sort) ==========")
     graft.ops.Curation.seededShuffle(corp, "s1").explain("formatted")
-
-    println("\n========== synonym-group search plan (group postings in the same bucket-pruned scan; one extra tiny shuffle for the tf sum) ==========")
-    searcher.searchClauses(
-      Seq(graft.search.WeightedClause("1", 0, "hash", 1.0f)),
-      k = 20,
-      synonymClauses = Seq(graft.search.SynonymClause("1", 1, Seq("scan", "window"), 1.0f)))
-      .explain("formatted")
 
     println("\n========== hybrid RRF fusion (two bounded top-k inputs → full-outer join on ≤2k rows/query; the window runs over that bounded set) ==========")
     val docVecs = corp
@@ -136,21 +156,9 @@ object Explain {
       new graft.analysis.Analyzer(Engine.OracleAnalyzer), n = 5)
       .explain("formatted")
 
-    println("\n========== multi-field most_fields (per-field bucket-pruned scans → ONE (qid, docid) full-outer join → bounded top-k) ==========")
-    graft.search.MultiField.mostFields(
-      Seq(new graft.search.Searcher(Engine.codeIndex(spark, sfDir)) -> 1.0f,
-        new graft.search.Searcher(Engine.pathIndex(spark, sfDir)) -> 2.0f),
-      Seq(Topic("m1", "hash join txt")), 20).explain("formatted")
-
     println("\n========== LM score (two count aggs broadcast-joined back onto the bigram stream; one per-doc agg) ==========")
     graft.ops.TextQuality.lmScore(corp,
       new graft.analysis.Analyzer(Engine.OracleAnalyzer)).explain("formatted")
-
-    println("\n========== BM25F combined-field (per-field pruned postings scans → ONE (term, docid) full-outer join, checkpointed for the df agg + scoring double-read) ==========")
-    graft.search.CombinedField.bm25f(
-      Seq((new graft.search.Searcher(Engine.codeIndex(spark, sfDir)), 1.0, 0.75),
-        (new graft.search.Searcher(Engine.pathIndex(spark, sfDir)), 2.0, 0.4)),
-      Seq(Topic("m1", "hash join txt")), 20).explain("formatted")
 
     println("\n========== trigram substring lookup (bucket partition pruning + gram PushedFilters; verify join broadcasts the candidate side) ==========")
     val gt = Engine.trigramIndex(spark, sfDir)
@@ -160,38 +168,6 @@ object Explain {
     println("\n========== trigram grep (OR-of-branches in ONE grouped pass over the same pruned gram scan) ==========")
     graft.index.TrigramIndex.regexTopK(corp, gt,
       Seq(("g1", "merge (slow|fast)")), 20).explain("formatted")
-
-    println("\n========== dismax (the flat OR's plain-term decode → the shared sorted combine pass, max + tie·rest reducer; no MapGroups) ==========")
-    printScoringPlans(spark) {
-      searcher.searchDisMax(Seq(Topic("1", "hash join merge")), 20, 0.3f).collect()
-    }
-
-    println("\n========== span-near (positional co-group, its one MapGroups, straight into the collector; no combine shuffle) ==========")
-    printScoringPlans(spark) {
-      searcher.searchSpanNear(Seq(("1", "hash", "join", 2)), 20).collect()
-    }
-
-    println("\n========== searchQuery term tree (plain-term decode → the shared sorted combine pass, tree reducer; no MapGroups) ==========")
-    printScoringPlans(spark) {
-      searcher.searchQuery(Seq(Topic("1", "hash +join -merge")), 20).collect()
-    }
-
-    println("\n========== boosting (negative postings decode → distributed left join demote; no driver doc sets) ==========")
-    searcher.searchBoosting(Seq(Topic("1", "hash join merge")),
-      Seq(("1", "slow")), 0.5f, 20).explain("formatted")
-
-    println("\n========== rescore (bounded window agg → left join against the phrase partial stream → bounded top-k) ==========")
-    searcher.searchRescore(Seq(Topic("1", "hash join merge")),
-      Seq(graft.search.PhraseClause("1", 0,
-        Seq(("hash", 0), ("join", 1)), 1.0f)), 50, 2.0f, 20)
-      .explain("formatted")
-
-    println("\n========== span-first (positional postings scan pruned to the span terms' buckets) ==========")
-    searcher.searchSpanFirst(Seq(("f1", "hash", 5)), 20).explain("formatted")
-
-    println("\n========== shingle-rewritten phrase (ONE bigram-term bucket-pruned scan; ReadSchema must NOT contain pos_blob) ==========")
-    new graft.search.Searcher(Engine.shingleIndex(spark, sfDir))
-      .searchPhraseShingle(Seq("1" -> "hash join"), 20).explain("formatted")
 
     println("\n========== composite-agg page 2 (after-key filter BEFORE the aggregate; one agg exchange) ==========")
     graft.ops.CompositeAgg.page(
@@ -222,6 +198,13 @@ object Explain {
       .select(col("skey"), col("docno"))
       .orderBy(col("skey").asc, col("docno").asc).limit(20)
       .explain("formatted")
+
+    searchSections(searcher, new Searcher(Engine.shingleIndex(spark, sfDir)),
+      (new Searcher(Engine.codeIndex(spark, sfDir)), new Searcher(Engine.pathIndex(spark, sfDir))))
+      .foreach { case (title, run) =>
+        println(s"\n========== $title ==========")
+        scoringPlans(spark)(run()).foreach(println)
+      }
 
     spark.stop()
   }

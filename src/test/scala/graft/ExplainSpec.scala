@@ -1,12 +1,15 @@
 package graft
 
+import graft.analysis.AnalyzerConfig
 import graft.index.{IndexBuilder, IndexConfig}
 import graft.search.{Searcher, Topic}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Per-hit scoring breakdown (Searcher.explainStats ≙
   * IndexSearcher.explain): one row per (query, top-k hit, MATCHING term)
-  * carrying the integer scoring components.
+  * carrying the integer scoring components. Also: every search section of
+  * `tools.Explain` prints the plan that scored, not the local relation of
+  * the collected hits.
   */
 class ExplainSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -21,6 +24,26 @@ class ExplainSpec extends AnyFunSuite {
     val idx = IndexBuilder.build(docs.toDF("docno", "content"),
       TestSpark.tmpDir("explain"), IndexConfig())
     new Searcher(idx)
+  }
+
+  test("tools.Explain: no search section prints only a LocalTableScan") {
+    import spark.implicits._
+    val corpus = Seq(
+      "x-1" -> "hash join merge scan window",
+      "x-2" -> "hash join slow line txt",
+      "x-3" -> "merge scan txt window",
+      "x-4" -> "line hash window join").toDF("docno", "content")
+    val positional = new Searcher(IndexBuilder.build(corpus, TestSpark.tmpDir("explain-pos"),
+      IndexConfig(indexPositions = true)))
+    val shingle = new Searcher(IndexBuilder.build(corpus, TestSpark.tmpDir("explain-shingle"),
+      IndexConfig(analyzer = AnalyzerConfig(shingleSize = 2))))
+    val sections = graft.tools.Explain.searchSections(positional, shingle, (positional, positional))
+    assert(sections.size == 15)
+    sections.foreach { case (title, run) =>
+      val plans = graft.tools.Explain.scoringPlans(spark)(run())
+      assert(plans.nonEmpty, s"'$title' prints no scoring plan")
+      plans.foreach(p => assert(p.contains("Scan parquet"), s"'$title' prints:\n$p"))
+    }
   }
 
   test("explain rows carry exact tf/dl/df for matching terms only") {

@@ -20,10 +20,13 @@ object TestSpark {
     s
   }
 
+  /** A fresh directory under the running checkout's `target/` (sbt forks
+    * the test JVM in the build's base directory).
+    */
   def tmpDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), prefix)
-    d.toString
+    val target = java.nio.file.Paths.get(System.getProperty("user.dir"), "target")
+    java.nio.file.Files.createDirectories(target)
+    java.nio.file.Files.createTempDirectory(target, prefix).toString
   }
 
   /** Spark jobs `body` starts on this thread. A sentinel job in a second
