@@ -26,8 +26,11 @@ object Engine {
   val PorterAnalyzer: AnalyzerConfig =
     AnalyzerConfig(tokenizer = "whitespace", stopWords = Set("a", "the"), stemmer = "porter")
 
-  def workDir: String =
-    sys.env.getOrElse("GRAFT_WORK_DIR", "/root/repo/target/graft-work")
+  /** `GRAFT_WORK_DIR`, else `target/graft-work` under the working directory
+    * (the checkout a main such as `graft.Verify` runs from).
+    */
+  def workDir: String = sys.env.getOrElse("GRAFT_WORK_DIR",
+    java.nio.file.Paths.get(System.getProperty("user.dir"), "target", "graft-work").toString)
 
   private val cache = TrieMap[String, BuiltIndex]()
 

@@ -136,17 +136,12 @@ class BuiltIndex(val spark: SparkSession, val dir: String, val cfg: IndexConfig)
     val p = new Path(s"$dir/$VocabDir")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) spark.read.parquet(s"$dir/$VocabDir")
-    else termStats.select(org.apache.spark.sql.functions.col("term"),
-      org.apache.spark.sql.functions.length(
-        org.apache.spark.sql.functions.col("term")).as("len"))
+    else IndexWriter.vocabOf(termStats)
   }
 
   def vocab: DataFrame = vocabDF
 
-  lazy val stats: StatsRow = {
-    val r = spark.read.parquet(s"$dir/$StatsDir").head()
-    StatsRow(r.getAs[Long]("max_doc"), r.getAs[Long]("sum_total_term_freq"))
-  }
+  lazy val stats: StatsRow = IndexWriter.readStats(spark, Seq(dir))
 
   /** Equality-delete dirs applied to this index at query time: the
     * index's own `deletes/` subdir when present (in-place deletes, ≙
@@ -218,7 +213,6 @@ object BuiltIndex {
     p.setProperty("groupShift", cfg.groupShift.toString)
     p.setProperty("mergeShift", cfg.mergeShift.toString)
     p.setProperty("rangePartitions", cfg.rangePartitions.toString)
-    p.setProperty("twoPhase", cfg.twoPhase.toString)
     p.setProperty("indexPositions", cfg.indexPositions.toString)
     p.setProperty("docidEpoch", cfg.docidEpoch.toString)
     val out = new ByteArrayOutputStream()
@@ -231,7 +225,9 @@ object BuiltIndex {
   }
 
   /** Open an existing index, reconstructing its config from disk. A key
-    * absent from an older props file reads as the config default.
+    * absent from an older props file reads as the config default; keys of
+    * removed options are ignored (the two-phase build's postings have the
+    * same layout as today's).
     */
   def open(spark: SparkSession, dir: String): BuiltIndex = {
     val path = new Path(dir, PropsFile)
@@ -252,7 +248,6 @@ object BuiltIndex {
       groupShift = p.getProperty("groupShift", "18").toInt,
       mergeShift = p.getProperty("mergeShift", "4").toInt,
       rangePartitions = p.getProperty("rangePartitions", "0").toInt,
-      twoPhase = p.getProperty("twoPhase", "false").toBoolean,
       indexPositions = p.getProperty("indexPositions", "false").toBoolean,
       docidEpoch = p.getProperty("docidEpoch", "0").toInt)
     new BuiltIndex(spark, dir, cfg)

@@ -1,6 +1,5 @@
 package graft.index
 
-import graft.codec.PostingCodec
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -104,54 +103,16 @@ object Deletes {
     val tomb = index.tombstones
     require(tomb.nonEmpty, "purge called on an index with no tombstones")
     val bc = spark.sparkContext.broadcast(tomb)
-    val cfg = index.cfg
-    Checkpoint.atomically(outDir, spark.sparkContext.hadoopConfiguration) { tmp =>
-      import IndexLayout._
-      val purgedRuns = index.postings.as[PostingRun].flatMap { r =>
-        val t = bc.value
-        // does any tombstone fall in this run's [first, last] docid range?
-        var i = java.util.Arrays.binarySearch(t, r.first_docid)
-        if (i < 0) i = -i - 1
-        if (i >= t.length || t(i) > r.last_docid) Iterator.single(r) // untouched
-        else {
-          val live = SegmentMerger.decode(r).filter(p => Deletes.live(t, p.docid))
-          if (live.isEmpty) Iterator.empty
-          else {
-            val e = PostingCodec.encode(live)
-            Iterator.single(PostingRun(r.term, r.bucket, r.grp, e.ndocs,
-              e.firstDocid, e.lastDocid, e.maxTf, e.sumTf, e.docBlob, e.tfBlob,
-              e.dlBlob, e.posBlob, e.blockLastDocid, e.blockMaxTf, e.blockMinDl,
-              e.blockDocOff, e.blockTfOff, e.blockDlOff, e.blockPosOff))
-          }
-        }
-      }
-      purgedRuns.write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$tmp/$PostingsDir")
-      val tombDf = spark.createDataset(tomb.toSeq).toDF("docid")
-      index.docs.join(broadcast(tombDf), Seq("docid"), "left_anti")
-        .write.mode("overwrite").partitionBy("grp").parquet(s"$tmp/$DocsDir")
-      // stats over survivors: maxDoc from the purged doc table,
-      // sumTotalTermFreq = Σ tf over the purged postings (definitionally
-      // the total indexed occurrences, matching the build's accumulation)
-      val newPosts = spark.read.parquet(s"$tmp/$PostingsDir")
-      val maxDoc = spark.read.parquet(s"$tmp/$DocsDir").count()
-      val sumTtf = newPosts.agg(sum(col("sum_tf")).cast("long")).head().getLong(0)
-      Seq((maxDoc, sumTtf)).toDF("max_doc", "sum_total_term_freq")
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/$StatsDir")
-      newPosts.groupBy(col("term"), col("bucket"))
-        .agg(sum(col("ndocs")).cast("long").as("df"),
-          max(col("max_tf")).as("max_tf"),
-          sum(col("sum_tf")).cast("long").as("cf"))
-        .select(col("term"), col("bucket"), col("df"), col("max_tf"), col("cf"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$tmp/$TermStatsDir")
-      spark.read.parquet(s"$tmp/$TermStatsDir")
-        .select(col("term"), length(col("term")).as("len"))
-        .repartitionByRange(col("len"), col("term"))
-        .sortWithinPartitions(col("term"))
-        .write.mode("overwrite").partitionBy("len").parquet(s"$tmp/$VocabDir")
-      BuiltIndex.writeProps(spark, tmp, cfg)
+    val purgedRuns = index.postings.as[PostingRun].flatMap { r =>
+      val t = bc.value
+      // does any tombstone fall in this run's [first, last] docid range?
+      var i = java.util.Arrays.binarySearch(t, r.first_docid)
+      if (i < 0) i = -i - 1
+      if (i >= t.length || t(i) > r.last_docid) Iterator.single(r) // untouched
+      else IndexWriter.reencode(r.term, r.bucket, r.grp, Iterator.single(r),
+        Deletes.live(t, _)).iterator
     }
-    new BuiltIndex(spark, outDir, cfg)
+    IndexWriter.rewrite(spark, outDir, index.cfg, purgedRuns, index.docs, tomb, None)
   }
 }
 

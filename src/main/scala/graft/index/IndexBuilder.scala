@@ -1,7 +1,7 @@
 package graft.index
 
 import graft.analysis.Analyzer
-import graft.codec.{DecodedPosting, EncodedRun, PostingCodec}
+import graft.codec.{DecodedPosting, PostingCodec}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -23,12 +23,15 @@ import java.security.MessageDigest
   *     → tokenize/tf/dl in one narrow pass (analyzer chain ≙ TrecAnalyzer)
   *     → checkpointed `stage_tokenized` (content dropped)
   *     → docs + stats tables
-  *     → explode → shuffle on (term, docid-group) — the per-group docid
-  *       bound keeps hot stop-like terms from skewing any reducer — →
-  *       sorted, delta+varbyte-encoded posting runs ("segments")
-  *     → merge adjacent runs into compacted postings (≙ Lucene's
-  *       background segment merges)
-  *     → per-term global stats.
+  *     → explode → one shuffle on (term bucket, merged docid-range group)
+  *       — the per-group docid bound keeps hot stop-like terms from skewing
+  *       any reducer — → sorted, delta+varbyte-encoded posting runs
+  *       ("segments"), merged to their final granularity inside the shuffle
+  *       sort (≙ Lucene's flush + background segment merges)
+  *     → per-term global stats and the vocabulary projection.
+  *
+  * Every table is written through [[IndexWriter]], which [[SegmentMerger]]
+  * compaction and [[Deletes.purge]] share.
   *
   * Every stage is atomic-published with a manifest ([[Checkpoint]]), so an
   * interrupted build resumes at the first incomplete stage instead of
@@ -184,15 +187,8 @@ object IndexBuilder {
     if (force || !Checkpoint.isComplete(docsDir, fp, cfg.id, conf)) {
       force = true
       val t0 = System.nanoTime()
-      // Partitioned by coarse docid-range group so the query path's
-      // docno-attach join on (docid, grp) dynamic-partition-prunes the doc
-      // table instead of scanning all of it (critical at 10^12 rows);
-      // sorted by docid within files for parquet min/max row-group skipping.
       Checkpoint.atomically(docsDir, conf) { tmp =>
-        tokenized.select($"docid", $"docno", $"sha", $"dl")
-          .withColumn("grp", shiftright($"docid", cfg.groupShift + cfg.mergeShift))
-          .sortWithinPartitions($"grp", $"docid")
-          .write.mode("overwrite").partitionBy("grp").parquet(tmp)
+        IndexWriter.writeDocs(tokenized.select($"docid", $"docno", $"sha", $"dl"), tmp, cfg)
       }
       // row count = tokenize manifest rowsOut (1 row in = 1 row out): no
       // count() job over the just-written table
@@ -207,19 +203,13 @@ object IndexBuilder {
     if (force || !Checkpoint.isComplete(statsDir, fp, cfg.id, conf)) {
       force = true
       val t0 = System.nanoTime()
-      Checkpoint.atomically(statsDir, conf) { tmp =>
-        (freshDl, tokManifest) match {
-          case (Some(sumDl), Some(m)) =>
-            // N and Σdl accumulated during tokenize — 1-row write, no scan
-            Seq((m.rowsOut, sumDl)).toDF("max_doc", "sum_total_term_freq")
-              .coalesce(1).write.mode("overwrite").parquet(tmp)
-          case _ => // resume path: tokenize was skipped, derive from docs
-            spark.read.parquet(docsDir)
-              .agg(count(lit(1)).as("max_doc"),
-                   coalesce(sum($"dl"), lit(0L)).as("sum_total_term_freq"))
-              .write.mode("overwrite").parquet(tmp)
-        }
+      // N and Σdl accumulated during tokenize — no scan; the resume path
+      // (tokenize skipped) derives them from docs
+      val st = (freshDl, tokManifest) match {
+        case (Some(sumDl), Some(m)) => StatsRow(m.rowsOut, sumDl)
+        case _ => IndexWriter.statsOf(spark.read.parquet(docsDir))
       }
+      Checkpoint.atomically(statsDir, conf)(IndexWriter.writeStats(spark, _, st))
       Checkpoint.writeManifest(statsDir,
         Checkpoint.Manifest("stats", fp, cfg.id, 1L, msSince(t0), Nil), conf)
     }
@@ -234,7 +224,6 @@ object IndexBuilder {
     // universe derives from the tokenize manifest's (grp, rows) lineage
     // with NO Spark job (fallback: distinct scan when lineage is absent).
     val postDir = s"$dir/$PostingsDir"
-    val runsDir = s"$dir/$RunsDir"
     lazy val mgrpMapDF = {
       val fromLineage: Option[Seq[Long]] = tokManifest
         .filter(_.partitions.nonEmpty)
@@ -257,15 +246,36 @@ object IndexBuilder {
     }
     val buckets = cfg.buckets
 
-    def explodedPostings = tokenized
-      .select($"docid", $"dl", explode($"terms").as("t"))
-      .select($"t.term".as("term"), $"docid", $"t.tf".as("tf"), $"dl",
-        $"t.pos".as("pos"))
-      .withColumn("grp", shiftright($"docid", cfg.groupShift))
-
-    def encodeChunks(sorted: Dataset[(String, Long, Int, Int, Long, Array[Int])],
-                     acc: CollectionAccumulator[(Int, Long, Long)]) =
-      sorted.mapPartitions { it =>
+    // ---- stage: postings (single shuffle, final merged granularity) ------
+    if (force || !Checkpoint.isComplete(postDir, fp, cfg.id, conf)) {
+      force = true
+      val t0 = System.nanoTime()
+      val acc = spark.sparkContext.collectionAccumulator[(Int, Long, Long)]("postings_parts")
+      // r6: shuffle on (bucket, mgrp) instead of (term, mgrp). Equal
+      // terms still land together (bucket is a function of term) and the
+      // in-task sort below gives each (term, mgrp) chunk its docid
+      // contiguity, so the emitted runs are identical — but the
+      // partitionBy("bucket") writer now sees each task hold a FEW
+      // buckets instead of a random slice of all 64, collapsing the
+      // (writer task × bucket dir) small-file product (2,432 → ~250
+      // files on the bench build; every later postings read pays
+      // listing + footer + open-cost per file). Scale: keys = buckets ×
+      // mgrps, and mgrp count grows with the corpus (one per 2^22
+      // docids), so reducer parallelism keeps scaling and a hot term
+      // still splits across its mgrps; per-key load coarsens only by
+      // the bucket's term mix, which the 64-way term hash keeps uniform.
+      val bucketU = udf((t: String) => bucketOf(t, buckets))
+      val sorted = tokenized
+        .select($"docid", $"dl", explode($"terms").as("t"))
+        .select($"t.term".as("term"), $"docid", $"t.tf".as("tf"), $"dl",
+          $"t.pos".as("pos"))
+        .withColumn("grp", shiftright($"docid", cfg.groupShift))
+        .join(broadcast(mgrpMapDF), Seq("grp"))
+        .repartition(bucketU($"term"), $"mgrp")
+        .sortWithinPartitions($"term", $"mgrp", $"docid")
+        .select($"term", $"docid", $"tf", $"dl", $"mgrp", $"pos")
+        .as[(String, Long, Int, Int, Long, Array[Int])]
+      val runs = sorted.mapPartitions { it =>
         val pid = TaskContext.getPartitionId()
         val rows = it.buffered
         val rawRuns = new Iterator[PostingRun] {
@@ -283,90 +293,15 @@ object IndexBuilder {
                   if (r._6 == null || r._6.isEmpty) PostingCodec.NoPositions else r._6)
               }
             }
-            toRun(term, grp, PostingCodec.encode(chunk), buckets)
+            IndexWriter.postingRun(term, bucketOf(term, buckets), grp, PostingCodec.encode(chunk))
           }
         }
         metered(rawRuns, acc, pid)(r =>
           (r, r.doc_blob.length.toLong + r.tf_blob.length + r.dl_blob.length
             + r.pos_blob.length))
       }
-
-    if (!cfg.twoPhase) {
-      // ---- stage: postings (single shuffle, final merged granularity) ----
-      if (force || !Checkpoint.isComplete(postDir, fp, cfg.id, conf)) {
-        force = true
-        val t0 = System.nanoTime()
-        val acc = spark.sparkContext.collectionAccumulator[(Int, Long, Long)]("postings_parts")
-        // r6: shuffle on (bucket, mgrp) instead of (term, mgrp). Equal
-        // terms still land together (bucket is a function of term) and the
-        // in-task sort below gives encodeChunks its (term, mgrp, docid)
-        // contiguity, so the emitted runs are identical — but the
-        // partitionBy("bucket") writer now sees each task hold a FEW
-        // buckets instead of a random slice of all 64, collapsing the
-        // (writer task × bucket dir) small-file product (2,432 → ~250
-        // files on the bench build; every later postings read pays
-        // listing + footer + open-cost per file). Scale: keys = buckets ×
-        // mgrps, and mgrp count grows with the corpus (one per 2^22
-        // docids), so reducer parallelism keeps scaling and a hot term
-        // still splits across its mgrps; per-key load coarsens only by
-        // the bucket's term mix, which the 64-way term hash keeps uniform.
-        val bucketU = udf((t: String) => bucketOf(t, buckets))
-        val sorted = explodedPostings
-          .join(broadcast(mgrpMapDF), Seq("grp"))
-          .repartition(bucketU($"term"), $"mgrp")
-          .sortWithinPartitions($"term", $"mgrp", $"docid")
-          .select($"term", $"docid", $"tf", $"dl", $"mgrp", $"pos")
-          .as[(String, Long, Int, Int, Long, Array[Int])]
-        Checkpoint.atomically(postDir, conf) { tmp =>
-          encodeChunks(sorted, acc)
-            .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-        }
-        publishManifest(postDir, "postings", fp, cfg.id, acc, t0, conf)
-      }
-    } else {
-      // ---- stage: posting runs (initial segments) -------------------------
-      if (force || !Checkpoint.isComplete(runsDir, fp, cfg.id, conf)) {
-        force = true
-        val t0 = System.nanoTime()
-        val acc = spark.sparkContext.collectionAccumulator[(Int, Long, Long)]("runs_parts")
-        val sorted = explodedPostings
-          .repartition($"term", $"grp")
-          .sortWithinPartitions($"term", $"grp", $"docid")
-          .select($"term", $"docid", $"tf", $"dl", $"grp", $"pos")
-          .as[(String, Long, Int, Int, Long, Array[Int])]
-        Checkpoint.atomically(runsDir, conf) { tmp =>
-          encodeChunks(sorted, acc).write.mode("overwrite").parquet(tmp)
-        }
-        publishManifest(runsDir, "runs", fp, cfg.id, acc, t0, conf)
-      }
-
-      // ---- stage: merged postings (segment merge) -------------------------
-      if (force || !Checkpoint.isComplete(postDir, fp, cfg.id, conf)) {
-        force = true
-        val t0 = System.nanoTime()
-        val acc = spark.sparkContext.collectionAccumulator[(Int, Long, Long)]("postings_parts")
-        val runCols = Seq("term", "bucket", "grp", "ndocs", "first_docid",
-          "last_docid", "max_tf", "sum_tf", "doc_blob", "tf_blob", "dl_blob",
-          "pos_blob", "block_last_docid", "block_max_tf", "block_min_dl",
-          "block_doc_off", "block_tf_off", "block_dl_off", "block_pos_off")
-        val merged = spark.read.parquet(runsDir)
-          .join(broadcast(mgrpMapDF), Seq("grp"))
-          // (bucket, mgrp) shuffle — same small-file rationale as the
-          // single-phase postings stage above; runs already carry bucket
-          .repartition($"bucket", $"mgrp")
-          .sortWithinPartitions($"term", $"grp")
-          .select(struct(runCols.map(col): _*).as("_1"), $"mgrp".as("_2"))
-          .as[(PostingRun, Long)]
-        val mergedRuns = merged.mapPartitions { it =>
-          val pid = TaskContext.getPartitionId()
-          metered(SegmentMerger.mergeSorted(it), acc, pid)(r =>
-            (r, r.doc_blob.length.toLong + r.tf_blob.length + r.dl_blob.length))
-        }
-        Checkpoint.atomically(postDir, conf) { tmp =>
-          mergedRuns.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-        }
-        publishManifest(postDir, "postings", fp, cfg.id, acc, t0, conf)
-      }
+      Checkpoint.atomically(postDir, conf)(IndexWriter.writePostings(runs, _))
+      publishManifest(postDir, "postings", fp, cfg.id, acc, t0, conf)
     }
 
     // ---- stage: term stats -------------------------------------------------
@@ -375,46 +310,19 @@ object IndexBuilder {
       val t0 = System.nanoTime()
       // rowsOut (= |vocabulary|) rides the write as an observed metric —
       // lineage stays complete with NO count job over the published table
-      val tsObs = org.apache.spark.sql.Observation()
+      var tsRows = 0L
       Checkpoint.atomically(tsDir, conf) { tmp =>
-        spark.read.parquet(postDir)
-          .groupBy($"term", $"bucket")
-          .agg(sum($"ndocs").cast("long").as("df"),
-               max($"max_tf").as("max_tf"),
-               sum($"sum_tf").cast("long").as("cf"))
-          .select($"term", $"bucket", $"df", $"max_tf", $"cf")
-          .observe(tsObs, count(lit(1)).as("rows"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
+        tsRows = IndexWriter.writeTermStats(spark, postDir, tmp)
       }
-      val tsRows =
-        try {
-          val row = scala.concurrent.Await.result(
-            tsObs.future, scala.concurrent.duration.Duration(30, "s"))
-          row.getAs[Long]("rows")
-        } catch { // metric lost (never for a completed local write): one scan
-          case scala.util.control.NonFatal(_) => spark.read.parquet(tsDir).count()
-        }
       Checkpoint.writeManifest(tsDir,
         Checkpoint.Manifest("term_stats", fp, cfg.id, tsRows, msSince(t0), Nil), conf)
     }
 
     // ---- stage: vocabulary projection (prefix/fuzzy expansion pruning) -----
-    // Range-partitioned on (len, term) THEN directory-partitioned by len:
-    // each writer task covers a contiguous (len, term) slice sorted by term,
-    // so a prefix scan is a pushed-down StringStartsWith over term-sorted
-    // row groups and a fuzzy scan partition-prunes to the ±maxEdits length
-    // band — bounded work at a 10^8-term web vocabulary, vs the full
-    // bucket-hashed term_stats pass this replaces.
     val vocabDir = s"$dir/$VocabDir"
     if (force || !Checkpoint.isComplete(vocabDir, fp, cfg.id, conf)) {
       val t0 = System.nanoTime()
-      Checkpoint.atomically(vocabDir, conf) { tmp =>
-        spark.read.parquet(tsDir)
-          .select($"term", length($"term").as("len"))
-          .repartitionByRange($"len", $"term")
-          .sortWithinPartitions($"term")
-          .write.mode("overwrite").partitionBy("len").parquet(tmp)
-      }
+      Checkpoint.atomically(vocabDir, conf)(IndexWriter.writeVocab(spark, tsDir, _))
       // 1 term_stats row in = 1 vocab row out: rowsOut from upstream lineage
       val vRows = Checkpoint.readManifest(tsDir, conf).map(_.rowsOut)
         .filter(_ >= 0).getOrElse(spark.read.parquet(vocabDir).count())
@@ -645,10 +553,4 @@ object IndexBuilder {
       Checkpoint.Manifest(stage, fp, cfgId, parts.map(_.rows).sum, msSince(t0), parts),
       conf)
   }
-
-  private[index] def toRun(term: String, grp: Long, e: EncodedRun, buckets: Int): PostingRun =
-    PostingRun(term, bucketOf(term, buckets), grp, e.ndocs, e.firstDocid, e.lastDocid,
-      e.maxTf, e.sumTf, e.docBlob, e.tfBlob, e.dlBlob, e.posBlob,
-      e.blockLastDocid, e.blockMaxTf, e.blockMinDl,
-      e.blockDocOff, e.blockTfOff, e.blockDlOff, e.blockPosOff)
 }

@@ -65,14 +65,11 @@ final case class PostingRun(
   */
 final case class TermStatsRow(term: String, bucket: Int, df: Long, max_tf: Int, cf: Long)
 
-/** Index build configuration.
-  *
-  * `twoPhase = false` (default) builds posting runs directly at merged
-  * granularity — one shuffle, with the segment-merge happening inside the
-  * shuffle sort (the Spark-native equivalent of Lucene's flush+merge).
-  * `twoPhase = true` materializes the intermediate per-group segment runs
-  * and merges them in a second stage via [[SegmentMerger]] — finer resume
-  * granularity at the cost of a second full shuffle + write.
+/** Index build configuration. The build writes posting runs directly at
+  * merged granularity (2^mergeShift docid-range groups per run) — one
+  * shuffle, with the segment merge happening inside the shuffle sort (the
+  * Spark-native equivalent of Lucene's flush + merge); compaction
+  * ([[SegmentMerger.compactIndexes]]) merges across indexes later.
   */
 final case class IndexConfig(
     analyzer: AnalyzerConfig = AnalyzerConfig(),
@@ -81,7 +78,6 @@ final case class IndexConfig(
     mergeShift: Int = 4,        // 2^4 adjacent groups per final (merged) run
     rangePartitions: Int = 0,   // 0 = spark.sql.shuffle.partitions
     fingerprint: String = "keys", // "keys" | "none" — resume-safety fingerprint
-    twoPhase: Boolean = false,
     indexPositions: Boolean = false, // store in-doc positions (phrase queries)
     docidEpoch: Int = 0 // high docid bits (bit 52+): streaming batch isolation
 ) {
@@ -89,7 +85,7 @@ final case class IndexConfig(
   // v5: deterministic ntile docid packing — rangePartitions now shapes the
   // docid layout, so it joins the id and a bump forces stale-stage rebuilds
   def id: String =
-    s"v5;${analyzer.id};b=$buckets;g=$groupShift;m=$mergeShift;r=$rangePartitions;tp=$twoPhase;pos=$indexPositions;e=$docidEpoch"
+    s"v5;${analyzer.id};b=$buckets;g=$groupShift;m=$mergeShift;r=$rangePartitions;pos=$indexPositions;e=$docidEpoch"
 }
 
 object IndexLayout {
@@ -98,7 +94,6 @@ object IndexLayout {
   val TokenizedDir = "stage_tokenized"
   val DocsDir = "docs"
   val StatsDir = "stats"
-  val RunsDir = "stage_runs"
   val PostingsDir = "postings"
   val TermStatsDir = "term_stats"
   /** Sorted-by-term vocabulary projection (term, len), len-partitioned:

@@ -1,7 +1,7 @@
 package graft.index
 
 import graft.codec.{DecodedPosting, PostingCodec}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Merge adjacent posting runs of the same term into compacted runs — the
@@ -13,60 +13,34 @@ import org.apache.spark.sql.functions._
   */
 object SegmentMerger {
 
-  /** Input: (run, mergedGroup) pairs sorted by (term, grp) within the
-    * partition, with all runs of a (term, mergedGroup) co-located
-    * (guaranteed by the repartition in [[IndexBuilder]]); mergedGroup comes
-    * from the global sorted-grp rank map, so adjacent docid ranges merge
-    * even across the build's range partitions. Output: one run per
-    * (term, merged group), `grp` rewritten to the merged id, bucket
-    * preserved.
-    */
-  /** `live` drops tombstoned docids during the re-encode (merges RECLAIM
-    * deletes, like Lucene's); a (term, merged group) whose postings all
-    * die vanishes from the output.
+  /** Input: (run, mergedGroup) pairs sorted by (term, mergedGroup,
+    * first_docid) within the partition, with all runs of a
+    * (term, mergedGroup) co-located (guaranteed by the repartition in
+    * [[compactIndexes]]). Output: one run per (term, merged group), `grp`
+    * rewritten to the merged id, bucket preserved. `live` drops tombstoned
+    * docids during the re-encode (merges RECLAIM deletes, like Lucene's);
+    * a (term, merged group) whose postings all die vanishes from the output.
     */
   def mergeSorted(it: Iterator[(PostingRun, Long)],
-                  live: Long => Boolean = _ => true): Iterator[PostingRun] = {
+                  live: Long => Boolean): Iterator[PostingRun] = {
     val rows = it.buffered
-    new Iterator[PostingRun] {
-      private var pending: PostingRun = null
-      private def advance(): Unit = {
-        while (pending == null && rows.hasNext) {
-          val (head, mgrp) = rows.head
-          val term = head.term
-          val bucket = head.bucket
-          val chunkRuns = new Iterator[PostingRun] {
-            def hasNext: Boolean =
-              rows.hasNext && rows.head._1.term == term && rows.head._2 == mgrp
-            def next(): PostingRun = rows.next()._1
-          }
-          val decoded = chunkRuns.flatMap(decode).filter(p => live(p.docid))
-          if (decoded.hasNext) { // hasNext drains dead chunks fully
-            val e = PostingCodec.encode(decoded)
-            pending = PostingRun(term, bucket, mgrp, e.ndocs, e.firstDocid,
-              e.lastDocid, e.maxTf, e.sumTf, e.docBlob, e.tfBlob, e.dlBlob,
-              e.posBlob, e.blockLastDocid, e.blockMaxTf, e.blockMinDl,
-              e.blockDocOff, e.blockTfOff, e.blockDlOff, e.blockPosOff)
-          }
+    new Iterator[Option[PostingRun]] {
+      def hasNext: Boolean = rows.hasNext
+      def next(): Option[PostingRun] = {
+        val (head, mgrp) = rows.head
+        val chunk = new Iterator[PostingRun] {
+          def hasNext: Boolean =
+            rows.hasNext && rows.head._1.term == head.term && rows.head._2 == mgrp
+          def next(): PostingRun = rows.next()._1
         }
+        IndexWriter.reencode(head.term, head.bucket, mgrp, chunk, live)
       }
-      def hasNext: Boolean = { advance(); pending != null }
-      def next(): PostingRun = {
-        advance()
-        if (pending == null) throw new NoSuchElementException
-        val r = pending; pending = null; r
-      }
-    }
+    }.flatten
   }
 
   /** Decode one run's postings (streaming; positions carried when stored). */
   def decode(r: PostingRun): Iterator[DecodedPosting] =
     PostingCodec.decodeBlobs(r.ndocs, r.doc_blob, r.tf_blob, r.dl_blob, r.pos_blob)
-
-  private val RunCols = Seq("term", "bucket", "grp", "ndocs", "first_docid",
-    "last_docid", "max_tf", "sum_tf", "doc_blob", "tf_blob", "dl_blob",
-    "pos_blob", "block_last_docid", "block_max_tf", "block_min_dl",
-    "block_doc_off", "block_tf_off", "block_dl_off", "block_pos_off")
 
   /** Compact several docid-DISJOINT indexes (streaming delta indexes and/or
     * a prior compaction — docids carry the epoch in bits 52+, so ranges
@@ -86,18 +60,16 @@ object SegmentMerger {
     * dir); a killed compaction leaves the delta set untouched.
     */
   def compactIndexes(spark: SparkSession, srcDirs: Seq[String], outDir: String,
-                     cfg: IndexConfig, mergeShift: Option[Int] = None): BuiltIndex = {
+                     cfg: IndexConfig): BuiltIndex = {
     import spark.implicits._
     import IndexLayout._
-    val conf = spark.sparkContext.hadoopConfiguration
     require(srcDirs.nonEmpty, "nothing to compact")
-    // Default: 4× coarser than the build's final run granularity — tiered
-    // merging toward fewer, larger runs (delta builds are small, so their
-    // rank universe is dominated by epoch gaps). Postings run granularity
-    // is NOT coupled to the persisted cfg: mgrp only has to keep a term's
-    // runs docid-disjoint and ordered; the docs table (whose grp partition
-    // IS cfg-derived) is copied verbatim.
-    val ms = mergeShift.getOrElse(cfg.mergeShift + 2)
+    // 4× coarser than the build's final run granularity — tiered merging
+    // toward fewer, larger runs (delta builds are small, so their rank
+    // universe is dominated by epoch gaps). Postings run granularity is NOT
+    // coupled to the persisted cfg: mgrp only has to keep a term's runs
+    // docid-disjoint and ordered.
+    val ms = cfg.mergeShift + 2
     // merges RECLAIM deletes (≙ Lucene dropping per-segment .del sets on
     // merge): union each source's own equality-delete generations; the
     // compacted output carries none of them
@@ -105,75 +77,34 @@ object SegmentMerger {
       Deletes.load(spark, srcDirs.map(d => s"$d/$DeletesDir"))
     val tombBc = if (tomb.isEmpty) None
       else Some(spark.sparkContext.broadcast(tomb))
-    Checkpoint.atomically(outDir, conf) { tmp =>
-      val runs = srcDirs.map(d => spark.read.parquet(s"$d/$PostingsDir"))
-        .reduce(_ unionByName _)
-      val g0s: Seq[Long] = runs
-        .select(shiftright(col("first_docid"), cfg.groupShift).as("g0"))
-        .distinct().orderBy("g0").as[Long].collect().toSeq
-      val mgrpMap = g0s.zipWithIndex
-        .map { case (g, i) => (g, (i >> ms).toLong) }
-        .toDF("g0", "mgrp")
-      val merged = runs
-        .withColumn("g0", shiftright(col("first_docid"), cfg.groupShift))
-        .join(broadcast(mgrpMap), Seq("g0"))
-        .repartition(col("term"), col("mgrp"))
-        .sortWithinPartitions(col("term"), col("mgrp"), col("first_docid"))
-        .select(struct(RunCols.map(col): _*).as("_1"), col("mgrp").as("_2"))
-        .as[(PostingRun, Long)]
-        .mapPartitions { it =>
-          val live: Long => Boolean = tombBc match {
-            case None => _ => true
-            case Some(b) => d => Deletes.live(b.value, d)
-          }
-          mergeSorted(it, live)
+    val runs = srcDirs.map(d => spark.read.parquet(s"$d/$PostingsDir"))
+      .reduce(_ unionByName _)
+    val g0s: Seq[Long] = runs
+      .select(shiftright(col("first_docid"), cfg.groupShift).as("g0"))
+      .distinct().orderBy("g0").as[Long].collect().toSeq
+    val mgrpMap = g0s.zipWithIndex
+      .map { case (g, i) => (g, (i >> ms).toLong) }
+      .toDF("g0", "mgrp")
+    val runCols = Encoders.product[PostingRun].schema.fieldNames.toSeq
+    val merged = runs
+      .withColumn("g0", shiftright(col("first_docid"), cfg.groupShift))
+      .join(broadcast(mgrpMap), Seq("g0"))
+      .repartition(col("term"), col("mgrp"))
+      .sortWithinPartitions(col("term"), col("mgrp"), col("first_docid"))
+      .select(struct(runCols.map(col): _*).as("_1"), col("mgrp").as("_2"))
+      .as[(PostingRun, Long)]
+      .mapPartitions { it =>
+        val live: Long => Boolean = tombBc match {
+          case None => _ => true
+          case Some(b) => d => Deletes.live(b.value, d)
         }
-      merged.write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$tmp/$PostingsDir")
-      // docs: docids (and their grp partition values) are globally unique
-      // across epochs → a plain re-partitioned union, minus tombstones
-      val docsAll = srcDirs.map(d => spark.read.parquet(s"$d/$DocsDir"))
-        .reduce(_ unionByName _)
-      val docsLive = tombBc match {
-        case None => docsAll
-        case Some(b) => docsAll.join(
-          broadcast(spark.createDataset(b.value.toSeq).toDF("docid")),
-          Seq("docid"), "left_anti")
+        mergeSorted(it, live)
       }
-      docsLive.write.mode("overwrite").partitionBy("grp").parquet(s"$tmp/$DocsDir")
-      // collection stats: additive across disjoint delta sets when no
-      // deletes are reclaimed; otherwise recomputed over survivors
-      val (maxDoc, sumTtf) =
-        if (tomb.isEmpty) {
-          val st = srcDirs.map { d =>
-            val r = spark.read.parquet(s"$d/$StatsDir").head()
-            (r.getAs[Long]("max_doc"), r.getAs[Long]("sum_total_term_freq"))
-          }
-          (st.map(_._1).sum, st.map(_._2).sum)
-        } else {
-          val r = spark.read.parquet(s"$tmp/$PostingsDir")
-            .agg(sum(col("sum_tf")).cast("long")).head()
-          (spark.read.parquet(s"$tmp/$DocsDir").count(),
-            if (r.isNullAt(0)) 0L else r.getLong(0))
-        }
-      Seq((maxDoc, sumTtf))
-        .toDF("max_doc", "sum_total_term_freq")
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/$StatsDir")
-      // per-term stats + vocabulary projection from the compacted postings
-      spark.read.parquet(s"$tmp/$PostingsDir")
-        .groupBy(col("term"), col("bucket"))
-        .agg(sum(col("ndocs")).cast("long").as("df"),
-          max(col("max_tf")).as("max_tf"),
-          sum(col("sum_tf")).cast("long").as("cf"))
-        .select(col("term"), col("bucket"), col("df"), col("max_tf"), col("cf"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$tmp/$TermStatsDir")
-      spark.read.parquet(s"$tmp/$TermStatsDir")
-        .select(col("term"), length(col("term")).as("len"))
-        .repartitionByRange(col("len"), col("term"))
-        .sortWithinPartitions(col("term"))
-        .write.mode("overwrite").partitionBy("len").parquet(s"$tmp/$VocabDir")
-      BuiltIndex.writeProps(spark, tmp, cfg)
-    }
-    new BuiltIndex(spark, outDir, cfg)
+    // docids (and their grp partition values) are globally unique across
+    // epochs → docs are a plain union; collection stats are additive across
+    // disjoint delta sets unless deletes are reclaimed
+    IndexWriter.rewrite(spark, outDir, cfg, merged,
+      srcDirs.map(d => spark.read.parquet(s"$d/$DocsDir")).reduce(_ unionByName _),
+      tomb, if (tomb.isEmpty) Some(IndexWriter.readStats(spark, srcDirs)) else None)
   }
 }

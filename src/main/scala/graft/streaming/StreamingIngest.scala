@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.index.{BuiltIndex, IndexBuilder, IndexConfig, IndexLayout, StatsRow}
+import graft.index.{BuiltIndex, IndexBuilder, IndexConfig, IndexLayout, IndexWriter, StatsRow}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -203,11 +203,5 @@ final class UnionIndex(spark0: SparkSession, val dirs: Seq[String], cfg0: IndexC
         max(col("max_tf")).as("max_tf"),
         sum(col("cf")).cast("long").as("cf"))
 
-  override lazy val stats: StatsRow = {
-    val rows = dirs.map { d =>
-      val r = spark.read.parquet(s"$d/$StatsDir").head()
-      (r.getAs[Long]("max_doc"), r.getAs[Long]("sum_total_term_freq"))
-    }
-    StatsRow(rows.map(_._1).sum, rows.map(_._2).sum)
-  }
+  override lazy val stats: StatsRow = IndexWriter.readStats(spark, dirs)
 }

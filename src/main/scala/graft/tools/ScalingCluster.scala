@@ -77,8 +77,8 @@ object ScalingCluster {
     // for identical work at 8 vs 32 partitions).
     val shufParts = sys.env.get("GRAFT_SHUFFLE_PARTITIONS")
       .map(_.toInt).getOrElse(cores * 4)
-    val classesDir = sys.env.getOrElse("GRAFT_CLASSES",
-      "/root/repo/target/scala-2.13/classes")
+    val classesDir = sys.env.getOrElse("GRAFT_CLASSES", java.nio.file.Paths
+      .get(System.getProperty("user.dir"), "target", "scala-2.13", "classes").toString)
     val spark = SparkSession.builder()
       .master(s"local-cluster[$workers,$coresPer,16384]")
       .appName(s"graft-cluster-w$workers")

@@ -53,6 +53,20 @@ class DeletesSpec extends AnyFunSuite {
       .mapValues(_.sortBy(_.rank).map(l => (l.docno, l.rank, l.score)).toSeq)
       .toMap
 
+  /** `got` was written by the same writer as a fresh build: its stats row,
+    * full term_stats rows and vocab rows equal `want`'s.
+    */
+  private def assertSameDerivedTables(got: BuiltIndex, want: BuiltIndex): Unit = {
+    import spark.implicits._
+    assert(got.stats == want.stats)
+    def termStats(i: BuiltIndex) = i.termStats.select("term", "bucket", "df", "max_tf", "cf")
+      .as[(String, Int, Long, Int, Long)].collect().sorted.toSeq
+    def vocab(i: BuiltIndex) =
+      i.vocab.select("term", "len").as[(String, Int)].collect().sorted.toSeq
+    assert(termStats(got) == termStats(want))
+    assert(vocab(got) == vocab(want))
+  }
+
   private lazy val (fullIdx, overlayIdx): (BuiltIndex, BuiltIndex) = {
     import spark.implicits._
     val dir = TestSpark.tmpDir("delfull")
@@ -125,11 +139,7 @@ class DeletesSpec extends AnyFunSuite {
     val freshDir = TestSpark.tmpDir("delfresh")
     val fresh = IndexBuilder.build(
       corpusDF(docs.filterNot(d => deleted(d._1))), freshDir, cfg)
-    assert(purged.stats == fresh.stats)
-    import spark.implicits._
-    val dfP = purged.termStats.select("term", "df").as[(String, Long)].collect().toMap
-    val dfF = fresh.termStats.select("term", "df").as[(String, Long)].collect().toMap
-    assert(dfP == dfF)
+    assertSameDerivedTables(purged, fresh)
     val rp = runOf(new Searcher(purged).search(topics, k = 1000))
     val rf = runOf(new Searcher(fresh).search(topics, k = 1000))
     assert(rp == rf)
@@ -176,10 +186,7 @@ class DeletesSpec extends AnyFunSuite {
     val fresh = IndexBuilder.build(
       corpusDF(docs.filterNot(d => deleted(d._1))), TestSpark.tmpDir("cmpfresh"), cfg)
     assert(compacted.tombstones.isEmpty) // reclaimed, not carried forward
-    assert(compacted.stats == fresh.stats)
-    val dfC = compacted.termStats.select("term", "df").as[(String, Long)].collect().toMap
-    val dfF = fresh.termStats.select("term", "df").as[(String, Long)].collect().toMap
-    assert(dfC == dfF)
+    assertSameDerivedTables(compacted, fresh)
     val rc = runOf(new Searcher(compacted).search(topics, k = 1000))
     val rf = runOf(new Searcher(fresh).search(topics, k = 1000))
     assert(rc == rf)

@@ -149,40 +149,46 @@ class IndexEndToEndSpec extends AnyFunSuite {
     }
   }
 
-  test("two-phase merge compacts runs across range partitions, same postings") {
+  test("compaction merges runs across source epochs, same postings minus tombstones") {
     import spark.implicits._
-    val dir = TestSpark.tmpDir("mrg")
     // groupShift=1 → tiny per-group runs; mergeShift=1 → pairs of adjacent
-    // groups merge; 2 range partitions → the merge must cross partitions
-    // (merged groups come from the global sorted grp rank, not bit masks)
-    // every doc carries a shared term so merged groups at the partition
-    // boundary must contain it from both sides
-    val mergeDocs = (1 to 10).map(i => f"v$i%02d" -> s"common uniq$i filler$i")
-    val idx = IndexBuilder.build(corpusDF(mergeDocs), dir,
-      cfg.copy(rangePartitions = 2, twoPhase = true))
-    val rawRuns = spark.read.parquet(s"$dir/${IndexLayout.RunsDir}").as[PostingRun].collect()
-    val merged = idx.postings.as[PostingRun].collect()
-    assert(merged.length < rawRuns.length, s"${merged.length} !< ${rawRuns.length}")
-    // cross-partition: some merged run spans docids from both pids (pid is
-    // bit 40+ of the packed docid)
-    assert(merged.exists(r => (r.first_docid >> 40) != (r.last_docid >> 40)),
-      "no merged run crosses a range partition")
-    // merged blobs decode to exactly the raw postings, per term, docid order
-    for (term <- rawRuns.map(_.term).distinct) {
-      val rawPs = rawRuns.filter(_.term == term).sortBy(_.first_docid)
-        .flatMap(SegmentMerger.decode).toSeq
-      val mergedPs = merged.filter(_.term == term).sortBy(_.first_docid)
-        .flatMap(SegmentMerger.decode).toSeq
-      assert(mergedPs == rawPs, term)
+    // groups merge; 2 range partitions → each build's merge must cross
+    // partitions (merged groups come from the global sorted grp rank, not
+    // bit masks). Every doc carries a shared term, so every source holds
+    // runs of it; each source is its own docid epoch (bits 52+).
+    val srcDirs = (1 to 3).map { e =>
+      val docs = (1 to 10).map(i => f"e$e-v$i%02d" -> s"common uniq$e-$i filler$i")
+      val d = TestSpark.tmpDir(s"mrg$e")
+      IndexBuilder.build(corpusDF(docs), d, cfg.copy(rangePartitions = 2, docidEpoch = e))
+      d
     }
+    // an in-place delete generation in one source: compaction reclaims it
+    Deletes.writeDeletes(BuiltIndex.open(spark, srcDirs(1)),
+      Seq("e2-v03", "e2-v08").toDF("docno"), s"${srcDirs(1)}/${IndexLayout.DeletesDir}")
+    val tomb = BuiltIndex.open(spark, srcDirs(1)).tombstones.toSet
+    assert(tomb.size == 2)
+    val srcRuns = srcDirs.flatMap(d =>
+      BuiltIndex.open(spark, d).postings.as[PostingRun].collect())
+    // the build merged across its range partitions: some source run spans
+    // docids of both (the partition is bit 40+ of the packed docid)
+    assert(srcRuns.exists(r => (r.first_docid >> 40) != (r.last_docid >> 40)),
+      "no built run crosses a range partition")
 
-    // and the two-phase index answers identically to the default single-phase
-    val dir1 = TestSpark.tmpDir("mrg1")
-    val idx1 = IndexBuilder.build(corpusDF(mergeDocs), dir1, cfg.copy(rangePartitions = 2))
-    val topics = Seq(Topic("m", "common uniq3"))
-    val r1 = collectRun(new Searcher(idx1).search(topics, 100))
-    val r2 = collectRun(new Searcher(idx).search(topics, 100))
-    assert(r1 == r2 && r1.nonEmpty)
+    val compacted = SegmentMerger.compactIndexes(spark, srcDirs,
+      TestSpark.tmpDir("mrgout") + "/out", cfg).postings.as[PostingRun].collect()
+    assert(compacted.length < srcRuns.length, s"${compacted.length} !< ${srcRuns.length}")
+    assert(compacted.exists(r => (r.first_docid >> 52) != (r.last_docid >> 52)),
+      "no compacted run spans two source epochs")
+    // compacted blobs decode to exactly the source postings minus
+    // tombstones, per term, in docid order
+    def postingsOf(runs: Seq[PostingRun], term: String) =
+      runs.filter(_.term == term).sortBy(_.first_docid)
+        .flatMap(SegmentMerger.decode).map(p => (p.docid, p.tf, p.dl))
+    for (term <- (srcRuns ++ compacted).map(_.term).distinct)
+      assert(postingsOf(compacted.toSeq, term) ==
+        postingsOf(srcRuns, term).filterNot(p => tomb(p._1)), term)
+    // a term whose only doc was deleted vanishes
+    assert(!compacted.exists(_.term == "uniq2-3"))
   }
 
   test("deterministic rebuild: same input → identical tables and results") {
