@@ -307,8 +307,8 @@ object SparkEntry {
     // Iceberg-v2 delete files): tombstoned docs vanish from results while
     // df/dl/collection stats keep their pre-delete values, so surviving
     // docs score UNCHANGED and ranks close up. WAND pruning stays ON —
-    // the seed θ is computed live-only (a deleted doc must not inflate
-    // the lower bound) while block maxima remain sound as supersets —
+    // the range task's heap θ holds live docs only (a deleted doc must
+    // not inflate it) while block maxima remain sound as supersets —
     // so a green row certifies tombstone-aware pruning rank-identity.
     "q_delete_topk" -> ((s, dir) => {
       new graft.search.Searcher(Engine.deletedOracleIndex(s, dir))

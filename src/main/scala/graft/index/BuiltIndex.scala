@@ -46,7 +46,8 @@ class BuiltIndex(val spark: SparkSession, val dir: String, val cfg: IndexConfig)
   /** The rows of a term-keyed table — any postings view or [[termStats]] —
     * for `terms`: the `bucket = hash(term) % buckets` partition filter
     * prunes parquet directories and the term `IN` is pushed into the scan.
-    * The read side's one user of [[IndexLayout.bucketOf]]. An empty term
+    * With [[bucketsOf]], the read side's only user of
+    * [[IndexLayout.bucketOf]]. An empty term
     * set is an empty relation: no scan runs.
     */
   def forTerms(table: DataFrame, terms: Iterable[String]): DataFrame = {
@@ -55,6 +56,10 @@ class BuiltIndex(val spark: SparkSession, val dir: String, val cfg: IndexConfig)
     else table.where(col("bucket").isin(ts.map(bucketOf(_, cfg.buckets)).distinct: _*) &&
       col("term").isin(ts: _*))
   }
+
+  /** Bucket partitions a [[forTerms]] read of `terms` touches. */
+  def bucketsOf(terms: Iterable[String]): Int =
+    terms.iterator.map(bucketOf(_, cfg.buckets)).toSet.size
 
   /** Per-term (docFreq, collectionFreq) of the indexed `terms` (≙ Lucene's
     * `TermStatistics`, consumed at `BM25.java:61`); absent terms have no
@@ -85,7 +90,7 @@ class BuiltIndex(val spark: SparkSession, val dir: String, val cfg: IndexConfig)
     * unchanged; defined via [[postings]] so [[graft.streaming.UnionIndex]]'s
     * override flows through.
     */
-  def postingsScoring: DataFrame = {
+  lazy val postingsScoring: DataFrame = {
     import org.apache.spark.sql.functions.typedLit
     postings.withColumns(Map(
       "pos_blob" -> typedLit(Array.empty[Byte]),
@@ -101,7 +106,7 @@ class BuiltIndex(val spark: SparkSession, val dir: String, val cfg: IndexConfig)
     * post-[[postingsScoring]] scan bytes on the sf0.01 oracle index
     * (17.4 points of the full-schema total, parquet column metadata).
     */
-  def postingsDecode: DataFrame = {
+  lazy val postingsDecode: DataFrame = {
     import org.apache.spark.sql.functions.typedLit
     postingsScoring.withColumns(Map(
       "first_docid" -> typedLit(0L),
@@ -121,7 +126,7 @@ class BuiltIndex(val spark: SparkSession, val dir: String, val cfg: IndexConfig)
     * top of [[postingsDecode]], so the parquet scan reads term/ndocs and
     * `doc_blob` alone.
     */
-  def postingsMatch: DataFrame = {
+  lazy val postingsMatch: DataFrame = {
     import org.apache.spark.sql.functions.typedLit
     postingsDecode.withColumns(Map(
       "tf_blob" -> typedLit(Array.empty[Byte]),

@@ -478,7 +478,7 @@ object IndexBuilder {
     * repartition land each group alone on its own partition (the balance
     * the range partitioner bought with an extra sampling pass).
     */
-  private[index] def saltsFor(parts: Int): Array[Int] = {
+  private[graft] def saltsFor(parts: Int): Array[Int] = {
     import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash, Pmod}
     val m = Array.fill(parts)(-1)
     var found = 0

@@ -112,14 +112,17 @@ private[graft] object IndexWriter {
     termStats.select(col("term"), length(col("term")).as("len"))
 
   /** Vocab derived from the term_stats at `termStatsDir`: range-partitioned
-    * on (len, term), term-sorted, then directory-partitioned by len — a
-    * prefix scan is a pushed-down StringStartsWith over term-sorted row
-    * groups and a fuzzy scan partition-prunes to the ±maxEdits length band.
+    * on (len, term), sorted by (len, term), then directory-partitioned by
+    * len — a prefix scan is a pushed-down StringStartsWith over term-sorted
+    * row groups and a fuzzy scan partition-prunes to the ±maxEdits length
+    * band. The sort leads with len because the partitioned writer needs
+    * its rows ordered by len: a term-only sort fails that requirement, and
+    * the writer's own len sort would replace it.
     */
   def writeVocab(spark: SparkSession, termStatsDir: String, path: String): Unit =
     writePartitioned(vocabOf(spark.read.parquet(termStatsDir))
       .repartitionByRange(col("len"), col("term"))
-      .sortWithinPartitions(col("term")), path, "len")
+      .sortWithinPartitions(col("len"), col("term")), path, "len")
 
   /** Publish a rewritten index at `outDir` (compaction, purge): `runs`, the
     * `docs` minus `tombstones`, and every derived table. `stats` None

@@ -269,9 +269,9 @@ object BoolQuery {
     * SHOULD-only BoolNode over plain term leaves (no MUST/MUST_NOT, no
     * match-all constant). With a coord-free scorer, [[eval]] over such a
     * tree is exactly the NaN-skipping sum of the matched leaf partials —
-    * the flat disjunctive score — so block-max WAND's seed threshold
-    * remains a valid lower bound and the Searcher keeps pruning enabled
-    * for these queries (Searcher.searchClauses gate).
+    * the flat disjunctive score, monotone in every leaf — so block-max
+    * WAND's block bounds stay valid upper bounds and the Searcher keeps
+    * pruning enabled for these queries (ClausePlan.pruneQids).
     */
   def prunableShape(n: EvalNode): Boolean = n match {
     case ELeaf(_) => true

@@ -11,9 +11,9 @@ package graft.search
   * Slots. A partial row carries a per-qid slot, not a clause index. The
   * plan numbers each qid's live clause entries in (qidx, expansion rank)
   * order: one slot per term, phrase, expansion or synonym clause, and one
-  * per live expanded term of a blended (fuzzy) clause. The combine pass
-  * sorts each (qid, doc) run by slot, and its reducers fold slots back into
-  * clauses through [[slots]]: a blended clause's expansions sum from 0 in
+  * per live expanded term of a blended (fuzzy) clause. The range tasks
+  * fold each (qid, doc)'s partials in slot order, and their reducers fold
+  * slots back into clauses through [[slots]]: a blended clause's expansions sum from 0 in
   * rank order, then the clauses add in qidx order — the Float order of a
   * per-clause reduction, without one.
   *
@@ -33,9 +33,7 @@ private[graft] final class ClausePlan(
 
   // minimumNumberShouldMatch (≙ BooleanQuery.setMinimumNumberShouldMatch):
   // flat-OR only — a tree carries its own occurs, AND already requires
-  // all, and WAND's seed θ is computed over the UNfiltered stream, so a
-  // doc the msm gate later removes could have seeded a θ that overshoots
-  // the true (post-gate) kth score — pruning would be unsound.
+  // all, and the msm gate stays exhaustive (no WAND).
   require(minShouldMatch == 0 || (mode == "or" && trees.isEmpty && !pruning),
     "minShouldMatch requires flat OR mode without trees or pruning")
   require(phraseClauses.isEmpty || positions,
@@ -50,10 +48,10 @@ private[graft] final class ClausePlan(
   require(trees.isEmpty || (mode == "or" && negTerms.isEmpty),
     "tree evaluation carries its own boolean structure: use mode=or and no negTerms")
   require(!collapse || !pruning,
-    "field collapse cannot prune: WAND's seed θ bounds the global kth " +
+    "field collapse cannot prune: WAND's θ bounds the global kth " +
       "score, but a collapse key's winner may rank anywhere")
   require(!filter || !pruning,
-    "attribute filters cannot prune: the seed pass computes θ over the " +
+    "attribute filters cannot prune: WAND's θ is the kth score of the " +
       "UNfiltered stream, so the filtered kth score may sit in a " +
       "block the overshooting θ skipped")
 
@@ -155,15 +153,15 @@ private[graft] final class ClausePlan(
     .filter(_.terms.nonEmpty)
 
   /** Qids block-max WAND may prune. Pruning is sound per QUERY only for
-    * pure disjunctive term scoring: exclusions (MUST_NOT terms, excluded
-    * docnos) remove docs AFTER the seed pass computed θ over the
-    * un-excluded stream, and phrase/expansion/blended/synonym partials are
+    * pure disjunctive term scoring: MUST_NOT terms remove docs AFTER the
+    * range tasks' heaps saw them, so their θ may overshoot; excluded docnos
+    * keep the same rule; and phrase/expansion/blended/synonym partials are
     * not covered by the term block bounds, so such a query's true kth score
-    * could beat θ inside a skipped block; those qids get no θ while clean
-    * qids of the same batch still prune. A tree prunes iff it is the flat
-    * OR in disguise ([[BoolQuery.prunableShape]]): with a coord-free scorer
-    * (implied by `supportsPruning`) its evaluation is the NaN-skipping sum
-    * of leaf partials, so the seed lower bound stays valid.
+    * could beat θ inside a skipped block. Those qids stay exhaustive while
+    * clean qids of the same batch still prune. A tree prunes iff it is the
+    * flat OR in disguise ([[BoolQuery.prunableShape]]): with a coord-free
+    * scorer (implied by `supportsPruning`) its evaluation is the
+    * NaN-skipping sum of leaf partials, monotone in each of them.
     */
   val pruneQids: Set[String] =
     if (!pruning || !scorer.supportsPruning || conjunctive) Set.empty
@@ -174,9 +172,6 @@ private[graft] final class ClausePlan(
         trees.collect { case (qid, ts) if !BoolQuery.prunableShape(ts.root) => qid }).toSet
       clauses.map(_.qid).filterNot(unprunable).toSet
     }
-
-  /** The term clauses of the pruned qids: the WAND seed and bounds. */
-  def prunedClauses: Seq[WeightedClause] = clauses.filter(c => pruneQids(c.qid))
 
   // qid → its live (qidx, rank) entries in slot order
   private val slotted: Map[String, Array[(Int, Int)]] =
@@ -240,6 +235,14 @@ private[graft] final class ClausePlan(
     if (s.isNaN) None else Some(qid -> s)
   }
 
+  /** Postings work of the plan — Σ df × entries of [[terms]], plus the df
+    * of each phrase and synonym term — from which [[RangeScorer.plan]]
+    * picks the number of docid ranges.
+    */
+  def work: Long = RangeScorer.work(terms, dfs(_)._1) +
+    (livePhrases.flatMap(_.terms.map(_._1)) ++ liveSynonyms.flatMap(_.terms))
+      .flatMap(dfs.get).map(_._1).sum
+
   /** Nothing can score: no live clause and no tree (a tree may match-all). */
   def isEmpty: Boolean = terms.isEmpty && phrases.isEmpty && expansions.isEmpty &&
     synonyms.isEmpty && trees.isEmpty
@@ -252,8 +255,8 @@ object ClausePlan {
   type TermGroups = Array[(Float, Array[(String, Int, Float)])]
 
   /** term → weight groups of (term, weight, (qid, slot, boost)) entries:
-    * the per-term plan of every plain-term decode (scored clauses, dismax,
-    * the WAND seed).
+    * the per-term plan of the range tasks' term cursors (scored clauses,
+    * dismax).
     */
   def termPlan(entries: Seq[(String, Float, (String, Int, Float))]): Map[String, TermGroups] =
     entries.groupBy(_._1).map { case (term, es) =>

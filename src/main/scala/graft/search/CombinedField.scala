@@ -32,8 +32,9 @@ import org.apache.spark.sql.functions._
   * each bounded by the query terms' posting sizes; the joined stream is
   * locally checkpointed because it feeds BOTH the df aggregation and the
   * scoring pass (typed lineage defeats exchange reuse); df-per-term is a
-  * ≤|query terms| driver map; the per-(query, doc) sum is the searcher's
-  * shared sorted combine pass and the collector its bounded heap.
+  * ≤|query terms| driver map; the per-(query, doc) sum runs in the
+  * searcher's range tasks ([[RangeScorer]], the field contributions as
+  * their row cursor) and the collector is its bounded heap.
   * Float accumulation runs in ascending-term order per (query, doc), so
   * equal-stat documents get bit-identical scores and tie-break on docno —
   * the same determinism contract as the single-field engine.
@@ -108,15 +109,15 @@ object CombinedField {
     // Document-level df: the joined stream has exactly one row per
     // (term, doc-with-term-in-any-field). ≤|query terms| rows collected.
     val n = idx0.stats.max_doc
-    val idfByTerm: Map[String, Double] = combined.groupBy("term")
-      .agg(count(lit(1)).as("df")).as[(String, Long)].collect()
-      .map { case (t, df) =>
-        t -> math.log(1.0 + (n - df + 0.5) / (df + 0.5)) / math.log(2.0)
-      }.toMap
+    val dfByTerm: Map[String, Long] = combined.groupBy("term")
+      .agg(count(lit(1)).as("df")).as[(String, Long)].collect().toMap
+    val idfByTerm: Map[String, Double] = dfByTerm.map { case (t, df) =>
+      t -> math.log(1.0 + (n - df + 0.5) / (df + 0.5)) / math.log(2.0)
+    }
     val idfB = spark.sparkContext.broadcast(idfByTerm)
     val qtermsB = spark.sparkContext.broadcast(qterms)
     // a term's clause index is its rank in ascending term order, so the
-    // shared combine pass sums each (query, doc) in ascending-term order
+    // range task sums each (query, doc) in ascending-term order
     val rankB = spark.sparkContext.broadcast(terms.sorted.zipWithIndex.toMap)
 
     val contrib: Dataset[(String, Long, Int, Float)] =
@@ -130,8 +131,11 @@ object CombinedField {
       }
     // the flat OR sum (bm25's coord is 1); each rank is its own clause
     val slots = topics.map(_.qid -> terms.indices.toArray).toMap
-    val scores = Searcher.combineRuns(contrib,
-      () => new Searcher.FlatRuns(slots, Map.empty, requireAll = false, msm = 0, Bm25Scorer))
+    val work = qterms.iterator.map { case (t, qs) => dfByTerm.getOrElse(t, 0L) * qs.length }.sum
+    val scores = RangeScorer.score(idx0, Map.empty, Some(contrib), slots.map { case (q, s) => q -> s.length },
+      () => new Searcher.FlatRuns(slots, Map.empty, requireAll = false, msm = 0, Bm25Scorer),
+      Bm25Scorer, CollStats(idx0.stats.max_doc, idx0.stats.sum_total_term_freq),
+      None, Map.empty, None, work, 0)
     fields.head._1.collectTopK(scores, k, "bm25f")
   }
 }

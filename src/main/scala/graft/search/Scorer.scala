@@ -57,7 +57,8 @@ trait Scorer extends Serializable {
   def coord(overlap: Int, maxOverlap: Int): Float = 1.0f
   /** Whether block-max pruning is sound for this model: requires score
     * monotone increasing in tf, decreasing in dl, and coord ≡ 1 (a coord
-    * < 1 would make seed partial scores overestimate the threshold).
+    * < 1 makes the score of a doc depend on its missing clauses, so a
+    * block bound would no longer bound it).
     */
   def supportsPruning: Boolean = true
 }

@@ -1,9 +1,9 @@
 package graft.search
 
 import graft.analysis.Analyzer
-import graft.codec.{DecodedPosting, PostingCodec}
+import graft.codec.PostingCodec
 import graft.index.{BuiltIndex, PostingRun}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
@@ -85,10 +85,13 @@ final case class SynonymClause(qid: String, qidx: Int,
   * becomes:
   *
   *   postings lookup (bucket partition pruning + term predicate pushdown)
-  *     → streaming blob decode → per-slot Float partials ([[ClausePlan]])
-  *     → one docid-partitioned shuffle, sorted by (query, doc, slot):
-  *       a streaming per-(query, doc) sum in clause order (Float addition
-  *       is not associative; SURVEY.md §7.5)
+  *     → runs shipped undecoded to docid-range tasks ([[RangeScorer]]: no
+  *       exchange for a small search, one range-keyed exchange of block
+  *       slices for a large one)
+  *     → per range, a document-at-a-time merge of the clause cursors, one
+  *       block decoded at a time: per (query, doc) a sum in slot order
+  *       ([[ClausePlan]]; Float addition is not associative, SURVEY.md
+  *       §7.5), block-max WAND against the task's live top-k heap
   *     → in the same stage, a per-partition bounded top-k heap ([[TopK]])
   *     → driver merge of the ≤ k rows per query per partition, ranks
   *     → docno attach (one pruned point-lookup job over the doc table)
@@ -99,7 +102,8 @@ final case class SynonymClause(qid: String, qidx: Int,
   * Query analysis reuses the index's persisted analyzer config, ruling out
   * the reference's possible index/query analyzer mismatch by construction.
   */
-final class Searcher(val index: BuiltIndex) {
+final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
+  def this(index: BuiltIndex) = this(index, 0)
   private val spark: SparkSession = index.spark
   private val analyzer = new Analyzer(index.cfg.analyzer)
 
@@ -292,8 +296,8 @@ final class Searcher(val index: BuiltIndex) {
     * keeps only its best document by the collector ordering, and the top-k
     * ranks the collapsed winners. `keys` is a (docid, ckey) doc-values
     * table — build it once per corpus with [[collapseKeyTable]] and reuse
-    * across queries. Pruning is structurally off: block-max WAND's seed θ
-    * bounds the global kth score, but a key's winner may rank anywhere.
+    * across queries. Pruning is structurally off: block-max WAND's θ is
+    * the global kth score, but a key's winner may rank anywhere.
     */
   def searchCollapsed(topics: Seq[Topic], keys: DataFrame, k: Int = 1000,
                       scorerName: String = "bm25"): Dataset[RunLine] = {
@@ -503,20 +507,21 @@ final class Searcher(val index: BuiltIndex) {
 
   /** docid → docno point lookup for a driver-bounded docid set, one job:
     * grp partition pruning over the docid-sorted doc files, plus either a
-    * pushed-down docid literal list (≤ 4,096 ids) or, for a large topic
-    * batch that must never build a million-literal expression tree, an
-    * in-scan filter against a broadcast sorted docid array.
+    * pushed-down docid set (≤ 4,096 ids) or, for a large topic batch that
+    * must never build a million-element predicate, an in-scan filter
+    * against a broadcast sorted docid array. Both sets are set-valued
+    * predicates ([[Searcher.inSet]]): generated code references them, so a
+    * fresh search compiles no class.
     */
   private def docnoLookup(ids: Seq[Long]): Map[Long, String] = {
-    import spark.implicits._
     if (ids.isEmpty) return Map.empty
     val docShift = index.cfg.groupShift + index.cfg.mergeShift
     val sorted = ids.distinct.sorted.toArray
     val grps = sorted.map(_ >> docShift).distinct.toSeq
-    val base = index.docs.where(col("grp").isin(grps: _*))
-      .select("docid", "docno").as[(Long, String)]
+    val base = index.docs.where(Searcher.inSet(spark, "grp", grps))
+      .select("docid", "docno").as(Searcher.DocnoEnc)
     if (sorted.length <= 4096)
-      base.where(col("docid").isin(sorted.toSeq: _*)).collect().toMap
+      base.where(Searcher.inSet(spark, "docid", sorted.toSeq)).collect().toMap
     else {
       val idsB = spark.sparkContext.broadcast(sorted)
       try base.filter(t => java.util.Arrays.binarySearch(idsB.value, t._1) >= 0)
@@ -571,9 +576,9 @@ final class Searcher(val index: BuiltIndex) {
     searchClauses(topicClauses(topics), k, scorerName, mode = "and")
   }
 
-  /** Pruning accumulators of the most recent pruned search (blocks decoded
-    * vs skipped), populated once the returned Dataset is acted on — for
-    * tests and diagnostics.
+  /** Pruning accumulators of the most recent pruned search: the blocks
+    * its range tasks decoded vs skipped, populated once the returned Dataset
+    * is acted on — for tests and diagnostics.
     */
   @volatile private var pruningAccs: Option[(LongAccumulator, LongAccumulator)] = None
   def lastPruning: (Long, Long) =
@@ -1012,10 +1017,9 @@ final class Searcher(val index: BuiltIndex) {
     * others contribute `tieBreaker` times their score —
     * `max + tie·(sum − max)` (tie 0 = pure max, tie 1 = the OR sum).
     * Lucene's remedy for the "same word in many fields" inflation; here
-    * over the analyzed topic terms as the sub-queries. The partials come
-    * from the plain-term decode every OR search runs (unboosted, no
-    * queryNorm); the shared combine pass folds each doc's clauses in
-    * clause order, so the float result is deterministic.
+    * over the analyzed topic terms as the sub-queries, unboosted and
+    * without queryNorm. The range tasks every OR search runs fold each
+    * doc's clauses in clause order, so the float result is deterministic.
     */
   def searchDisMax(topics: Seq[Topic], k: Int = 1000,
                    tieBreaker: Float = 0.0f,
@@ -1038,8 +1042,10 @@ final class Searcher(val index: BuiltIndex) {
     }))
     if (terms.isEmpty) return spark.emptyDataset[RunLine]
     val tie = tieBreaker
-    collectTopK(Searcher.combineRuns(termPartials(terms, scorer, stats),
-      () => new Searcher.DisMaxRuns(tie)), k, scorer.name)
+    collectTopK(RangeScorer.score(index, terms, None,
+      clauses.groupBy(_.qid).map { case (q, cs) => q -> cs.size },
+      () => new Searcher.DisMaxRuns(tie), scorer, stats, tombstonesBc, Map.empty, None,
+      RangeScorer.work(terms, t => dfs(t)._1), forcedRanges), k, scorer.name)
   }
 
   /** Boosting query (≙ Elasticsearch `boosting`): the positive query
@@ -1218,8 +1224,7 @@ final class Searcher(val index: BuiltIndex) {
     * behavior. `mode = "and"`: conjunctive — only docs matching EVERY
     * clause survive (posting-list intersection; available in the
     * reference's SimpleQueryParser `+` syntax but unused by its batch
-    * driver, SURVEY.md §2.6). Pruning is OR-only (the seed threshold is
-    * not a valid lower bound under intersection). `negTerms` are MUST_NOT
+    * driver, SURVEY.md §2.6). Pruning is OR-only. `negTerms` are MUST_NOT
     * (qid, analyzed-term) pairs: matching docs are removed BEFORE ranking
     * via a distributed anti-join of the score stream against the negated
     * terms' postings — never a driver-side doc set, so a stop-word-scale
@@ -1262,10 +1267,15 @@ final class Searcher(val index: BuiltIndex) {
       k, Scorer.byName(scorerName).name)
 
   /** The full scored candidate stream (qid, docid, score) BEFORE the top-k
-    * collector — the seam multi-field retrieval combines per-field scores
-    * on ([[MultiField]]); parameters as [[searchClauses]]. It reads as
-    * plan ([[ClausePlan]]) → partials → [[Searcher.combineRuns]] →
-    * post-filters.
+    * collector — the seam multi-field retrieval, rescore, function score
+    * and collapse build on ([[MultiField]]); parameters as
+    * [[searchClauses]]. It reads as plan ([[ClausePlan]]) → range tasks
+    * ([[RangeScorer]]: term cursors, plus the rows of the phrase,
+    * expansion and synonym producers) → post-filters. Its stage ends in the
+    * range tasks, so [[TopK]]'s per-partition heap runs in that stage. With
+    * `pruning`, a pruned query's stream holds only the rows that entered
+    * its range task's live top-k heap — a superset of its top k, each
+    * scored exactly.
     */
   private[graft] def scoredClauses(clauses: Seq[WeightedClause],
                     k: Int = 1000,
@@ -1292,64 +1302,57 @@ final class Searcher(val index: BuiltIndex) {
     if (plan.isEmpty) return spark.emptyDataset[(String, Long, Float)]
     val scorer = plan.scorer
 
-    // Block-max WAND (north-star extension, SURVEY.md §2.7): a seed pass
-    // scores each query's cheapest (lowest-df) clause exactly, giving a
-    // lower bound θ on the final kth score; the main pass then skips any
-    // (query, term, block) whose upper bound — block-max tf at block-min dl
-    // plus the other clauses' global maxima — cannot strictly beat θ.
-    // Sound because scores are monotone ↑tf ↓dl and pruning is strict (<).
-    val wandAccs = Option.when(plan.pruneQids.nonEmpty)(
-      (spark.sparkContext.longAccumulator("wand_blocks_decoded"),
-        spark.sparkContext.longAccumulator("wand_blocks_pruned")))
-    if (wandAccs.nonEmpty) pruningAccs = wandAccs
-    val theta = if (wandAccs.isEmpty) Map.empty[String, Float] else seedThresholds(plan, k)
-
-    // (qid, docid, slot, partial) of every clause kind: term and blended
-    // clauses share the plain-term decode (or the WAND main pass)
-    val partials = Seq(
-      Option.when(plan.terms.nonEmpty)(
-        if (theta.isEmpty) termPartials(plan.terms, scorer, plan.stats)
-        else wandPartials(plan, theta, wandAccs.get)),
-      Option.when(plan.phrases.nonEmpty)(positionalPartials(plan.phrases, scorer, plan.stats)),
-      Option.when(plan.expansions.nonEmpty)(expansionPartials(plan.expansions)),
-      Option.when(plan.synonyms.nonEmpty)(synonymPartials(plan))
-    ).flatten.reduceOption(_ union _).getOrElse(spark.emptyDataset[(String, Long, Int, Float)])
-
     // Resolve excluded docnos → docids (tiny point lookup on the doc table,
     // ≙ the reference's docno TermQuery lookups §2.3).
     val excluded: Map[String, Set[Long]] = {
       val ids = docidLookup(excludeDocnos.values.flatten.toSeq)
       excludeDocnos.map { case (qid, ds) => qid -> ds.flatMap(ids.get) }
     }
-    val tombL = tombstonesBc
-    val filtered = partials
-      .filter(t => Searcher.liveDoc(tombL, t._2) &&
-        excluded.get(t._1).forall(!_.contains(t._2)))
 
-    // Per-(query, doc) scoring on the shared sorted pass
-    // ([[Searcher.combineRuns]]). Flat mode sums each run clause by clause
-    // (≙ boolean scorer sum) with optional require-all / msm and top-level
-    // coord. Tree mode is the BooleanQuery-faithful recursive evaluation of
-    // the query's broadcast tree over the run's clause scores, and keeps
-    // the NaN (no-match) rows: the match-all complement below needs the
-    // full candidate set. When a complement WILL be taken, the evaluated
-    // stream is lazily local-checkpointed so its two consumers (score
-    // filter + candidate anti-join) share ONE computation — typed-operator
-    // plans defeat Catalyst's exchange reuse, so without this the whole
-    // postings decode would run twice.
+    // Block-max WAND (north-star extension, SURVEY.md §2.7) runs inside the
+    // range tasks against each pruned query's live top-k heap: a block is
+    // skipped only when its upper bound — block-max tf at block-min dl plus
+    // the query's other clauses' maxima — is strictly below the current
+    // kth score. Sound because scores are monotone ↑tf ↓dl.
+    val wand = Option.when(plan.pruneQids.nonEmpty)(RangeScorer.Wand(plan.pruneQids, k,
+      spark.sparkContext.longAccumulator("wand_blocks_decoded"),
+      spark.sparkContext.longAccumulator("wand_blocks_pruned")))
+    wand.foreach(w => pruningAccs = Some((w.decoded, w.skipped)))
+
+    // (qid, docid, slot, partial) rows of the non-term producers: one more
+    // docid-ordered cursor of the range tasks
+    val rows = Seq(
+      Option.when(plan.phrases.nonEmpty)(positionalPartials(plan.phrases, scorer, plan.stats)),
+      Option.when(plan.expansions.nonEmpty)(expansionPartials(plan.expansions)),
+      Option.when(plan.synonyms.nonEmpty)(synonymPartials(plan))
+    ).flatten.reduceOption(_ union _)
     val slots = plan.slots
+    def ranged(reducer: () => Searcher.RunReducer): Dataset[(String, Long, Float)] =
+      RangeScorer.score(index, plan.terms, rows, slots.map { case (q, ss) => q -> ss.length },
+        reducer, scorer, plan.stats, tombstonesBc, excluded, wand, plan.work, forcedRanges)
+
+    // Per-(query, doc) scoring in the range tasks. Flat mode sums each doc
+    // clause by clause (≙ boolean scorer sum) with optional require-all /
+    // msm and top-level coord. Tree mode is the BooleanQuery-faithful
+    // recursive evaluation of the query's broadcast tree over the doc's
+    // clause scores, and keeps the NaN (no-match) rows: the match-all
+    // complement below needs the full candidate set. When a complement
+    // WILL be taken, the evaluated stream is lazily local-checkpointed so
+    // its two consumers (score filter + candidate anti-join) share ONE
+    // computation — typed-operator plans defeat Catalyst's exchange reuse,
+    // so without this the whole postings decode would run twice.
     val evaluated: Dataset[(String, Long, Float)] =
       if (trees.isEmpty) spark.emptyDataset[(String, Long, Float)]
       else {
         val treeEval = plan.treeEval
-        val ev = Searcher.combineRuns(filtered, () => new Searcher.TreeRuns(treeEval, slots, scorer))
+        val ev = ranged(() => new Searcher.TreeRuns(treeEval, slots, scorer))
         if (plan.complementQids.isEmpty) ev else ev.localCheckpoint(eager = false)
       }
     val scores: Dataset[(String, Long, Float)] =
       if (trees.nonEmpty) evaluated.filter(t => !t._3.isNaN)
       else {
         val (maxOv, and, msm) = (plan.maxOverlap, plan.conjunctive, minShouldMatch)
-        Searcher.combineRuns(filtered, () => new Searcher.FlatRuns(slots, maxOv, and, msm, scorer))
+        ranged(() => new Searcher.FlatRuns(slots, maxOv, and, msm, scorer))
       }
 
     // Match-all complement (tree mode): a query whose tree matches a
@@ -1407,61 +1410,6 @@ final class Searcher(val index: BuiltIndex) {
           .agg(max(struct($"score", (-$"docid").as("negid"), $"docid")).as("w"))
           .select($"qid", $"w.docid".as("docid"), $"w.score".as("score"))
           .as[(String, Long, Float)]
-    }
-  }
-
-  /** Exhaustive plain-term partials (qid, docid, slot, partial): one
-    * bucket-pruned decode of `terms` ([[ClausePlan.termPlan]]) with
-    * tombstoned docs dropped, each posting scored once per weight group.
-    * Serves flat and tree searches (term and blended clauses), dismax and
-    * the WAND seed.
-    */
-  private def termPartials(terms: Map[String, ClausePlan.TermGroups],
-                           scorer: Scorer, stats: CollStats)
-      : Dataset[(String, Long, Int, Float)] = {
-    import spark.implicits._
-    val tombL = tombstonesBc
-    index.forTerms(index.postingsDecode, terms.keys).as[PostingRun].flatMap { run =>
-      val groups = terms(run.term)
-      val ps = PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
-      (if (tombL.isEmpty) ps else ps.filter(p => Searcher.liveDoc(tombL, p.docid)))
-        .flatMap(p => Searcher.scoreGroups(groups, p, scorer, stats))
-    }
-  }
-
-  /** The WAND main pass over `plan.terms`: per (run, block) and weight
-    * group, the clauses of a qid with a θ stay alive only while the block's
-    * upper bound can reach θ; a block with no live clause is skipped
-    * undecoded. `accs` counts decoded and skipped blocks.
-    */
-  private def wandPartials(plan: ClausePlan, theta: Map[String, Float],
-                           accs: (LongAccumulator, LongAccumulator))
-      : Dataset[(String, Long, Int, Float)] = {
-    import spark.implicits._
-    val (decodedAcc, prunedAcc) = accs
-    val (terms, scorer, stats) = (plan.terms, plan.scorer, plan.stats)
-    val posts = index.forTerms(index.postingsScoring, terms.keys).as[PostingRun]
-    val (boostSum, othersSum) = wandBounds(posts, plan)
-    posts.flatMap { run =>
-      val groups = terms(run.term)
-      (0 until run.block_last_docid.length).iterator.flatMap { bi =>
-        val alive = groups.map { case (w, cs) =>
-          val ub = scorer.score(run.block_max_tf(bi), run.block_min_dl(bi), w, stats)
-          (w, cs.filter { case (qid, _, _) =>
-            theta.get(qid).forall(th => ub * boostSum.getOrElse((qid, run.term), 0.0f) +
-              othersSum.getOrElse((qid, run.term), 0.0f) >= th)
-          })
-        }.filter(_._2.nonEmpty)
-        if (alive.isEmpty) { prunedAcc.add(1); Iterator.empty }
-        else {
-          decodedAcc.add(1)
-          PostingCodec.decodeBlock(bi, run.ndocs,
-              run.doc_blob, run.tf_blob, run.dl_blob,
-              run.block_last_docid, run.block_doc_off, run.block_tf_off,
-              run.block_dl_off)
-            .flatMap(p => Searcher.scoreGroups(alive, p, scorer, stats))
-        }
-      }
     }
   }
 
@@ -1613,9 +1561,8 @@ final class Searcher(val index: BuiltIndex) {
     */
   private[search] def collectTopK(scored: Dataset[(String, Long, Float)],
                                   k: Int, runtag: String): Dataset[RunLine] = {
-    import spark.implicits._
     val top = TopK.toDriver(scored, k)
-    if (top.isEmpty) return spark.emptyDataset[RunLine]
+    if (top.isEmpty) return spark.emptyDataset(Searcher.LineEnc)
     val docnoById = docnoLookup(top.flatMap(_._2.iterator.map(_._1)))
     val lines: Seq[RunLine] = top.flatMap { case (qid, hits) =>
       val seen = scala.collection.mutable.HashSet.empty[String]
@@ -1628,64 +1575,7 @@ final class Searcher(val index: BuiltIndex) {
         }
       }
     }
-    spark.createDataset(lines)
-  }
-
-  /** Seed pass for WAND: exact-score each pruned query's lowest-df clause
-    * only; the kth best partial score is a valid lower bound on the final
-    * kth total score (partials never exceed totals for non-negative
-    * boosts). Queries with fewer than k seed hits get no threshold (no
-    * pruning).
-    */
-  private def seedThresholds(plan: ClausePlan, k: Int): Map[String, Float] = {
-    import spark.implicits._
-    val dfs = plan.dfs
-    val seeds: Seq[WeightedClause] = plan.prunedClauses.groupBy(_.qid).flatMap { case (_, cs) =>
-      val inIdx = cs.filter(c => dfs.contains(c.term) && c.boost > 0)
-      if (inIdx.isEmpty) None else Some(inIdx.minBy(c => dfs(c.term)._1))
-    }.toSeq
-    if (seeds.isEmpty) return Map.empty
-    val terms = ClausePlan.termPlan(seeds.map(c =>
-      (c.term, plan.termWeight(c.term), (c.qid, c.qidx, c.boost * plan.qnByQid(c.qid)))))
-    // tombstoned docs must not seed θ (termPartials drops them): a deleted
-    // doc's score could push the lower bound past the true live kth score
-    // and over-prune live blocks
-    val partials = termPartials(terms, plan.scorer, plan.stats).map(t => (t._1, t._2, t._4))
-    TopK.toDriver(partials, k)
-      .collect { case (qid, hits) if hits.length >= k => qid -> hits.last._2 }
-      .toMap
-  }
-
-  /** Driver-side WAND bounds: per-term global block-max score UB (one tiny
-    * metadata-only job collecting each run's best block bound — one row
-    * per run — maxed on the driver), then per (query, term) the sum of this
-    * term's clause boosts and the other clauses' UB total.
-    */
-  private def wandBounds(posts: Dataset[PostingRun], plan: ClausePlan)
-      : (Map[(String, String), Float], Map[(String, String), Float]) = {
-    import spark.implicits._
-    val (scorer, stats, qn) = (plan.scorer, plan.stats, plan.qnByQid)
-    val weights: Map[String, Float] = plan.terms.keys.map(t => t -> plan.termWeight(t)).toMap
-    val termUB: Map[String, Float] = posts
-      .map { run =>
-        val idf = weights(run.term)
-        (run.term, run.block_max_tf.indices.foldLeft(0.0f) { (m, i) =>
-          val u = scorer.score(run.block_max_tf(i), run.block_min_dl(i), idf, stats)
-          if (u > m) u else m
-        })
-      }
-      .collect().groupBy(_._1).map { case (t, ms) => t -> ms.map(_._2).max }
-    val inIdx = plan.prunedClauses.filter(c => termUB.contains(c.term))
-    val boostSum: Map[(String, String), Float] = inIdx
-      .groupBy(c => (c.qid, c.term))
-      .map { case (key, cs) => key -> cs.map(c => c.boost * qn(c.qid)).sum }
-    val totalUB: Map[String, Float] = inIdx.groupBy(_.qid).map { case (qid, cs) =>
-      qid -> cs.map(c => termUB(c.term) * c.boost * qn(qid)).sum
-    }
-    val othersSum: Map[(String, String), Float] = boostSum.keys.map { case (qid, t) =>
-      (qid, t) -> (totalUB(qid) - termUB(t) * boostSum((qid, t)))
-    }.toMap
-    (boostSum, othersSum)
+    spark.createDataset(lines)(Searcher.LineEnc)
   }
 
   /** Distinct matching DOCNOS per query under OR semantics (≙ the
@@ -1848,6 +1738,10 @@ object Searcher {
     */
   val MaxDriverHits: Int = 1 << 20
 
+  // encoders of every search's tail, derived once (see RangeScorer.RunEnc)
+  private[search] val LineEnc: Encoder[RunLine] = Encoders.product[RunLine]
+  private val DocnoEnc: Encoder[(Long, String)] = Encoders.product[(Long, String)]
+
   /** True iff `docid` survives the broadcast tombstone overlay (None =
     * delete-free index). Static so executor closures capture only the
     * Option[Broadcast], never the Searcher.
@@ -1857,11 +1751,12 @@ object Searcher {
       docid: Long): Boolean =
     tomb.forall(b => java.util.Arrays.binarySearch(b.value, docid) < 0)
 
-  /** Folds one (qid, docid) run of [[combineRuns]]: `begin`, then `add`
-    * per partial in ascending slot order ([[ClausePlan]]); the run yields a
-    * row scored `score` iff `keep`. One instance serves a partition, so
-    * state lives in fields: the flat and dismax folds allocate nothing per
-    * run.
+  /** Folds one (qid, docid) of a range task ([[RangeScorer]]): `begin`,
+    * then `add` per partial in ascending slot order ([[ClausePlan]]); the
+    * doc yields a row scored `score` iff `keep`. One instance serves a
+    * task, so state lives in fields: the flat and dismax folds allocate
+    * nothing per doc. WAND folds a query's slot bounds through the same
+    * instance, so a bound sums in the Float order of a real score.
     */
   private[search] trait RunReducer {
     def begin(qid: String): Unit
@@ -1870,33 +1765,17 @@ object Searcher {
     def score: Float
   }
 
-  /** The engine's one per-(qid, docid) combiner: a docid-partitioned
-    * shuffle (by count, so AQE keeps it on every core) sorted by (qid,
-    * docid, slot), then a streaming pass folding each run through a
-    * per-partition `reducer` — nothing buffered per doc, the sort can
-    * spill, and the collector's heaps pipeline into the same stage.
+  /** `c IN values` over a non-negative long column as a set-valued
+    * predicate: the optimizer turns an IN list longer than
+    * `spark.sql.optimizer.inSetConversionThreshold` into `InSet`, which is
+    * pushed into the parquet scan like a literal list, but which generated
+    * code references instead of inlining one literal per value. A shorter
+    * list is padded with negative values the column never holds.
     */
-  private[search] def combineRuns(partials: Dataset[(String, Long, Int, Float)],
-                                  reducer: () => RunReducer): Dataset[(String, Long, Float)] = {
-    val spark = partials.sparkSession
-    import spark.implicits._
-    partials
-      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("_2"))
-      .sortWithinPartitions("_1", "_2", "_3")
-      .mapPartitions { rows =>
-        val in = rows.buffered
-        val r = reducer()
-        Iterator.continually(in).takeWhile(_.hasNext).map { _ =>
-          val qid = in.head._1
-          val docid = in.head._2
-          r.begin(qid)
-          while (in.hasNext && in.head._2 == docid && in.head._1 == qid) {
-            val row = in.next()
-            r.add(row._3, row._4)
-          }
-          if (r.keep) (qid, docid, r.score) else null
-        }.filter(_ != null)
-      }
+  def inSet(spark: SparkSession, c: String, values: Seq[Long]): Column = {
+    val vs = values.distinct
+    val min = spark.conf.get("spark.sql.optimizer.inSetConversionThreshold").toInt + 1
+    col(c).isInCollection(vs ++ (1 to min - vs.size).map(-_.toLong))
   }
 
   /** Flat OR / AND / msm: each clause's slots (`slots`: qid → slot →
@@ -1955,18 +1834,6 @@ object Searcher {
     }
     def score: Float = BoolQuery.eval(root, leaf, coord)
   }
-
-  /** One posting scored once per weight group of a
-    * [[ClausePlan.TermGroups]], as (qid, docid, slot, partial) rows; a
-    * boost of 1 leaves the similarity's score untouched.
-    */
-  private[search] def scoreGroups(groups: ClausePlan.TermGroups, p: DecodedPosting,
-                                  scorer: Scorer, stats: CollStats)
-      : Iterator[(String, Long, Int, Float)] =
-    groups.iterator.flatMap { case (w, cs) =>
-      val s = scorer.score(p.tf, p.dl, w, stats)
-      cs.iterator.map { case (qid, slot, boost) => (qid, p.docid, slot, if (boost == 1.0f) s else s * boost) }
-    }
 
   /** A clause of the positional co-group: phrase slots (term, offset) and
     * slop, or with `near = Some(ordered)` a span-near of the single-term

@@ -10,8 +10,12 @@ import org.apache.spark.sql.Dataset
   * It runs as a per-partition pass (primitive heaps, ≤ k rows out per key
   * per partition, so it pipelines into whatever stage produced the scores)
   * and merges the per-partition rows through the same heap, either on the
-  * driver ([[toDriver]]) or under a `groupByKey` ([[distributed]]) when the
-  * merged rows should stay on the cluster.
+  * driver ([[toDriver]], keys in ascending order) or under a `groupByKey`
+  * ([[distributed]]) when the merged rows should stay on the cluster. For
+  * a scored search the per-partition pass runs in the stage of the range
+  * tasks ([[RangeScorer]]) that score the (qid, docid) rows; a pruned
+  * qid's range task also keeps a live heap of its own, the θ its block
+  * skipping tests against.
   */
 private[graft] object TopK {
 
@@ -27,7 +31,8 @@ private[graft] object TopK {
     private var scores = new Array[Float](math.min(k, 16))
     private var n = 0
 
-    def offer(docid: Long, score: Float): Unit =
+    /** True iff the row is now held. */
+    def offer(docid: Long, score: Float): Boolean =
       if (n < k) {
         if (n == docs.length) {
           val cap = math.min(k, 2 * n)
@@ -43,7 +48,13 @@ private[graft] object TopK {
           i = p
         }
         docs(i) = docid; scores(i) = score
-      } else if (better(score, docid, scores(0), docs(0))) siftDown(docid, score)
+        true
+      } else if (better(score, docid, scores(0), docs(0))) { siftDown(docid, score); true }
+      else false
+
+    /** k rows held: [[worstScore]] is the kth best. */
+    def full: Boolean = n == k
+    def worstScore: Float = scores(0)
 
     // place (docid, score) at the root's slot and sink it below every
     // child that is worse than it
@@ -92,19 +103,25 @@ private[graft] object TopK {
     }
 
   /** Per-partition heaps pipelined into the stage that produced `scored`,
-    * then the driver merge: one job beyond the stages `scored` already
-    * needs. The collected rows are ≤ k × |keys| × partitions by
+    * then the driver merge, keys in ascending order: one job beyond the
+    * stages `scored` already needs. The collected rows are ≤ k × |keys| × partitions by
     * construction, and the merge asserts it.
     */
   def toDriver(scored: Dataset[(String, Long, Float)], k: Int)
       : Seq[(String, Array[(Long, Float)])] = {
-    val heaps = scored.rdd.mapPartitions(collect(k, _))
-    val rows = heaps.collect()
+    // one job, its function defined here: Spark cleans a job's closure by
+    // parsing the class that defines it, and this one is small (the
+    // Iterator-only runJob overloads wrap it in a SparkContext closure)
+    val rdd = scored.rdd
+    val parts = new Array[Array[(String, Long, Float)]](rdd.getNumPartitions)
+    rdd.sparkContext.runJob(rdd, (_: org.apache.spark.TaskContext, it: Iterator[(String, Long, Float)]) =>
+      collect(k, it).toArray, parts.indices, (i: Int, out: Array[(String, Long, Float)]) => parts(i) = out)
+    val rows = parts.flatten
     val keys = rows.iterator.map(_._1).distinct.size
-    require(rows.length.toLong <= k.toLong * keys * heaps.getNumPartitions,
+    require(rows.length.toLong <= k.toLong * keys * rdd.getNumPartitions,
       s"top-k collector emitted ${rows.length} rows, over its bound of " +
-        s"k=$k × $keys keys × ${heaps.getNumPartitions} partitions")
-    byKey(k, rows.iterator)
+        s"k=$k × $keys keys × ${rdd.getNumPartitions} partitions")
+    byKey(k, rows.iterator).sortBy(_._1)
   }
 
   /** Per-partition heaps merged through the same heap under a

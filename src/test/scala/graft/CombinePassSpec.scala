@@ -10,8 +10,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The plan shape and job counts of the query kinds that share the
-  * searcher's one sorted, docid-partitioned combine pass and its two
-  * partial producers: dismax, boolean-tree and fuzzy (blended) queries
+  * searcher's range tasks and its partial producers: dismax, boolean-tree
+  * and fuzzy (blended) queries
   * combine without a typed `groupByKey`, and span-near runs through the
   * positional co-group alone. A fuzzy clause's expansions fold into one
   * clause score in expansion-rank order, bit for bit.
@@ -176,8 +176,7 @@ class CombinePassSpec extends AnyFunSuite {
     var tree = Array.empty[graft.search.RunLine]
     val treeJobs = TestSpark.jobsOf { tree = searcher.searchQuery(topics, 10).collect() }
     assert(tree.nonEmpty)
-    // the combine shuffle's map stage, the combine + collector stage and
-    // the docno lookup
-    assert(treeJobs == 3, s"searchQuery jobs=$treeJobs")
+    // one range task with the collector in its stage, and the docno lookup
+    assert(treeJobs == 2, s"searchQuery jobs=$treeJobs")
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The search collector ([[TopK]]) and the flat-mode pipeline it closes:
-  * docid-partitioned sorted combine → per-partition heap → driver merge.
+  * range tasks → per-partition heap → driver merge.
   *
   *   - collector units: (score desc, docid asc) across partitions, k past
   *     the match count, empty partitions, keys without rows;
@@ -197,16 +197,31 @@ class TopKCollectorSpec extends AnyFunSuite {
 
   // ---- job-count pins --------------------------------------------------
 
-  test("job count: memo-warm single-topic OR search at k=10 runs 3 jobs") {
+  test("job count: memo-warm single-topic OR search at k=10 runs 2 jobs") {
     val s = new Searcher(fullIdx)
     val topic = Seq(Topic("w", "v3 v8"))
     s.search(topic, k = 10).collect() // warms the term-stats memo
     var lines = Array.empty[RunLine]
     val jobs = TestSpark.jobsOf { lines = s.search(topic, k = 10).collect() }
     assert(lines.length == 10)
-    // scoring: the docid-partitioned shuffle's map stage + the combine/heap
-    // result stage; then one docno point lookup
-    assert(jobs == 3, s"jobs=$jobs")
+    // scoring: one range task with no exchange, the heap in its stage;
+    // then one docno point lookup
+    assert(jobs == 2, s"jobs=$jobs")
+  }
+
+  test("codegen: fresh single-topic searches compile no class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val s = new Searcher(fullIdx)
+    // the warm-up compiles the plan shapes of a two-term search (a term
+    // list compiles once per length: its strings are referenced, not
+    // inlined); fresh terms and docids must not compile again
+    s.search(Seq(Topic("c0", "v3 v8")), k = 10).collect()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val a = s.search(Seq(Topic("c1", "v1 v26")), k = 10).collect()
+    val b = s.search(Seq(Topic("c2", "v12 v20")), k = 10).collect()
+    assert(a.nonEmpty && b.nonEmpty && a.map(_.docno).toSet != b.map(_.docno).toSet)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled == 0, s"$compiled classes compiled by two fresh searches")
   }
 
   test("job count: a batch past 4,096 hits takes the one-job broadcast docno lookup") {
@@ -217,6 +232,7 @@ class TopKCollectorSpec extends AnyFunSuite {
     var lines = Array.empty[RunLine]
     val jobs = TestSpark.jobsOf { lines = s.search(batch, k = 1000).collect() }
     assert(lines.map(_.docno).distinct.length > 4096)
-    assert(jobs == 3, s"jobs=$jobs")
+    // one scoring job (5,000 postings: one range, no exchange), one lookup
+    assert(jobs == 2, s"jobs=$jobs")
   }
 }

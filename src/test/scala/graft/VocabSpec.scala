@@ -37,6 +37,26 @@ class VocabSpec extends AnyFunSuite {
     assert(lens.nonEmpty) // directory-partitioned by term length
   }
 
+  test("vocab files hold their terms in ascending order") {
+    import spark.implicits._
+    // 400 seeded six-letter words: many terms per len= partition
+    val rnd = new scala.util.Random(17)
+    val words = Seq.fill(400)(Seq.fill(6)(('a' + rnd.nextInt(26)).toChar).mkString)
+    val corpus = words.grouped(8).zipWithIndex
+      .map { case (ws, i) => f"vs-$i%03d" -> ws.mkString(" ") }.toSeq
+    val dir = IndexBuilder.build(corpus.toDF("docno", "content"), TestSpark.tmpDir("vocabsort"),
+      IndexConfig(analyzer = AnalyzerConfig())).dir
+    val root = new org.apache.hadoop.fs.Path(s"$dir/${IndexLayout.VocabDir}")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = fs.listStatus(root).filter(_.getPath.getName.startsWith("len="))
+      .flatMap(d => fs.listStatus(d.getPath)).map(_.getPath.toString)
+      .filter(_.endsWith(".parquet")).toSeq
+    val perFile = files.map(f => f -> spark.read.parquet(f).select("term").as[String].collect().toSeq)
+    assert(perFile.map(_._2.size).sum == words.distinct.size)
+    assert(perFile.exists(_._2.size > 100), "the fixture needs a large len= file")
+    perFile.foreach { case (f, terms) => assert(terms == terms.sorted, s"unsorted terms in $f") }
+  }
+
   test("prefix expansion pushes StringStartsWith + a len partition bound") {
     val plan = searcher.prefixScan("al").queryExecution.executedPlan.toString()
     assert(plan.contains("StringStartsWith(term,al)"),

@@ -63,6 +63,23 @@ class WandSpec extends AnyFunSuite {
     assert(prunedN > 0, s"expected pruned blocks, got decoded=$decoded pruned=$prunedN")
   }
 
+  test("job count: a memo-warm pruned single-topic search runs 2 jobs, and prunes") {
+    import spark.implicits._
+    val idx = IndexBuilder.build(wandCorpus.toDF("docno", "content"), TestSpark.tmpDir("wandj"),
+      IndexConfig(analyzer = AnalyzerConfig(), groupShift = 4, mergeShift = 1,
+        rangePartitions = 2))
+    val s = new Searcher(idx)
+    val topic = Seq(Topic("q1", "needle hot"))
+    val exhaustive = s.search(topic, 3).collect().toSeq // warms the term-stats memo
+    var lines = Array.empty[RunLine]
+    val jobs = TestSpark.jobsOf { lines = s.search(topic, 3, pruning = true).collect() }
+    assert(lines.toSeq == exhaustive)
+    // one range task (no seed job, no bounds job) and the docno lookup
+    assert(jobs == 2, s"jobs=$jobs")
+    val (decoded, prunedN) = s.lastPruning
+    assert(prunedN > 0, s"expected pruned blocks, got decoded=$decoded pruned=$prunedN")
+  }
+
   test("tree-mode pruning: SHOULD-only trees rank-identical with real skips") {
     import spark.implicits._
     val dir = TestSpark.tmpDir("wandt")
@@ -79,9 +96,9 @@ class WandSpec extends AnyFunSuite {
       val pruned = s.searchQuery(topics, k, pruning = true).collect().toSeq
       assert(pruned == exhaustive, s"k=$k")
     }
-    // and blocks actually skip for the selective small-k tree query (t1's
-    // w1 leaf has df < k, so ITS seed pass yields no threshold — by
-    // design; t2's needle seed clears k and prunes hot blocks)
+    // and blocks actually skip for the selective small-k tree query: once
+    // t2's heap holds k needle docs, later blocks that cannot reach its
+    // kth score are skipped
     s.searchQuery(Seq(Topic("t2", "(needle | hot)")), 3,
       pruning = true).count()
     val (decoded, prunedN) = s.lastPruning
