@@ -2,7 +2,7 @@ package graft.index
 
 import graft.analysis.AnalyzerConfig
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
@@ -45,16 +45,21 @@ class BuiltIndex(val spark: SparkSession, val dir: String, val cfg: IndexConfig)
 
   /** The rows of a term-keyed table — any postings view or [[termStats]] —
     * for `terms`: the `bucket = hash(term) % buckets` partition filter
-    * prunes parquet directories and the term `IN` is pushed into the scan.
-    * With [[bucketsOf]], the read side's only user of
-    * [[IndexLayout.bucketOf]]. An empty term
-    * set is an empty relation: no scan runs.
+    * prunes parquet directories and the term set is pushed into the scan;
+    * both are [[BuiltIndex.inSet]] predicates, so no term list compiles a
+    * class. With [[bucketsOf]], the read side's only user of
+    * [[IndexLayout.bucketOf]]. An empty term set is an empty relation: no
+    * scan runs.
     */
   def forTerms(table: DataFrame, terms: Iterable[String]): DataFrame = {
     val ts = terms.toSeq.distinct
+    // a term pad holds two spaces in a row, which no analyzed term does
+    // (tokenizers split on whitespace, a shingle joins its terms with one
+    // space); it sorts right after the smallest term, so the min/max range
+    // parquet reads a long IN as stays the terms' own
     if (ts.isEmpty) table.where(lit(false))
-    else table.where(col("bucket").isin(ts.map(bucketOf(_, cfg.buckets)).distinct: _*) &&
-      col("term").isin(ts: _*))
+    else table.where(BuiltIndex.inSet(spark, "bucket", ts.map(bucketOf(_, cfg.buckets)), -_) &&
+      BuiltIndex.inSet(spark, "term", ts, ts.min + "  " + _))
   }
 
   /** Bucket partitions a [[forTerms]] read of `terms` touches. */
@@ -194,6 +199,19 @@ object BuiltIndex {
 
   private def statsMemo(key: String): TrieMap[String, Option[(Long, Long)]] =
     statsMemos.getOrElseUpdate(key, TrieMap.empty)
+
+  /** `c IN values` as a set-valued predicate: the optimizer turns an IN
+    * list longer than `spark.sql.optimizer.inSetConversionThreshold` into
+    * `InSet`, which is pushed into the parquet scan like a literal list, but
+    * which generated code references instead of inlining one literal per
+    * value. A shorter list is padded with `pad(1)`, `pad(2)`, …: values
+    * the column never holds.
+    */
+  def inSet[T](spark: SparkSession, c: String, values: Seq[T], pad: Int => T): Column = {
+    val vs = values.distinct
+    val min = spark.conf.get("spark.sql.optimizer.inSetConversionThreshold").toInt + 1
+    col(c).isInCollection(vs ++ (1 to min - vs.size).map(pad))
+  }
 
   /** grp partition values under one docs directory, sorted ascending. */
   private[graft] def listGrps(spark: SparkSession, docsDir: String): Seq[Long] = {

@@ -156,7 +156,8 @@ object Knn {
 
   /** JVM sign-LSH bucket, identical to the old expression: per plane the
     * projection is the left-to-right fold Σ v_i·comp(p, i); bit p is set
-    * iff proj ≥ 0. Empty-embedding parity note: the old
+    * iff proj ≥ 0 in Spark's order, where NaN is above every number.
+    * Empty-embedding parity note: the old
     * `zip_with(embedding, sequence(0, size-1), …)` null-padded the empty
     * side (sequence(0, -1) = [0, -1]), nulling every plane's fold, so
     * `when(null >= 0)` set NO bits — an empty embedding's bucket is 0,
@@ -174,7 +175,7 @@ object Knn {
       var proj = 0.0
       var i = 0
       while (i < v.length) { proj += v(i) * comps(i); i += 1 }
-      if (proj >= 0) b |= 1L << p
+      if (java.lang.Double.compare(proj, 0.0) >= 0) b |= 1L << p
       p += 1
     }
     b
@@ -242,12 +243,10 @@ object Knn {
   def ivfCellExpr(embedding: Column, centroids: Seq[(Long, Seq[Float])]): Column = {
     // r6: compiled argmax kernel behind a UDF — the original typedLit +
     // nested-aggregate fold was a CodegenFallback expression interpreted
-    // per row per centroid per element. Same semantics on finite scores:
-    // ascending-cid scan, score = (left-to-right dot fold) × precomputed
-    // 1/|c|, strict > (so the lowest cid wins exact ties). A NaN score
-    // never replaces the incumbent here because JVM `NaN > x` is false;
-    // Spark SQL orders NaN above every number, so on NaN input this
-    // kernel and a SQL argmax disagree.
+    // per row per centroid per element. Same semantics: ascending-cid
+    // scan, score = (left-to-right dot fold) × precomputed 1/|c|, strictly
+    // greater in Spark's order, where NaN sits above every number (so the
+    // lowest cid wins exact ties, and the first NaN score wins outright).
     val sorted = centroids.sortBy(_._1)
     val cids = sorted.map(_._1).toArray
     val cvs = sorted.map(_._2.toArray).toArray
@@ -272,7 +271,7 @@ object Knn {
             var i = 0
             while (i < v.length) { dot += v(i) * cv(i).toDouble; i += 1 }
             val score = dot * invs(c)
-            if (score > bestScore) { bestScore = score; bestCid = cids(c) }
+            if (java.lang.Double.compare(score, bestScore) > 0) { bestScore = score; bestCid = cids(c) }
           }
           c += 1
         }
@@ -368,7 +367,7 @@ object Knn {
               var j = 0
               while (j < v.length) { dot += v(j).toDouble * cv(j).toDouble; j += 1 }
               val score = dot * inv(c)
-              if (score > bestScore) { bestScore = score; best = c }
+              if (java.lang.Double.compare(score, bestScore) > 0) { bestScore = score; best = c }
               c += 1
             }
             if (sums(best) == null) sums(best) = new Array[Long](v.length)

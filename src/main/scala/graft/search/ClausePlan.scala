@@ -4,11 +4,11 @@ package graft.search
   * of [[Searcher]] settle before a posting is read. It checks the
   * arguments, looks up the clause terms' (df, cf) once, and derives the
   * per-clause weights, the per-query queryNorm and maxOverlap, the AND-mode
-  * dead qids and live clauses, the qids WAND may prune, and the per-term
-  * plan the shared partial producer decodes against. It holds no Spark
-  * state, so a spec builds it from a term-stats map without a session.
+  * dead qids and live clauses, the qids WAND may prune, and the clauses
+  * the range tasks build cursors for. It holds no Spark state, so a spec
+  * builds it from a term-stats map without a session.
   *
-  * Slots. A partial row carries a per-qid slot, not a clause index. The
+  * Slots. A cursor's partial carries a per-qid slot, not a clause index. The
   * plan numbers each qid's live clause entries in (qidx, expansion rank)
   * order: one slot per term, phrase, expansion or synonym clause, and one
   * per live expanded term of a blended (fuzzy) clause. The range tasks
@@ -203,24 +203,24 @@ private[graft] final class ClausePlan(
         }
       })
 
-  /** Phrase clauses for the positional co-group, weighted and boosted. */
-  val phrases: Seq[Searcher.PositionalClause] = livePhrases.map(pc =>
-    Searcher.PositionalClause(pc.qid, slot(pc.qid, pc.qidx), pc.terms, pc.slop, None,
+  /** Phrase clauses, weighted and boosted. */
+  val phrases: Seq[PositionalClause] = livePhrases.map(pc =>
+    PositionalClause(pc.qid, slot(pc.qid, pc.qidx), pc.terms, Proximity.Phrase(pc.slop),
       phraseWeights((pc.qid, pc.qidx)), pc.boost * qnByQid(pc.qid)))
 
-  /** Constant-score expansions: term → (qid, slot, boost × queryNorm). */
-  val expansions: Map[String, Array[(String, Int, Float)]] = liveExpansions
-    .flatMap(e => e.terms.map(t => (t, (e.qid, slot(e.qid, e.qidx), e.boost * qnByQid(e.qid)))))
-    .groupMap(_._1)(_._2).map { case (t, xs) => t -> xs.toArray }
+  /** Constant-score expansions, boosted by boost × queryNorm. */
+  val expansions: Seq[UnionClause] = liveExpansions.map(e =>
+    UnionClause(e.qid, slot(e.qid, e.qidx), e.terms, synonym = false, 0.0f, e.boost * qnByQid(e.qid)))
 
-  /** Synonym groups: member term → (qid, slot) … */
-  val synonyms: Map[String, Array[(String, Int)]] = liveSynonyms
-    .flatMap(sc => sc.terms.map(t => (t, (sc.qid, slot(sc.qid, sc.qidx)))))
-    .groupMap(_._1)(_._2).map { case (t, xs) => t -> xs.toArray }
-  /** … and (qid, slot) → (group weight, boost × queryNorm). */
-  val synonymScoring: Map[(String, Int), (Float, Float)] = liveSynonyms.map(sc =>
-    (sc.qid, slot(sc.qid, sc.qidx)) ->
-      (synWeights((sc.qid, sc.qidx)), sc.boost * qnByQid(sc.qid))).toMap
+  /** Synonym groups of their indexed members, at the group weight and
+    * boosted by boost × queryNorm.
+    */
+  val synonyms: Seq[UnionClause] = liveSynonyms.map(sc =>
+    UnionClause(sc.qid, slot(sc.qid, sc.qidx), sc.terms, synonym = true,
+      synWeights((sc.qid, sc.qidx)), sc.boost * qnByQid(sc.qid)))
+
+  /** Every clause the range tasks build cursors for. */
+  def cursors: RangeClauses = RangeClauses(terms, phrases, expansions ++ synonyms)
 
   /** Each tree with its queryNorm folded into the match-all constants. */
   val treeEval: Map[String, BoolQuery.EvalNode] = trees.map { case (qid, ts) =>

@@ -12,18 +12,53 @@ import org.apache.spark.util.LongAccumulator
   * first block (−1: its first delta is absolute). A slice read from the
   * metadata-free postings view ([[BuiltIndex.postingsDecode]]) is a whole
   * run with empty block arrays; it decodes sequentially and never skips.
+  * `pos` / `posOff` are the positions and their block offsets, empty
+  * unless a positional clause reads the term.
   */
 final case class RunSlice(term: String, base: Long, ndocs: Int,
-    doc: Array[Byte], tf: Array[Byte], dl: Array[Byte],
+    doc: Array[Byte], tf: Array[Byte], dl: Array[Byte], pos: Array[Byte],
     lastDocid: Array[Long], maxTf: Array[Int], minDl: Array[Int],
-    docOff: Array[Int], tfOff: Array[Int], dlOff: Array[Int])
+    docOff: Array[Int], tfOff: Array[Int], dlOff: Array[Int], posOff: Array[Int])
 
-/** One input of a range task: a run slice, or a batch of a non-term
-  * producer's (qid, docid, slot, partial) rows, of docid range `range`;
-  * `key` is the range's hash-partition salt.
+/** One input of a range task: a run slice of docid range `range`, read
+  * from field `field` (0 but for BM25F's further field indexes); `key` is
+  * the range's hash-partition salt.
   */
-final case class RangeInput(key: Int, range: Int, slice: Option[RunSlice],
-                            rows: Option[Array[(String, Long, Int, Float)]])
+final case class RangeInput(key: Int, range: Int, field: Int, slice: RunSlice)
+
+/** A positional clause of qid `qid`'s slot `slot`: the (term, offset)
+  * slots of a phrase, a span-near or a span-first, whose in-doc positions
+  * `shape` turns into a freq, scored at `weight` times `boost`.
+  */
+private[graft] final case class PositionalClause(qid: String, slot: Int,
+    terms: Seq[(String, Int)], shape: Proximity, weight: Float, boost: Float)
+
+/** A clause over the union of `terms`' postings, for qid `qid`'s slot
+  * `slot`: a synonym group (`synonym`) sums its members' raw tf and scores
+  * it once at `weight` (≙ SynonymScorer: one freq, one similarity call),
+  * times `boost`; a constant-score expansion adds `boost` once per doc.
+  */
+private[graft] final case class UnionClause(qid: String, slot: Int, terms: Seq[String],
+                                            synonym: Boolean, weight: Float, boost: Float)
+
+/** BM25F's clauses: per query term, its idf over the document-level df,
+  * its slot (the term's rank in ascending term order) and each query's
+  * (qid, occurrence count); per field, (w_f, b_f, avglen_f).
+  */
+private[search] final case class FieldClauses(k1: Double, fields: Array[(Double, Double, Double)],
+    terms: Map[String, (Double, Int, Array[(String, Int)])])
+
+/** The clauses of one batch the range tasks build cursors for: term
+  * weight groups, positional clauses, union clauses and BM25F terms.
+  */
+private[search] final case class RangeClauses(terms: Map[String, ClausePlan.TermGroups],
+    positional: Seq[PositionalClause] = Nil, unions: Seq[UnionClause] = Nil,
+    fields: Option[FieldClauses] = None) {
+  /** The terms read from field 0, and those a positional clause reads. */
+  def fieldTerms: Set[String] = terms.keySet ++ positionalTerms ++ unions.flatMap(_.terms) ++
+    fields.toSeq.flatMap(_.terms.keys)
+  def positionalTerms: Set[String] = positional.flatMap(_.terms.map(_._1)).toSet
+}
 
 /** `p` docid ranges: each docid group's (`docid >> 40`) dense local ids
   * [0, span) split into `p` equal parts, ids past `span` in the last part.
@@ -47,9 +82,10 @@ private[search] object DocRanges {
   * merges its clause cursors document-at-a-time: it decodes one block at a
   * time into reusable primitive arrays, gathers every qid's partials of a
   * docid, and folds them in slot order through a [[Searcher.RunReducer]] —
-  * the Float order of a per-clause reduction. Rows of the non-term
-  * producers (positional co-group, expansions, synonyms, BM25F fields)
-  * enter as one more docid-ordered cursor.
+  * the Float order of a per-clause reduction. Every clause kind is a
+  * cursor over [[PostingReader]]s: a term, a union (synonym, expansion), a
+  * leapfrog conjunction that decodes positions only where every slot
+  * matches (phrase, span-near, span-first) and BM25F's per-field union.
   *
   * Block-max WAND runs inside the task against a live per-qid heap of the
   * task's k best: a block is skipped only when, for every qid reading it,
@@ -57,15 +93,14 @@ private[search] object DocRanges {
   * blocks — folded through the same reducer, so in the same Float order as
   * a real score — is strictly below that qid's current kth score. A pruned
   * qid's rows leave the task only if they entered its heap, so every row
-  * out carries an exact score.
+  * out carries an exact score. Only term-only qids prune
+  * ([[ClausePlan.pruneQids]]).
   */
 private[search] object RangeScorer extends Serializable {
   /** Σdf postings per range: the P the driver plans. */
   val PostingsPerRange: Long = 1L << 15
   /** Most bucket partitions a single P = 1 task reads without an exchange. */
   val FewBuckets = 8
-  /** Rows per batch of a non-term producer. */
-  private val BatchRows = 4096
 
   // derived once: a product encoder costs milliseconds of Scala
   // reflection on the driver, once per search if derived per call
@@ -95,17 +130,18 @@ private[search] object RangeScorer extends Serializable {
   }
 
   /** Whole blocks of `run` per range they overlap, one slice per maximal
-    * span of overlapping blocks (the whole run when P = 1). A run may cross
-    * a docid group (`docid >> 40`), where ranges restart, so a range's
-    * blocks need not be contiguous; a block that crosses a group is sent
-    * to every range.
+    * span of overlapping blocks (the whole run when P = 1), with positions
+    * iff `withPos`. A run may cross a docid group (`docid >> 40`), where
+    * ranges restart, so a range's blocks need not be contiguous; a block
+    * that crosses a group is sent to every range.
     */
-  def cut(run: PostingRun, ranges: DocRanges): Iterator[(Int, RunSlice)] = {
+  def cut(run: PostingRun, ranges: DocRanges, withPos: Boolean): Iterator[(Int, RunSlice)] = {
     val nb = run.block_last_docid.length
     if (ranges.p == 1 || nb == 0)
       return Iterator.single((0, RunSlice(run.term, -1L, run.ndocs, run.doc_blob, run.tf_blob,
-        run.dl_blob, run.block_last_docid, run.block_max_tf, run.block_min_dl,
-        run.block_doc_off, run.block_tf_off, run.block_dl_off)))
+        run.dl_blob, if (withPos) run.pos_blob else Array.emptyByteArray,
+        run.block_last_docid, run.block_max_tf, run.block_min_dl, run.block_doc_off,
+        run.block_tf_off, run.block_dl_off, if (withPos) run.block_pos_off else Array.emptyIntArray)))
     // block b holds docids in [lo, hi]: ranges (of(lo) to of(hi)) within one group
     val (rlo, rhi) = (0 until nb).map { b =>
       val lo = if (b == 0) run.first_docid else run.block_last_docid(b - 1) + 1
@@ -118,13 +154,13 @@ private[search] object RangeScorer extends Serializable {
         val b0 = (from until nb).find(in).getOrElse(nb)
         Option.when(b0 < nb) {
           val b1 = (b0 until nb).find(!in(_)).getOrElse(nb)
-          ((r, slice(run, b0, b1)), b1)
+          ((r, slice(run, b0, b1, withPos)), b1)
         }
       }
     }
   }
 
-  private def slice(run: PostingRun, b0: Int, b1: Int): RunSlice = {
+  private def slice(run: PostingRun, b0: Int, b1: Int, withPos: Boolean): RunSlice = {
     val nb = run.block_last_docid.length
     def part(blob: Array[Byte], off: Array[Int]): (Array[Byte], Array[Int]) = {
       val end = if (b1 < nb) off(b1) else blob.length
@@ -134,53 +170,52 @@ private[search] object RangeScorer extends Serializable {
     val (doc, docOff) = part(run.doc_blob, run.block_doc_off)
     val (tf, tfOff) = part(run.tf_blob, run.block_tf_off)
     val (dl, dlOff) = part(run.dl_blob, run.block_dl_off)
+    val (pos, posOff) =
+      if (withPos) part(run.pos_blob, run.block_pos_off) else (Array.emptyByteArray, Array.emptyIntArray)
     RunSlice(run.term, if (b0 == 0) -1L else run.block_last_docid(b0 - 1),
       math.min(b1 * PostingCodec.BlockSize, run.ndocs) - b0 * PostingCodec.BlockSize,
-      doc, tf, dl, run.block_last_docid.slice(b0, b1), run.block_max_tf.slice(b0, b1),
-      run.block_min_dl.slice(b0, b1), docOff, tfOff, dlOff)
+      doc, tf, dl, pos, run.block_last_docid.slice(b0, b1), run.block_max_tf.slice(b0, b1),
+      run.block_min_dl.slice(b0, b1), docOff, tfOff, dlOff, posOff)
   }
 
-  /** Scored (qid, docid, score) rows of the range tasks over `terms`' runs
-    * and the non-term `rows`. `nSlots` holds every qid's slot count;
-    * `reducer` folds one (qid, docid)'s slots; tombstoned docs and each
-    * qid's `excluded` docids score nothing.
+  /** Scored (qid, docid, score) rows of the range tasks over `clauses`.
+    * `nSlots` holds every qid's slot count; `reducer` folds one (qid,
+    * docid)'s slots; tombstoned docs and each qid's `excluded` docids score
+    * nothing. BM25F's field f > 0 reads `fields(f - 1)`.
     */
-  def score(index: BuiltIndex, terms: Map[String, ClausePlan.TermGroups],
-            rows: Option[Dataset[(String, Long, Int, Float)]],
+  def score(index: BuiltIndex, clauses: RangeClauses,
             nSlots: Map[String, Int], reducer: () => Searcher.RunReducer,
             scorer: Scorer, stats: CollStats,
             tombs: Option[Broadcast[Array[Long]]], excluded: Map[String, Set[Long]],
-            wand: Option[Wand], work: Long, forced: Int): Dataset[(String, Long, Float)] = {
-    val spark = index.spark
+            wand: Option[Wand], work: Long, forced: Int,
+            fields: Seq[BuiltIndex] = Nil): Dataset[(String, Long, Float)] = {
     val ranges = plan(index, work, forced)
-    val exchange = ranges.p > 1 || index.bucketsOf(terms.keys) > FewBuckets
+    val posTerms = clauses.positionalTerms
+    val reads = (index, clauses.fieldTerms) +:
+      fields.map(_ -> clauses.fields.fold(Set.empty[String])(_.terms.keySet))
+    val exchange = ranges.p > 1 || reads.map { case (ix, ts) => ix.bucketsOf(ts) }.sum > FewBuckets
     val salts = if (exchange) IndexBuilder.saltsFor(ranges.p) else Array(0)
-    val view = if (wand.nonEmpty || ranges.p > 1) index.postingsScoring else index.postingsDecode
-    val runs = Option.when(terms.nonEmpty)(index.forTerms(view, terms.keys).as(RunEnc))
-    def inputs(run: PostingRun): Iterator[RangeInput] =
-      cut(run, ranges).map { case (r, s) => RangeInput(salts(r), r, Some(s), None) }
+    def view(ix: BuiltIndex) = if (posTerms.nonEmpty) ix.postings
+      else if (wand.nonEmpty || ranges.p > 1) ix.postingsScoring else ix.postingsDecode
+    val runs = reads.zipWithIndex.collect { case ((ix, ts), f) if ts.nonEmpty =>
+      (f, ix.forTerms(view(ix), ts).as(RunEnc))
+    }
+    def inputs(run: PostingRun, f: Int): Iterator[RangeInput] =
+      cut(run, ranges, f == 0 && posTerms(run.term)).map { case (r, s) => RangeInput(salts(r), r, f, s) }
     def task(in: Iterator[RangeInput]): Iterator[(String, Long, Float)] =
-      new RangeTask(terms, nSlots, reducer(), scorer, stats,
+      new RangeTask(clauses, nSlots, reducer(), scorer, stats,
         tombs.map(_.value).orNull, excluded, wand.orNull, ranges).run(in)
-    (runs, rows) match {
-      case (None, None) => spark.emptyDataset(ScoredEnc)
+    runs match {
+      case Seq() => index.spark.emptyDataset(ScoredEnc)
       // the common small search: one task over the runs, no exchange
-      case (Some(rs), None) if !exchange =>
-        rs.coalesce(1).mapPartitions(it => task(it.flatMap(inputs)))(ScoredEnc)
+      case Seq((0, rs)) if !exchange =>
+        rs.coalesce(1).mapPartitions(it => task(it.flatMap(inputs(_, 0))))(ScoredEnc)
       case _ =>
-        val in = (runs.map(_.flatMap(inputs)(InputEnc)) ++
-          rows.map(_.mapPartitions(it => batch(it, ranges, salts))(InputEnc))).reduce(_ union _)
+        val in = runs.map { case (f, rs) => rs.flatMap(inputs(_, f))(InputEnc) }.reduce(_ union _)
         (if (exchange) in.repartition(ranges.p, col("key")) else in.coalesce(1))
           .mapPartitions(task)(ScoredEnc)
     }
   }
-
-  /** One producer partition's rows as per-range batches. */
-  private def batch(it: Iterator[(String, Long, Int, Float)], ranges: DocRanges,
-                    salts: Array[Int]): Iterator[RangeInput] =
-    it.grouped(BatchRows).flatMap(_.groupBy(row => ranges.of(row._2)).iterator.map {
-      case (r, rows) => RangeInput(salts(r), r, None, Some(rows.toArray))
-    })
 }
 
 /** A docid-ordered cursor of one range task. `doc` is Long.MaxValue once
@@ -190,19 +225,25 @@ private abstract class Cursor {
   var doc: Long = Long.MaxValue
   def contribute(): Unit
   def advance(): Unit
+  /** Advances to the first doc at or past `t`. */
+  def advanceTo(t: Long): Unit = while (doc < t) advance()
 }
 
 /** One term's slices of one docid range, in docid order: decodes a block
   * at a time into reusable arrays, dropping tombstoned docids and the
-  * docids outside `range`; asks the task before decoding a block.
-  * `weights(g)` / `qis(g)` / `slots(g)` / `boosts(g)` are weight group g.
+  * docids outside `range`. [[advanceTo]] passes over the blocks that end
+  * before its target undecoded; [[positions]] decodes the current
+  * posting's positions on demand, skipping those of the postings passed
+  * over. Starts before its first posting; a bare reader contributes
+  * nothing, the clause cursors over it do.
   */
-private final class TermCursor(val range: Int, val slices: Array[RunSlice],
-    val weights: Array[Float], val qis: Array[Array[Int]], val slots: Array[Array[Int]],
-    val boosts: Array[Array[Float]], task: RangeTask) extends Cursor {
+private class PostingReader(val range: Int, val slices: Array[RunSlice], task: RangeTask)
+    extends Cursor {
+  doc = -1L
   private val docs = new Array[Long](PostingCodec.BlockSize)
   private val tfs = new Array[Int](PostingCodec.BlockSize)
   private val dls = new Array[Int](PostingCodec.BlockSize)
+  private val posAt = new Array[Int](PostingCodec.BlockSize) // positions in the block before it
   private var n = 0 // postings kept from the current block
   private var i = 0 // position in it
   private var si = -1 // slice
@@ -210,38 +251,43 @@ private final class TermCursor(val range: Int, val slices: Array[RunSlice],
   private var nb = 0 // blocks in the slice
   private var prev = -1L // docid before the next block (−1: absolute)
   private var seek = false // readers must seek to the next block's offsets
+  private var target = -1L // no block ending before it is decoded
   private var dr: VarByte.Reader = _
   private var tr: VarByte.Reader = _
   private var lr: VarByte.Reader = _
-
-  /** Per weight group, the largest block bound over every slice (WAND). */
-  lazy val groupMax: Array[Float] = weights.map(w => slices.iterator
-    .flatMap(s => s.maxTf.indices.iterator.map(task.bound(s, _, w))).foldLeft(0.0f)(math.max))
+  private var pr: VarByte.Reader = _ // null: the slice carries no positions
+  private var pRead = 0 // positions of the block read so far
 
   def slice: RunSlice = slices(si)
   /** The block [[nextBlock]] is deciding on. */
   def block: Int = bi
+  def tf: Int = tfs(i)
+  def dl: Int = dls(i)
 
-  def contribute(): Unit = {
-    val tf = tfs(i).toFloat
-    var g = 0
-    while (g < weights.length) {
-      val s = task.scorer.score(tf, dls(i), weights(g), task.stats)
-      val (q, sl, b) = (qis(g), slots(g), boosts(g))
-      var e = 0
-      while (e < q.length) {
-        task.add(q(e), sl(e), if (b(e) == 1.0f) s else s * b(e))
-        e += 1
-      }
-      g += 1
-    }
-  }
+  def contribute(): Unit = ()
 
   def advance(): Unit = {
     i += 1
     while (i >= n) if (!nextBlock()) { doc = Long.MaxValue; return }
     doc = docs(i)
   }
+
+  override def advanceTo(t: Long): Unit = { target = t; while (doc < t) advance() }
+
+  /** The current posting's ascending in-doc positions. */
+  def positions(): Array[Int] = {
+    var skip = posAt(i) - pRead
+    while (skip > 0) { pr.nextLong(); skip -= 1 }
+    val out = new Array[Int](tfs(i))
+    var p = 0
+    var j = 0
+    while (j < out.length) { p += pr.nextInt(); out(j) = p; j += 1 }
+    pRead = posAt(i) + out.length
+    out
+  }
+
+  /** Whether to pass over the block [[block]] of [[slice]] undecoded. */
+  protected def skipBlock(): Boolean = false
 
   // decodes the next block not skipped; false once every slice is done
   private def nextBlock(): Boolean = {
@@ -256,15 +302,19 @@ private final class TermCursor(val range: Int, val slices: Array[RunSlice],
         bi = 0
         prev = s.base
         dr = new VarByte.Reader(s.doc); tr = new VarByte.Reader(s.tf); lr = new VarByte.Reader(s.dl)
+        pr = if (s.pos.isEmpty) null else new VarByte.Reader(s.pos)
         seek = false
       }
       s = slice
-      if (task.skip(this)) { prev = s.lastDocid(bi); bi += 1; seek = true }
-      else found = true
+      if ((s.lastDocid.nonEmpty && s.lastDocid(bi) < target) || skipBlock()) {
+        prev = s.lastDocid(bi); bi += 1; seek = true
+      } else found = true
     }
     if (seek) { dr.seek(s.docOff(bi)); tr.seek(s.tfOff(bi)); lr.seek(s.dlOff(bi)); seek = false }
+    if (pr != null) { pr.seek(s.posOff(bi)); pRead = 0 }
     val len = math.min(PostingCodec.BlockSize, s.ndocs - bi * PostingCodec.BlockSize)
     var d = prev
+    var ps = 0
     n = 0
     var j = 0
     while (j < len) {
@@ -272,7 +322,8 @@ private final class TermCursor(val range: Int, val slices: Array[RunSlice],
       d = if (d < 0) delta else d + delta
       val tf = tr.nextInt()
       val dl = lr.nextInt()
-      if (task.keeps(range, d)) { docs(n) = d; tfs(n) = tf; dls(n) = dl; n += 1 }
+      if (task.keeps(range, d)) { docs(n) = d; tfs(n) = tf; dls(n) = dl; posAt(n) = ps; n += 1 }
+      ps += tf
       j += 1
     }
     prev = d
@@ -283,29 +334,153 @@ private final class TermCursor(val range: Int, val slices: Array[RunSlice],
   }
 }
 
-/** The non-term (qid, docid, slot, partial) rows of a range task, sorted
-  * by (docid, qid, slot); tombstoned docids are passed over.
+/** A term's reader scoring its weight groups: `weights(g)` / `qis(g)` /
+  * `slots(g)` / `boosts(g)` are weight group g. Asks the task before
+  * decoding a block (WAND).
   */
-private final class RowCursor(rows: Array[(String, Long, Int, Float)], qi: Map[String, Int],
-                              task: RangeTask) extends Cursor {
-  private var i = -1
-  def contribute(): Unit = {
-    var j = i
-    while (j < rows.length && rows(j)._2 == doc) {
-      task.add(qi(rows(j)._1), rows(j)._3, rows(j)._4)
-      j += 1
+private final class TermCursor(range: Int, slices: Array[RunSlice],
+    val weights: Array[Float], val qis: Array[Array[Int]], val slots: Array[Array[Int]],
+    val boosts: Array[Array[Float]], task: RangeTask) extends PostingReader(range, slices, task) {
+
+  /** Per weight group, the largest block bound over every slice (WAND). */
+  lazy val groupMax: Array[Float] = weights.map(w => slices.iterator
+    .flatMap(s => s.maxTf.indices.iterator.map(task.bound(s, _, w))).foldLeft(0.0f)(math.max))
+
+  override def contribute(): Unit = {
+    val tf0 = tf.toFloat
+    val dl0 = dl
+    var g = 0
+    while (g < weights.length) {
+      val s = task.scorer.score(tf0, dl0, weights(g), task.stats)
+      val (q, sl, b) = (qis(g), slots(g), boosts(g))
+      var e = 0
+      while (e < q.length) {
+        task.add(q(e), sl(e), if (b(e) == 1.0f) s else s * b(e))
+        e += 1
+      }
+      g += 1
     }
   }
+
+  override protected def skipBlock(): Boolean = task.skip(this)
+}
+
+/** Readers advanced together: `doc` is their smallest docid, and a reader
+  * is on it iff its own doc equals it. Starts before the first posting.
+  */
+private final class Union(val rs: Array[PostingReader]) {
+  private val heap = new CursorHeap(rs.length)
+  rs.foreach(heap.push)
+  var doc: Long = -1L
+
+  def advanceTo(t: Long): Unit = {
+    while (heap.nonEmpty && heap.top.doc < t) {
+      val r = heap.pop()
+      r.advanceTo(t)
+      if (r.doc != Long.MaxValue) heap.push(r)
+    }
+    doc = if (heap.nonEmpty) heap.top.doc else Long.MaxValue
+  }
+
+  /** The sum of the raw tf of the readers on [[doc]], and their dl. */
+  def tfAndDl: (Int, Int) = {
+    var tf = 0
+    var dl = 0
+    rs.foreach(r => if (r.doc == doc) { tf += r.tf; dl = r.dl })
+    (tf, dl)
+  }
+}
+
+/** A synonym group or a constant-score expansion ([[UnionClause]]) of
+  * qid `q`: every doc of the union scores once.
+  */
+private final class UnionCursor(u: Union, c: UnionClause, q: Int, task: RangeTask) extends Cursor {
+  def advance(): Unit = { u.advanceTo(u.doc + 1); doc = u.doc }
+  def contribute(): Unit =
+    if (!c.synonym) task.add(q, c.slot, c.boost)
+    else {
+      val (tf, dl) = u.tfAndDl
+      val s = task.scorer.score(tf.toFloat, dl, c.weight, task.stats)
+      task.add(q, c.slot, if (c.boost == 1.0f) s else s * c.boost)
+    }
+}
+
+/** A [[PositionalClause]] of qid `q` over one union per distinct offset
+  * (`offs`, ascending; several terms at one offset are a MultiPhraseQuery
+  * union slot): a leapfrog conjunction that decodes positions only at
+  * docs every slot holds, and stops at those whose freq is non-zero.
+  * `terms(s)` is slot s's first term with postings in the range.
+  */
+private final class PositionalCursor(slots: Array[Union], terms: Array[String], offs: Array[Int],
+    c: PositionalClause, q: Int, task: RangeTask) extends Cursor {
+  private var partial = 0.0f
+  private var from = 0L
+
+  def contribute(): Unit = task.add(q, c.slot, partial)
+
   def advance(): Unit = {
-    val d = doc
-    i += 1
-    while (i < rows.length && (rows(i)._2 == d || !task.live(rows(i)._2))) i += 1
-    doc = if (i < rows.length) rows(i)._2 else Long.MaxValue
+    var t = align(from)
+    while (t != Long.MaxValue) {
+      val pos = slots.map(positions)
+      val freq = c.shape.freq(terms, pos, offs)
+      if (freq != 0.0f) {
+        val s = task.scorer.score(freq, slots(0).tfAndDl._2, c.weight, task.stats)
+        partial = if (c.boost == 1.0f) s else s * c.boost
+        doc = t
+        from = t + 1
+        return
+      }
+      t = align(t + 1)
+    }
+    doc = Long.MaxValue
+  }
+
+  // the first doc at or past t that every slot holds
+  private def align(t0: Long): Long = {
+    var t = t0
+    var agree = 0
+    var s = 0
+    while (agree < slots.length) {
+      val u = slots(s)
+      u.advanceTo(t)
+      if (u.doc == Long.MaxValue) return Long.MaxValue
+      if (u.doc == t) agree += 1 else { t = u.doc; agree = 1 }
+      s = (s + 1) % slots.length
+    }
+    t
+  }
+
+  // a slot's positions at its doc: its readers' lists merged
+  private def positions(u: Union): Array[Int] =
+    u.rs.iterator.filter(_.doc == u.doc).map(_.positions()).reduce(Searcher.mergeSorted)
+}
+
+/** One BM25F query term of the qids `qs` (`counts` occurrences each),
+  * over one reader per field: tf̃ = Σ_f w_f · tf_f / ((1 − b_f) + b_f ·
+  * len_f / avglen_f) in field order, one saturation idf · tf̃ / (k1 + tf̃)
+  * in Double, then per qid the count times it as a Float at `slot`.
+  */
+private final class FieldCursor(u: Union, f: FieldClauses, idf: Double, slot: Int,
+    qs: Array[Int], counts: Array[Int], task: RangeTask) extends Cursor {
+  def advance(): Unit = { u.advanceTo(u.doc + 1); doc = u.doc }
+  def contribute(): Unit = {
+    var tfb = 0.0
+    var i = 0
+    while (i < f.fields.length) {
+      val r = u.rs(i)
+      val (w, b, avgdl) = f.fields(i)
+      val part = if (r.doc == doc) w * r.tf / ((1.0 - b) + b * r.dl / avgdl) else 0.0
+      tfb = if (i == 0) part else tfb + part
+      i += 1
+    }
+    val sat = idf * tfb / (f.k1 + tfb)
+    var e = 0
+    while (e < qs.length) { task.add(qs(e), slot, (counts(e) * sat).toFloat); e += 1 }
   }
 }
 
 /** One range task: see [[RangeScorer]]. */
-private final class RangeTask(terms: Map[String, ClausePlan.TermGroups],
+private final class RangeTask(clauses: RangeClauses,
     nSlots: Map[String, Int], reducer: Searcher.RunReducer,
     val scorer: Scorer, val stats: CollStats, tombs: Array[Long],
     excluded: Map[String, Set[Long]], wand: RangeScorer.Wand, ranges: DocRanges) {
@@ -382,16 +557,13 @@ private final class RangeTask(terms: Map[String, ClausePlan.TermGroups],
   }
 
   def run(in: Iterator[RangeInput]): Iterator[(String, Long, Float)] = {
-    val sl = scala.collection.mutable.ArrayBuffer.empty[(Int, RunSlice)]
-    val rs = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Int, Float)]
-    in.foreach { x =>
-      x.slice.foreach(s => sl += ((x.range, s)))
-      x.rows.foreach(rs ++= _)
-    }
-    cursors = sl.groupBy(x => (x._2.term, x._1)).iterator.map { case ((term, range), ss) =>
-      val groups = terms(term)
-      new TermCursor(range, ss.map(_._2).sortBy(firstDocid).toArray, groups.map(_._1),
-        groups.map(_._2.map(e => qi(e._1))), groups.map(_._2.map(_._2)), groups.map(_._2.map(_._3)), this)
+    val slices: Map[(Int, String, Int), Array[RunSlice]] = in.toSeq
+      .groupBy(x => (x.field, x.slice.term, x.range))
+      .map { case (key, xs) => key -> xs.map(_.slice).sortBy(firstDocid).toArray }
+    cursors = slices.iterator.collect { case ((0, term, range), ss) if clauses.terms.contains(term) =>
+      val groups = clauses.terms(term)
+      new TermCursor(range, ss, groups.map(_._1), groups.map(_._2.map(e => qi(e._1))),
+        groups.map(_._2.map(_._2)), groups.map(_._2.map(_._3)), this)
     }.toArray
     if (wand != null) for ((c, ci) <- cursors.zipWithIndex; g <- c.qis.indices; e <- c.qis(g).indices) {
       val (q, s) = (c.qis(g)(e), c.slots(g)(e))
@@ -401,9 +573,28 @@ private final class RangeTask(terms: Map[String, ClausePlan.TermGroups],
         slotBoost(q)(s) = c.boosts(g)(e)
       }
     }
-    val rowCursor = Option.when(rs.nonEmpty)(
-      new RowCursor(rs.sortBy(r => (r._2, r._1, r._3)).toArray, qi, this))
-    merge(cursors ++ rowCursor)
+    // the other clause kinds: per range, a cursor over the readers of the
+    // clause's terms that have slices in it (BM25F: one per field)
+    def union(keys: Seq[(Int, String, Int)]): Union =
+      new Union(keys.map(k => new PostingReader(k._3, slices.getOrElse(k, Array.empty), this)).toArray)
+    val others = slices.keysIterator.map(_._3).toSeq.distinct.flatMap { r =>
+      def present(terms: Seq[String]) = terms.map((0, _, r)).filter(slices.contains)
+      clauses.unions.flatMap { c =>
+        val keys = present(c.terms)
+        Option.when(keys.nonEmpty)(new UnionCursor(union(keys), c, qi(c.qid), this))
+      } ++ clauses.positional.flatMap { c =>
+        val offs = c.terms.map(_._2).distinct.sorted.toArray
+        val terms = offs.map(o => c.terms.filter(_._2 == o).map(_._1).distinct)
+        val keys = terms.map(present)
+        Option.when(keys.forall(_.nonEmpty))(
+          new PositionalCursor(keys.map(union), keys.map(_.head._2), offs, c, qi(c.qid), this))
+      } ++ clauses.fields.toSeq.flatMap(f => f.terms.flatMap { case (term, (idf, slot, qs)) =>
+        val keys = f.fields.indices.map((_, term, r))
+        Option.when(keys.exists(slices.contains))(
+          new FieldCursor(union(keys), f, idf, slot, qs.map(e => qi(e._1)), qs.map(_._2), this))
+      })
+    }
+    merge(cursors ++ others)
   }
 
   private def firstDocid(s: RunSlice): Long = {

@@ -2,7 +2,7 @@ package graft.search
 
 import graft.analysis.Analyzer
 import graft.codec.PostingCodec
-import graft.index.{BuiltIndex, PostingRun}
+import graft.index.BuiltIndex
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
@@ -154,17 +154,16 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     * docs are dropped at decode time. Columns (key, docid).
     */
   private def matchPairs(byTerm: Map[String, Seq[String]]): DataFrame = {
-    import spark.implicits._
     val bc = spark.sparkContext.broadcast(byTerm)
     val tombL = tombstonesBc
     index.forTerms(index.postingsMatch, byTerm.keys)
-      .as[PostingRun]
+      .as(RangeScorer.RunEnc)
       .flatMap { run =>
         val keys = bc.value(run.term)
         PostingCodec.decodeDocids(run.ndocs, run.doc_blob)
           .filter(d => Searcher.liveDoc(tombL, d))
           .flatMap(d => keys.iterator.map(k => (k, d)))
-      }
+      }(Searcher.KeyDocEnc)
       .toDF("key", "docid").distinct()
   }
 
@@ -225,7 +224,6 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     */
   def explainStats(topics: Seq[Topic], k: Int = 5,
                    scorerName: String = "bm25"): DataFrame = {
-    import spark.implicits._
     val hits = search(topics, k, scorerName).collect().toSeq
     val ids = docidLookup(hits.map(_.docno))
     val qterms = topicTerms(topics)
@@ -240,7 +238,7 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     val dfs: Map[String, Long] =
       index.termStatsOf(qterms.map(_._2)).map { case (t, (df, _)) => t -> df }
     index.forTerms(index.postingsDecode, dfs.keys)
-      .as[PostingRun]
+      .as(RangeScorer.RunEnc)
       .flatMap { run =>
         val df = dfs(run.term)
         PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
@@ -250,7 +248,7 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
               .filter { case (q, _) => termsByQidB.value(q).contains(run.term) }
               .map { case (q, d) => (q, d, run.term, p.tf.toLong, p.dl.toLong, df) }
           }
-      }.toDF("qid", "docno", "term", "tf", "dl", "df")
+      }(Searcher.ExplainEnc).toDF("qid", "docno", "term", "tf", "dl", "df")
   }
 
   /** Learning-to-rank feature extraction — the training-data surface a
@@ -510,7 +508,7 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     * pushed-down docid set (≤ 4,096 ids) or, for a large topic batch that
     * must never build a million-element predicate, an in-scan filter
     * against a broadcast sorted docid array. Both sets are set-valued
-    * predicates ([[Searcher.inSet]]): generated code references them, so a
+    * predicates ([[BuiltIndex.inSet]]): generated code references them, so a
     * fresh search compiles no class.
     */
   private def docnoLookup(ids: Seq[Long]): Map[Long, String] = {
@@ -518,10 +516,10 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     val docShift = index.cfg.groupShift + index.cfg.mergeShift
     val sorted = ids.distinct.sorted.toArray
     val grps = sorted.map(_ >> docShift).distinct.toSeq
-    val base = index.docs.where(Searcher.inSet(spark, "grp", grps))
+    val base = index.docs.where(BuiltIndex.inSet(spark, "grp", grps, -_.toLong))
       .select("docid", "docno").as(Searcher.DocnoEnc)
     if (sorted.length <= 4096)
-      base.where(Searcher.inSet(spark, "docid", sorted.toSeq)).collect().toMap
+      base.where(BuiltIndex.inSet(spark, "docid", sorted.toSeq, -_.toLong)).collect().toMap
     else {
       val idsB = spark.sparkContext.broadcast(sorted)
       try base.filter(t => java.util.Arrays.binarySearch(idsB.value, t._1) >= 0)
@@ -957,9 +955,8 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     * picks the faithful NearSpansOrdered or NearSpansUnordered walk
     * ([[SpanNear.freq]]), whose freq is scored like a phrase — through the
     * similarity's TF saturation against the accumulated two-term weight.
-    * Each span is a two-slot clause of the positional co-group (one
-    * bucket-pruned positional scan serves the batch); one clause per qid
-    * needs no further combine.
+    * Each span is a two-slot positional clause of the range tasks (one
+    * bucket-pruned positional scan serves the batch).
     */
   def searchSpanNear(spans: Seq[(String, String, String, Int)], k: Int = 1000,
                      scorerName: String = "bm25",
@@ -968,20 +965,26 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     require(spans.forall(_._4 >= 0), "slop must be non-negative")
     require(spans.forall(s => s._2 != s._3),
       "span near of a repeated term needs repeat-occurrence pinning; unsupported")
-    import spark.implicits._
     val scorer = Scorer.byName(scorerName)
     val stats = CollStats(index.stats.max_doc, index.stats.sum_total_term_freq)
     val dfs = index.termStatsOf(spans.flatMap(s => Seq(s._2, s._3)))
     // both terms must be indexed
-    val clauses = spans.collect {
+    collectSpans(spans.collect {
       case (qid, ta, tb, slop) if dfs.contains(ta) && dfs.contains(tb) =>
-        Searcher.PositionalClause(qid, 0, Seq((ta, 0), (tb, 1)), slop, Some(ordered),
+        PositionalClause(qid, 0, Seq((ta, 0), (tb, 1)), Proximity.Near(slop, ordered),
           scorer.phraseWeight(Seq(dfs(ta), dfs(tb)), stats), 1.0f)
-    }
-    if (clauses.isEmpty) return spark.emptyDataset[RunLine]
-    collectTopK(positionalPartials(clauses, scorer, stats).map(t => (t._1, t._2, t._4)),
-      k, scorer.name)
+    }, dfs, k, scorer, stats)
   }
+
+  /** Top-k of one-clause span queries, each clause its qid's slot 0. */
+  private def collectSpans(clauses: Seq[PositionalClause], dfs: Map[String, (Long, Long)],
+                           k: Int, scorer: Scorer, stats: CollStats): Dataset[RunLine] =
+    if (clauses.isEmpty) spark.emptyDataset(Searcher.LineEnc)
+    else collectTopK(RangeScorer.score(index, RangeClauses(Map.empty, clauses),
+      clauses.map(_.qid -> 1).toMap,
+      () => new Searcher.FlatRuns(clauses.map(_.qid -> Array(0)).toMap, Map.empty, false, 0, scorer),
+      scorer, stats, tombstonesBc, Map.empty, None,
+      clauses.flatMap(_.terms).map(t => dfs(t._1)._1).sum, forcedRanges), k, scorer.name)
 
   /** Query rescorer (≙ Elasticsearch `rescore`, score_mode total): the
     * cheap base query ranks everything; only its top-`window` docs per
@@ -1042,7 +1045,7 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     }))
     if (terms.isEmpty) return spark.emptyDataset[RunLine]
     val tie = tieBreaker
-    collectTopK(RangeScorer.score(index, terms, None,
+    collectTopK(RangeScorer.score(index, RangeClauses(terms),
       clauses.groupBy(_.qid).map { case (q, cs) => q -> cs.size },
       () => new Searcher.DisMaxRuns(tie), scorer, stats, tombstonesBc, Map.empty, None,
       RangeScorer.work(terms, t => dfs(t)._1), forcedRanges), k, scorer.name)
@@ -1113,39 +1116,13 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
                       scorerName: String = "bm25"): Dataset[RunLine] = {
     requireSpans("searchSpanFirst", spans.map(_._1))
     require(spans.forall(_._3 > 0), "span end must be positive")
-    import spark.implicits._
     val scorer = Scorer.byName(scorerName)
     val stats = CollStats(index.stats.max_doc, index.stats.sum_total_term_freq)
     val dfs = index.termStatsOf(spans.map(_._2))
-    // term -> [(qid, end, idf)], only for indexed terms
-    val byTerm: Map[String, Array[(String, Int, Float)]] = spans
-      .flatMap { case (qid, t, end) =>
-        dfs.get(t).map { case (df, cf) =>
-          (t, (qid, end, scorer.termWeight(df, cf, stats)))
-        }
-      }
-      .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).toArray }
-    if (byTerm.isEmpty) return spark.emptyDataset[RunLine]
-    val posts = index.forTerms(index.postings, byTerm.keys).as[PostingRun]
-    val scorerB = scorer
-    val statsB = stats
-    val tombL = tombstonesBc
-    val scored: Dataset[(String, Long, Float)] = posts.flatMap { run =>
-      val qs = byTerm(run.term)
-      PostingCodec.decodeBlobs(run.ndocs, run.doc_blob,
-          run.tf_blob, run.dl_blob, run.pos_blob)
-        .flatMap { p =>
-          qs.iterator.flatMap { case (qid, end, idf) =>
-            var freq = 0
-            var i = 0
-            while (i < p.pos.length && p.pos(i) < end) { freq += 1; i += 1 }
-            if (freq == 0 || !Searcher.liveDoc(tombL, p.docid)) Iterator.empty
-            else Iterator.single(
-              (qid, p.docid, scorerB.score(freq.toFloat, p.dl, idf, statsB)))
-          }
-        }
-    }
-    collectTopK(scored, k, scorer.name)
+    collectSpans(spans.collect { case (qid, t, end) if dfs.contains(t) =>
+      PositionalClause(qid, 0, Seq((t, 0)), Proximity.First(end),
+        scorer.termWeight(dfs(t)._1, dfs(t)._2, stats), 1.0f)
+    }, dfs, k, scorer, stats)
   }
 
   private val regexCache =
@@ -1270,8 +1247,7 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     * collector — the seam multi-field retrieval, rescore, function score
     * and collapse build on ([[MultiField]]); parameters as
     * [[searchClauses]]. It reads as plan ([[ClausePlan]]) → range tasks
-    * ([[RangeScorer]]: term cursors, plus the rows of the phrase,
-    * expansion and synonym producers) → post-filters. Its stage ends in the
+    * ([[RangeScorer]]: a cursor per clause) → post-filters. Its stage ends in the
     * range tasks, so [[TopK]]'s per-partition heap runs in that stage. With
     * `pruning`, a pruned query's stream holds only the rows that entered
     * its range task's live top-k heap — a superset of its top k, each
@@ -1319,16 +1295,9 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
       spark.sparkContext.longAccumulator("wand_blocks_pruned")))
     wand.foreach(w => pruningAccs = Some((w.decoded, w.skipped)))
 
-    // (qid, docid, slot, partial) rows of the non-term producers: one more
-    // docid-ordered cursor of the range tasks
-    val rows = Seq(
-      Option.when(plan.phrases.nonEmpty)(positionalPartials(plan.phrases, scorer, plan.stats)),
-      Option.when(plan.expansions.nonEmpty)(expansionPartials(plan.expansions)),
-      Option.when(plan.synonyms.nonEmpty)(synonymPartials(plan))
-    ).flatten.reduceOption(_ union _)
     val slots = plan.slots
     def ranged(reducer: () => Searcher.RunReducer): Dataset[(String, Long, Float)] =
-      RangeScorer.score(index, plan.terms, rows, slots.map { case (q, ss) => q -> ss.length },
+      RangeScorer.score(index, plan.cursors, slots.map { case (q, ss) => q -> ss.length },
         reducer, scorer, plan.stats, tombstonesBc, excluded, wand, plan.work, forcedRanges)
 
     // Per-(query, doc) scoring in the range tasks. Flat mode sums each doc
@@ -1411,143 +1380,6 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
           .select($"qid", $"w.docid".as("docid"), $"w.score".as("score"))
           .as[(String, Long, Float)]
     }
-  }
-
-  /** Constant-score expansion partials: decode the expanded terms'
-    * postings; a doc matching several expanded terms of one clause still
-    * scores the boost ONCE (distinct on the identical partial rows).
-    */
-  private def expansionPartials(byTerm: Map[String, Array[(String, Int, Float)]])
-      : Dataset[(String, Long, Int, Float)] = {
-    import spark.implicits._
-    index.forTerms(index.postingsDecode, byTerm.keys).as[PostingRun].flatMap { run =>
-      val cs = byTerm(run.term)
-      PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
-        .flatMap(p => cs.iterator.map { case (qid, slot, b) => (qid, p.docid, slot, b) })
-    }.distinct()
-  }
-
-  /** Synonym group partials: decode the group members' postings, SUM the
-    * raw tfs per (query, doc, slot) — an integer sum, order-free — then
-    * apply the scorer's TF saturation ONCE against the group weight
-    * (≙ SynonymScorer: one freq, one similarity call). One extra tiny
-    * shuffle, paid only by queries that carry synonym groups.
-    */
-  private def synonymPartials(plan: ClausePlan): Dataset[(String, Long, Int, Float)] = {
-    import spark.implicits._
-    val (byTerm, scoring, scorer, stats) =
-      (plan.synonyms, plan.synonymScoring, plan.scorer, plan.stats)
-    index.forTerms(index.postingsDecode, byTerm.keys).as[PostingRun].flatMap { run =>
-      val cs = byTerm(run.term)
-      PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
-        .flatMap(p => cs.iterator.map { case (qid, slot) => (qid, p.docid, slot, p.tf, p.dl) })
-    }
-      .groupByKey(t => (t._1, t._2, t._3))
-      .mapGroups[(String, Long, Int, Float)] {
-        (key: (String, Long, Int), it: Iterator[(String, Long, Int, Int, Int)]) =>
-          var tf = 0
-          var dl = 0
-          it.foreach { r => tf += r._4; dl = r._5 }
-          val (w, boost) = scoring((key._1, key._3))
-          val sc = scorer.score(tf.toFloat, dl, w, stats)
-          (key._1, key._2, key._3, if (boost == 1.0f) sc else sc * boost)
-      }
-  }
-
-  /** Positional clause partials (qid, docid, slot, partial): decode the
-    * clause terms' postings WITH positions, co-group per (clause, doc) and
-    * score the clause's freq against its weight, tombstoned docs dropped.
-    * A phrase counts exact phrase occurrences (slop 0: anchor scan from the
-    * sparsest slot, binary-search the rest — the distributed analog of
-    * Lucene's ExactPhraseScorer) or runs the sloppy event walk
-    * ([[SloppyPhrase.freq]]); a span-near runs its span walk
-    * ([[SpanNear.freq]]). One shuffle: the co-group.
-    */
-  private def positionalPartials(clauses: Seq[Searcher.PositionalClause],
-                                 scorer: Scorer, stats: CollStats)
-      : Dataset[(String, Long, Int, Float)] = {
-    import spark.implicits._
-    if (clauses.isEmpty) return spark.emptyDataset[(String, Long, Int, Float)]
-    val pcs = clauses.toArray
-    // slot = DISTINCT offset (ascending): several terms sharing an offset
-    // form one union slot (≙ MultiPhraseQuery.add(Term[], pos)); with
-    // unique offsets this degenerates to the plain phrase layout
-    val termSlots: Map[String, Array[(Int, Int)]] =
-      pcs.zipWithIndex.toSeq.flatMap { case (pc, pi) =>
-        val offsU = pc.terms.map(_._2).distinct.sorted
-        pc.terms.map { case (term, off) => (term, pi, offsU.indexOf(off)) }
-      }.distinct
-        .groupBy(_._1).map { case (t, xs) => t -> xs.map(x => (x._2, x._3)).toArray }
-    val occ: Dataset[(Int, Long, Int, Array[Int], Int)] =
-      index.forTerms(index.postings, termSlots.keys).as[PostingRun].flatMap { run =>
-        val slots = termSlots(run.term)
-        PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob,
-            run.dl_blob, run.pos_blob)
-          .flatMap { p =>
-            slots.iterator.map { case (pi, si) => (pi, p.docid, si, p.pos, p.dl) }
-          }
-      }
-    val tombL = tombstonesBc
-    occ.groupByKey(t => (t._1, t._2))
-      .flatMapGroups[(String, Long, Int, Float)] {
-        (key: (Int, Long), it: Iterator[(Int, Long, Int, Array[Int], Int)]) =>
-        val pc = pcs(key._1)
-        val offsU = pc.terms.map(_._2).distinct.sorted
-        val nSlots = offsU.length
-        val posBySlot = new Array[Array[Int]](nSlots)
-        var dl = 0
-        var matched = 0
-        it.foreach { r =>
-          if (posBySlot(r._3) == null) { matched += 1; posBySlot(r._3) = r._4 }
-          else posBySlot(r._3) = Searcher.mergeSorted(posBySlot(r._3), r._4)
-          dl = r._5
-        }
-        if (matched < nSlots || !Searcher.liveDoc(tombL, key._2)) Iterator.empty
-        else {
-          val offs = offsU.toArray
-          val slop = pc.slop
-          // a sloppy match window contributes the reference similarity's
-          // slop factor 1/(matchLength+1) (`BM25.java:110-114`); an exact
-          // phrase counts full-phrase starts (the count is anchor-invariant)
-          var freq = 0.0f
-          if (pc.near.isDefined) {
-            freq = SpanNear.freq(posBySlot(0), posBySlot(1), slop, pc.near.get)
-          } else if (slop > 0) {
-            // slop > 0 ⇒ unique offsets (required by scoredClauses), so
-            // each slot has exactly one term; align the terms to slot order
-            freq = SloppyPhrase.freq(
-              offsU.map(o => pc.terms.find(_._2 == o).get._1).toArray,
-              posBySlot, offs, slop)
-          } else {
-            var minSlot = 0
-            var s = 1
-            while (s < nSlots) {
-              if (posBySlot(s).length < posBySlot(minSlot).length) minSlot = s
-              s += 1
-            }
-            val anchorOff = offs(minSlot)
-            posBySlot(minSlot).foreach { p0 =>
-              val base = p0 - anchorOff // phrase start position in doc
-              var ok = base >= 0
-              var j = 0
-              while (ok && j < nSlots) {
-                if (j != minSlot) {
-                  val arr = posBySlot(j)
-                  ok = java.util.Arrays.binarySearch(arr, base + offs(j)) >= 0
-                }
-                j += 1
-              }
-              if (ok) freq += 1.0f
-            }
-          }
-          if (freq == 0.0f) Iterator.empty
-          else {
-            val sc = scorer.score(freq, dl, pc.weight, stats)
-            Iterator.single((pc.qid, key._2, pc.slot,
-              if (pc.boost == 1.0f) sc else sc * pc.boost))
-          }
-        }
-      }
   }
 
   /** Bounded top-k collector + docno attach + first-occurrence docno dedup
@@ -1741,6 +1573,9 @@ object Searcher {
   // encoders of every search's tail, derived once (see RangeScorer.RunEnc)
   private[search] val LineEnc: Encoder[RunLine] = Encoders.product[RunLine]
   private val DocnoEnc: Encoder[(Long, String)] = Encoders.product[(Long, String)]
+  private val KeyDocEnc: Encoder[(String, Long)] = Encoders.product[(String, Long)]
+  private val ExplainEnc: Encoder[(String, String, String, Long, Long, Long)] =
+    Encoders.product[(String, String, String, Long, Long, Long)]
 
   /** True iff `docid` survives the broadcast tombstone overlay (None =
     * delete-free index). Static so executor closures capture only the
@@ -1763,19 +1598,6 @@ object Searcher {
     def add(slot: Int, partial: Float): Unit
     def keep: Boolean = true
     def score: Float
-  }
-
-  /** `c IN values` over a non-negative long column as a set-valued
-    * predicate: the optimizer turns an IN list longer than
-    * `spark.sql.optimizer.inSetConversionThreshold` into `InSet`, which is
-    * pushed into the parquet scan like a literal list, but which generated
-    * code references instead of inlining one literal per value. A shorter
-    * list is padded with negative values the column never holds.
-    */
-  def inSet(spark: SparkSession, c: String, values: Seq[Long]): Column = {
-    val vs = values.distinct
-    val min = spark.conf.get("spark.sql.optimizer.inSetConversionThreshold").toInt + 1
-    col(c).isInCollection(vs ++ (1 to min - vs.size).map(-_.toLong))
   }
 
   /** Flat OR / AND / msm: each clause's slots (`slots`: qid → slot →
@@ -1835,17 +1657,8 @@ object Searcher {
     def score: Float = BoolQuery.eval(root, leaf, coord)
   }
 
-  /** A clause of the positional co-group: phrase slots (term, offset) and
-    * slop, or with `near = Some(ordered)` a span-near of the single-term
-    * spans at offsets 0 and 1; scored at `weight`, times `boost`.
-    */
-  private[graft] final case class PositionalClause(qid: String, slot: Int,
-      terms: Seq[(String, Int)], slop: Int, near: Option[Boolean],
-      weight: Float, boost: Float)
-
   /** Deduplicating merge of two sorted int arrays — a MultiPhraseQuery
-    * union slot's position list (≙ UnionPostingsEnum). Static so the
-    * phrase co-group closure captures no Searcher state.
+    * union slot's position list (≙ UnionPostingsEnum).
     */
   def mergeSorted(a: Array[Int], b: Array[Int]): Array[Int] = {
     val out = new Array[Int](a.length + b.length)

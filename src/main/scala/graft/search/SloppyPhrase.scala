@@ -192,3 +192,64 @@ object SpanNear {
     freq
   }
 }
+
+/** Exact-phrase frequency (≙ ExactPhraseScorer): the number of phrase
+  * starts where every slot holds its term — an anchor scan over the
+  * sparsest slot, binary-searching the others (the count is
+  * anchor-invariant).
+  */
+object ExactPhrase {
+
+  /** Frequency from each slot's ascending in-doc positions and offset. */
+  def freq(posBySlot: Array[Array[Int]], offs: Array[Int]): Float = {
+    var minSlot = 0
+    var s = 1
+    while (s < posBySlot.length) {
+      if (posBySlot(s).length < posBySlot(minSlot).length) minSlot = s
+      s += 1
+    }
+    val anchorOff = offs(minSlot)
+    var freq = 0.0f
+    posBySlot(minSlot).foreach { p0 =>
+      val base = p0 - anchorOff // phrase start position in doc
+      var ok = base >= 0
+      var j = 0
+      while (ok && j < posBySlot.length) {
+        if (j != minSlot) ok = java.util.Arrays.binarySearch(posBySlot(j), base + offs(j)) >= 0
+        j += 1
+      }
+      if (ok) freq += 1.0f
+    }
+    freq
+  }
+}
+
+/** How a positional clause ([[PositionalClause]]) turns its slots'
+  * ascending in-doc positions into the freq it scores: `terms(s)` and
+  * `offs(s)` are slot s's term and phrase offset.
+  */
+private[graft] sealed trait Proximity extends Serializable {
+  def freq(terms: Array[String], pos: Array[Array[Int]], offs: Array[Int]): Float
+}
+
+private[graft] object Proximity {
+  /** A phrase: exact adjacency at slop 0, else the sloppy event walk. */
+  final case class Phrase(slop: Int) extends Proximity {
+    def freq(terms: Array[String], pos: Array[Array[Int]], offs: Array[Int]): Float =
+      if (slop == 0) ExactPhrase.freq(pos, offs) else SloppyPhrase.freq(terms, pos, offs, slop)
+  }
+
+  /** SpanNearQuery over the single-term spans at slots 0 and 1. */
+  final case class Near(slop: Int, ordered: Boolean) extends Proximity {
+    def freq(terms: Array[String], pos: Array[Array[Int]], offs: Array[Int]): Float =
+      SpanNear.freq(pos(0), pos(1), slop, ordered)
+  }
+
+  /** SpanFirstQuery: each occurrence before `end` is a zero-length span,
+    * so the freq is their count.
+    */
+  final case class First(end: Int) extends Proximity {
+    def freq(terms: Array[String], pos: Array[Array[Int]], offs: Array[Int]): Float =
+      pos(0).count(_ < end).toFloat
+  }
+}

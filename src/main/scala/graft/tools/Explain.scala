@@ -51,24 +51,24 @@ object Explain {
       "boolean-tree group plan ((hash | merge) + scan)" -> query("(hash | merge) + scan"),
       "faithful negation plan (complement anti-join should BROADCAST the candidate side)" ->
         query("hash -window"),
-      "synonym-group search plan (group postings in the same bucket-pruned scan; one extra tiny shuffle for the tf sum)" ->
+      "synonym-group search plan (group postings in the same bucket-pruned scan; the tf sum in the range task)" ->
         (() => searcher.searchClauses(Seq(WeightedClause("1", 0, "hash", 1.0f)), k = 20,
           synonymClauses = Seq(SynonymClause("1", 1, Seq("scan", "window"), 1.0f))).collect()),
       "multi-field most_fields (per-field bucket-pruned scans → ONE (qid, docid) full-outer join → bounded top-k)" ->
         (() => MultiField.mostFields(Seq(fields._1 -> 1.0f, fields._2 -> 2.0f),
           Seq(Topic("m1", "hash join txt")), 20).collect()),
-      "BM25F combined-field (per-field pruned postings scans → ONE (term, docid) full-outer join, checkpointed for the df agg + scoring double-read)" ->
+      "BM25F combined-field (a one-job df pre-pass, then per-field pruned postings scans → the range tasks)" ->
         (() => CombinedField.bm25f(Seq((fields._1, 1.0, 0.75), (fields._2, 2.0, 0.4)),
           Seq(Topic("m1", "hash join txt")), 20).collect()),
       "dismax (the flat OR's plain-term decode → the shared sorted combine pass, max + tie·rest reducer; no MapGroups)" ->
         (() => searcher.searchDisMax(topic, 20, 0.3f).collect()),
-      "span-near (positional co-group, its one MapGroups, straight into the collector; no combine shuffle)" ->
+      "span-near (one positional postings scan → the range task's leapfrog cursor; no MapGroups)" ->
         (() => searcher.searchSpanNear(Seq(("1", "hash", "join", 2)), 20).collect()),
       "searchQuery term tree (plain-term decode → the shared sorted combine pass, tree reducer; no MapGroups)" ->
         query("hash +join -merge"),
       "boosting (negative postings decode → distributed left join demote; no driver doc sets)" ->
         (() => searcher.searchBoosting(topic, Seq(("1", "slow")), 0.5f, 20).collect()),
-      "rescore (bounded window agg → left join against the phrase partial stream → bounded top-k)" ->
+      "rescore (bounded window agg → left join against the phrase range-task stream → bounded top-k)" ->
         (() => searcher.searchRescore(topic,
           Seq(PhraseClause("1", 0, Seq(("hash", 0), ("join", 1)), 1.0f)), 50, 2.0f, 20).collect()),
       "span-first (positional postings scan pruned to the span terms' buckets)" ->

@@ -60,8 +60,8 @@ class ClausePlanSpec extends AnyFunSuite {
     assert(bits(aWeight) == bits(c.termWeight(10, 20, stats)))
     assert(aClauses.map(e => bits(e._3)).toSet == Set(bits(2.0f * qn), bits(1.0f * 1.0f * qn)))
     assert(p.phrases.map(pc => bits(pc.boost)) == Seq(bits(1.5f * qn)))
-    assert(p.expansions("c").toSeq.map(e => bits(e._3)) == Seq(bits(0.5f * qn)))
-    assert(p.synonymScoring.values.toSeq.map(ws => (bits(ws._1), bits(ws._2))) ==
+    assert(p.expansions.map(e => (e.terms, bits(e.boost))) == Seq((Seq("c", "d"), bits(0.5f * qn))))
+    assert(p.synonyms.map(sc => (bits(sc.weight), bits(sc.boost))) ==
       Seq((bits(c.termWeight(50, 85, stats)), bits(2.0f * qn))))
   }
 
@@ -93,7 +93,7 @@ class ClausePlanSpec extends AnyFunSuite {
     assert(and.deadQids == Set("t1", "t2", "t3", "t4", "t5"))
     assert(and.slots.keySet == Set("ok"))
     assert(and.terms.values.flatMap(_.toSeq.flatMap(_._2.toSeq.map(_._1))).toSet == Set("ok"))
-    assert(and.synonyms.keySet == Set("c")) // the unindexed member is dropped
+    assert(and.synonyms.map(_.terms) == Seq(Seq("c"))) // the unindexed member is dropped
     assert(and.phrases.isEmpty && and.expansions.isEmpty)
     // OR mode kills nothing: only unindexed terms drop out
     val or = plan(clauses, phrases, expansions, blended, synonyms)

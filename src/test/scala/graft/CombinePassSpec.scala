@@ -2,7 +2,8 @@ package graft
 
 import graft.analysis.AnalyzerConfig
 import graft.index.{IndexBuilder, IndexConfig}
-import graft.search.{BlendedClause, Bm25Scorer, CollStats, Searcher, Topic, WeightedClause}
+import graft.search.{BlendedClause, Bm25Scorer, CollStats, PhraseClause, RunLine, Searcher,
+  SynonymClause, Topic, WeightedClause}
 import org.apache.spark.sql.execution.{AppendColumnsExec, AppendColumnsWithObjectExec,
   FileSourceScanExec, MapGroupsExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -10,11 +11,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The plan shape and job counts of the query kinds that share the
-  * searcher's range tasks and its partial producers: dismax, boolean-tree
-  * and fuzzy (blended) queries
-  * combine without a typed `groupByKey`, and span-near runs through the
-  * positional co-group alone. A fuzzy clause's expansions fold into one
-  * clause score in expansion-rank order, bit for bit.
+  * searcher's range tasks: dismax, boolean-tree, fuzzy (blended),
+  * span-near, phrase and synonym queries combine without a typed
+  * `groupByKey`. A fuzzy clause's expansions fold into one clause score in
+  * expansion-rank order, bit for bit.
   */
 class CombinePassSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -150,14 +150,23 @@ class CombinePassSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.shuffle.partitions", before)
   }
 
-  test("plan: span-near runs one MapGroups node, the positional co-group's") {
+  private def phraseAndSynonym = Seq[(String, () => Array[RunLine])](
+    "phrase" -> (() => searcher.searchClauses(Nil, 10,
+      phraseClauses = Seq(PhraseClause("p", 0, Seq(("apple", 0), ("pear", 1)), 1.0f))).collect()),
+    "synonym" -> (() => searcher.searchClauses(Nil, 10,
+      synonymClauses = Seq(SynonymClause("y", 0, Seq("apple", "plum"), 1.0f))).collect()))
+
+  test("plan: span-near, phrase, synonym combine without groupByKey") {
     val spans = Seq(("s", "apple", "pear", 2))
-    Seq(true, false).foreach { ordered =>
-      searcher.searchSpanNear(spans, 10, ordered = ordered).collect()
-      val (scans, groups, _) =
-        shape(plansOf(searcher.searchSpanNear(spans, 10, ordered = ordered).collect()))
-      assert(scans >= 1, "the scoring plan was not captured")
-      assert(groups == 1, s"ordered=$ordered: $groups MapGroups")
+    val searches = Seq[(String, () => Array[RunLine])](
+      "span-near ordered" -> (() => searcher.searchSpanNear(spans, 10).collect()),
+      "span-near unordered" -> (() => searcher.searchSpanNear(spans, 10, ordered = false).collect())
+    ) ++ phraseAndSynonym
+    searches.foreach { case (what, run) =>
+      assert(run().nonEmpty, what)
+      val (scans, groups, appends) = shape(plansOf(run()))
+      assert(scans >= 1, s"$what: the scoring plan was not captured")
+      assert(groups == 0 && appends == 0, s"$what: $groups MapGroups, $appends AppendColumns")
     }
   }
 
@@ -167,9 +176,8 @@ class CombinePassSpec extends AnyFunSuite {
     var near = Array.empty[graft.search.RunLine]
     val nearJobs = TestSpark.jobsOf { near = searcher.searchSpanNear(spans, 10).collect() }
     assert(near.nonEmpty)
-    // the co-group shuffle's map stage, the co-group + collector stage and
-    // the docno lookup
-    assert(nearJobs == 3, s"span-near jobs=$nearJobs")
+    // one range task with the collector in its stage, and the docno lookup
+    assert(nearJobs == 2, s"span-near jobs=$nearJobs")
 
     val topics = Seq(Topic("q", "apple pear plum"))
     searcher.searchQuery(topics, 10).collect()
@@ -178,5 +186,16 @@ class CombinePassSpec extends AnyFunSuite {
     assert(tree.nonEmpty)
     // one range task with the collector in its stage, and the docno lookup
     assert(treeJobs == 2, s"searchQuery jobs=$treeJobs")
+  }
+
+  test("job count: memo-warm phrase and synonym searches run 2 jobs") {
+    phraseAndSynonym.foreach { case (what, run) =>
+      run() // warms the memo
+      var hits = Array.empty[RunLine]
+      val jobs = TestSpark.jobsOf { hits = run() }
+      assert(hits.nonEmpty, what)
+      // one range task with the collector in its stage, and the docno lookup
+      assert(jobs == 2, s"$what jobs=$jobs")
+    }
   }
 }

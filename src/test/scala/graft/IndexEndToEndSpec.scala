@@ -44,34 +44,12 @@ class IndexEndToEndSpec extends AnyFunSuite {
     docs.toDF("docno", "content")
   }
 
-  /** Independent oracle: same semantics, trivially-auditable code path. */
+  /** [[BruteForce]] over `docs`: (docno, score) per topic, top `k`. */
   private def brute(docs: Seq[(String, String)], acfg: AnalyzerConfig,
                     topics: Seq[Topic], k: Int,
                     scorer: Scorer = Bm25Scorer): Map[String, Seq[(String, Float)]] = {
-    val an = new Analyzer(acfg)
-    val analyzed = docs.sortBy(_._1).map { case (d, t) => (d, an.analyze(t).toSeq) }
-    val stats = CollStats(analyzed.size, analyzed.map(_._2.size.toLong).sum)
-    val df: Map[String, Long] = analyzed.flatMap(_._2.distinct)
-      .groupBy(identity).view.mapValues(_.size.toLong).toMap
-    topics.map { t =>
-      val clauses = an.analyze(t.text).toSeq
-      val hits = analyzed.flatMap { case (docno, ts) =>
-        val tf = ts.groupBy(identity).view.mapValues(_.size).toMap
-        val partials = clauses.flatMap { c =>
-          tf.get(c).map(f =>
-            scorer.score(f, ts.size, scorer.termWeight(df(c), 0L, stats), stats))
-        }
-        if (partials.isEmpty) None
-        else {
-          var s = 0.0f
-          partials.foreach(s += _)
-          Some((docno, s))
-        }
-      }
-      t.qid -> hits
-        .sortWith((x, y) => x._2 > y._2 || (x._2 == y._2 && x._1 < y._1))
-        .take(k)
-    }.toMap
+    val c = new BruteForce.Corpus(docs, acfg)
+    BruteForce.search(c, BruteForce.topics(c, topics), k, scorer)
   }
 
   private def collectRun(ds: org.apache.spark.sql.Dataset[RunLine]): Map[String, Seq[(String, Float)]] =

@@ -1,6 +1,6 @@
 package graft
 
-import graft.analysis.{Analyzer, AnalyzerConfig}
+import graft.analysis.AnalyzerConfig
 import graft.index._
 import graft.search._
 import graft.streaming.StreamFixtures
@@ -126,42 +126,16 @@ class TopKCollectorSpec extends AnyFunSuite {
     Topic("6", "zzznotindexed"), // no hits: absent from every run
     Topic("7", "v2 v7 v2 v11"))
 
-  /** Brute force: the analyzer, the bm25 formulas, N = maxDoc and
-    * pre-delete statistics over the whole corpus, clause-order Float sums,
-    * ties by docno (docids follow docno order, asserted below).
-    */
+  private lazy val bruteCorpus = new BruteForce.Corpus(corpus, cfg.analyzer)
+
+  /** [[BruteForce]] over the whole corpus, (docno, rank, score bits). */
   private def brute(k: Int, mode: String = "or", msm: Int = 0,
-                    dead: Set[String] = Set.empty)
-      : Map[String, Seq[(String, Int, Int)]] = {
-    val an = new Analyzer(cfg.analyzer)
-    val docs = corpus.map { case (d, t) => (d, an.analyze(t).toSeq) }
-    val stats = CollStats(docs.size, docs.map(_._2.size.toLong).sum)
-    val df: Map[String, Long] = docs.flatMap(_._2.distinct)
-      .groupBy(identity).view.mapValues(_.size.toLong).toMap
-    topics.flatMap { t =>
-      val clauses = an.analyze(t.text).toSeq
-      val needed = if (mode == "and") clauses.size else msm
-      val hits = docs.filterNot(d => dead(d._1)).flatMap { case (docno, ts) =>
-        val tf = ts.groupBy(identity).view.mapValues(_.size).toMap
-        val partials = clauses.flatMap(c => tf.get(c).map(f =>
-          Bm25Scorer.score(f.toFloat, ts.size, Bm25Scorer.termWeight(df(c), 0L, stats), stats)))
-        if (partials.isEmpty || partials.size < needed) None
-        else {
-          var s = 0.0f
-          partials.foreach(s += _)
-          Some((docno, s))
-        }
-      }.sortWith((x, y) => x._2 > y._2 || (x._2 == y._2 && x._1 < y._1)).take(k)
-      if (hits.isEmpty) None
-      else Some(t.qid -> hits.zipWithIndex.map { case ((d, s), i) =>
-        (d, i, java.lang.Float.floatToIntBits(s))
-      })
-    }.toMap
-  }
+                    dead: Set[String] = Set.empty): Map[String, Seq[(String, Int, Int)]] =
+    BruteForce.ranked(BruteForce.search(bruteCorpus, BruteForce.topics(bruteCorpus, topics), k,
+      mode = mode, msm = msm, dead = dead))
 
   private def runOf(ds: Dataset[RunLine]): Map[String, Seq[(String, Int, Int)]] =
-    ds.collect().toSeq.groupBy(_.qid).view.mapValues(_.sortBy(_.rank)
-      .map(l => (l.docno, l.rank, java.lang.Float.floatToIntBits(l.score))).toSeq).toMap
+    BruteForce.ranked(ds.collect().toSeq)
 
   test("engine ≡ brute force: OR, AND, minShouldMatch = 2, repeated term (score bits)") {
     import spark.implicits._
@@ -212,16 +186,16 @@ class TopKCollectorSpec extends AnyFunSuite {
   test("codegen: fresh single-topic searches compile no class") {
     import org.apache.spark.metrics.source.CodegenMetrics
     val s = new Searcher(fullIdx)
-    // the warm-up compiles the plan shapes of a two-term search (a term
-    // list compiles once per length: its strings are referenced, not
-    // inlined); fresh terms and docids must not compile again
+    // the warm-up compiles the plan shapes of a two-term search; fresh
+    // terms, a longer term list and fresh docids must not compile again
     s.search(Seq(Topic("c0", "v3 v8")), k = 10).collect()
     val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val a = s.search(Seq(Topic("c1", "v1 v26")), k = 10).collect()
     val b = s.search(Seq(Topic("c2", "v12 v20")), k = 10).collect()
-    assert(a.nonEmpty && b.nonEmpty && a.map(_.docno).toSet != b.map(_.docno).toSet)
+    val c = s.search(Seq(Topic("c3", "v4 v15 v22")), k = 10).collect()
+    assert(a.nonEmpty && b.nonEmpty && c.nonEmpty && a.map(_.docno).toSet != b.map(_.docno).toSet)
     val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
-    assert(compiled == 0, s"$compiled classes compiled by two fresh searches")
+    assert(compiled == 0, s"$compiled classes compiled by three fresh searches")
   }
 
   test("job count: a batch past 4,096 hits takes the one-job broadcast docno lookup") {

@@ -1,0 +1,47 @@
+package graft.ops
+
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The compiled kNN kernels against the Spark SQL expressions they stand
+  * for, on the NaN edge: Spark orders NaN above every number.
+  */
+class KnnSpec extends AnyFunSuite {
+  private lazy val spark = graft.TestSpark.spark
+
+  private val nan = Double.NaN
+  // a plain embedding, a NaN component, an all-NaN embedding
+  private lazy val embs = {
+    import spark.implicits._
+    Seq(Seq(1.0, -2.0, 0.5), Seq(nan, 1.0, 2.0), Seq(nan, nan, nan)).toDF("embedding")
+  }
+
+  // the left-to-right fold Σ embedding_i · comps_i
+  private def dot(comps: Array[Double]): Column =
+    aggregate(zip_with(col("embedding"), typedLit(comps), _ * _), lit(0.0), _ + _)
+
+  test("NaN embeddings: the sign-LSH kernel sets a bit where SQL's proj >= 0 holds") {
+    val nPlanes = 4
+    val sql = (0 until nPlanes).map { p =>
+      when(dot(Knn.planeRow(p, 3)) >= 0, lit(1L << p)).otherwise(lit(0L))
+    }.reduce(_ bitwiseOR _)
+    val rows = embs.select(Knn.signBucket(col("embedding"), nPlanes), sql).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(rows(1)._2 == (1L << nPlanes) - 1, "SQL: a NaN projection is >= 0")
+    rows.foreach { case (kernel, want) => assert(kernel == want) }
+  }
+
+  test("NaN embeddings: the IVF kernel picks the SQL argmax cell (NaN highest, lowest cid on ties)") {
+    val cents = Seq(2L -> Seq(0.5f, 0.5f, 0.0f), 0L -> Seq(1.0f, 0.0f, 0.0f), 1L -> Seq(0.0f, -1.0f, 1.0f))
+    // array_max over (score, −cid) structs: Spark's order, lowest cid on ties
+    val sql = array_max(array(cents.map { case (cid, cv) =>
+      val inv = 1.0 / math.sqrt(cv.foldLeft(0.0)((a, v) => a + v.toDouble * v.toDouble))
+      struct((dot(cv.map(_.toDouble).toArray) * lit(inv)).as("score"), lit(-cid).as("negid"))
+    }: _*)).getField("negid") * -1
+    val rows = embs.select(Knn.ivfCellExpr(col("embedding"), cents), sql).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(rows(2)._2 == 0L, "SQL: all-NaN scores tie at the top")
+    rows.foreach { case (kernel, want) => assert(kernel == want) }
+  }
+}
