@@ -1,0 +1,175 @@
+#!/usr/bin/env python3
+"""Summarize a JFR recording of a perfbench run into a call-site table.
+
+    python3 scripts/jfr_sites.py <recording.jfr> [--top N] [--markdown]
+
+Counts the main thread's execution samples taken inside the engine's search
+calls of `perfbench/run.py` (under `graftbench.Workloads.query`), leaving
+out the samples of the harness's brute-force and exhaustive checks (under
+`Workloads.check`). Each sample is put in one engine call site (the
+innermost frame of a named search-path method, else the innermost `graft`
+frame; the plan runner's frames count for its caller) and in one Spark category (the first rule below that matches any
+frame of its stack), and the script prints the sites x categories table,
+then the closure-cleaner samples by the call that made the cleaned job
+(`Dataset.collect`, `Dataset.rdd`, a whole-stage-codegen node, an engine
+method).
+
+Record a profile on an unmodified, already built benchmark checkout; the
+stack depth must hold Spark's deep stacks:
+
+    JAVA_TOOL_OPTIONS="-XX:FlightRecorderOptions=stackdepth=1024 \\
+      -XX:StartFlightRecording=filename=/tmp/adhoc.jfr,settings=profile" \\
+      python3 perfbench/run.py --workload adhoc --seed 2 --seconds 14
+    python3 scripts/jfr_sites.py /tmp/adhoc.jfr
+
+It needs the JDK's `jfr` tool on the PATH.
+"""
+import argparse
+import collections
+import json
+import subprocess
+import sys
+
+# (category, frame prefixes): the first category with a frame under one of
+# its prefixes wins, so a closure clean inside an encoder resolution counts
+# as the clean
+CATEGORIES = [
+    ("ClosureCleaner", ("org/apache/spark/util/ClosureCleaner",
+                        "org/apache/spark/util/SparkClosureCleaner")),
+    ("codegen", ("org/apache/spark/sql/catalyst/expressions/codegen/",
+                 "org/apache/spark/sql/execution/WholeStageCodegenExec.doCodeGen")),
+    ("encoder reflection", ("org/apache/spark/sql/catalyst/ScalaReflection",
+                            "org/apache/spark/sql/catalyst/encoders/ScalaReflection",
+                            "scala/reflect/")),
+    ("Catalyst analysis", ("org/apache/spark/sql/catalyst/analysis/",
+                           "org/apache/spark/sql/execution/QueryExecution.assertAnalyzed",
+                           "org/apache/spark/sql/execution/QueryExecution.analyzed")),
+    ("ExpressionEncoder", ("org/apache/spark/sql/catalyst/encoders/",)),
+    ("optimizer", ("org/apache/spark/sql/catalyst/optimizer/",
+                   "org/apache/spark/sql/execution/QueryExecution.optimizedPlan")),
+    ("physical planning", ("org/apache/spark/sql/execution/QueryExecution.sparkPlan",
+                           "org/apache/spark/sql/execution/QueryExecution.executedPlan",
+                           "org/apache/spark/sql/execution/adaptive/")),
+    ("scheduler", ("org/apache/spark/scheduler/",)),
+    # the rest of a Dataset action's new SQL execution (listener events,
+    # result decoding)
+    ("SQL execution", ("org/apache/spark/sql/execution/SQLExecution",)),
+]
+
+# frames that name the call a cleaned job closure came from, and how to
+# print them
+CLEAN_CALLERS = ("org/apache/spark/sql/classic/Dataset.",
+                 "org/apache/spark/sql/execution/WholeStageCodegenExec", "graft/")
+CLEAN_NAMES = {"Dataset.collectFromPlan": "Dataset.collect",
+               "Dataset.materializedRdd$lzycompute": "Dataset.rdd"}
+
+# search-path methods reported as call sites (a runner frame counts for
+# the method that called the runner)
+SITES = {"BuiltIndex.termStatsOf", "Searcher.docnoLookup", "Searcher.docidLookup",
+         "TopK$.toDriver", "RangeScorer$.score", "Searcher.collectTopK",
+         "Searcher.scoredClauses", "ClausePlan.<init>"}
+
+ENTRY = "graftbench/Workloads.query"
+CHECK = "graftbench/Workloads.check"
+
+
+def frames(event):
+    return [f["method"]["type"]["name"] + "." + f["method"]["name"]
+            for f in event["values"]["stackTrace"]["frames"]]
+
+
+def short(frame):
+    """`graft/search/Searcher.docnoLookup` -> `Searcher.docnoLookup`."""
+    return frame.rsplit("/", 1)[-1]
+
+
+def site(stack):
+    """The innermost named search-path method of a stack (innermost frame
+    first), else its innermost engine frame."""
+    for f in stack:
+        s = short(f).split("$anonfun$")[0]
+        if f.startswith("graft/") and s in SITES:
+            return s
+    for f in stack:
+        if f.startswith("graft/"):
+            return short(f)
+    return "(other)"
+
+
+def clean_caller(stack):
+    """For a ClosureCleaner sample: the Dataset action, plan node or engine
+    method whose job closure is being cleaned."""
+    outer = max(i for i, f in enumerate(stack) if "ClosureCleaner" in f)
+    for f in stack[outer + 1:]:
+        if f.startswith(CLEAN_CALLERS):
+            name = short(f).split("$anonfun$")[0]
+            return CLEAN_NAMES.get(name, name)
+    return "(other)"
+
+
+def category(stack):
+    for name, prefixes in CATEGORIES:
+        if any(f.startswith(p) for f in stack for p in prefixes):
+            return name
+    return "other"
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("recording")
+    ap.add_argument("--top", type=int, default=12, help="call sites to list")
+    ap.add_argument("--markdown", action="store_true", help="print a markdown table")
+    a = ap.parse_args()
+    out = subprocess.run(["jfr", "print", "--json", "--stack-depth", "1024",
+                          "--events", "jdk.ExecutionSample", a.recording], check=True, capture_output=True, text=True).stdout
+    events = json.loads(out)["recording"]["events"]
+    table = collections.Counter()
+    cleans = collections.Counter()
+    truncated = 0
+    for e in events:
+        if e["values"]["sampledThread"]["javaName"] != "main":
+            continue
+        stack = frames(e)
+        if not any(f.startswith(ENTRY) for f in stack) or any(f.startswith(CHECK) for f in stack):
+            continue
+        truncated += e["values"]["stackTrace"]["truncated"]
+        cat = category(stack)
+        table[(site(stack), cat)] += 1
+        if cat == "ClosureCleaner":
+            cleans[clean_caller(stack)] += 1
+    total = sum(table.values())
+    by_site = collections.Counter()
+    by_cat = collections.Counter()
+    for (s, c), n in table.items():
+        by_site[s] += n
+        by_cat[c] += n
+    cats = [c for c in [n for n, _ in CATEGORIES] + ["other"] if by_cat[c]]
+    sites = [s for s, _ in by_site.most_common(a.top)]
+    rest = total - sum(by_site[s] for s in sites)
+    print(f"{total} main-thread samples in search calls, checks excluded"
+          + (f" ({truncated} truncated stacks: raise stackdepth)" if truncated else ""))
+    if a.markdown:
+        print("| site | total | " + " | ".join(cats) + " |")
+        print("|---|---:|" + "---:|" * len(cats))
+        for s in sites:
+            print(f"| `{s}` | {by_site[s]} | " + " | ".join(str(table[(s, c)]) for c in cats) + " |")
+        if rest:
+            print(f"| (other sites) | {rest} | " + " | ".join(
+                str(sum(n for (s, c2), n in table.items() if c2 == c and s not in sites))
+                for c in cats) + " |")
+        print(f"| **total** | {total} | " + " | ".join(str(by_cat[c]) for c in cats) + " |")
+    else:
+        w = max([len(s) for s in sites] + [12])
+        print(f"{'site':<{w}} {'total':>5}  " + "  ".join(f"{c[:12]:>12}" for c in cats))
+        for s in sites:
+            print(f"{s:<{w}} {by_site[s]:>5}  " + "  ".join(f"{table[(s, c)]:>12}" for c in cats))
+        if rest:
+            print(f"{'(other sites)':<{w}} {rest:>5}")
+        print(f"{'total':<{w}} {total:>5}  " + "  ".join(f"{by_cat[c]:>12}" for c in cats))
+    print(f"ClosureCleaner samples by the call whose job closure is cleaned: "
+          + (", ".join(f"{c} {n}" for c, n in cleans.most_common()) or "none"))
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())

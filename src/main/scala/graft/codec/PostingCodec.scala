@@ -152,41 +152,6 @@ object PostingCodec {
       }
     }
 
-  /** Decode a single block without touching earlier blocks' bytes: seek to
-    * the stored byte offsets; the first delta of block i is relative to
-    * block i-1's last docid (absolute for block 0). This is what makes
-    * block-max WAND skipping free of sequential decode.
-    */
-  def decodeBlock(blockIdx: Int, ndocs: Int,
-                  docBlob: Array[Byte], tfBlob: Array[Byte], dlBlob: Array[Byte],
-                  blockLastDocid: Array[Long],
-                  blockDocOff: Array[Int], blockTfOff: Array[Int],
-                  blockDlOff: Array[Int],
-                  posBlob: Array[Byte] = Array.emptyByteArray,
-                  blockPosOff: Array[Int] = Array.emptyIntArray): Iterator[DecodedPosting] = {
-    val start = blockIdx * BlockSize
-    val blockLen = math.min(BlockSize, ndocs - start)
-    val dr = new VarByte.Reader(docBlob, blockDocOff(blockIdx))
-    val tr = new VarByte.Reader(tfBlob, blockTfOff(blockIdx))
-    val lr = new VarByte.Reader(dlBlob, blockDlOff(blockIdx))
-    val withPos = posBlob.nonEmpty && blockPosOff.nonEmpty
-    val pr = if (withPos) new VarByte.Reader(posBlob, blockPosOff(blockIdx)) else null
-    val base = if (blockIdx == 0) -1L else blockLastDocid(blockIdx - 1)
-    new Iterator[DecodedPosting] {
-      private var i = 0
-      private var docid = if (base < 0) 0L else base
-      def hasNext: Boolean = i < blockLen
-      def next(): DecodedPosting = {
-        val d = dr.nextLong()
-        docid = if (i == 0 && base < 0) d else docid + d
-        i += 1
-        val tf = tr.nextInt()
-        DecodedPosting(docid, tf, lr.nextInt(),
-          if (withPos) readPositions(pr, tf) else NoPositions)
-      }
-    }
-  }
-
   def decodeBlobs(ndocs: Int, docBlob: Array[Byte], tfBlob: Array[Byte],
                   dlBlob: Array[Byte],
                   posBlob: Array[Byte] = Array.emptyByteArray): Iterator[DecodedPosting] = {

@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions.{col, lit}
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.charset.StandardCharsets
 import java.util.Properties
-import scala.collection.concurrent.TrieMap
 
 /** Handle on a persisted index directory — the engine-side analog of
   * `DirectoryReader.open(FSDirectory)` (`BatchSearch.java:181-184`). The
@@ -68,20 +67,21 @@ class BuiltIndex(val spark: SparkSession, val dir: String, val cfg: IndexConfig)
 
   /** Per-term (docFreq, collectionFreq) of the indexed `terms` (≙ Lucene's
     * `TermStatistics`, consumed at `BM25.java:61`); absent terms have no
-    * entry. Memoized per [[statsKey]] for the life of the JVM: an index's
-    * term statistics never change, so only terms the memo has not seen —
-    * hits and misses alike — cost one pruned term_stats lookup job.
+    * entry. Memoized per [[statsKey]] (bounded: [[BuiltIndex.MemoSnapshots]],
+    * [[BuiltIndex.MemoTerms]]): an index's term statistics never change, so
+    * only terms the memo does not hold — hits and misses alike — cost one
+    * pruned term_stats lookup job.
     */
   def termStatsOf(terms: Iterable[String]): Map[String, (Long, Long)] = {
     val memo = BuiltIndex.statsMemo(statsKey)
     val ts = terms.toSeq.distinct
-    val missing = ts.filterNot(memo.contains)
-    if (missing.nonEmpty) {
-      forTerms(termStats, missing).select("term", "df", "cf").collect()
-        .foreach(r => memo.put(r.getString(0), Some((r.getLong(1), r.getLong(2)))))
-      missing.foreach(memo.putIfAbsent(_, None)) // negative entries
-    }
-    ts.flatMap(t => memo.get(t).flatten.map(t -> _)).toMap
+    val known = ts.flatMap(t => Option(memo.get(t)).map(t -> _))
+    val missing = ts.filterNot(known.map(_._1).toSet)
+    val found = if (missing.isEmpty) Map.empty[String, (Long, Long)]
+      else graft.PlanRunner.rows(forTerms(termStats, missing).select("term", "df", "cf"))(r =>
+        r.getUTF8String(0).toString -> (r.getLong(1), r.getLong(2))).toMap
+    missing.foreach(t => memo.put(t, found.get(t))) // negative entries too
+    known.flatMap { case (t, v) => v.map(t -> _) }.toMap ++ found
   }
 
   /** Postings view for paths that never read positions (scoring, WAND,
@@ -191,14 +191,29 @@ class BuiltIndex(val spark: SparkSession, val dir: String, val cfg: IndexConfig)
 object BuiltIndex {
   private val PropsFile = IndexLayout.PropsFile
 
+  /** Most statistics surfaces ([[BuiltIndex.statsKey]]) holding a term-stat
+    * memo, and most terms, negative entries included, per memo: least
+    * recently used first out. Constants, not settings: they bound the
+    * driver heap a long-lived session (streaming snapshots, many distinct
+    * queries) spends on the memo, about 20 MB at most.
+    */
+  private[graft] val MemoSnapshots = 8
+  private[graft] val MemoTerms = 1 << 14
+
   /** Term-stat memos of [[BuiltIndex.termStatsOf]], one per
     * [[BuiltIndex.statsKey]]: every handle on the same immutable statistics
     * surface (fresh searchers, delete overlays) shares one.
     */
-  private val statsMemos = TrieMap.empty[String, TrieMap[String, Option[(Long, Long)]]]
+  private val statsMemos = lru[String, java.util.Map[String, Option[(Long, Long)]]](MemoSnapshots)
 
-  private def statsMemo(key: String): TrieMap[String, Option[(Long, Long)]] =
-    statsMemos.getOrElseUpdate(key, TrieMap.empty)
+  private[graft] def statsMemo(key: String): java.util.Map[String, Option[(Long, Long)]] =
+    statsMemos.computeIfAbsent(key, _ => lru(MemoTerms))
+
+  // a synchronized access-ordered map evicting past `cap` entries
+  private def lru[K, V](cap: Int): java.util.Map[K, V] =
+    java.util.Collections.synchronizedMap(new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = size > cap
+    })
 
   /** `c IN values` as a set-valued predicate: the optimizer turns an IN
     * list longer than `spark.sql.optimizer.inSetConversionThreshold` into

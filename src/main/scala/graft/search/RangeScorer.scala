@@ -3,7 +3,8 @@ package graft.search
 import graft.codec.{PostingCodec, VarByte}
 import graft.index.{BuiltIndex, IndexBuilder, PostingRun}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions.col
 import org.apache.spark.util.LongAccumulator
 
@@ -102,11 +103,12 @@ private[search] object RangeScorer extends Serializable {
   /** Most bucket partitions a single P = 1 task reads without an exchange. */
   val FewBuckets = 8
 
-  // derived once: a product encoder costs milliseconds of Scala
-  // reflection on the driver, once per search if derived per call
-  val RunEnc: Encoder[PostingRun] = Encoders.product[PostingRun]
-  val InputEnc: Encoder[RangeInput] = Encoders.product[RangeInput]
-  val ScoredEnc: Encoder[(String, Long, Float)] = Encoders.product[(String, Long, Float)]
+  // derived once, as expression encoders: a product encoder costs
+  // milliseconds of Scala reflection on the driver, and a typed operator
+  // given a plain `Encoders.product` rebuilds its expressions every call
+  val RunEnc: Encoder[PostingRun] = ExpressionEncoder[PostingRun]()
+  val InputEnc: Encoder[RangeInput] = ExpressionEncoder[RangeInput]()
+  val ScoredEnc: Encoder[(String, Long, Float)] = ExpressionEncoder[(String, Long, Float)]()
 
   /** WAND state of a pruned search: the qids it prunes, k, and the
     * decoded / skipped block counters.
@@ -195,11 +197,15 @@ private[search] object RangeScorer extends Serializable {
       fields.map(_ -> clauses.fields.fold(Set.empty[String])(_.terms.keySet))
     val exchange = ranges.p > 1 || reads.map { case (ix, ts) => ix.bucketsOf(ts) }.sum > FewBuckets
     val salts = if (exchange) IndexBuilder.saltsFor(ranges.p) else Array(0)
-    def view(ix: BuiltIndex) = if (posTerms.nonEmpty) ix.postings
-      else if (wand.nonEmpty || ranges.p > 1) ix.postingsScoring else ix.postingsDecode
-    val runs = reads.zipWithIndex.collect { case ((ix, ts), f) if ts.nonEmpty =>
-      (f, ix.forTerms(view(ix), ts).as(RunEnc))
+    // only the positional terms read the positions column
+    def view(ix: BuiltIndex) =
+      if (wand.nonEmpty || ranges.p > 1) ix.postingsScoring else ix.postingsDecode
+    def read(ix: BuiltIndex, ts: Set[String], f: Int): DataFrame = {
+      val (pos, plain) = if (f == 0) ts.partition(posTerms) else (Set.empty[String], ts)
+      Seq(pos -> ix.postings, plain -> view(ix)).collect { case (t, v) if t.nonEmpty =>
+        ix.forTerms(v, t) }.reduce(_ union _)
     }
+    val runs = reads.zipWithIndex.collect { case ((ix, ts), f) if ts.nonEmpty => (f, read(ix, ts, f)) }
     def inputs(run: PostingRun, f: Int): Iterator[RangeInput] =
       cut(run, ranges, f == 0 && posTerms(run.term)).map { case (r, s) => RangeInput(salts(r), r, f, s) }
     def task(in: Iterator[RangeInput]): Iterator[(String, Long, Float)] =
@@ -209,9 +215,9 @@ private[search] object RangeScorer extends Serializable {
       case Seq() => index.spark.emptyDataset(ScoredEnc)
       // the common small search: one task over the runs, no exchange
       case Seq((0, rs)) if !exchange =>
-        rs.coalesce(1).mapPartitions(it => task(it.flatMap(inputs(_, 0))))(ScoredEnc)
+        rs.coalesce(1).as(RunEnc).mapPartitions(it => task(it.flatMap(inputs(_, 0))))(ScoredEnc)
       case _ =>
-        val in = runs.map { case (f, rs) => rs.flatMap(inputs(_, f))(InputEnc) }.reduce(_ union _)
+        val in = runs.map { case (f, rs) => rs.as(RunEnc).flatMap(inputs(_, f))(InputEnc) }.reduce(_ union _)
         (if (exchange) in.repartition(ranges.p, col("key")) else in.coalesce(1))
           .mapPartitions(task)(ScoredEnc)
     }

@@ -1,9 +1,12 @@
 package graft.search
 
+import graft.PlanRunner
 import graft.analysis.Analyzer
 import graft.codec.PostingCodec
 import graft.index.BuiltIndex
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
@@ -496,12 +499,10 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
   /** docno → docid for a driver-bounded docno set: one pushed-down point
     * lookup on the doc table, no job for no docnos.
     */
-  private def docidLookup(docnos: Seq[String]): Map[String, Long] = {
-    import spark.implicits._
+  private def docidLookup(docnos: Seq[String]): Map[String, Long] =
     if (docnos.isEmpty) Map.empty
-    else index.docs.where(col("docno").isin(docnos.distinct: _*))
-      .select("docno", "docid").as[(String, Long)].collect().toMap
-  }
+    else PlanRunner.rows(index.docs.where(col("docno").isin(docnos.distinct: _*))
+      .select("docno", "docid"))(r => r.getUTF8String(0).toString -> r.getLong(1)).toMap
 
   /** docid → docno point lookup for a driver-bounded docid set, one job:
     * grp partition pruning over the docid-sorted doc files, plus either a
@@ -511,19 +512,21 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     * predicates ([[BuiltIndex.inSet]]): generated code references them, so a
     * fresh search compiles no class.
     */
-  private def docnoLookup(ids: Seq[Long]): Map[Long, String] = {
+  private[graft] def docnoLookup(ids: Seq[Long]): Map[Long, String] = {
     if (ids.isEmpty) return Map.empty
     val docShift = index.cfg.groupShift + index.cfg.mergeShift
     val sorted = ids.distinct.sorted.toArray
     val grps = sorted.map(_ >> docShift).distinct.toSeq
-    val base = index.docs.where(BuiltIndex.inSet(spark, "grp", grps, -_.toLong))
-      .select("docid", "docno").as(Searcher.DocnoEnc)
+    val inGrps = BuiltIndex.inSet(spark, "grp", grps, -_.toLong)
+    val read = (r: InternalRow) => r.getLong(0) -> r.getUTF8String(1).toString
     if (sorted.length <= 4096)
-      base.where(BuiltIndex.inSet(spark, "docid", sorted.toSeq, -_.toLong)).collect().toMap
+      PlanRunner.rows(index.docs.where(inGrps && BuiltIndex.inSet(spark, "docid", sorted.toSeq, -_.toLong))
+        .select("docid", "docno"))(read).toMap
     else {
       val idsB = spark.sparkContext.broadcast(sorted)
-      try base.filter(t => java.util.Arrays.binarySearch(idsB.value, t._1) >= 0)
-        .collect().toMap
+      try PlanRunner.partitions(index.docs.where(inGrps).select("docid", "docno"))(
+        _.filter(r => java.util.Arrays.binarySearch(idsB.value, r.getLong(0)) >= 0).map(read).toArray)
+        .flatten.toMap
       finally idsB.destroy()
     }
   }
@@ -1275,7 +1278,7 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
       collapseKeys.nonEmpty, filterDocids.nonEmpty, index.cfg.indexPositions,
       Scorer.byName(scorerName),
       CollStats(index.stats.max_doc, index.stats.sum_total_term_freq), index.termStatsOf)
-    if (plan.isEmpty) return spark.emptyDataset[(String, Long, Float)]
+    if (plan.isEmpty) return spark.emptyDataset(RangeScorer.ScoredEnc)
     val scorer = plan.scorer
 
     // Resolve excluded docnos → docids (tiny point lookup on the doc table,
@@ -1310,13 +1313,11 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     // its two consumers (score filter + candidate anti-join) share ONE
     // computation — typed-operator plans defeat Catalyst's exchange reuse,
     // so without this the whole postings decode would run twice.
-    val evaluated: Dataset[(String, Long, Float)] =
-      if (trees.isEmpty) spark.emptyDataset[(String, Long, Float)]
-      else {
-        val treeEval = plan.treeEval
-        val ev = ranged(() => new Searcher.TreeRuns(treeEval, slots, scorer))
-        if (plan.complementQids.isEmpty) ev else ev.localCheckpoint(eager = false)
-      }
+    lazy val evaluated: Dataset[(String, Long, Float)] = {
+      val treeEval = plan.treeEval
+      val ev = ranged(() => new Searcher.TreeRuns(treeEval, slots, scorer))
+      if (plan.complementQids.isEmpty) ev else ev.localCheckpoint(eager = false)
+    }
     val scores: Dataset[(String, Long, Float)] =
       if (trees.nonEmpty) evaluated.filter(t => !t._3.isNaN)
       else {
@@ -1396,18 +1397,20 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     val top = TopK.toDriver(scored, k)
     if (top.isEmpty) return spark.emptyDataset(Searcher.LineEnc)
     val docnoById = docnoLookup(top.flatMap(_._2.iterator.map(_._1)))
-    val lines: Seq[RunLine] = top.flatMap { case (qid, hits) =>
+    val lines = new java.util.ArrayList[org.apache.spark.sql.Row]()
+    top.foreach { case (qid, hits) =>
       val seen = scala.collection.mutable.HashSet.empty[String]
-      hits.iterator.zipWithIndex.flatMap { case ((docid, score), rank) =>
+      hits.iterator.zipWithIndex.foreach { case ((docid, score), rank) =>
         // inner-join semantics: a docid absent from the doc table drops
         docnoById.get(docid) match {
           case Some(docno) if seen.add(docno) =>
-            Some(RunLine(qid, docno, rank, score, runtag))
-          case _ => None
+            lines.add(org.apache.spark.sql.Row(qid, docno, rank, score, runtag))
+          case _ =>
         }
       }
     }
-    spark.createDataset(lines)(Searcher.LineEnc)
+    // external rows: no per-call serializer is generated for them
+    spark.createDataFrame(lines, Searcher.LineEnc.schema).as(Searcher.LineEnc)
   }
 
   /** Distinct matching DOCNOS per query under OR semantics (≙ the
@@ -1571,11 +1574,10 @@ object Searcher {
   val MaxDriverHits: Int = 1 << 20
 
   // encoders of every search's tail, derived once (see RangeScorer.RunEnc)
-  private[search] val LineEnc: Encoder[RunLine] = Encoders.product[RunLine]
-  private val DocnoEnc: Encoder[(Long, String)] = Encoders.product[(Long, String)]
-  private val KeyDocEnc: Encoder[(String, Long)] = Encoders.product[(String, Long)]
+  private[search] val LineEnc: Encoder[RunLine] = ExpressionEncoder[RunLine]()
+  private val KeyDocEnc: Encoder[(String, Long)] = ExpressionEncoder[(String, Long)]()
   private val ExplainEnc: Encoder[(String, String, String, Long, Long, Long)] =
-    Encoders.product[(String, String, String, Long, Long, Long)]
+    ExpressionEncoder[(String, String, String, Long, Long, Long)]()
 
   /** True iff `docid` survives the broadcast tombstone overlay (None =
     * delete-free index). Static so executor closures capture only the

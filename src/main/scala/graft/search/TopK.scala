@@ -1,6 +1,7 @@
 package graft.search
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.types.{FloatType, LongType, StringType}
 
 /** The search engine's one bounded top-k collector (≙ Lucene's `HitQueue`,
   * the bounded heap the reference's boolean scorer collects into,
@@ -103,24 +104,24 @@ private[graft] object TopK {
     }
 
   /** Per-partition heaps pipelined into the stage that produced `scored`,
-    * then the driver merge, keys in ascending order: one job beyond the
-    * stages `scored` already needs. The collected rows are ≤ k × |keys| × partitions by
-    * construction, and the merge asserts it.
+    * then the driver merge, keys in ascending order: one job
+    * ([[graft.PlanRunner]]) beyond the stages `scored` already needs. The
+    * collected rows are ≤ k × |keys| × partitions by construction, and the
+    * merge asserts it.
     */
   def toDriver(scored: Dataset[(String, Long, Float)], k: Int)
       : Seq[(String, Array[(Long, Float)])] = {
-    // one job, its function defined here: Spark cleans a job's closure by
-    // parsing the class that defines it, and this one is small (the
-    // Iterator-only runJob overloads wrap it in a SparkContext closure)
-    val rdd = scored.rdd
-    val parts = new Array[Array[(String, Long, Float)]](rdd.getNumPartitions)
-    rdd.sparkContext.runJob(rdd, (_: org.apache.spark.TaskContext, it: Iterator[(String, Long, Float)]) =>
-      collect(k, it).toArray, parts.indices, (i: Int, out: Array[(String, Long, Float)]) => parts(i) = out)
+    // the heaps read the plan's own rows, so its columns must already be
+    // the tuple's types (`as` would upcast an int docid in a deserializer)
+    val types = scored.queryExecution.analyzed.output.map(_.dataType)
+    require(types == Seq(StringType, LongType, FloatType), s"scored rows must be (string, long, float): $types")
+    val parts = graft.PlanRunner.partitions(scored)(it =>
+      collect(k, it.map(r => (r.getUTF8String(0).toString, r.getLong(1), r.getFloat(2)))).toArray)
     val rows = parts.flatten
     val keys = rows.iterator.map(_._1).distinct.size
-    require(rows.length.toLong <= k.toLong * keys * rdd.getNumPartitions,
+    require(rows.length.toLong <= k.toLong * keys * parts.length,
       s"top-k collector emitted ${rows.length} rows, over its bound of " +
-        s"k=$k × $keys keys × ${rdd.getNumPartitions} partitions")
+        s"k=$k × $keys keys × ${parts.length} partitions")
     byKey(k, rows.iterator).sortBy(_._1)
   }
 

@@ -17,7 +17,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
 object Explain {
   /** Runs `body` and returns the formatted executed plans of its queries
     * that scan postings: a search collects its top-k on the driver, so the
-    * Dataset it returns only plans a local relation.
+    * Dataset it returns only plans a local relation. Its driver collects go
+    * through [[graft.PlanRunner]], which reports them; other queries reach
+    * the listener.
     */
   private[graft] def scoringPlans(spark: SparkSession)(body: => Unit): Seq[String] = {
     val seen = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
@@ -27,7 +29,7 @@ object Explain {
     }
     spark.listenerManager.register(listener)
     try {
-      body
+      graft.PlanRunner.observing(seen.add)(body)
       spark.range(1).toDF("explain_sentinel").collect() // delivered last, in order
       Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
         .takeWhile(qe => qe != null && !qe.analyzed.output.exists(_.name == "explain_sentinel"))

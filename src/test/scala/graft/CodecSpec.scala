@@ -138,3 +138,20 @@ class CodecSpec extends AnyFunSuite {
     }
   }
 }
+
+object CodecSpec {
+
+  /** Block `bi` of `run` decoded alone from its stored byte offsets, as the
+    * range task's block reader seeks: the block's first delta is relative
+    * to block bi−1's last docid (absolute for block 0).
+    */
+  def blockAt(run: EncodedRun, bi: Int): Seq[DecodedPosting] = {
+    def from(blob: Array[Byte], off: Array[Int]) =
+      if (blob.isEmpty) blob else java.util.Arrays.copyOfRange(blob, off(bi), blob.length)
+    val base = if (bi == 0) 0L else run.blockLastDocid(bi - 1)
+    val n = math.min(PostingCodec.BlockSize, run.ndocs - bi * PostingCodec.BlockSize)
+    PostingCodec.decodeBlobs(n, from(run.docBlob, run.blockDocOff), from(run.tfBlob, run.blockTfOff),
+      from(run.dlBlob, run.blockDlOff), from(run.posBlob, run.blockPosOff))
+      .map(p => p.copy(docid = base + p.docid)).toSeq
+  }
+}

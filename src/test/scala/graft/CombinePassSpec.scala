@@ -49,9 +49,10 @@ class CombinePassSpec extends AnyFunSuite {
       IndexConfig(analyzer = AnalyzerConfig()))
   }
 
-  /** Executed plans of every query `body` runs on this thread. The listener
-    * bus delivers in order, so the sentinel query's arrival means every
-    * plan of `body` has been seen.
+  /** Executed plans of every query `body` runs on this thread: those of
+    * the driver collects through [[PlanRunner]], which reports them, and
+    * the listener's. The listener bus delivers in order, so the sentinel
+    * query's arrival means every plan of `body` has been seen.
     */
   private def plansOf(body: => Unit): Seq[SparkPlan] = {
     val sentinel = "combine_pass_sentinel"
@@ -65,7 +66,7 @@ class CombinePassSpec extends AnyFunSuite {
     }
     spark.listenerManager.register(listener)
     try {
-      body
+      PlanRunner.observing(qe => plans.add(qe.executedPlan))(body)
       spark.range(1).toDF(sentinel).collect()
       assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS),
         "listener bus did not drain")

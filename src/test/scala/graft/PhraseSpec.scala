@@ -30,9 +30,7 @@ class PhraseSpec extends AnyFunSuite {
     }
     // block-seek decode of the middle block matches the full decode
     val bi = 1
-    val blk = PostingCodec.decodeBlock(bi, run.ndocs, run.docBlob, run.tfBlob,
-      run.dlBlob, run.blockLastDocid, run.blockDocOff, run.blockTfOff,
-      run.blockDlOff, run.posBlob, run.blockPosOff).toSeq
+    val blk = CodecSpec.blockAt(run, bi)
     val expect = decoded.slice(bi * PostingCodec.BlockSize, (bi + 1) * PostingCodec.BlockSize)
     assert(blk.map(_.docid) == expect.map(_.docid))
     blk.zip(expect).foreach { case (a, b) => assert(a.pos.toSeq == b.pos.toSeq) }

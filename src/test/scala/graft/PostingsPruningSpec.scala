@@ -99,4 +99,16 @@ class PostingsPruningSpec extends AnyFunSuite {
     assert(s.search(Seq(Topic("t1", "alpha gamma")), 5).collect().nonEmpty &&
       s.searchQuery(Seq(Topic("p1", "\"alpha beta\"")), 5).collect().nonEmpty)
   }
+
+  test("a mixed phrase + term plan reads positions for the phrase's terms only") {
+    val s = new Searcher(idx)
+    val mixed = s.scoredClauses(Seq(graft.search.WeightedClause("m1", 1, "gamma", 1.0f)),
+      phraseClauses = Seq(graft.search.PhraseClause("m1", 0, Seq("alpha" -> 0, "beta" -> 1), 1.0f)))
+    val scans = scanFields(mixed.toDF())
+    assert(scans.size == 2, s"one positional and one plain scan: $scans")
+    assert(scans.count(_.contains("pos_blob")) == 1, scans)
+    assert(scans.exists(f => f.contains("doc_blob") && !f.contains("pos_blob") && !f.contains("block_pos_off")),
+      scans)
+    assert(mixed.collect().length == 60)
+  }
 }

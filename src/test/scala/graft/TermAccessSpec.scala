@@ -65,4 +65,25 @@ class TermAccessSpec extends AnyFunSuite {
     }
     assert(TestSpark.jobsOf { assert(idx.termStatsOf(Nil).isEmpty) } == 0)
   }
+
+  test("termStatsOf: the memo is bounded, least recently used first out") {
+    assert(idx.termStatsOf(Seq("alpha", "beta")).size == 2)
+    // MemoTerms − 1 absent terms, "beta" read again halfway: every held
+    // entry read before "beta" is evicted, the negative ones counted
+    val fresh = (1 until BuiltIndex.MemoTerms).map(i => s"absent$i")
+    val (h1, h2) = fresh.splitAt(fresh.size / 2)
+    assert(idx.termStatsOf(h1).isEmpty)
+    assert(idx.termStatsOf(Seq("beta")) == Map("beta" -> (1L, 2L)))
+    assert(idx.termStatsOf(h2).isEmpty)
+    assert(BuiltIndex.statsMemo(idx.statsKey).size == BuiltIndex.MemoTerms)
+    var got = Map.empty[String, (Long, Long)]
+    assert(TestSpark.jobsOf { got = idx.termStatsOf(Seq("beta")) } == 0)
+    assert(TestSpark.jobsOf { got = idx.termStatsOf(Seq("alpha")) } == 1)
+    assert(got == Map("alpha" -> (2L, 2L)))
+
+    // past MemoSnapshots statistics surfaces, the least recent one's memo goes
+    BuiltIndex.statsMemo("evict-0").put("alpha", None)
+    (1 to BuiltIndex.MemoSnapshots).foreach(i => BuiltIndex.statsMemo(s"evict-$i"))
+    assert(BuiltIndex.statsMemo("evict-0").isEmpty)
+  }
 }

@@ -15,8 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - engine ≡ brute force (docno, rank and score bits) for OR, AND,
   *     minShouldMatch, a repeated topic term, a delete overlay, and one
   *     batch under 1 and 4 shuffle partitions;
-  *   - job-count pins for a memo-warm single-topic search and for a batch
-  *     whose hits take the broadcast docno lookup (> 4,096 ids).
+  *   - job-count pins for a fresh and a memo-warm single-topic search and
+  *     for a batch whose hits take the broadcast docno lookup (> 4,096 ids).
   */
 class TopKCollectorSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -181,6 +181,15 @@ class TopKCollectorSpec extends AnyFunSuite {
     // scoring: one range task with no exchange, the heap in its stage;
     // then one docno point lookup
     assert(jobs == 2, s"jobs=$jobs")
+  }
+
+  test("job count: a fresh single-topic OR search at k=10 runs 3 jobs") {
+    // terms no other test of this index reads: the term-stats memo is cold
+    var lines = Array.empty[RunLine]
+    val jobs = TestSpark.jobsOf { lines = new Searcher(fullIdx).search(Seq(Topic("f", "v6 v10")), k = 10).collect() }
+    assert(lines.length == 10)
+    // one term-stats lookup, one range task, one docno point lookup
+    assert(jobs == 3, s"jobs=$jobs")
   }
 
   test("codegen: fresh single-topic searches compile no class") {
