@@ -1373,8 +1373,8 @@ object SparkEntry {
         .orderBy("rank")
     }),
     // training-pipeline op: stratified per-group sampling — the n smallest
-    // md5(salt:docno) per lang, via a bounded-heap aggregator (map-side
-    // partials; no stratum is ever sorted whole)
+    // md5(salt:docno) per lang, via the bounded per-group ranking (≤ n
+    // rows per stratum per map partition; no stratum is ever sorted whole)
     "q_strat_sample" -> ((s, dir) => {
       ops.Curation.stratifiedSample(corpus.Corpus.fromDocuments(s, dir),
           "lang", SampleSalt, 5)
@@ -1385,7 +1385,7 @@ object SparkEntry {
     // embedding to its nearest TRAINED quantizer cell (ivfTrain is
     // bit-deterministic, ivfCellExpr a narrow codegen fold — one pass, no
     // shuffle at any corpus size), then the n smallest md5(salt:docno) per
-    // cell via the bounded-heap stratified sampler. The oracle replays
+    // cell via the bounded stratified sampler. The oracle replays
     // training, assignment argmax and the md5 window end-to-end.
     "q_cluster_sample" -> ((s, dir) => {
       val emb = readTable(s, s"$dir/embeddings.parquet")
@@ -1532,7 +1532,7 @@ object SparkEntry {
     // in one list keep a single term; fused order (rrf desc, docno asc).
     // The final window runs over ≤ 2k rows per query BY CONSTRUCTION (two
     // top-k lists), so it stays bounded at any corpus scale — the heavy
-    // lifting happened inside the two bounded-heap retrievers. The oracle
+    // lifting happened inside the two bounded top-k retrievers. The oracle
     // replays both retrievers and the fusion arithmetic (same IEEE op
     // order) in SQL.
     "q_hybrid_topk" -> ((s, dir) => {

@@ -209,8 +209,10 @@ object BuiltIndex {
   private[graft] def statsMemo(key: String): java.util.Map[String, Option[(Long, Long)]] =
     statsMemos.computeIfAbsent(key, _ => lru(MemoTerms))
 
-  // a synchronized access-ordered map evicting past `cap` entries
-  private def lru[K, V](cap: Int): java.util.Map[K, V] =
+  /** A synchronized access-ordered map evicting past `cap` entries, least
+    * recently used first.
+    */
+  private[graft] def lru[K, V](cap: Int): java.util.Map[K, V] =
     java.util.Collections.synchronizedMap(new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
       override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = size > cap
     })

@@ -1,5 +1,6 @@
 package graft.index
 
+import graft.search.TopK
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -114,13 +115,9 @@ object TrigramIndex {
     */
   def substringTopK(corpus: DataFrame, gramTable: DataFrame,
                     needles: Seq[(String, String)], k: Int): DataFrame =
-    verifiedHits(corpus, gramTable, needles)
-      .withColumn("rank",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy("qid")
-          .orderBy(desc("hits"), asc("docno"))) - 1)
-      .where(col("rank") < k)
-      .select(col("qid"), col("docno"), col("hits"), col("rank").cast("long").as("rank"))
+    TopK.ranked(verifiedHits(corpus, gramTable, needles),
+        Seq("qid"), Seq(desc("hits"), asc("docno")), k)
+      .select(col("qid"), col("docno"), col("hits"), col("rank"))
 
   /** The shared candidate + verify stage behind [[substringTopK]] and
     * [[grepSearch]]: (qid, docno, hits > 0) for each needle.
@@ -179,19 +176,9 @@ object TrigramIndex {
       case Some(l) => hits.join(attrs.where(col("lang") === l), Seq("docno"))
       case None => hits.join(attrs, Seq("docno"))
     }
-    val winner = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid", "repo")
-      .orderBy(desc("hits"), asc("docno"))
-    val ranked = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid")
-      .orderBy(desc("hits"), asc("docno"))
-    filtered
-      .withColumn("w", row_number().over(winner))
-      .where(col("w") === 1)
-      .withColumn("rank", row_number().over(ranked) - 1)
-      .where(col("rank") < k)
-      .select(col("qid"), col("docno"), col("repo"), col("hits"),
-        col("rank").cast("long").as("rank"))
+    val order = Seq(desc("hits"), asc("docno"))
+    TopK.ranked(TopK.ranked(filtered, Seq("qid", "repo"), order, 1), Seq("qid"), order, k)
+      .select(col("qid"), col("docno"), col("repo"), col("hits"), col("rank"))
   }
 
   /** Expand a restricted regex — literal text with non-nested `(a|b|c)`
@@ -308,13 +295,7 @@ object TrigramIndex {
       .toDF("qid", "docno", "hits")
       .where(col("hits") > 0)
 
-    verified
-      .withColumn("rank",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy("qid")
-          .orderBy(desc("hits"), asc("docno"))) - 1)
-      .where(col("rank") < k)
-      .select(col("qid"), col("docno"), col("hits").cast("long").as("hits"),
-        col("rank").cast("long").as("rank"))
+    TopK.ranked(verified, Seq("qid"), Seq(desc("hits"), asc("docno")), k)
+      .select(col("qid"), col("docno"), col("hits").cast("long").as("hits"), col("rank"))
   }
 }

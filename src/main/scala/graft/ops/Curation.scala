@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.search.TopK
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -136,30 +137,19 @@ object Curation {
   /** Deterministic stratified sampling: per group (stratum), keep the `n`
     * documents with the smallest `md5(salt:docno)` (docno tie-break) —
     * the fixed-quota-per-stratum draw a training-mix builder takes per
-    * language/source. A bounded-heap [[org.apache.spark.sql.expressions.Aggregator]]
-    * gives map-side partial aggregation: the per-group shuffle moves at
-    * most `n` rows per map partition, never the stratum's row stream, and
-    * no stratum is ever sorted whole. Output (strat, docno, rank) with
-    * rank 1..n in sample order.
+    * language/source. The per-stratum draw is [[TopK.ranked]]:
+    * the shuffle moves at most `n` rows per stratum per map partition,
+    * never the stratum's row stream, and no stratum is ever sorted whole.
+    * Output (strat, docno, rank) with rank 1..n in sample order.
     */
   def stratifiedSample(corpus: DataFrame, groupCol: String, salt: String,
                        n: Int): DataFrame = {
     require(n > 0, s"sample size must be positive, got $n")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val agg = new BoundedMinAgg(n, implicitly[org.apache.spark.sql.Encoder[Seq[(String, String)]]])
-    corpus.select(col(groupCol).cast("string").as("strat"),
+    TopK.ranked(corpus.select(col(groupCol).cast("string").as("strat"),
         md5(concat_ws(":", lit(salt), col("docno"))).as("skey"),
-        col("docno"))
-      .as[(String, String, String)]
-      .groupByKey(_._1)
-      .agg(agg.toColumn)
-      .flatMap { case (strat, picks) =>
-        picks.iterator.zipWithIndex.map { case ((_, docno), i) =>
-          (strat, docno, (i + 1).toLong)
-        }
-      }
-      .toDF("strat", "docno", "rank")
+        col("docno").cast("string").as("docno")),
+      Seq("strat"), Seq(col("skey").asc, col("docno").asc), n)
+      .select(col("strat"), col("docno"), (col("rank") + 1).as("rank"))
   }
 
   /** Distributed exclusive prefix sum. Input columns (skey, docno, w);
@@ -205,26 +195,4 @@ object Curation {
       }
     }.toDF("docno", "w", "cum_before")
   }
-}
-
-/** Bounded n-smallest aggregator over ((strat,) skey, docno) — the
-  * sampling sibling of the search TopK collector: ascending (skey, docno) order,
-  * buffer capped at n with amortized compaction, mergeable partials.
-  */
-final class BoundedMinAgg(n: Int,
-                          enc: org.apache.spark.sql.Encoder[Seq[(String, String)]])
-    extends org.apache.spark.sql.expressions.Aggregator[
-      (String, String, String), Seq[(String, String)], Seq[(String, String)]] {
-  private def compact(s: Seq[(String, String)]): Seq[(String, String)] =
-    s.sorted.take(n)
-  def zero: Seq[(String, String)] = Vector.empty
-  def reduce(buf: Seq[(String, String)], in: (String, String, String)): Seq[(String, String)] = {
-    val b2 = buf :+ ((in._2, in._3))
-    if (b2.size >= 4 * n) compact(b2) else b2
-  }
-  def merge(a: Seq[(String, String)], b: Seq[(String, String)]): Seq[(String, String)] =
-    compact(a ++ b)
-  def finish(buf: Seq[(String, String)]): Seq[(String, String)] = compact(buf)
-  def bufferEncoder: org.apache.spark.sql.Encoder[Seq[(String, String)]] = enc
-  def outputEncoder: org.apache.spark.sql.Encoder[Seq[(String, String)]] = enc
 }

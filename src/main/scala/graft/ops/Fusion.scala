@@ -1,7 +1,7 @@
 package graft.ops
 
+import graft.search.TopK
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Rank-list fusion for hybrid retrieval (sparse BM25 + dense ANN).
@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * Scale: both inputs are already per-query top-k lists, so the fused
   * stream holds ≤ 2k rows per query BY CONSTRUCTION and the final
   * per-query window is bounded at any corpus size — the unbounded work
-  * happened inside the retrievers' bounded-heap collectors.
+  * happened inside the retrievers' bounded top-k collectors.
   */
 object Fusion {
 
@@ -33,9 +33,7 @@ object Fusion {
       .select(col("qid"), col("docno"),
         (coalesce(lit(1.0) / (base + col("r_sparse")), lit(0.0))
           + coalesce(lit(1.0) / (base + col("r_dense")), lit(0.0))).as("rrf"))
-    val w = Window.partitionBy("qid").orderBy(desc("rrf"), asc("docno"))
-    fused.withColumn("rank", row_number().over(w).cast("long") - 1)
-      .where(col("rank") < k)
+    TopK.ranked(fused, Seq("qid"), Seq(desc("rrf"), asc("docno")), k)
       .select(col("qid"), col("docno"), col("rank"))
   }
 }

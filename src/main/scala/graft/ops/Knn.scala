@@ -1,7 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder}
-import org.apache.spark.sql.expressions.Aggregator
+import graft.search.TopK
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`array<float>`).
@@ -15,13 +15,11 @@ import org.apache.spark.sql.functions._
   *   come from matching `nProbe`-neighborhood buckets instead of scanning
   *   everything.
   *
-  * The per-query top-k is a bounded-heap typed Aggregator (the same
-  * (score desc, id asc) contract as the search engine's `TopK`): partial
-  * heaps of ≤4k entries merge map-side, so no reducer ever holds — let
-  * alone sorts — a full per-query candidate list. (Round 1 used
-  * `Window.partitionBy(qid)`, which funnels ALL scored rows of a query
-  * through one reducer; at 10^9 vectors that is a single-task sort/OOM.
-  * VERDICT r1 "What's wrong" #2.)
+  * The per-query top-k is the engine's one bounded ranking,
+  * [[graft.search.TopK.ranked]] (cos desc, vec_id asc, Spark's order, so a
+  * NaN cosine ranks first): each map partition keeps ≤ k rows per query
+  * below the exchange, so no reducer ever holds — let alone sorts — a
+  * full per-query candidate list.
   *
   * All arithmetic is promoted to Double before summation (sequential
   * left-to-right, matching the DuckDB oracle's list_cosine_similarity).
@@ -84,23 +82,14 @@ object Knn {
   def cosineFromParts(dotAB: Column, normA: Column, normB: Column): Column =
     dotAB / (normA * normB)
 
-  /** Rank the (qid, vec_id, cos) candidate stream to 0-based top-k ranks
-    * per qid, order (cos desc, vec_id asc), via the bounded heap.
+  /** Rank the (qid, vec_id, cos) candidate stream to 0-based Int top-k
+    * ranks per qid, order (cos desc, vec_id asc), via [[TopK.ranked]].
     */
-  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
-    val spark = scored.sparkSession
-    import spark.implicits._
-    val agg = new VecTopKAgg(k, implicitly[Encoder[Seq[(Long, Double)]]])
-    scored.select(col("qid").cast("long"), col("vec_id").cast("long"),
-        col("cos").cast("double"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .agg(agg.toColumn)
-      .flatMap { case (qid, hits) =>
-        hits.iterator.zipWithIndex.map { case ((vecId, _), i) => (qid, vecId, i) }
-      }
-      .toDF("qid", "vec_id", "rank")
-  }
+  private def rankTopK(scored: DataFrame, k: Int): DataFrame =
+    TopK.ranked(scored.select(col("qid").cast("long").as("qid"),
+        col("vec_id").cast("long").as("vec_id"), col("cos").cast("double").as("cos")),
+      Seq("qid"), Seq(col("cos").desc, col("vec_id").asc), k)
+      .select(col("qid"), col("vec_id"), col("rank").cast("int").as("rank"))
 
   /** Exact top-k cosine neighbors for each query vector.
     * `queries`: (qid long, qv array<float>); `vectors`: (vec_id, embedding).
@@ -410,7 +399,7 @@ object Knn {
   /** IVF top-k: score the query against the probed cells only.
     * `centroids` comes from [[ivfSeedCentroids]] or [[ivfTrain]]. Queries
     * probe their `nProbe` nearest cells (cos desc, cid asc); candidates are
-    * re-ranked by exact double cosine through the same bounded-heap top-k
+    * re-ranked by exact double cosine through the same bounded ranking
     * as the brute-force path. The vector table sees one narrow assignment
     * pass and one broadcast semi-join — no wide shuffle.
     */
@@ -421,7 +410,7 @@ object Knn {
     val spark = vectors.sparkSession
     import spark.implicits._
     // nProbe nearest cells per query — queries are small by contract (they
-    // broadcast), so rank via the same heap aggregator with cid as the key.
+    // broadcast), so rank via the same bounded ranking with cid as the id.
     // Norms are projected below the joins (once per query row and once per
     // centroid, not once per (query × centroid) pair); cosineFromParts
     // keeps the op order of cosine(), so the ranking is bit-identical.
@@ -443,26 +432,4 @@ object Knn {
           col("qn"), col("vn")).as("cos"))
     rankTopK(scored, k)
   }
-}
-
-/** Bounded top-k heap over (qid, vec_id, cos): buffers stay ≤ 4k entries,
-  * partial buffers merge associatively (map-side combine), final order is
-  * (cos desc, vec_id asc) — the kNN twin of the engine's `TopK` collector.
-  */
-final class VecTopKAgg(k: Int, enc: Encoder[Seq[(Long, Double)]])
-    extends Aggregator[(Long, Long, Double), Seq[(Long, Double)], Seq[(Long, Double)]] {
-  private def better(a: (Long, Double), b: (Long, Double)): Boolean =
-    a._2 > b._2 || (a._2 == b._2 && a._1 < b._1)
-  private def compact(s: Seq[(Long, Double)]): Seq[(Long, Double)] =
-    s.sortWith(better).take(k)
-  def zero: Seq[(Long, Double)] = Vector.empty
-  def reduce(buf: Seq[(Long, Double)], in: (Long, Long, Double)): Seq[(Long, Double)] = {
-    val b2 = buf :+ ((in._2, in._3))
-    if (b2.size >= 4 * k) compact(b2) else b2
-  }
-  def merge(a: Seq[(Long, Double)], b: Seq[(Long, Double)]): Seq[(Long, Double)] =
-    compact(a ++ b)
-  def finish(buf: Seq[(Long, Double)]): Seq[(Long, Double)] = compact(buf)
-  def bufferEncoder: Encoder[Seq[(Long, Double)]] = enc
-  def outputEncoder: Encoder[Seq[(Long, Double)]] = enc
 }

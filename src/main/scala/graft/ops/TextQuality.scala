@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.search.TopK
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -215,20 +216,16 @@ object TextQuality {
     * pairs (e.g. 2·ln2 vs ln4) tie identically in every engine — ln() is
     * only ~1-ulp accurate and not identically rounded across libms, while
     * genuine tf·idf gaps are orders of magnitude above 1e-10 (same
-    * collapse the stock-scorer oracles use). The Window partitions by
-    * docno (fine-grained keys — no global sort).
+    * collapse the stock-scorer oracles use). The per-docno top-k is
+    * [[graft.search.TopK.ranked]] (fine-grained keys — no global sort).
     */
   def topKeywords(tf: DataFrame, df: DataFrame, nDocs: Long,
                   k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val scored = tf.join(df, "term")
       .select(col("docno"), col("term"),
         round(col("tf") * log(lit(nDocs.toDouble) / col("df")), 10).as("s"))
-    scored.select(col("docno"), col("term"),
-        (row_number().over(
-          Window.partitionBy("docno").orderBy(desc("s"), asc("term"))) - 1)
-          .cast("long").as("kw_rank"))
-      .where(col("kw_rank") < k)
+    TopK.ranked(scored, Seq("docno"), Seq(desc("s"), asc("term")), k)
+      .select(col("docno"), col("term"), col("rank").as("kw_rank"))
   }
 
   /** Crude language-evidence counts: occurrences of a few high-frequency

@@ -1,7 +1,7 @@
 package graft.search
 
 import graft.codec.{PostingCodec, VarByte}
-import graft.index.{BuiltIndex, IndexBuilder, PostingRun}
+import graft.index.{BuiltIndex, Deletes, IndexBuilder, PostingRun}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -210,7 +210,7 @@ private[search] object RangeScorer extends Serializable {
       cut(run, ranges, f == 0 && posTerms(run.term)).map { case (r, s) => RangeInput(salts(r), r, f, s) }
     def task(in: Iterator[RangeInput]): Iterator[(String, Long, Float)] =
       new RangeTask(clauses, nSlots, reducer(), scorer, stats,
-        tombs.map(_.value).orNull, excluded, wand.orNull, ranges).run(in)
+        Searcher.tombsOf(tombs), excluded, wand.orNull, ranges).run(in)
     runs match {
       case Seq() => index.spark.emptyDataset(ScoredEnc)
       // the common small search: one task over the runs, no exchange
@@ -507,7 +507,7 @@ private final class RangeTask(clauses: RangeClauses,
   private val slotBoost: Array[Array[Float]] = qids.map(q => new Array[Float](nSlots(q)))
   private var cursors: Array[TermCursor] = Array.empty
 
-  def live(d: Long): Boolean = tombs == null || java.util.Arrays.binarySearch(tombs, d) < 0
+  def live(d: Long): Boolean = Deletes.live(tombs, d)
   def keeps(range: Int, d: Long): Boolean = live(d) && ranges.of(d) == range
 
   def add(q: Int, slot: Int, v: Float): Unit = {

@@ -3,11 +3,10 @@ package graft.search
 import graft.PlanRunner
 import graft.analysis.Analyzer
 import graft.codec.PostingCodec
-import graft.index.BuiltIndex
+import graft.index.{BuiltIndex, Deletes}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
@@ -163,8 +162,9 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
       .as(RangeScorer.RunEnc)
       .flatMap { run =>
         val keys = bc.value(run.term)
+        val tombs = Searcher.tombsOf(tombL)
         PostingCodec.decodeDocids(run.ndocs, run.doc_blob)
-          .filter(d => Searcher.liveDoc(tombL, d))
+          .filter(Deletes.live(tombs, _))
           .flatMap(d => keys.iterator.map(k => (k, d)))
       }(Searcher.KeyDocEnc)
       .toDF("key", "docid").distinct()
@@ -379,8 +379,9 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     * disjunctive bag-of-words match of [[search]]; `keys` is a
     * (docid, ckey) table from [[collapseKeyTable]]. Docs without a key row
     * or with a null key are omitted (Lucene would sort missing-value docs
-    * last). The per-qid heap is bounded ([[SortTopKAgg]], map-side
-    * partials), so the shuffle moves ≤ 4k rows per partition regardless of
+    * last). Keys compare as strings (UTF-8 byte order, Spark's). The
+    * per-qid top-k is [[TopK.ranked]], bounded in each map partition, so
+    * the shuffle moves ≤ k rows per topic per partition regardless of
     * match count. Returns (qid, docno, rank, ckey).
     */
   def searchSorted(topics: Seq[Topic], keys: DataFrame, k: Int = 1000): DataFrame = {
@@ -390,23 +391,14 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     if (termQids.isEmpty)
       return Seq.empty[(String, String, Long, String)]
         .toDF("qid", "docno", "rank", "ckey")
-    val agg = new SortTopKAgg(k,
-      implicitly[Encoder[Seq[(String, Long)]]],
-      implicitly[Encoder[Seq[(String, Long)]]])
-    val top = matchPairs(termQids)
-      .join(keys.where($"ckey".isNotNull).select($"docid", $"ckey"), Seq("docid"))
-      .select($"key", $"docid", $"ckey")
-      .as[(String, Long, String)]
-      .groupByKey(_._1).agg(agg.toColumn)
-    // r6: driver-side docno attach (see collectTopK) — the agg output is
-    // ≤ k rows per topic by construction, the same rows the old broadcast
-    // carried; one pruned point-lookup job replaces broadcast + join.
-    val ranked: Seq[(String, Long, Long, String)] = top.collect().toSeq
-      .flatMap { case (qid, hits) =>
-        hits.iterator.zipWithIndex.map { case ((ckey, docid), i) =>
-          (qid, docid, i.toLong, ckey)
-        }
-      }
+    val matched = matchPairs(termQids)
+      .join(keys.where($"ckey".isNotNull).select($"docid", $"ckey".cast("string").as("ckey")),
+        Seq("docid"))
+    // r6: driver-side docno attach (see collectTopK) — ≤ k rows per topic
+    // by construction; one pruned point-lookup job replaces broadcast + join.
+    val ranked = TopK.ranked(matched, Seq("key"), Seq($"ckey".asc, $"docid".asc), k)
+      .select($"key", $"docid", $"rank", $"ckey").as[(String, Long, Long, String)]
+      .collect().toSeq
     val byId = docnoLookup(ranked.map(_._2))
     ranked.flatMap { case (qid, docid, rank, ckey) =>
       byId.get(docid).map(docno => (qid, docno, rank, ckey))
@@ -456,14 +448,14 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     * topHits returns a bounded hit list under EVERY key — the "best
     * examples per repository / per language" drill-down a search UI pairs
     * with [[facetCounts]]. `keys` is a (docid, ckey) table from
-    * [[collapseKeyTable]]. The per-(qid, ckey) heaps are the search
-    * collector's ([[TopK.distributed]]: per-partition heaps merged under a
-    * group key), so the shuffle moves ≤ n rows per group per partition
-    * and only the merged n×|groups| hit list reaches the driver for the
-    * docno attach. That list grows with the key column's cardinality, so
-    * the collect stops at [[Searcher.MaxDriverHits]] + 1 rows and fails
-    * loudly past the bound; an unbounded key column needs a distributed
-    * tail (keep the scored join and rank distributively) instead.
+    * [[collapseKeyTable]]. The per-(qid, ckey) top-n is [[TopK.ranked]],
+    * bounded in each map partition, so the shuffle moves ≤ n rows per
+    * group per partition and only the merged n×|groups| hit list reaches
+    * the driver for the docno attach. That list grows with the key
+    * column's cardinality, so the collect stops at
+    * [[Searcher.MaxDriverHits]] + 1 rows and fails loudly past the bound;
+    * an unbounded key column needs a distributed tail (keep the scored
+    * join and rank distributively) instead.
     * Docs without a key row or with a null key are omitted, like Lucene
     * facets. Returns (qid, ckey, docno, hit_rank) with hit_rank 0-based
     * within the group.
@@ -473,23 +465,15 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     requireDistinctQids(topics)
     import spark.implicits._
     val keyed = scoredTopics(topics, scorerName).toDF("qid", "docid", "score")
-      .join(keys.where($"ckey".isNotNull).select($"docid", $"ckey"), Seq("docid"))
-      .select(concat($"qid", lit("\u0000"), $"ckey").as("gk"),
-        $"docid", $"score")
-      .as[(String, Long, Float)]
-    val rows = TopK.distributed(keyed, n).take(Searcher.MaxDriverHits + 1)
-    require(rows.length <= Searcher.MaxDriverHits,
+      .join(keys.where($"ckey".isNotNull).select($"docid", $"ckey".cast("string").as("ckey")),
+        Seq("docid"))
+    val ranked = TopK.ranked(keyed, Seq("qid", "ckey"), Seq($"score".desc, $"docid".asc), n)
+      .select($"qid", $"ckey", $"docid", $"rank").as[(String, String, Long, Long)]
+      .take(Searcher.MaxDriverHits + 1).toSeq
+    require(ranked.length <= Searcher.MaxDriverHits,
       s"topHits would collect more than ${Searcher.MaxDriverHits} hit rows " +
         s"(n=$n per (qid, key) group) to the driver; lower n or use a " +
         "lower-cardinality key column")
-    // each group's rows arrive contiguous and best-first from one partition
-    val ranked = rows.groupBy(_._1).toSeq.flatMap { case (gk, hits) =>
-      val i = gk.indexOf('\u0000')
-      val (qid, ckey) = (gk.substring(0, i), gk.substring(i + 1))
-      hits.iterator.zipWithIndex.map { case ((_, docid, _), r) =>
-        (qid, ckey, docid, r.toLong)
-      }
-    }
     val byId = docnoLookup(ranked.map(_._3))
     ranked.flatMap { case (qid, ckey, docid, r) =>
       byId.get(docid).map(docno => (qid, ckey, docno, r))
@@ -736,14 +720,17 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     */
   // Expansions memoized per searcher (the index is immutable): repeated
   // topics, and the CLI's snippet-highlight pass over the same topics,
-  // reuse the scan instead of re-running it.
-  private val prefixCache =
-    new scala.collection.concurrent.TrieMap[(String, Int), Seq[String]]()
-  private val fuzzyCache =
-    new scala.collection.concurrent.TrieMap[(String, Int, Int), Seq[(String, Int)]]()
+  // reuse the scan instead of re-running it. Bounded (Searcher.MemoPatterns
+  // each): a cached searcher lives as long as the JVM.
+  private[graft] val prefixCache = BuiltIndex.lru[(String, Int), Seq[String]](Searcher.MemoPatterns)
+  private val fuzzyCache = BuiltIndex.lru[(String, Int, Int), Seq[(String, Int)]](Searcher.MemoPatterns)
+
+  // the memoized value of `key`, computed outside the map's lock
+  private def memo[K, V](m: java.util.Map[K, V], key: K)(v: => V): V =
+    Option(m.get(key)).getOrElse { val r = v; m.put(key, r); r }
 
   def expandPrefix(prefix: String, cap: Int = 4096): Seq[String] =
-    prefixCache.getOrElseUpdate((prefix, cap),
+    memo(prefixCache, (prefix, cap))(
       vocabTerms(prefixScan(prefix), cap, s"prefix '$prefix*'"))
 
   /** The distinct terms of a vocabulary scan, failing loudly past `cap`. */
@@ -772,7 +759,7 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     */
   def expandFuzzy(base: String, maxEdits: Int,
                   maxExpansions: Int = 50): Seq[(String, Int)] =
-    fuzzyCache.getOrElseUpdate((base, maxEdits, maxExpansions), {
+    memo(fuzzyCache, (base, maxEdits, maxExpansions)) {
       import spark.implicits._
       index.vocab
         .where(col("len") >= base.length - maxEdits &&
@@ -782,7 +769,7 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
         .distinct()
         .orderBy(col("d"), col("term"))
         .as[(String, Int)].take(maxExpansions).toSeq
-    })
+    }
 
   /** Did-you-mean suggestions (≙ Lucene's DirectSpellChecker over the
     * index terms): for each input term the top `topN` vocabulary terms
@@ -811,10 +798,7 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     if (active.isEmpty) return empty
     val scored = index.termStats.select(col("term"), col("df"))
       .join(broadcast(editCandidates(active, maxEdits)), Seq("term"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q")).orderBy(col("dist").asc, col("df").desc, col("term").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long") - 1)
-      .where(col("rank") < topN)
+    TopK.ranked(scored, Seq("q"), Seq(col("dist").asc, col("df").desc, col("term").asc), topN)
       .select(col("q"), col("term").as("suggestion"), col("dist").cast("long").as("dist"),
         col("df").cast("long").as("df"), col("rank"))
   }
@@ -995,9 +979,9 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     * — a doc outside the window can never jump in, which is the point
     * (the expensive clause runs against a bounded candidate set). Here
     * the rescorer is a phrase clause batch (the classic "proximity
-    * rescore" pattern). The window is the search collector's own heap
-    * ([[TopK.distributed]]: per-partition heaps merged under a qid
-    * group), so it stays on the cluster — never on the driver.
+    * rescore" pattern). The window is a per-qid [[TopK.ranked]] in the
+    * collector ordering (score desc, docid asc), so it stays on the
+    * cluster — never on the driver.
     */
   def searchRescore(topics: Seq[Topic], rescoreClauses: Seq[PhraseClause],
                     window: Int, weight: Float, k: Int = 1000,
@@ -1005,12 +989,13 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     requireDistinctQids(topics)
     require(k <= window, s"k=$k exceeds the rescore window=$window")
     import spark.implicits._
-    val windowRows =
-      TopK.distributed(scoredClauses(topicClauses(topics), window, scorerName), window)
+    val windowRows = TopK.ranked(
+      scoredClauses(topicClauses(topics), window, scorerName).toDF("qid", "docid", "score"),
+      Seq("qid"), Seq($"score".desc, $"docid".asc), window)
     val ph = scoredClauses(Nil, window, scorerName,
       phraseClauses = rescoreClauses)
     val w = weight
-    val rescored = windowRows.toDF("qid", "docid", "score")
+    val rescored = windowRows
       .join(ph.toDF("qid", "docid", "phscore"), Seq("qid", "docid"), "left_outer")
       .select($"qid", $"docid",
         when($"phscore".isNull, $"score")
@@ -1128,8 +1113,7 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     }, dfs, k, scorer, stats)
   }
 
-  private val regexCache =
-    new scala.collection.concurrent.TrieMap[(String, Int), Seq[String]]()
+  private val regexCache = BuiltIndex.lru[(String, Int), Seq[String]](Searcher.MemoPatterns)
 
   /** Vocabulary terms fully matching `pattern` — the Lucene `RegexpQuery`
     * analog for identifier-shaped code search (the regex is anchored to
@@ -1144,7 +1128,7 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     * so SQL oracles can replay the match.
     */
   def expandRegex(pattern: String, cap: Int = 4096): Seq[String] =
-    regexCache.getOrElseUpdate((pattern, cap),
+    memo(regexCache, (pattern, cap))(
       vocabTerms(regexScan(pattern), cap, s"regex '$pattern'"))
 
   /** Wildcard expansion (≙ WildcardQuery): `*` = any run, `?` = any one
@@ -1506,7 +1490,7 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
         .join(cands, Seq("qid", "docid"), "left_anti")
         .select(col("qid"), col("docid"), col("cscore"))
         .as[(String, Long, Float)]
-        .filter(t => Searcher.liveDoc(tombL, t._2) &&
+        .filter(t => Deletes.live(Searcher.tombsOf(tombL), t._2) &&
           excl.get(t._1).forall(!_.contains(t._2))), k)
       got.foreach { case (q, hits) =>
         val (s, have) = acc(q)
@@ -1539,32 +1523,6 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     lines.map(l => s"${l.qid} Q0 ${l.docno} ${l.rank} ${l.score} ${l.runtag}")
 }
 
-/** Bounded top-k by (key asc, docid asc) — the TopFieldCollector analog of
-  * the score collector [[TopK]]: buffers stay ≤ 4k entries, partials
-  * merge associatively.
-  */
-final class SortTopKAgg(k: Int,
-                        bufEnc: Encoder[Seq[(String, Long)]],
-                        outEnc: Encoder[Seq[(String, Long)]])
-    extends Aggregator[(String, Long, String), Seq[(String, Long)], Seq[(String, Long)]] {
-  private def better(a: (String, Long), b: (String, Long)): Boolean = {
-    val c = a._1.compareTo(b._1)
-    c < 0 || (c == 0 && a._2 < b._2)
-  }
-  private def compact(s: Seq[(String, Long)]): Seq[(String, Long)] =
-    s.sortWith(better).take(k)
-  def zero: Seq[(String, Long)] = Vector.empty
-  def reduce(buf: Seq[(String, Long)], in: (String, Long, String)): Seq[(String, Long)] = {
-    val b2 = buf :+ ((in._3, in._2))
-    if (b2.size >= 4 * k) compact(b2) else b2
-  }
-  def merge(a: Seq[(String, Long)], b: Seq[(String, Long)]): Seq[(String, Long)] =
-    compact(a ++ b)
-  def finish(buf: Seq[(String, Long)]): Seq[(String, Long)] = compact(buf)
-  def bufferEncoder: Encoder[Seq[(String, Long)]] = bufEnc
-  def outputEncoder: Encoder[Seq[(String, Long)]] = outEnc
-}
-
 object Searcher {
   /** Most hit rows a driver-side hit list of unbounded group count
     * ([[Searcher.topHits]]: n × |(qid, key) groups|) may collect before
@@ -1573,20 +1531,25 @@ object Searcher {
     */
   val MaxDriverHits: Int = 1 << 20
 
+  /** Most expansions each of a searcher's prefix, fuzzy and regex memos
+    * holds, least recently used first out. A constant, not a setting: it
+    * bounds the driver heap of a searcher cached for the JVM's life.
+    */
+  private[graft] val MemoPatterns: Int = 256
+
   // encoders of every search's tail, derived once (see RangeScorer.RunEnc)
   private[search] val LineEnc: Encoder[RunLine] = ExpressionEncoder[RunLine]()
   private val KeyDocEnc: Encoder[(String, Long)] = ExpressionEncoder[(String, Long)]()
   private val ExplainEnc: Encoder[(String, String, String, Long, Long, Long)] =
     ExpressionEncoder[(String, String, String, Long, Long, Long)]()
 
-  /** True iff `docid` survives the broadcast tombstone overlay (None =
-    * delete-free index). Static so executor closures capture only the
-    * Option[Broadcast], never the Searcher.
+  /** The broadcast tombstone overlay's sorted docids, empty on a
+    * delete-free index: the argument of [[Deletes.live]]. Static so
+    * executor closures capture only the Option[Broadcast], never the
+    * Searcher.
     */
-  @inline def liveDoc(
-      tomb: Option[org.apache.spark.broadcast.Broadcast[Array[Long]]],
-      docid: Long): Boolean =
-    tomb.forall(b => java.util.Arrays.binarySearch(b.value, docid) < 0)
+  private[search] def tombsOf(tomb: Option[org.apache.spark.broadcast.Broadcast[Array[Long]]]): Array[Long] =
+    tomb.fold(Array.emptyLongArray)(_.value)
 
   /** Folds one (qid, docid) of a range task ([[RangeScorer]]): `begin`,
     * then `add` per partial in ascending slot order ([[ClausePlan]]); the

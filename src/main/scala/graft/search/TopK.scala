@@ -1,6 +1,8 @@
 package graft.search
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, row_number}
 import org.apache.spark.sql.types.{FloatType, LongType, StringType}
 
 /** The search engine's one bounded top-k collector (≙ Lucene's `HitQueue`,
@@ -10,13 +12,14 @@ import org.apache.spark.sql.types.{FloatType, LongType, StringType}
   *
   * It runs as a per-partition pass (primitive heaps, ≤ k rows out per key
   * per partition, so it pipelines into whatever stage produced the scores)
-  * and merges the per-partition rows through the same heap, either on the
-  * driver ([[toDriver]], keys in ascending order) or under a `groupByKey`
-  * ([[distributed]]) when the merged rows should stay on the cluster. For
-  * a scored search the per-partition pass runs in the stage of the range
-  * tasks ([[RangeScorer]]) that score the (qid, docid) rows; a pruned
-  * qid's range task also keeps a live heap of its own, the θ its block
-  * skipping tests against.
+  * and merges the per-partition rows through the same heap on the driver
+  * ([[toDriver]], keys in ascending order). For a scored search the
+  * per-partition pass runs in the stage of the range tasks
+  * ([[RangeScorer]]) that score the (qid, docid) rows; a pruned qid's
+  * range task also keeps a live heap of its own, the θ its block skipping
+  * tests against. Every other per-group top-k, whose rows stay on the
+  * cluster or whose sort key is not a Float score, goes through
+  * [[ranked]].
   */
 private[graft] object TopK {
 
@@ -125,15 +128,26 @@ private[graft] object TopK {
     byKey(k, rows.iterator).sortBy(_._1)
   }
 
-  /** Per-partition heaps merged through the same heap under a
-    * `groupByKey`: ≤ k rows per key, best-first within each key, without
-    * leaving the cluster.
+  /** Per-group top-k on the cluster: the `k` first rows of each `by` group
+    * in `order`, plus their 0-based Long `rank` column. `order` should end
+    * in a unique tie-break so ranks are a total order; a `rank` column of
+    * `df` is replaced.
+    *
+    * It filters the raw `row_number()` at `<= k`, the form Spark's
+    * optimizer bounds (a rank derived before the filter, like
+    * `row_number() - 1 < k`, is not): a Partial `WindowGroupLimit` keeps
+    * ≤ k rows per group in each map partition, below the exchange, and a
+    * Final one above it, so no group's whole row stream is shuffled or
+    * sorted. The bound is planned only for k ≤ Spark's
+    * `spark.sql.optimizer.windowGroupLimitThreshold` (default 1000); above
+    * it Spark plans the full window, with the same rows but no map-side
+    * bound.
     */
-  def distributed(scored: Dataset[(String, Long, Float)], k: Int)
-      : Dataset[(String, Long, Float)] = {
-    import scored.sparkSession.implicits._
-    scored.mapPartitions(collect(k, _))
-      .groupByKey(_._1)
-      .flatMapGroups((_, rows) => collect(k, rows))
+  def ranked(df: DataFrame, by: Seq[String], order: Seq[Column], k: Int): DataFrame = {
+    val rn = "__topk_rn"
+    df.withColumn(rn, row_number().over(Window.partitionBy(by.map(col): _*).orderBy(order: _*)))
+      .where(col(rn) <= k)
+      .withColumn("rank", (col(rn) - 1).cast(LongType))
+      .drop(rn)
   }
 }

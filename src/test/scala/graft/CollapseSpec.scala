@@ -111,6 +111,18 @@ class CollapseSpec extends AnyFunSuite {
     assert(noRa == Seq("b-1"))
   }
 
+  test("sort-by-field: string keys compare as UTF-8 bytes (code point order)") {
+    import spark.implicits._
+    val (s, _) = fixture
+    // U+FF61 sorts before U+1F600 by code point (UTF-8 bytes EF < F0) but
+    // after it in UTF-16 (FF61 > the surrogate D83D)
+    val keys = s.collapseKeyTable(
+      Seq("a-1" -> "\uD83D\uDE00", "b-1" -> "\uFF61").toDF("docno", "repo"), "repo")
+    val rows = s.searchSorted(Seq(Topic("1", "hot")), keys, k = 10)
+      .collect().map(r => (r.getLong(2), r.getString(1))).sorted.toSeq
+    assert(rows == Seq((0L, "b-1"), (1L, "a-1")))
+  }
+
   test("null collapse keys are omitted by sort-by-field and top hits") {
     import org.apache.spark.sql.functions.{col, lit, when}
     val (s, keys) = fixture

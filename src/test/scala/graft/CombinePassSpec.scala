@@ -5,9 +5,8 @@ import graft.index.{IndexBuilder, IndexConfig}
 import graft.search.{BlendedClause, Bm25Scorer, CollStats, PhraseClause, RunLine, Searcher,
   SynonymClause, Topic, WeightedClause}
 import org.apache.spark.sql.execution.{AppendColumnsExec, AppendColumnsWithObjectExec,
-  FileSourceScanExec, MapGroupsExec, QueryExecution, SparkPlan}
+  FileSourceScanExec, MapGroupsExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The plan shape and job counts of the query kinds that share the
@@ -49,32 +48,6 @@ class CombinePassSpec extends AnyFunSuite {
       IndexConfig(analyzer = AnalyzerConfig()))
   }
 
-  /** Executed plans of every query `body` runs on this thread: those of
-    * the driver collects through [[PlanRunner]], which reports them, and
-    * the listener's. The listener bus delivers in order, so the sentinel
-    * query's arrival means every plan of `body` has been seen.
-    */
-  private def plansOf(body: => Unit): Seq[SparkPlan] = {
-    val sentinel = "combine_pass_sentinel"
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val done = new java.util.concurrent.CountDownLatch(1)
-    val listener = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        if (qe.analyzed.output.exists(_.name == sentinel)) done.countDown()
-        else plans.add(qe.executedPlan)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      PlanRunner.observing(qe => plans.add(qe.executedPlan))(body)
-      spark.range(1).toDF(sentinel).collect()
-      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "listener bus did not drain")
-    } finally spark.listenerManager.unregister(listener)
-    import scala.jdk.CollectionConverters._
-    plans.asScala.toSeq
-  }
-
   private val helper = new AdaptiveSparkPlanHelper {}
 
   /** (postings scans, MapGroups nodes, AppendColumns nodes) across `plans`. */
@@ -91,14 +64,14 @@ class CombinePassSpec extends AnyFunSuite {
     val topic = Topic("t", "apple pear plum")
     searcher.searchDisMax(Seq(topic), 10, 0.3f).collect() // warm the memo
     val (scans, groups, appends) =
-      shape(plansOf(searcher.searchDisMax(Seq(topic), 10, 0.3f).collect()))
+      shape(TestSpark.plansOf(searcher.searchDisMax(Seq(topic), 10, 0.3f).collect()))
     assert(scans >= 1, "the scoring plan was not captured")
     assert(groups == 0 && appends == 0, s"dismax: $groups MapGroups, $appends AppendColumns")
 
     val tree = Topic("q", "apple +pear -plum")
     assert(searcher.searchQuery(Seq(tree), 10).collect().nonEmpty)
     val (tScans, tGroups, tAppends) =
-      shape(plansOf(searcher.searchQuery(Seq(tree), 10).collect()))
+      shape(TestSpark.plansOf(searcher.searchQuery(Seq(tree), 10).collect()))
     assert(tScans >= 1, "the scoring plan was not captured")
     assert(tGroups == 0 && tAppends == 0, s"tree: $tGroups MapGroups, $tAppends AppendColumns")
   }
@@ -107,7 +80,7 @@ class CombinePassSpec extends AnyFunSuite {
     val fuzzy = new Searcher(fuzzyIndex)
     val topic = Seq(Topic("f", "lin~2 window"))
     assert(fuzzy.searchQuery(topic, 10).collect().nonEmpty)
-    val (scans, groups, appends) = shape(plansOf(fuzzy.searchQuery(topic, 10).collect()))
+    val (scans, groups, appends) = shape(TestSpark.plansOf(fuzzy.searchQuery(topic, 10).collect()))
     assert(scans >= 1, "the scoring plan was not captured")
     assert(groups == 0 && appends == 0, s"fuzzy: $groups MapGroups, $appends AppendColumns")
   }
@@ -165,7 +138,7 @@ class CombinePassSpec extends AnyFunSuite {
     ) ++ phraseAndSynonym
     searches.foreach { case (what, run) =>
       assert(run().nonEmpty, what)
-      val (scans, groups, appends) = shape(plansOf(run()))
+      val (scans, groups, appends) = shape(TestSpark.plansOf(run()))
       assert(scans >= 1, s"$what: the scoring plan was not captured")
       assert(groups == 0 && appends == 0, s"$what: $groups MapGroups, $appends AppendColumns")
     }

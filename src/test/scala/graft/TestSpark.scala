@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
@@ -58,5 +60,31 @@ object TestSpark {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  /** Executed plans of every query `body` runs on this thread: those of
+    * the driver collects through [[PlanRunner]], which reports them, and
+    * the listener's. The listener bus delivers in order, so the sentinel
+    * query's arrival means every plan of `body` has been seen.
+    */
+  def plansOf(body: => Unit): Seq[SparkPlan] = {
+    val sentinel = "plans_of_sentinel"
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val done = new CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == sentinel)) done.countDown()
+        else plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      PlanRunner.observing(qe => plans.add(qe.executedPlan))(body)
+      spark.range(1).toDF(sentinel).collect()
+      assert(done.await(60, TimeUnit.SECONDS),
+        "listener bus did not drain")
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq
   }
 }

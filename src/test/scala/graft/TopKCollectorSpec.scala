@@ -36,6 +36,21 @@ class TopKCollectorSpec extends AnyFunSuite {
       key -> rs.map(r => (r._2, r._3)).sortWith(better).take(k)
     }
 
+  /** [[TopK.ranked]] in the collector ordering, each key's rows by rank;
+    * the ranks must be 0 until the key's row count.
+    */
+  private def ranked(ds: Dataset[(String, Long, Float)], k: Int): Map[String, Seq[(Long, Float)]] = {
+    import spark.implicits._
+    val rows = TopK.ranked(ds.toDF("key", "docid", "score"), Seq("key"),
+        Seq($"score".desc, $"docid".asc), k)
+      .select($"key", $"docid", $"score", $"rank").as[(String, Long, Float, Long)].collect()
+    rows.groupBy(_._1).map { case (key, rs) =>
+      val byRank = rs.sortBy(_._4)
+      assert(byRank.map(_._4).toSeq == byRank.indices.map(_.toLong), s"ranks of key=$key")
+      key -> byRank.map(r => (r._2, r._3)).toSeq
+    }
+  }
+
   private def bitsOf(hits: Seq[(Long, Float)]): Seq[(Long, Int)] =
     hits.map(h => (h._1, java.lang.Float.floatToIntBits(h._2)))
 
@@ -52,9 +67,10 @@ class TopKCollectorSpec extends AnyFunSuite {
       want.foreach { case (key, hits) =>
         assert(bitsOf(got(key).toSeq) == bitsOf(hits), s"key=$key parts=$parts")
       }
-      val dist = TopK.distributed(rowsDs(rows, parts), 25).collect().toSeq
+      val dist = ranked(rowsDs(rows, parts), 25)
+      assert(dist.keySet == want.keySet)
       want.foreach { case (key, hits) =>
-        assert(bitsOf(dist.filter(_._1 == key).map(r => (r._2, r._3))) == bitsOf(hits))
+        assert(bitsOf(dist(key)) == bitsOf(hits), s"ranked key=$key parts=$parts")
       }
     }
     // the in-memory heap against a full sort, on many tie-heavy draws
@@ -82,7 +98,7 @@ class TopKCollectorSpec extends AnyFunSuite {
     assert(got("a").toSeq == Seq((1L, 2.0f), (3L, 2.0f)))
     assert(got("c").toSeq == Seq((4L, 1.0f)))
     assert(TopK.toDriver(rowsDs(Nil, 4), 10).isEmpty)
-    assert(TopK.distributed(rowsDs(Nil, 4), 10).collect().isEmpty)
+    assert(ranked(rowsDs(Nil, 4), 10).isEmpty)
     assert(TopK.byKey(0, rows.iterator).isEmpty)
   }
 

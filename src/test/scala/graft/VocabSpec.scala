@@ -67,6 +67,25 @@ class VocabSpec extends AnyFunSuite {
       Set("alpha", "alpine", "albatross"))
   }
 
+  test("expansion memo: bounded, least recently used first out") {
+    val memo = searcher.prefixCache
+    memo.clear()
+    // a planted answer shows whether a call is served from the memo
+    memo.put(("al", 4096), Seq("planted"))
+    assert(searcher.expandPrefix("al") == Seq("planted"))
+    (1 until Searcher.MemoPatterns).foreach(i => memo.put((s"p$i", 4096), Nil))
+    assert(memo.size == Searcher.MemoPatterns)
+    assert(searcher.expandPrefix("al") == Seq("planted"), "a full memo keeps its entries")
+    memo.put(("p0", 4096), Nil) // one past the bound: the least recently used goes
+    assert(memo.size == Searcher.MemoPatterns)
+    assert(!memo.containsKey(("p1", 4096)))
+    assert(memo.containsKey(("al", 4096)), "a recent read keeps an entry")
+    (2 until Searcher.MemoPatterns).foreach(i => memo.get((s"p$i", 4096)))
+    memo.put(("p1", 4096), Nil)
+    assert(searcher.expandPrefix("al").toSet == Set("alpha", "alpine", "albatross"),
+      "an evicted entry is scanned again")
+  }
+
   test("regex expansion: anchored full match, pruned scan, quantifier-safe " +
     "literal prefix, loud cap") {
     // full-term anchoring: 'eta' must not match inside beta/zeta

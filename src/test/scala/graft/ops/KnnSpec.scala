@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The compiled kNN kernels against the Spark SQL expressions they stand
-  * for, on the NaN edge: Spark orders NaN above every number.
+  * for, on the NaN edge: Spark orders NaN above every number. The top-k
+  * ranks in that order too.
   */
 class KnnSpec extends AnyFunSuite {
   private lazy val spark = graft.TestSpark.spark
@@ -43,5 +44,20 @@ class KnnSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(rows(2)._2 == 0L, "SQL: all-NaN scores tie at the top")
     rows.foreach { case (kernel, want) => assert(kernel == want) }
+  }
+
+  test("top-k: a NaN cosine ranks first, ties by vec_id ascending") {
+    import spark.implicits._
+    // cosines against (1, 0, 0): 7 and 2 hold a NaN component (NaN dot,
+    // NaN cosine; a zero vector fails with DIVIDE_BY_ZERO instead), 5 and
+    // 4 are orthogonal (0.0), 3 is 1.0 and 6 is -1.0
+    val vecs = Seq(7L -> Seq(Float.NaN, 0f, 0f), 5L -> Seq(0f, -1f, 0f), 3L -> Seq(2f, 0f, 0f),
+        2L -> Seq(0f, Float.NaN, 1f), 6L -> Seq(-1f, 0f, 0f), 4L -> Seq(0f, 1f, 0f))
+      .toDF("vec_id", "embedding")
+    val q = Seq(100L -> Seq(1f, 0f, 0f)).toDF("qid", "qv")
+    def ids(k: Int): Seq[(Long, Int)] = Knn.bruteForceTopK(vecs, q, k)
+      .as[(Long, Long, Int)].collect().sortBy(_._3).map(r => (r._2, r._3)).toSeq
+    assert(ids(10) == Seq(2L, 7L, 3L, 4L, 5L, 6L).zipWithIndex)
+    assert(ids(3) == Seq(2L, 7L, 3L).zipWithIndex)
   }
 }
