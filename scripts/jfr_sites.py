@@ -8,7 +8,9 @@ calls of `perfbench/run.py` (under `graftbench.Workloads.query`), leaving
 out the samples of the harness's brute-force and exhaustive checks (under
 `Workloads.check`). Each sample is put in one engine call site (the
 innermost frame of a named search-path method, else the innermost `graft`
-frame; the plan runner's frames count for its caller) and in one Spark category (the first rule below that matches any
+frame; the plan runner's frames count for its caller; `result collect` for
+the harness's own collect of the returned Dataset, which runs no engine
+frame) and in one Spark category (the first rule below that matches any
 frame of its stack), and the script prints the sites x categories table,
 then the closure-cleaner samples by the call that made the cleaned job
 (`Dataset.collect`, `Dataset.rdd`, a whole-stage-codegen node, an engine
@@ -66,8 +68,13 @@ CLEAN_NAMES = {"Dataset.collectFromPlan": "Dataset.collect",
 # search-path methods reported as call sites (a runner frame counts for
 # the method that called the runner)
 SITES = {"BuiltIndex.termStatsOf", "Searcher.docnoLookup", "Searcher.docidLookup",
-         "TopK$.toDriver", "RangeScorer$.score", "Searcher.collectTopK",
-         "Searcher.scoredClauses", "ClausePlan.<init>"}
+         "TopK$.toDriver", "TopK$.collect", "RangeScorer$.score", "Searcher.collectTopK",
+         "Searcher.scoredClauses", "ClausePlan.<init>", "DriverRows$.dataset",
+         "DriverRows$.frame", "DriverRows$Builder.$plus$eq", "DriverRowsStrategy$.apply"}
+
+# a sample under this frame with no engine frame is the caller's collect of
+# the Dataset a search returned
+RESULT_COLLECT = "org/apache/spark/sql/classic/Dataset.collect"
 
 ENTRY = "graftbench/Workloads.query"
 CHECK = "graftbench/Workloads.check"
@@ -85,7 +92,7 @@ def short(frame):
 
 def site(stack):
     """The innermost named search-path method of a stack (innermost frame
-    first), else its innermost engine frame."""
+    first), else its innermost engine frame, else the result collect."""
     for f in stack:
         s = short(f).split("$anonfun$")[0]
         if f.startswith("graft/") and s in SITES:
@@ -93,6 +100,8 @@ def site(stack):
     for f in stack:
         if f.startswith("graft/"):
             return short(f)
+    if any(f.startswith(RESULT_COLLECT) for f in stack):
+        return "result collect"
     return "(other)"
 
 

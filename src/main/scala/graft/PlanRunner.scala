@@ -23,14 +23,13 @@ private[graft] object PlanRunner {
   /** Each partition's `f` over its rows, in partition order. The rows are
     * reused: `f` copies out what it keeps.
     */
-  def partitions[T: ClassTag](plan: Dataset[_])(f: Iterator[InternalRow] => Array[T])
-      : Array[Array[T]] = {
+  def partitions[T: ClassTag](plan: Dataset[_])(f: Iterator[InternalRow] => T): Array[T] = {
     observers.forEach(f => f(plan.queryExecution))
     val rdd = plan.queryExecution.toRdd
-    val parts = new Array[Array[T]](rdd.getNumPartitions)
+    val parts = new Array[T](rdd.getNumPartitions)
     if (parts.nonEmpty)
       rdd.sparkContext.runJob(rdd, (_: TaskContext, it: Iterator[InternalRow]) => f(it),
-        parts.indices, (i: Int, out: Array[T]) => parts(i) = out)
+        parts.indices, (i: Int, out: T) => parts(i) = out)
     parts
   }
 

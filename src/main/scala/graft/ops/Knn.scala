@@ -68,6 +68,7 @@ object Knn {
   /** Euclidean norm of an embedding column. */
   def norm(x: Column): Column = sqrt(dotCol(x, x))
 
+  /** Cosine of a query-side vector `a` and a stored vector `b`. */
   def cosine(a: Column, b: Column): Column =
     cosineFromParts(dotCol(a, b), norm(a), norm(b))
 
@@ -77,10 +78,20 @@ object Knn {
     * stream). The expression is the same `dot / (√(a·a) · √(b·b))` as
     * [[cosine]] with identical operation order, so results are
     * bit-identical and the DuckDB `list_cosine_similarity` oracles are
-    * unaffected.
+    * unaffected. `normA` is the query side's, `normB` the stored vector's.
+    * A zero norm product has no cosine: the query fails with a message
+    * naming the zero-norm side, not with the division's bare
+    * DIVIDE_BY_ZERO. A NaN component still gives a NaN cosine.
     */
-  def cosineFromParts(dotAB: Column, normA: Column, normB: Column): Column =
-    dotAB / (normA * normB)
+  def cosineFromParts(dotAB: Column, normA: Column, normB: Column): Column = {
+    val denom = normA * normB
+    // a norm is the root of a representable self-dot, so the product is 0
+    // only where one norm is
+    when(denom === 0.0, raise_error(
+      when(normA === 0.0, lit("cosine of a zero-norm vector: the query vector has norm 0"))
+        .otherwise(lit("cosine of a zero-norm vector: a stored (candidate or centroid) vector has norm 0"))))
+      .otherwise(dotAB / denom)
+  }
 
   /** Rank the (qid, vec_id, cos) candidate stream to 0-based Int top-k
     * ranks per qid, order (cos desc, vec_id asc), via [[TopK.ranked]].
@@ -134,14 +145,20 @@ object Knn {
     h.toDouble / 2147483648.0 - 1.0
   }
 
-  // plane component rows cached per (plane, dims): computed once per JVM,
-  // not once per element per row like the old per-element md5 expression
-  private val planeCache =
-    new scala.collection.concurrent.TrieMap[(Int, Int), Array[Double]]()
+  /** Most (plane, dims) component rows [[planeRow]] keeps, least recently
+    * used first out. A constant, not a setting: it bounds a JVM-wide memo;
+    * 64-plane signatures over four embedding widths still fit.
+    */
+  private[ops] val MaxPlaneRows = 256
+
+  // plane component rows cached per (plane, dims): computed once, not once
+  // per element per row like the old per-element md5 expression
+  private val planeCache = graft.index.BuiltIndex.lru[(Int, Int), Array[Double]](MaxPlaneRows)
 
   private[ops] def planeRow(plane: Int, dims: Int): Array[Double] =
-    planeCache.getOrElseUpdate((plane, dims),
-      Array.tabulate(dims)(planeComponentJvm(plane, _)))
+    planeCache.computeIfAbsent((plane, dims), _ => Array.tabulate(dims)(planeComponentJvm(plane, _)))
+
+  private[ops] def planeRowsHeld: Int = planeCache.size
 
   /** JVM sign-LSH bucket, identical to the old expression: per plane the
     * projection is the left-to-right fold Σ v_i·comp(p, i); bit p is set

@@ -1,6 +1,6 @@
 package graft.search
 
-import graft.PlanRunner
+import graft.{DriverRows, PlanRunner}
 import graft.analysis.Analyzer
 import graft.codec.PostingCodec
 import graft.index.{BuiltIndex, Deletes}
@@ -8,6 +8,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{FloatType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.LongAccumulator
 
 /** A batched topic query (≙ one `<top>` of the reference's query file,
@@ -95,11 +97,15 @@ final case class SynonymClause(qid: String, qidx: Int,
   *       ([[ClausePlan]]; Float addition is not associative, SURVEY.md
   *       §7.5), block-max WAND against the task's live top-k heap
   *     → in the same stage, a per-partition bounded top-k heap ([[TopK]])
-  *     → driver merge of the ≤ k rows per query per partition, ranks
-  *     → docno attach (one pruned point-lookup job over the doc table)
+  *     → driver merge of the ≤ k rows per query per partition into
+  *       primitive (docids, scores) arrays, ranks
+  *     → docno attach (one pruned point-lookup job over the doc table,
+  *       docnos aligned with the sorted distinct docids)
   *       → dedup-by-docno keeping the first pre-dedup rank
   *       (`BatchSearch.java:290,296-304` — the FR-collection duplicate
-  *       workaround; ranks skip after a duplicate, replicated faithfully).
+  *       workaround; ranks skip after a duplicate, replicated faithfully)
+  *     → run-line rows written on the driver under a [[graft.DriverRows]]
+  *       leaf, the returned Dataset's plan (no `LocalRelation`).
   *
   * Query analysis reuses the index's persisted analyzer config, ruling out
   * the reference's possible index/query analyzer mismatch by construction.
@@ -388,9 +394,7 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     requireDistinctQids(topics)
     import spark.implicits._
     val termQids = keysByTerm(topicTerms(topics))
-    if (termQids.isEmpty)
-      return Seq.empty[(String, String, Long, String)]
-        .toDF("qid", "docno", "rank", "ckey")
+    if (termQids.isEmpty) return DriverRows.frame(spark, Searcher.SortedSchema, Array.empty)
     val matched = matchPairs(termQids)
       .join(keys.where($"ckey".isNotNull).select($"docid", $"ckey".cast("string").as("ckey")),
         Seq("docid"))
@@ -399,10 +403,16 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     val ranked = TopK.ranked(matched, Seq("key"), Seq($"ckey".asc, $"docid".asc), k)
       .select($"key", $"docid", $"rank", $"ckey").as[(String, Long, Long, String)]
       .collect().toSeq
-    val byId = docnoLookup(ranked.map(_._2))
-    ranked.flatMap { case (qid, docid, rank, ckey) =>
-      byId.get(docid).map(docno => (qid, docno, rank, ckey))
-    }.toDF("qid", "docno", "rank", "ckey")
+    val docnos = docnoLookup(ranked.map(_._2).toArray)
+    val rows = new DriverRows.Builder(4)
+    ranked.foreach { case (qid, docid, rank, ckey) =>
+      val docno = docnos(docid)
+      if (docno != null) rows += { w =>
+        w.write(0, UTF8String.fromString(qid)); w.write(1, docno); w.write(2, rank)
+        w.write(3, UTF8String.fromString(ckey))
+      }
+    }
+    DriverRows.frame(spark, Searcher.SortedSchema, rows.result())
   }
 
   /** Deep-pagination cursor (≙ Elasticsearch `search_after` / Lucene
@@ -474,10 +484,16 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
       s"topHits would collect more than ${Searcher.MaxDriverHits} hit rows " +
         s"(n=$n per (qid, key) group) to the driver; lower n or use a " +
         "lower-cardinality key column")
-    val byId = docnoLookup(ranked.map(_._3))
-    ranked.flatMap { case (qid, ckey, docid, r) =>
-      byId.get(docid).map(docno => (qid, ckey, docno, r))
-    }.toDF("qid", "ckey", "docno", "hit_rank")
+    val docnos = docnoLookup(ranked.map(_._3).toArray)
+    val rows = new DriverRows.Builder(4)
+    ranked.foreach { case (qid, ckey, docid, r) =>
+      val docno = docnos(docid)
+      if (docno != null) rows += { w =>
+        w.write(0, UTF8String.fromString(qid)); w.write(1, UTF8String.fromString(ckey))
+        w.write(2, docno); w.write(3, r)
+      }
+    }
+    DriverRows.frame(spark, Searcher.TopHitsSchema, rows.result())
   }
 
   /** docno → docid for a driver-bounded docno set: one pushed-down point
@@ -494,25 +510,36 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     * must never build a million-element predicate, an in-scan filter
     * against a broadcast sorted docid array. Both sets are set-valued
     * predicates ([[BuiltIndex.inSet]]): generated code references them, so a
-    * fresh search compiles no class.
+    * fresh search compiles no class. The docnos come back aligned with the
+    * ids' sorted, distinct array ([[Searcher.Docnos]]), each partition's as
+    * a pair of arrays: no map or tuple per id.
     */
-  private[graft] def docnoLookup(ids: Seq[Long]): Map[Long, String] = {
-    if (ids.isEmpty) return Map.empty
+  private[graft] def docnoLookup(ids: Array[Long]): Searcher.Docnos = {
+    val sorted = Searcher.sortedDistinct(ids)
+    val docnos = new Array[UTF8String](sorted.length)
+    if (sorted.isEmpty) return new Searcher.Docnos(sorted, docnos)
     val docShift = index.cfg.groupShift + index.cfg.mergeShift
-    val sorted = ids.distinct.sorted.toArray
     val grps = sorted.map(_ >> docShift).distinct.toSeq
     val inGrps = BuiltIndex.inSet(spark, "grp", grps, -_.toLong)
-    val read = (r: InternalRow) => r.getLong(0) -> r.getUTF8String(1).toString
-    if (sorted.length <= 4096)
-      PlanRunner.rows(index.docs.where(inGrps && BuiltIndex.inSet(spark, "docid", sorted.toSeq, -_.toLong))
-        .select("docid", "docno"))(read).toMap
-    else {
-      val idsB = spark.sparkContext.broadcast(sorted)
-      try PlanRunner.partitions(index.docs.where(inGrps).select("docid", "docno"))(
-        _.filter(r => java.util.Arrays.binarySearch(idsB.value, r.getLong(0)) >= 0).map(read).toArray)
-        .flatten.toMap
-      finally idsB.destroy()
+    val parts =
+      if (sorted.length <= 4096)
+        PlanRunner.partitions(index.docs.where(inGrps && BuiltIndex.inSet(spark, "docid", sorted.toSeq, -_.toLong))
+          .select("docid", "docno"))(Searcher.readDocnos)
+      else {
+        val idsB = spark.sparkContext.broadcast(sorted)
+        try PlanRunner.partitions(index.docs.where(inGrps).select("docid", "docno"))(it =>
+          Searcher.readDocnos(it.filter(r => java.util.Arrays.binarySearch(idsB.value, r.getLong(0)) >= 0)))
+        finally idsB.destroy()
+      }
+    parts.foreach { case (ds, ns) =>
+      var i = 0
+      while (i < ds.length) {
+        val at = java.util.Arrays.binarySearch(sorted, ds(i))
+        if (at >= 0) docnos(at) = ns(i)
+        i += 1
+      }
     }
+    new Searcher.Docnos(sorted, docnos)
   }
 
   /** Per-document numeric boost table for [[searchFunctionScore]]: index
@@ -1371,30 +1398,31 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     * over a scored (qid, docid, score) stream — the shared tail of every
     * search entry point (score desc, docid asc tie-break — the Lucene
     * collector contract, SURVEY.md §2.5). The per-partition heaps run in
-    * the stage that produced the scores (for a flat search, the combine
-    * stage); the driver merges their ≤ k rows per topic per partition,
-    * assigns pre-dedup ranks, attaches docnos with one pruned point-lookup
-    * job and drops a docno's later duplicates.
+    * the stage that produced the scores (for a flat search, the range
+    * tasks); the driver merges their ≤ k rows per topic per partition into
+    * primitive arrays, assigns pre-dedup ranks, attaches docnos with one
+    * pruned point-lookup job and drops a docno's later duplicates. The run
+    * lines are written straight into rows (qid and runtag encoded once per
+    * qid) under a [[graft.DriverRows]] leaf, so neither the lines nor
+    * Catalyst's rules box or walk a hit.
     */
   private[search] def collectTopK(scored: Dataset[(String, Long, Float)],
                                   k: Int, runtag: String): Dataset[RunLine] = {
     val top = TopK.toDriver(scored, k)
-    if (top.isEmpty) return spark.emptyDataset(Searcher.LineEnc)
-    val docnoById = docnoLookup(top.flatMap(_._2.iterator.map(_._1)))
-    val lines = new java.util.ArrayList[org.apache.spark.sql.Row]()
-    top.foreach { case (qid, hits) =>
-      val seen = scala.collection.mutable.HashSet.empty[String]
-      hits.iterator.zipWithIndex.foreach { case ((docid, score), rank) =>
+    val docnos = docnoLookup(Array.concat(top.map(_.docids): _*))
+    val tag = UTF8String.fromString(runtag)
+    val lines = new DriverRows.Builder(5)
+    top.foreach { h =>
+      val seen = new java.util.HashSet[UTF8String]()
+      h.docids.indices.foreach { rank =>
+        val docno = docnos(h.docids(rank))
         // inner-join semantics: a docid absent from the doc table drops
-        docnoById.get(docid) match {
-          case Some(docno) if seen.add(docno) =>
-            lines.add(org.apache.spark.sql.Row(qid, docno, rank, score, runtag))
-          case _ =>
+        if (docno != null && seen.add(docno)) lines += { w =>
+          w.write(0, h.key); w.write(1, docno); w.write(2, rank); w.write(3, h.scores(rank)); w.write(4, tag)
         }
       }
     }
-    // external rows: no per-call serializer is generated for them
-    spark.createDataFrame(lines, Searcher.LineEnc.schema).as(Searcher.LineEnc)
+    DriverRows.dataset(spark, Searcher.LineEnc, lines.result())
   }
 
   /** Distinct matching DOCNOS per query under OR semantics (≙ the
@@ -1473,9 +1501,10 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     var idx = 0
     var batch = 1
     while (idx < grps.length && acc.values.exists(_._2.length < k)) {
-      val need = acc.iterator.collect {
-        case (q, (s, got)) if got.length < k => (q, s)
-      }.toSeq
+      val need = new DriverRows.Builder(2)
+      acc.foreach { case (q, (s, got)) =>
+        if (got.length < k) need += { w => w.write(0, UTF8String.fromString(q)); w.write(1, s) }
+      }
       val gs = grps.slice(idx, idx + batch)
       idx += gs.length
       batch *= 2
@@ -1486,24 +1515,27 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
       val got = TopK.toDriver(index.docs
         .where(col("grp") >= gs.head && col("grp") <= gs.last)
         .select(col("docid"))
-        .crossJoin(need.toDF("qid", "cscore"))
+        .crossJoin(DriverRows.frame(spark, Searcher.NeedSchema, need.result()))
         .join(cands, Seq("qid", "docid"), "left_anti")
         .select(col("qid"), col("docid"), col("cscore"))
         .as[(String, Long, Float)]
         .filter(t => Deletes.live(Searcher.tombsOf(tombL), t._2) &&
           excl.get(t._1).forall(!_.contains(t._2))), k)
-      got.foreach { case (q, hits) =>
+      got.foreach { h =>
+        val q = h.key.toString
         val (s, have) = acc(q)
         // batches ascend in docid and each batch's hits arrive docid-asc,
         // so appending keeps the global docid order; cap at k
-        acc(q) = (s, (have ++ hits.iterator.map(_._1)).take(k))
+        acc(q) = (s, (have ++ h.docids).take(k))
       }
     }
     lastComplementGrpsScanned = idx
-    val rows = acc.iterator.flatMap { case (q, (s, ds)) =>
-      ds.iterator.map(d => (q, d, s))
-    }.toSeq
-    spark.createDataset(rows)
+    val rows = new DriverRows.Builder(3)
+    acc.foreach { case (q, (s, ds)) =>
+      val qid = UTF8String.fromString(q)
+      ds.foreach(d => rows += { w => w.write(0, qid); w.write(1, d); w.write(2, s) })
+    }
+    DriverRows.dataset(spark, RangeScorer.ScoredEnc, rows.result())
   }
 
   /** Paged interactive search (≙ the SearchFiles demo's 5-page prefetch +
@@ -1542,6 +1574,47 @@ object Searcher {
   private val KeyDocEnc: Encoder[(String, Long)] = ExpressionEncoder[(String, Long)]()
   private val ExplainEnc: Encoder[(String, String, String, Long, Long, Long)] =
     ExpressionEncoder[(String, String, String, Long, Long, Long)]()
+  // the columns of searchSorted and topHits
+  private val SortedSchema = StructType(Seq(StructField("qid", StringType), StructField("docno", StringType),
+    StructField("rank", LongType, nullable = false), StructField("ckey", StringType)))
+  private val TopHitsSchema = StructType(Seq(StructField("qid", StringType), StructField("ckey", StringType),
+    StructField("docno", StringType), StructField("hit_rank", LongType, nullable = false)))
+  // complementTail's (qid, constant score) rows
+  private val NeedSchema = StructType(Seq(StructField("qid", StringType), StructField("cscore", FloatType, nullable = false)))
+
+  /** Docnos aligned with a sorted, distinct docid array: `docnos(i)` is the
+    * docno of `ids(i)`, null where no doc holds it.
+    */
+  private[graft] final class Docnos(val ids: Array[Long], val docnos: Array[UTF8String]) {
+    /** `docid`'s docno by binary search, null if no doc holds it. */
+    def apply(docid: Long): UTF8String = {
+      val at = java.util.Arrays.binarySearch(ids, docid)
+      if (at >= 0) docnos(at) else null
+    }
+  }
+
+  /** A partition's (docid, docno) rows as a pair of arrays, docnos copied
+    * out of the reused rows.
+    */
+  private val readDocnos = (it: Iterator[InternalRow]) => {
+    val ds = Array.newBuilder[Long]
+    val ns = Array.newBuilder[UTF8String]
+    it.foreach { r => ds += r.getLong(0); ns += r.getUTF8String(1).clone() }
+    (ds.result(), ns.result())
+  }
+
+  /** `ids` ascending, each once. */
+  private[search] def sortedDistinct(ids: Array[Long]): Array[Long] = {
+    val a = ids.clone()
+    java.util.Arrays.sort(a)
+    var n = 0
+    var i = 0
+    while (i < a.length) {
+      if (n == 0 || a(i) != a(n - 1)) { a(n) = a(i); n += 1 }
+      i += 1
+    }
+    if (n == a.length) a else java.util.Arrays.copyOf(a, n)
+  }
 
   /** The broadcast tombstone overlay's sorted docids, empty on a
     * delete-free index: the argument of [[Deletes.live]]. Static so

@@ -1,19 +1,23 @@
 package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, row_number}
 import org.apache.spark.sql.types.{FloatType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The search engine's one bounded top-k collector (≙ Lucene's `HitQueue`,
   * the bounded heap the reference's boolean scorer collects into,
   * `BatchSearch.java:283`): per key, the k best (docid, score) rows by
   * score desc, docid asc — the collector contract of SURVEY.md §2.5.
   *
-  * It runs as a per-partition pass (primitive heaps, ≤ k rows out per key
-  * per partition, so it pipelines into whatever stage produced the scores)
-  * and merges the per-partition rows through the same heap on the driver
-  * ([[toDriver]], keys in ascending order). For a scored search the
+  * It runs as a per-partition pass ([[collect]]: primitive heaps keyed by
+  * the row's `UTF8String`, ≤ k rows out per key per partition as a pair of
+  * primitive arrays, so it pipelines into whatever stage produced the
+  * scores) and merges each key's partition arrays through the same heap on
+  * the driver ([[toDriver]], keys in ascending order, one [[Hits]] per
+  * key): no tuple, `String` or boxed score per row. For a scored search the
   * per-partition pass runs in the stage of the range tasks
   * ([[RangeScorer]]) that score the (qid, docid) rows; a pruned qid's
   * range task also keeps a live heap of its own, the θ its block skipping
@@ -80,52 +84,70 @@ private[graft] object TopK {
       docs(i) = docid; scores(i) = score
     }
 
-    /** The held rows best-first; empties the heap. */
-    def drain(): Array[(Long, Float)] = {
-      val out = new Array[(Long, Float)](n)
+    /** The held rows best-first, as (docids, scores); empties the heap. */
+    def drain(): (Array[Long], Array[Float]) = {
+      val ds = new Array[Long](n)
+      val ss = new Array[Float](n)
       while (n > 0) {
-        out(n - 1) = (docs(0), scores(0))
+        ds(n - 1) = docs(0); ss(n - 1) = scores(0)
         n -= 1
         if (n > 0) siftDown(docs(n), scores(n))
       }
-      out
+      (ds, ss)
     }
   }
 
-  /** Per-key heaps over `rows`, in first-seen key order, each best-first. */
-  def byKey(k: Int, rows: Iterator[(String, Long, Float)]): Seq[(String, Array[(Long, Float)])] = {
-    if (k <= 0) return Seq.empty
-    val heaps = scala.collection.mutable.LinkedHashMap.empty[String, Heap]
-    rows.foreach(r => heaps.getOrElseUpdate(r._1, new Heap(k)).offer(r._2, r._3))
-    heaps.iterator.map { case (key, h) => key -> h.drain() }.toSeq
-  }
+  /** One key's collected rows, best-first: `docids(i)` scored `scores(i)`. */
+  final case class Hits(key: UTF8String, docids: Array[Long], scores: Array[Float])
 
-  /** One partition's pass: ≤ k rows per key, each key's rows best-first. */
-  def collect(k: Int, rows: Iterator[(String, Long, Float)]): Iterator[(String, Long, Float)] =
-    byKey(k, rows).iterator.flatMap { case (key, hits) =>
-      hits.iterator.map(h => (key, h._1, h._2))
+  /** One partition's pass over (key, docid, score) rows: ≤ k rows per key,
+    * each key's rows best-first, keys in no order. The heaps are keyed by
+    * the row's `UTF8String`, copied once per key, so no tuple or `String`
+    * is built per row.
+    */
+  def collect(k: Int, rows: Iterator[InternalRow]): Array[Hits] = {
+    if (k <= 0) return Array.empty
+    val heaps = new java.util.HashMap[UTF8String, Heap]()
+    rows.foreach { r =>
+      val key = r.getUTF8String(0)
+      var h = heaps.get(key)
+      if (h == null) { h = new Heap(k); heaps.put(key.clone(), h) }
+      h.offer(r.getLong(1), r.getFloat(2))
     }
+    val out = Array.newBuilder[Hits]
+    heaps.forEach { (key, h) =>
+      val (ds, ss) = h.drain()
+      out += Hits(key, ds, ss)
+    }
+    out.result()
+  }
 
   /** Per-partition heaps pipelined into the stage that produced `scored`,
-    * then the driver merge, keys in ascending order: one job
-    * ([[graft.PlanRunner]]) beyond the stages `scored` already needs. The
-    * collected rows are ≤ k × |keys| × partitions by construction, and the
-    * merge asserts it.
+    * then the driver merge of each key's partition arrays through the same
+    * heap, keys in ascending order: one job ([[graft.PlanRunner]]) beyond
+    * the stages `scored` already needs. The collected rows are ≤ k ×
+    * |keys| × partitions by construction, and the merge asserts it.
     */
-  def toDriver(scored: Dataset[(String, Long, Float)], k: Int)
-      : Seq[(String, Array[(Long, Float)])] = {
+  def toDriver(scored: Dataset[(String, Long, Float)], k: Int): Seq[Hits] = {
     // the heaps read the plan's own rows, so its columns must already be
     // the tuple's types (`as` would upcast an int docid in a deserializer)
     val types = scored.queryExecution.analyzed.output.map(_.dataType)
     require(types == Seq(StringType, LongType, FloatType), s"scored rows must be (string, long, float): $types")
-    val parts = graft.PlanRunner.partitions(scored)(it =>
-      collect(k, it.map(r => (r.getUTF8String(0).toString, r.getLong(1), r.getFloat(2)))).toArray)
-    val rows = parts.flatten
-    val keys = rows.iterator.map(_._1).distinct.size
-    require(rows.length.toLong <= k.toLong * keys * parts.length,
-      s"top-k collector emitted ${rows.length} rows, over its bound of " +
-        s"k=$k × $keys keys × ${parts.length} partitions")
-    byKey(k, rows.iterator).sortBy(_._1)
+    val parts = graft.PlanRunner.partitions(scored)(collect(k, _))
+    val byKey = parts.iterator.flatten.toSeq.groupBy(_.key)
+    val rows = parts.iterator.flatten.map(_.docids.length.toLong).sum
+    require(rows <= k.toLong * byKey.size * parts.length,
+      s"top-k collector emitted $rows rows, over its bound of " +
+        s"k=$k × ${byKey.size} keys × ${parts.length} partitions")
+    byKey.iterator.map { case (key, hs) =>
+      val heap = new Heap(k)
+      hs.foreach { h =>
+        var i = 0
+        while (i < h.docids.length) { heap.offer(h.docids(i), h.scores(i)); i += 1 }
+      }
+      val (ds, ss) = heap.drain()
+      key.toString -> Hits(key, ds, ss)
+    }.toSeq.sortBy(_._1).map(_._2)
   }
 
   /** Per-group top-k on the cluster: the `k` first rows of each `by` group

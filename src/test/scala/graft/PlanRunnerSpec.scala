@@ -63,11 +63,22 @@ class PlanRunnerSpec extends AnyFunSuite {
       val all = ix.docs.select("docid", "docno").collect().map(r => (r.getLong(0), r.getString(1))).toMap
       assert(all.size > 4096, name)
       val s = new Searcher(ix)
-      // the pushed-down docid set (≤ 4,096 ids), with an id no doc holds
+      // the docnos aligned with the ids' sorted, distinct array, null
+      // where no doc holds the id
+      def lookup(ids: Seq[Long]): Seq[(Long, String)] = {
+        val got = s.docnoLookup(ids.toArray)
+        assert(got.ids.toSeq == ids.distinct.sorted && got.docnos.length == got.ids.length, name)
+        got.ids.toSeq.zip(got.docnos.map(d => if (d == null) null else d.toString))
+      }
+      // the pushed-down docid set (≤ 4,096 ids), with an id no doc holds,
+      // unsorted and repeated
       val few = all.keys.toSeq.sorted.grouped(97).map(_.head).toSeq
-      assert(s.docnoLookup(few :+ (all.keys.max + 1)) == few.map(d => d -> all(d)).toMap, name)
+      val missing = all.keys.max + 1
+      assert(lookup(missing +: (few.reverse ++ few)) == few.map(d => d -> all(d)) :+ (missing -> null), name)
+      val s0 = s.docnoLookup(few.toArray)
+      assert(few.forall(d => s0(d).toString == all(d)) && s0(missing) == null, name)
       // the broadcast docid array (> 4,096 ids)
-      assert(s.docnoLookup(all.keys.toSeq) == all, name)
+      assert(lookup(all.keys.toSeq) == all.toSeq.sorted, name)
     }
   }
 
@@ -89,11 +100,12 @@ class PlanRunnerSpec extends AnyFunSuite {
   test("empty input: no rows and no job") {
     for ((name, ix) <- indexes) {
       var got = Array.empty[(String, Long, Long)]
+      var docnos = Array.empty[org.apache.spark.unsafe.types.UTF8String]
       val jobs = TestSpark.jobsOf {
         got = PlanRunner.rows(ix.forTerms(ix.termStats, Nil).select("term", "df", "cf"))(stat)
+        docnos = new Searcher(ix).docnoLookup(Array.emptyLongArray).docnos
       }
-      assert(got.isEmpty && jobs == 0, s"$name jobs=$jobs")
-      assert(new Searcher(ix).docnoLookup(Nil).isEmpty)
+      assert(got.isEmpty && docnos.isEmpty && jobs == 0, s"$name jobs=$jobs")
       // a scan that matches nothing still runs, and returns nothing
       assert(PlanRunner.rows(ix.docs.where(col("docid") < 0).select("docid", "docno"))(docno).isEmpty)
     }

@@ -5,6 +5,8 @@ import graft.index._
 import graft.search._
 import graft.streaming.StreamFixtures
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The search collector ([[TopK]]) and the flat-mode pipeline it closes:
@@ -54,6 +56,28 @@ class TopKCollectorSpec extends AnyFunSuite {
   private def bitsOf(hits: Seq[(Long, Float)]): Seq[(Long, Int)] =
     hits.map(h => (h._1, java.lang.Float.floatToIntBits(h._2)))
 
+  private def pairs(h: TopK.Hits): Seq[(Long, Float)] = {
+    assert(h.docids.length == h.scores.length, s"key=${h.key}")
+    h.docids.toSeq.zip(h.scores.toSeq)
+  }
+
+  /** [[TopK.toDriver]] by key; its keys must come in ascending order. */
+  private def toDriver(ds: Dataset[(String, Long, Float)], k: Int): Map[String, Seq[(Long, Float)]] = {
+    val hits = TopK.toDriver(ds, k)
+    val keys = hits.map(_.key.toString)
+    assert(keys == keys.sorted && keys.distinct == keys, s"keys $keys")
+    hits.map(h => h.key.toString -> pairs(h)).toMap
+  }
+
+  /** The partition pass ([[TopK.collect]]) over in-memory rows, by key. */
+  private def collected(k: Int, rows: Seq[(String, Long, Float)]): Map[String, Seq[(Long, Float)]] = {
+    val hits = TopK.collect(k, rows.iterator.map { case (key, d, sc) =>
+      InternalRow(UTF8String.fromString(key), d, sc)
+    })
+    assert(hits.map(_.key).distinct.length == hits.length)
+    hits.map(h => h.key.toString -> pairs(h)).toMap
+  }
+
   test("collector: score ties break by docid asc across partitions") {
     val r = new scala.util.Random(3)
     // three score levels, so most rows tie with rows in other partitions
@@ -62,10 +86,10 @@ class TopKCollectorSpec extends AnyFunSuite {
     }
     val want = expected(rows, 25)
     for (parts <- Seq(1, 4, 7)) {
-      val got = TopK.toDriver(rowsDs(rows, parts), 25).toMap
+      val got = toDriver(rowsDs(rows, parts), 25)
       assert(got.keySet == want.keySet)
       want.foreach { case (key, hits) =>
-        assert(bitsOf(got(key).toSeq) == bitsOf(hits), s"key=$key parts=$parts")
+        assert(bitsOf(got(key)) == bitsOf(hits), s"key=$key parts=$parts")
       }
       val dist = ranked(rowsDs(rows, parts), 25)
       assert(dist.keySet == want.keySet)
@@ -73,33 +97,32 @@ class TopKCollectorSpec extends AnyFunSuite {
         assert(bitsOf(dist(key)) == bitsOf(hits), s"ranked key=$key parts=$parts")
       }
     }
-    // the in-memory heap against a full sort, on many tie-heavy draws
+    // the partition pass against a full sort, on many tie-heavy draws
     (1 to 200).foreach { trial =>
       val n = r.nextInt(60)
       val k = 1 + r.nextInt(20)
-      val rs = Seq.fill(n)(("q", r.nextInt(40).toLong, r.nextInt(4).toFloat))
-      val got = TopK.byKey(k, rs.iterator).toMap.get("q").map(_.toSeq).getOrElse(Nil)
-      assert(got == expected(rs, k).getOrElse("q", Nil), s"trial $trial")
+      val rs = Seq.fill(n)((s"q${r.nextInt(2)}", r.nextInt(40).toLong, r.nextInt(4).toFloat))
+      assert(collected(k, rs) == expected(rs, k), s"trial $trial")
     }
   }
 
   test("collector: k larger than the match count keeps every row, in order") {
     val rows = Seq(("a", 5L, 1.5f), ("a", 2L, 3.0f), ("a", 9L, 1.5f), ("b", 1L, 0.25f))
-    val got = TopK.toDriver(rowsDs(rows, 3), 100).toMap
-    assert(got("a").toSeq == Seq((2L, 3.0f), (5L, 1.5f), (9L, 1.5f)))
-    assert(got("b").toSeq == Seq((1L, 0.25f)))
+    val got = toDriver(rowsDs(rows, 3), 100)
+    assert(got("a") == Seq((2L, 3.0f), (5L, 1.5f), (9L, 1.5f)))
+    assert(got("b") == Seq((1L, 0.25f)))
   }
 
   test("collector: empty partitions and an empty input") {
     val rows = Seq(("a", 3L, 2.0f), ("a", 1L, 2.0f), ("c", 4L, 1.0f))
     // eight partitions for three rows: at least five are empty
-    val got = TopK.toDriver(rowsDs(rows, 8), 2).toMap
+    val got = toDriver(rowsDs(rows, 8), 2)
     assert(got.keySet == Set("a", "c"))
-    assert(got("a").toSeq == Seq((1L, 2.0f), (3L, 2.0f)))
-    assert(got("c").toSeq == Seq((4L, 1.0f)))
+    assert(got("a") == Seq((1L, 2.0f), (3L, 2.0f)))
+    assert(got("c") == Seq((4L, 1.0f)))
     assert(TopK.toDriver(rowsDs(Nil, 4), 10).isEmpty)
     assert(ranked(rowsDs(Nil, 4), 10).isEmpty)
-    assert(TopK.byKey(0, rows.iterator).isEmpty)
+    assert(collected(0, rows).isEmpty)
   }
 
   // ---- engine vs brute force ------------------------------------------

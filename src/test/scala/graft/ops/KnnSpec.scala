@@ -49,8 +49,8 @@ class KnnSpec extends AnyFunSuite {
   test("top-k: a NaN cosine ranks first, ties by vec_id ascending") {
     import spark.implicits._
     // cosines against (1, 0, 0): 7 and 2 hold a NaN component (NaN dot,
-    // NaN cosine; a zero vector fails with DIVIDE_BY_ZERO instead), 5 and
-    // 4 are orthogonal (0.0), 3 is 1.0 and 6 is -1.0
+    // NaN cosine; a zero vector fails the query instead, below), 5 and 4
+    // are orthogonal (0.0), 3 is 1.0 and 6 is -1.0
     val vecs = Seq(7L -> Seq(Float.NaN, 0f, 0f), 5L -> Seq(0f, -1f, 0f), 3L -> Seq(2f, 0f, 0f),
         2L -> Seq(0f, Float.NaN, 1f), 6L -> Seq(-1f, 0f, 0f), 4L -> Seq(0f, 1f, 0f))
       .toDF("vec_id", "embedding")
@@ -59,5 +59,37 @@ class KnnSpec extends AnyFunSuite {
       .as[(Long, Long, Int)].collect().sortBy(_._3).map(r => (r._2, r._3)).toSeq
     assert(ids(10) == Seq(2L, 7L, 3L, 4L, 5L, 6L).zipWithIndex)
     assert(ids(3) == Seq(2L, 7L, 3L).zipWithIndex)
+  }
+
+  test("zero-norm vectors: the kNN query fails naming the zero-norm side") {
+    import spark.implicits._
+    val vecs = Seq(1L -> Seq(1f, 2f, 0f), 2L -> Seq(0f, 1f, 1f)).toDF("vec_id", "embedding")
+    val zero = Seq(3L -> Seq(0f, 0f, 0f)).toDF("vec_id", "embedding")
+    val q = Seq(100L -> Seq(1f, 0f, 0f)).toDF("qid", "qv")
+    val zeroQ = Seq(101L -> Seq(0f, 0f, 0f)).toDF("qid", "qv")
+    def failure(run: => Any): String = intercept[Exception](run).getMessage
+    assert(Knn.bruteForceTopK(vecs, q, 5).count() == 2)
+    assert(failure(Knn.bruteForceTopK(vecs.union(zero), q, 5).collect())
+      .contains("cosine of a zero-norm vector: a stored (candidate or centroid) vector has norm 0"))
+    assert(failure(Knn.bruteForceTopK(vecs, zeroQ, 5).collect())
+      .contains("cosine of a zero-norm vector: the query vector has norm 0"))
+    assert(failure(Knn.lshTopK(vecs.union(zero), zeroQ, 5, nPlanes = 2).collect())
+      .contains("cosine of a zero-norm vector: the query vector has norm 0"))
+    // tiny norms still have a cosine
+    val tiny = Seq(4L -> Seq(1e-30f, 0f, 0f)).toDF("vec_id", "embedding")
+    val tinyQ = Seq(102L -> Seq(1e-30f, 1e-30f, 0f)).toDF("qid", "qv")
+    assert(Knn.bruteForceTopK(tiny, tinyQ, 5).count() == 1)
+  }
+
+  test("plane rows: a bounded memo, least recently used out, rows unchanged") {
+    val keys = (0 until Knn.MaxPlaneRows + 40).map(i => (i % 64, 2 + i / 64))
+    keys.foreach { case (p, d) => Knn.planeRow(p, d) }
+    assert(Knn.planeRowsHeld == Knn.MaxPlaneRows)
+    // an evicted row comes back recomputed, equal to the one it replaced
+    val (p0, d0) = keys.head
+    assert(Knn.planeRow(p0, d0).toSeq == (0 until d0).map(Knn.planeComponentJvm(p0, _)))
+    assert(Knn.planeRowsHeld == Knn.MaxPlaneRows)
+    val (pl, dl) = keys.last
+    assert(Knn.planeRow(pl, dl) eq Knn.planeRow(pl, dl))
   }
 }
