@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet}
@@ -82,8 +82,12 @@ private[graft] final case class DriverRowsRelation(output: Seq[Attribute], held:
     Statistics(sizeInBytes = EstimationUtils.getSizePerRow(output) * held.rows.length)
 }
 
-/** Plans a [[DriverRowsRelation]] as `LocalTableScanExec`; installed once
-  * per session, ahead of the session's other extra strategies.
+/** Plans a [[DriverRowsRelation]] as `LocalTableScanExec`. It is installed
+  * once in a session's extensions, which its `newSession()` and
+  * `cloneSession()` children share, so a result read from another of them
+  * (through a global temp view, say) plans too. The planner reads the
+  * extensions' strategies at every planning, so the installing session
+  * plans the leaf at once.
   */
 private[graft] object DriverRowsStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -92,10 +96,15 @@ private[graft] object DriverRowsStrategy extends SparkStrategy {
     case _ => Nil
   }
 
-  def install(session: SparkSession): Unit = {
-    val ex = session.experimental
-    if (!ex.extraStrategies.contains(this)) ex.synchronized {
-      if (!ex.extraStrategies.contains(this)) ex.extraStrategies = this +: ex.extraStrategies
-    }
+  def install(session: classic.SparkSession): Unit = installed.synchronized {
+    val ext = Extensions.invoke(session).asInstanceOf[SparkSessionExtensions]
+    if (installed.add(ext)) ext.injectPlannerStrategy(_ => this)
   }
+
+  // a session's extensions are private to Spark's sql package
+  private val Extensions = classOf[classic.SparkSession].getMethod("extensions")
+  // the extensions holding the strategy, by identity and weakly, so a
+  // discarded session's extensions are not kept
+  private val installed = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[SparkSessionExtensions, java.lang.Boolean]())
 }

@@ -145,20 +145,25 @@ object Knn {
     h.toDouble / 2147483648.0 - 1.0
   }
 
-  /** Most (plane, dims) component rows [[planeRow]] keeps, least recently
-    * used first out. A constant, not a setting: it bounds a JVM-wide memo;
-    * 64-plane signatures over four embedding widths still fit.
+  /** Most signature shapes (nPlanes, dims) whose plane matrices [[planes]]
+    * keeps, least recently used first out. A constant, not a setting: it
+    * bounds a JVM-wide memo of at most 64 × dims doubles per shape.
     */
-  private[ops] val MaxPlaneRows = 256
+  private[ops] val MaxPlaneShapes = 16
 
-  // plane component rows cached per (plane, dims): computed once, not once
-  // per element per row like the old per-element md5 expression
-  private val planeCache = graft.index.BuiltIndex.lru[(Int, Int), Array[Double]](MaxPlaneRows)
+  // the (nPlanes × dims) plane components per signature shape: computed
+  // once, not once per element per row like the old per-element md5
+  // expression, and looked up once per row
+  private val planeCache = graft.index.BuiltIndex.lru[(Int, Int), Array[Array[Double]]](MaxPlaneShapes)
 
-  private[ops] def planeRow(plane: Int, dims: Int): Array[Double] =
-    planeCache.computeIfAbsent((plane, dims), _ => Array.tabulate(dims)(planeComponentJvm(plane, _)))
+  /** The first `nPlanes` hyperplanes over `dims` dimensions: row p holds
+    * plane p's components.
+    */
+  private[ops] def planes(nPlanes: Int, dims: Int): Array[Array[Double]] =
+    planeCache.computeIfAbsent((nPlanes, dims),
+      _ => Array.tabulate(nPlanes, dims)(planeComponentJvm))
 
-  private[ops] def planeRowsHeld: Int = planeCache.size
+  private[ops] def planeShapesHeld: Int = planeCache.size
 
   /** JVM sign-LSH bucket, identical to the old expression: per plane the
     * projection is the left-to-right fold Σ v_i·comp(p, i); bit p is set
@@ -174,10 +179,11 @@ object Knn {
     // saw a NULL proj (null-propagated fold) and took the otherwise-0
     // branch, so a null embedding bucketed to 0, same as an empty one.
     if (v == null || v.length == 0) return 0L
+    val rows = planes(nPlanes, v.length)
     var b = 0L
     var p = 0
     while (p < nPlanes) {
-      val comps = planeRow(p, v.length)
+      val comps = rows(p)
       var proj = 0.0
       var i = 0
       while (i < v.length) { proj += v(i) * comps(i); i += 1 }

@@ -8,9 +8,11 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{FloatType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.LongAccumulator
+
+import scala.reflect.runtime.universe.TypeTag
 
 /** A batched topic query (≙ one `<top>` of the reference's query file,
   * parsed at `BatchSearch.java:193-233`).
@@ -515,7 +517,7 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     * a pair of arrays: no map or tuple per id.
     */
   private[graft] def docnoLookup(ids: Array[Long]): Searcher.Docnos = {
-    val sorted = Searcher.sortedDistinct(ids)
+    val sorted = ids.distinct.sorted
     val docnos = new Array[UTF8String](sorted.length)
     if (sorted.isEmpty) return new Searcher.Docnos(sorted, docnos)
     val docShift = index.cfg.groupShift + index.cfg.mergeShift
@@ -1574,13 +1576,13 @@ object Searcher {
   private val KeyDocEnc: Encoder[(String, Long)] = ExpressionEncoder[(String, Long)]()
   private val ExplainEnc: Encoder[(String, String, String, Long, Long, Long)] =
     ExpressionEncoder[(String, String, String, Long, Long, Long)]()
-  // the columns of searchSorted and topHits
-  private val SortedSchema = StructType(Seq(StructField("qid", StringType), StructField("docno", StringType),
-    StructField("rank", LongType, nullable = false), StructField("ckey", StringType)))
-  private val TopHitsSchema = StructType(Seq(StructField("qid", StringType), StructField("ckey", StringType),
-    StructField("docno", StringType), StructField("hit_rank", LongType, nullable = false)))
-  // complementTail's (qid, constant score) rows
-  private val NeedSchema = StructType(Seq(StructField("qid", StringType), StructField("cscore", FloatType, nullable = false)))
+  // the columns of searchSorted, topHits and complementTail's (qid,
+  // constant score) side: the tuple encoders' schemas, renamed
+  private def columns[T: TypeTag](names: String*): StructType =
+    StructType(ExpressionEncoder[T]().schema.zip(names).map { case (f, n) => f.copy(name = n) })
+  private val SortedSchema = columns[(String, String, Long, String)]("qid", "docno", "rank", "ckey")
+  private val TopHitsSchema = columns[(String, String, String, Long)]("qid", "ckey", "docno", "hit_rank")
+  private val NeedSchema = columns[(String, Float)]("qid", "cscore")
 
   /** Docnos aligned with a sorted, distinct docid array: `docnos(i)` is the
     * docno of `ids(i)`, null where no doc holds it.
@@ -1601,19 +1603,6 @@ object Searcher {
     val ns = Array.newBuilder[UTF8String]
     it.foreach { r => ds += r.getLong(0); ns += r.getUTF8String(1).clone() }
     (ds.result(), ns.result())
-  }
-
-  /** `ids` ascending, each once. */
-  private[search] def sortedDistinct(ids: Array[Long]): Array[Long] = {
-    val a = ids.clone()
-    java.util.Arrays.sort(a)
-    var n = 0
-    var i = 0
-    while (i < a.length) {
-      if (n == 0 || a(i) != a(n - 1)) { a(n) = a(i); n += 1 }
-      i += 1
-    }
-    if (n == a.length) a else java.util.Arrays.copyOf(a, n)
   }
 
   /** The broadcast tombstone overlay's sorted docids, empty on a

@@ -107,15 +107,29 @@ class DriverRowsSpec extends AnyFunSuite {
     assert(leaves(searcher.searchSorted(Seq(Topic("z", "zzznotindexed")), keys).queryExecution.analyzed) == (1, 0))
   }
 
-  test("the strategy is installed once per session") {
+  test("the strategy is installed once per session, and sessions sharing its extensions plan the leaf") {
     val rows = Array.fill(3)(org.apache.spark.sql.catalyst.InternalRow(1L))
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("x", org.apache.spark.sql.types.LongType, nullable = false)))
     (1 to 3).foreach(_ => DriverRows.frame(spark, schema, rows))
-    assert(spark.experimental.extraStrategies.count(_ == DriverRowsStrategy) == 1)
+    def installs(s: org.apache.spark.sql.SparkSession): Int = s match {
+      case c: org.apache.spark.sql.classic.SparkSession => c.sessionState.planner.strategies.count(_ == DriverRowsStrategy)
+    }
+    assert(installs(spark) == 1)
     assert(DriverRows.frame(spark, schema, rows).collect().toSeq == Seq.fill(3)(Row(1L)))
     val other = spark.newSession()
     assert(DriverRows.frame(other, schema, rows).count() == 3)
-    assert(other.experimental.extraStrategies.count(_ == DriverRowsStrategy) == 1)
+    assert(installs(other) == 1 && installs(spark) == 1)
+  }
+
+  test("a search result read from a second session") {
+    import spark.implicits._
+    val lines = searcher.search(topics.take(2), k = 50)
+    lines.createOrReplaceGlobalTempView("driverrows_lines")
+    try {
+      val read = spark.newSession().table("global_temp.driverrows_lines").as[RunLine]
+      assert(read.collect().toSeq.sortBy(l => (l.qid, l.rank)) == lines.collect().toSeq.sortBy(l => (l.qid, l.rank)))
+      assert(read.count() == 100)
+    } finally spark.catalog.dropGlobalTempView("driverrows_lines")
   }
 }

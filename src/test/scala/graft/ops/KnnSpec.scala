@@ -25,7 +25,7 @@ class KnnSpec extends AnyFunSuite {
   test("NaN embeddings: the sign-LSH kernel sets a bit where SQL's proj >= 0 holds") {
     val nPlanes = 4
     val sql = (0 until nPlanes).map { p =>
-      when(dot(Knn.planeRow(p, 3)) >= 0, lit(1L << p)).otherwise(lit(0L))
+      when(dot(Knn.planes(nPlanes, 3)(p)) >= 0, lit(1L << p)).otherwise(lit(0L))
     }.reduce(_ bitwiseOR _)
     val rows = embs.select(Knn.signBucket(col("embedding"), nPlanes), sql).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
@@ -81,15 +81,18 @@ class KnnSpec extends AnyFunSuite {
     assert(Knn.bruteForceTopK(tiny, tinyQ, 5).count() == 1)
   }
 
-  test("plane rows: a bounded memo, least recently used out, rows unchanged") {
-    val keys = (0 until Knn.MaxPlaneRows + 40).map(i => (i % 64, 2 + i / 64))
-    keys.foreach { case (p, d) => Knn.planeRow(p, d) }
-    assert(Knn.planeRowsHeld == Knn.MaxPlaneRows)
-    // an evicted row comes back recomputed, equal to the one it replaced
-    val (p0, d0) = keys.head
-    assert(Knn.planeRow(p0, d0).toSeq == (0 until d0).map(Knn.planeComponentJvm(p0, _)))
-    assert(Knn.planeRowsHeld == Knn.MaxPlaneRows)
-    val (pl, dl) = keys.last
-    assert(Knn.planeRow(pl, dl) eq Knn.planeRow(pl, dl))
+  test("plane matrices: a bounded memo per signature shape, least recently used out") {
+    val shapes = (0 until Knn.MaxPlaneShapes + 5).map(i => (1 + i % 8, 2 + i / 8))
+    shapes.foreach { case (n, d) => Knn.planes(n, d) }
+    assert(Knn.planeShapesHeld == Knn.MaxPlaneShapes)
+    // an evicted matrix comes back recomputed, equal to the one it replaced
+    val (n0, d0) = shapes.head
+    assert(Knn.planes(n0, d0).map(_.toSeq).toSeq ==
+      (0 until n0).map(p => (0 until d0).map(Knn.planeComponentJvm(p, _))))
+    assert(Knn.planeShapesHeld == Knn.MaxPlaneShapes)
+    val (nl, dl) = shapes.last
+    assert(Knn.planes(nl, dl) eq Knn.planes(nl, dl))
+    // a shape's plane p is the same plane whatever the plane count
+    assert(Knn.planes(8, 3)(2).toSeq == Knn.planes(4, 3)(2).toSeq)
   }
 }
