@@ -16,11 +16,18 @@ then the closure-cleaner samples by the call that made the cleaned job
 (`Dataset.collect`, `Dataset.rdd`, a whole-stage-codegen node, an engine
 method).
 
+Execution samples are taken only while a thread runs, so they miss the
+time the main thread waits for a Spark job. The `park ms` column sums the
+main thread's `jdk.ThreadPark` events (a job wait parks in
+`JobWaiter.awaitResult`) by the same call sites. JFR records a park only
+if it lasts past the event's threshold, 10 ms under `settings=profile`;
+a lower threshold, as below, keeps the short waits of a small search.
+
 Record a profile on an unmodified, already built benchmark checkout; the
 stack depth must hold Spark's deep stacks:
 
     JAVA_TOOL_OPTIONS="-XX:FlightRecorderOptions=stackdepth=1024 \\
-      -XX:StartFlightRecording=filename=/tmp/adhoc.jfr,settings=profile" \\
+      -XX:StartFlightRecording=filename=/tmp/adhoc.jfr,settings=profile,jdk.ThreadPark#threshold=1ms" \\
       python3 perfbench/run.py --workload adhoc --seed 2 --seconds 14
     python3 scripts/jfr_sites.py /tmp/adhoc.jfr
 
@@ -29,6 +36,7 @@ It needs the JDK's `jfr` tool on the PATH.
 import argparse
 import collections
 import json
+import re
 import subprocess
 import sys
 
@@ -116,6 +124,12 @@ def clean_caller(stack):
     return "(other)"
 
 
+def seconds(duration):
+    """An ISO-8601 duration of `jfr print --json` (`PT0.031S`, `PT1M2.5S`)."""
+    h, m, s = re.fullmatch(r"PT(?:(\d+)H)?(?:(\d+)M)?(?:([\d.]+)S)?", duration).groups()
+    return int(h or 0) * 3600 + int(m or 0) * 60 + float(s or 0)
+
+
 def category(stack):
     for name, prefixes in CATEGORIES:
         if any(f.startswith(p) for f in stack for p in prefixes):
@@ -130,18 +144,25 @@ def main():
     ap.add_argument("--markdown", action="store_true", help="print a markdown table")
     a = ap.parse_args()
     out = subprocess.run(["jfr", "print", "--json", "--stack-depth", "1024",
-                          "--events", "jdk.ExecutionSample", a.recording], check=True, capture_output=True, text=True).stdout
+                          "--events", "jdk.ExecutionSample,jdk.ThreadPark", a.recording],
+                         check=True, capture_output=True, text=True).stdout
     events = json.loads(out)["recording"]["events"]
     table = collections.Counter()
     cleans = collections.Counter()
+    park_ms = collections.Counter()
     truncated = 0
     for e in events:
-        if e["values"]["sampledThread"]["javaName"] != "main":
+        park = e["type"] == "jdk.ThreadPark"
+        thread = e["values"]["eventThread" if park else "sampledThread"]
+        if thread["javaName"] != "main" or not e["values"]["stackTrace"]:
             continue
         stack = frames(e)
         if not any(f.startswith(ENTRY) for f in stack) or any(f.startswith(CHECK) for f in stack):
             continue
         truncated += e["values"]["stackTrace"]["truncated"]
+        if park:
+            park_ms[site(stack)] += seconds(e["values"]["duration"]) * 1000
+            continue
         cat = category(stack)
         table[(site(stack), cat)] += 1
         if cat == "ClosureCleaner":
@@ -153,28 +174,34 @@ def main():
         by_site[s] += n
         by_cat[c] += n
     cats = [c for c in [n for n, _ in CATEGORIES] + ["other"] if by_cat[c]]
-    sites = [s for s, _ in by_site.most_common(a.top)]
+    # a site that only waits still gets a row
+    sites = sorted(set(by_site) | set(park_ms), key=lambda s: (-by_site[s], -park_ms[s]))[:a.top]
     rest = total - sum(by_site[s] for s in sites)
+    rest_park = sum(park_ms.values()) - sum(park_ms[s] for s in sites)
     print(f"{total} main-thread samples in search calls, checks excluded"
           + (f" ({truncated} truncated stacks: raise stackdepth)" if truncated else ""))
     if a.markdown:
-        print("| site | total | " + " | ".join(cats) + " |")
-        print("|---|---:|" + "---:|" * len(cats))
+        print("| site | total | " + " | ".join(cats) + " | park ms |")
+        print("|---|---:|" + "---:|" * len(cats) + "---:|")
         for s in sites:
-            print(f"| `{s}` | {by_site[s]} | " + " | ".join(str(table[(s, c)]) for c in cats) + " |")
-        if rest:
+            print(f"| `{s}` | {by_site[s]} | " + " | ".join(str(table[(s, c)]) for c in cats)
+                  + f" | {park_ms[s]:.0f} |")
+        if rest or rest_park:
             print(f"| (other sites) | {rest} | " + " | ".join(
                 str(sum(n for (s, c2), n in table.items() if c2 == c and s not in sites))
-                for c in cats) + " |")
-        print(f"| **total** | {total} | " + " | ".join(str(by_cat[c]) for c in cats) + " |")
+                for c in cats) + f" | {rest_park:.0f} |")
+        print(f"| **total** | {total} | " + " | ".join(str(by_cat[c]) for c in cats)
+              + f" | {sum(park_ms.values()):.0f} |")
     else:
-        w = max([len(s) for s in sites] + [12])
-        print(f"{'site':<{w}} {'total':>5}  " + "  ".join(f"{c[:12]:>12}" for c in cats))
+        w = max([len(s) for s in sites] + [13])
+        print(f"{'site':<{w}} {'total':>5}  " + "  ".join(f"{c[:12]:>12}" for c in cats) + f"  {'park ms':>8}")
         for s in sites:
-            print(f"{s:<{w}} {by_site[s]:>5}  " + "  ".join(f"{table[(s, c)]:>12}" for c in cats))
-        if rest:
-            print(f"{'(other sites)':<{w}} {rest:>5}")
-        print(f"{'total':<{w}} {total:>5}  " + "  ".join(f"{by_cat[c]:>12}" for c in cats))
+            print(f"{s:<{w}} {by_site[s]:>5}  " + "  ".join(f"{table[(s, c)]:>12}" for c in cats)
+                  + f"  {park_ms[s]:>8.0f}")
+        if rest or rest_park:
+            print(f"{'(other sites)':<{w}} {rest:>5}  " + " " * (14 * len(cats) - 2) + f"  {rest_park:>8.0f}")
+        print(f"{'total':<{w}} {total:>5}  " + "  ".join(f"{by_cat[c]:>12}" for c in cats)
+              + f"  {sum(park_ms.values()):>8.0f}")
     print(f"ClosureCleaner samples by the call whose job closure is cleaned: "
           + (", ".join(f"{c} {n}" for c, n in cleans.most_common()) or "none"))
     return 0

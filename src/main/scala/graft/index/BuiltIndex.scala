@@ -20,12 +20,28 @@ import java.util.Properties
 class BuiltIndex(val spark: SparkSession, val dir: String, val cfg: IndexConfig) {
   import IndexLayout._
 
-  /** Identity of the index's IMMUTABLE statistics surface, used to share
-    * per-term stat memos across handles (r6): delete overlays keep the
-    * pre-delete df/cf by contract, so an overlay shares its parent's key;
-    * a union's stats are the union of its branch dirs.
+  /** Fingerprint of the snapshot's immutable tables, the key of the
+    * JVM-wide memos ([[termStatsOf]]'s buckets, the searcher's docno
+    * pages): a digest of the term_stats and docs file names under
+    * [[snapshotDirs]] plus `cfg.id`, listed once per handle (no Spark job).
+    * Spark's part-file names carry each write's UUID, so an index rebuilt
+    * at the same path gets a new key. Delete overlays keep their parent's
+    * key: df/cf keep their pre-delete values by contract, and the docs
+    * table is the parent's.
     */
-  def statsKey: String = s"$dir|${cfg.id}"
+  lazy val snapshotKey: String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = for (d <- snapshotDirs; t <- Seq(TermStatsDir, DocsDir)) yield {
+      val it = new Path(s"$d/$t").getFileSystem(conf).listFiles(new Path(s"$d/$t"), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.toString).toSeq
+    }
+    files.flatten.sorted.foreach { f => md.update(f.getBytes(StandardCharsets.UTF_8)); md.update(0: Byte) }
+    java.util.HexFormat.of().formatHex(md.digest()) + "|" + cfg.id
+  }
+
+  /** The index directories whose tables this handle reads. */
+  protected def snapshotDirs: Seq[String] = Seq(dir)
 
   // Table handles memoized per handle (r6 optimization): an index snapshot
   // directory is immutable (mutation mints a new snapshot/overlay handle —
@@ -46,9 +62,9 @@ class BuiltIndex(val spark: SparkSession, val dir: String, val cfg: IndexConfig)
     * for `terms`: the `bucket = hash(term) % buckets` partition filter
     * prunes parquet directories and the term set is pushed into the scan;
     * both are [[BuiltIndex.inSet]] predicates, so no term list compiles a
-    * class. With [[bucketsOf]], the read side's only user of
-    * [[IndexLayout.bucketOf]]. An empty term set is an empty relation: no
-    * scan runs.
+    * class. With [[bucketsOf]] and [[termStatsOf]], the read side's only
+    * user of [[IndexLayout.bucketOf]]. An empty term set is an empty
+    * relation: no scan runs.
     */
   def forTerms(table: DataFrame, terms: Iterable[String]): DataFrame = {
     val ts = terms.toSeq.distinct
@@ -67,21 +83,35 @@ class BuiltIndex(val spark: SparkSession, val dir: String, val cfg: IndexConfig)
 
   /** Per-term (docFreq, collectionFreq) of the indexed `terms` (≙ Lucene's
     * `TermStatistics`, consumed at `BM25.java:61`); absent terms have no
-    * entry. Memoized per [[statsKey]] (bounded: [[BuiltIndex.MemoSnapshots]],
-    * [[BuiltIndex.MemoTerms]]): an index's term statistics never change, so
-    * only terms the memo does not hold — hits and misses alike — cost one
-    * pruned term_stats lookup job.
+    * entry. Answered from a memo of whole `bucket` partitions of
+    * term_stats per [[snapshotKey]] (bounded: [[BuiltIndex.MemoSnapshots]],
+    * [[BuiltIndex.MemoTerms]]): the buckets it lacks load in one job, and
+    * any later term of a loaded bucket, an absent one included, costs no
+    * job (≙ a terms-dictionary block read, not a per-term seek).
     */
   def termStatsOf(terms: Iterable[String]): Map[String, (Long, Long)] = {
-    val memo = BuiltIndex.statsMemo(statsKey)
     val ts = terms.toSeq.distinct
-    val known = ts.flatMap(t => Option(memo.get(t)).map(t -> _))
-    val missing = ts.filterNot(known.map(_._1).toSet)
-    val found = if (missing.isEmpty) Map.empty[String, (Long, Long)]
-      else graft.PlanRunner.rows(forTerms(termStats, missing).select("term", "df", "cf"))(r =>
-        r.getUTF8String(0).toString -> (r.getLong(1), r.getLong(2))).toMap
-    missing.foreach(t => memo.put(t, found.get(t))) // negative entries too
-    known.flatMap { case (t, v) => v.map(t -> _) }.toMap ++ found
+    val buckets = BuiltIndex.statsMemo(snapshotKey)
+      .getAll(ts.map(bucketOf(_, cfg.buckets)).distinct)(loadBuckets)
+    ts.flatMap(t => buckets(bucketOf(t, cfg.buckets)).get(t).map(t -> _)).toMap
+  }
+
+  /** The (bucket, term, df, cf) rows of the term_stats `buckets`: a
+    * partition filter ([[BuiltIndex.inSet]]) and no term predicate, so no
+    * term list compiles a class. A union's filter pushes below its
+    * re-aggregation.
+    */
+  private[graft] def bucketRows(buckets: Seq[Int]): DataFrame =
+    termStats.where(BuiltIndex.inSet(spark, "bucket", buckets, -_))
+      .select(col("bucket").cast("int"), col("term"), col("df"), col("cf"))
+
+  /** Every term_stats row of `buckets`, an empty bucket included, in one
+    * job.
+    */
+  private def loadBuckets(buckets: Seq[Int]): Map[Int, BuiltIndex.TermRows] = {
+    val byBucket = graft.PlanRunner.rows(bucketRows(buckets))(r =>
+      (r.getInt(0), r.getUTF8String(1).toString, r.getLong(2), r.getLong(3))).groupBy(_._1)
+    buckets.map(b => b -> BuiltIndex.TermRows(byBucket.getOrElse(b, Array.empty))).toMap
   }
 
   /** Postings view for paths that never read positions (scoring, WAND,
@@ -191,23 +221,84 @@ class BuiltIndex(val spark: SparkSession, val dir: String, val cfg: IndexConfig)
 object BuiltIndex {
   private val PropsFile = IndexLayout.PropsFile
 
-  /** Most statistics surfaces ([[BuiltIndex.statsKey]]) holding a term-stat
-    * memo, and most terms, negative entries included, per memo: least
-    * recently used first out. Constants, not settings: they bound the
-    * driver heap a long-lived session (streaming snapshots, many distinct
-    * queries) spends on the memo, about 20 MB at most.
+  /** Most snapshots ([[BuiltIndex.snapshotKey]]) holding a term-stat memo,
+    * and most term_stats rows, absent buckets counted as one, per memo:
+    * least recently used first out, a whole bucket at a time. Constants,
+    * not settings: they bound the driver heap a long-lived session
+    * (streaming snapshots, many distinct queries) spends on the memo,
+    * about 10 MB at most.
     */
   private[graft] val MemoSnapshots = 8
   private[graft] val MemoTerms = 1 << 14
 
   /** Term-stat memos of [[BuiltIndex.termStatsOf]], one per
-    * [[BuiltIndex.statsKey]]: every handle on the same immutable statistics
-    * surface (fresh searchers, delete overlays) shares one.
+    * [[BuiltIndex.snapshotKey]]: every handle on the same snapshot (fresh
+    * searchers, delete overlays) shares one.
     */
-  private val statsMemos = lru[String, java.util.Map[String, Option[(Long, Long)]]](MemoSnapshots)
+  private val statsMemos = lru[String, PartMemo[Int, TermRows]](MemoSnapshots)
 
-  private[graft] def statsMemo(key: String): java.util.Map[String, Option[(Long, Long)]] =
-    statsMemos.computeIfAbsent(key, _ => lru(MemoTerms))
+  private[graft] def statsMemo(key: String): PartMemo[Int, TermRows] =
+    statsMemos.computeIfAbsent(key, _ => new PartMemo[Int, TermRows](MemoTerms, _.size max 1))
+
+  /** One term_stats bucket's rows, sorted by term. */
+  private[graft] final class TermRows private (terms: Array[String], df: Array[Long], cf: Array[Long]) {
+    def size: Int = terms.length
+
+    /** (df, cf) of `term`; None when the bucket does not hold it. */
+    def get(term: String): Option[(Long, Long)] = {
+      val at = java.util.Arrays.binarySearch(terms.asInstanceOf[Array[AnyRef]], term)
+      if (at >= 0) Some((df(at), cf(at))) else None
+    }
+  }
+
+  private[graft] object TermRows {
+    /** From (bucket, term, df, cf) rows of one bucket. */
+    def apply(rows: Array[(Int, String, Long, Long)]): TermRows = {
+      val s = rows.sortBy(_._2)
+      new TermRows(s.map(_._2), s.map(_._3), s.map(_._4))
+    }
+  }
+
+  /** A memo of whole partitions of an index table (a term_stats bucket, a
+    * docid page of docs), bounded by the rows it holds: keeping a
+    * partition evicts the least recently used ones until the rows fit, and
+    * a partition larger than the bound is not kept. Thread-safe.
+    */
+  private[graft] final class PartMemo[K, V](maxRows: Int, rows: V => Int) {
+    private val parts = new java.util.LinkedHashMap[K, V](16, 0.75f, true)
+    private var held = 0L
+
+    /** Rows held. */
+    def heldRows: Long = synchronized(held)
+
+    /** The partitions `keys` (distinct) name: those held from the memo,
+      * the rest from one `load`, which returns every key it is given and
+      * whose partitions are kept. The answer is complete even where the
+      * memo cannot keep all of it.
+      */
+    def getAll(keys: Seq[K])(load: Seq[K] => Map[K, V]): Map[K, V] = {
+      val hits = synchronized(keys.flatMap(k => Option(parts.get(k)).map(k -> _))).toMap
+      val missing = keys.filterNot(hits.contains)
+      if (missing.isEmpty) hits
+      else {
+        val loaded = load(missing)
+        missing.foreach(k => keep(k, loaded(k)))
+        hits ++ loaded
+      }
+    }
+
+    private def keep(k: K, v: V): Unit = synchronized {
+      val old = parts.remove(k)
+      if (old != null) held -= rows(old)
+      val n = rows(v)
+      if (n <= maxRows) {
+        val lru = parts.values.iterator
+        while (held + n > maxRows) { held -= rows(lru.next()); lru.remove() }
+        parts.put(k, v)
+        held += n
+      }
+    }
+  }
 
   /** A synchronized access-ordered map evicting past `cap` entries, least
     * recently used first.

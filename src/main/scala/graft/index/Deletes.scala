@@ -122,8 +122,9 @@ object Deletes {
   */
 final class DeleteOverlayIndex(val parent: BuiltIndex, overlays: Seq[String])
     extends BuiltIndex(parent.spark, parent.dir, parent.cfg) {
-  // term stats keep their pre-delete values by contract: share the memo
-  override def statsKey: String = parent.statsKey
+  // term stats keep their pre-delete values by contract, and the docs are
+  // the parent's: share its memos
+  override lazy val snapshotKey: String = parent.snapshotKey
   override def docs: DataFrame = parent.docs
   override def postings: DataFrame = parent.postings
   override def termStats: DataFrame = parent.termStats

@@ -101,8 +101,9 @@ final case class SynonymClause(qid: String, qidx: Int,
   *     → in the same stage, a per-partition bounded top-k heap ([[TopK]])
   *     → driver merge of the ≤ k rows per query per partition into
   *       primitive (docids, scores) arrays, ranks
-  *     → docno attach (one pruned point-lookup job over the doc table,
-  *       docnos aligned with the sorted distinct docids)
+  *     → docno attach from the per-snapshot memo of docid pages (a job
+  *       only for pages it lacks; docnos aligned with the sorted distinct
+  *       docids)
   *       → dedup-by-docno keeping the first pre-dedup rank
   *       (`BatchSearch.java:290,296-304` — the FR-collection duplicate
   *       workaround; ranks skip after a duplicate, replicated faithfully)
@@ -400,8 +401,8 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     val matched = matchPairs(termQids)
       .join(keys.where($"ckey".isNotNull).select($"docid", $"ckey".cast("string").as("ckey")),
         Seq("docid"))
-    // r6: driver-side docno attach (see collectTopK) — ≤ k rows per topic
-    // by construction; one pruned point-lookup job replaces broadcast + join.
+    // driver-side docno attach (see collectTopK) — ≤ k rows per topic by
+    // construction; the docno page memo replaces broadcast + join.
     val ranked = TopK.ranked(matched, Seq("key"), Seq($"ckey".asc, $"docid".asc), k)
       .select($"key", $"docid", $"rank", $"ckey").as[(String, Long, Long, String)]
       .collect().toSeq
@@ -506,42 +507,42 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     else PlanRunner.rows(index.docs.where(col("docno").isin(docnos.distinct: _*))
       .select("docno", "docid"))(r => r.getUTF8String(0).toString -> r.getLong(1)).toMap
 
-  /** docid → docno point lookup for a driver-bounded docid set, one job:
-    * grp partition pruning over the docid-sorted doc files, plus either a
-    * pushed-down docid set (≤ 4,096 ids) or, for a large topic batch that
-    * must never build a million-element predicate, an in-scan filter
-    * against a broadcast sorted docid array. Both sets are set-valued
-    * predicates ([[BuiltIndex.inSet]]): generated code references them, so a
-    * fresh search compiles no class. The docnos come back aligned with the
-    * ids' sorted, distinct array ([[Searcher.Docnos]]), each partition's as
-    * a pair of arrays: no map or tuple per id.
+  /** docid → docno for a driver-bounded docid set, answered from the
+    * JVM-wide memo of docid pages ([[Searcher.PageShift]] docids each,
+    * keyed by [[BuiltIndex.snapshotKey]]): the pages it lacks load in one
+    * job, and a memo-warm lookup runs none (≙ a stored-fields chunk read,
+    * not a per-document seek). The docnos come back aligned with the ids'
+    * sorted, distinct array ([[Searcher.Docnos]]), null where no document
+    * holds an id: a loaded page is complete.
     */
   private[graft] def docnoLookup(ids: Array[Long]): Searcher.Docnos = {
     val sorted = ids.distinct.sorted
-    val docnos = new Array[UTF8String](sorted.length)
-    if (sorted.isEmpty) return new Searcher.Docnos(sorted, docnos)
+    val key = index.snapshotKey
+    val pages = Searcher.docnoPages.getAll(
+      sorted.map(d => (key, d >> Searcher.PageShift)).distinct.toSeq)(loadPages)
+    new Searcher.Docnos(sorted, sorted.map(d => pages((key, d >> Searcher.PageShift))(d)))
+  }
+
+  /** Every docs row of the docid `pages`, an empty page included, in one
+    * job: the scan prunes grp partitions to the pages' docid ranges (a set
+    * predicate, [[BuiltIndex.inSet]], so no page list compiles a class),
+    * and the task keeps the rows on the pages' sorted array.
+    */
+  private def loadPages(keys: Seq[(String, Long)]): Map[(String, Long), Searcher.Docnos] = {
+    import Searcher.PageShift
+    val pages = keys.map(_._2).toArray.sorted
     val docShift = index.cfg.groupShift + index.cfg.mergeShift
-    val grps = sorted.map(_ >> docShift).distinct.toSeq
-    val inGrps = BuiltIndex.inSet(spark, "grp", grps, -_.toLong)
-    val parts =
-      if (sorted.length <= 4096)
-        PlanRunner.partitions(index.docs.where(inGrps && BuiltIndex.inSet(spark, "docid", sorted.toSeq, -_.toLong))
-          .select("docid", "docno"))(Searcher.readDocnos)
-      else {
-        val idsB = spark.sparkContext.broadcast(sorted)
-        try PlanRunner.partitions(index.docs.where(inGrps).select("docid", "docno"))(it =>
-          Searcher.readDocnos(it.filter(r => java.util.Arrays.binarySearch(idsB.value, r.getLong(0)) >= 0)))
-        finally idsB.destroy()
-      }
-    parts.foreach { case (ds, ns) =>
-      var i = 0
-      while (i < ds.length) {
-        val at = java.util.Arrays.binarySearch(sorted, ds(i))
-        if (at >= 0) docnos(at) = ns(i)
-        i += 1
-      }
-    }
-    new Searcher.Docnos(sorted, docnos)
+    val grps = pages.flatMap(p => (p << PageShift >> docShift) to (((p + 1) << PageShift) - 1 >> docShift))
+    val parts = PlanRunner.partitions(index.docs.where(BuiltIndex.inSet(spark, "grp", grps.toSeq.distinct, -_.toLong))
+      .select("docid", "docno"))(Searcher.readPages(pages))
+    val (ids, docnos) = (parts.flatMap(_._1), parts.flatMap(_._2))
+    val order = ids.indices.sortBy(ids(_)).toArray
+    val (ds, ns) = (order.map(i => ids(i)), order.map(i => docnos(i)))
+    def from(p: Long) = { val at = java.util.Arrays.binarySearch(ds, p << PageShift); if (at >= 0) at else -at - 1 }
+    keys.map { case k @ (_, p) =>
+      val (lo, hi) = (from(p), from(p + 1))
+      k -> new Searcher.Docnos(ds.slice(lo, hi), ns.slice(lo, hi))
+    }.toMap
   }
 
   /** Per-document numeric boost table for [[searchFunctionScore]]: index
@@ -1402,8 +1403,8 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
     * collector contract, SURVEY.md §2.5). The per-partition heaps run in
     * the stage that produced the scores (for a flat search, the range
     * tasks); the driver merges their ≤ k rows per topic per partition into
-    * primitive arrays, assigns pre-dedup ranks, attaches docnos with one
-    * pruned point-lookup job and drops a docno's later duplicates. The run
+    * primitive arrays, assigns pre-dedup ranks, attaches docnos from the
+    * docno page memo ([[docnoLookup]]) and drops a docno's later duplicates. The run
     * lines are written straight into rows (qid and runtag encoded once per
     * qid) under a [[graft.DriverRows]] leaf, so neither the lines nor
     * Catalyst's rules box or walk a hit.
@@ -1585,7 +1586,8 @@ object Searcher {
   private val NeedSchema = columns[(String, Float)]("qid", "cscore")
 
   /** Docnos aligned with a sorted, distinct docid array: `docnos(i)` is the
-    * docno of `ids(i)`, null where no doc holds it.
+    * docno of `ids(i)`, null where no doc holds it. A docno page of the
+    * memo is one too, holding every document of its docid range.
     */
   private[graft] final class Docnos(val ids: Array[Long], val docnos: Array[UTF8String]) {
     /** `docid`'s docno by binary search, null if no doc holds it. */
@@ -1595,13 +1597,35 @@ object Searcher {
     }
   }
 
-  /** A partition's (docid, docno) rows as a pair of arrays, docnos copied
-    * out of the reused rows.
+  /** log2 of the docids per page of the docno memo ([[Searcher
+    * .docnoLookup]]): docids are dense within a docid-range group, so a
+    * page of a built index holds up to 4,096 documents.
     */
-  private val readDocnos = (it: Iterator[InternalRow]) => {
+  private[graft] val PageShift = 12
+
+  /** Most docnos the JVM-wide page memo holds, every snapshot's pages
+    * together, least recently used page first out. A constant, not a
+    * setting: it bounds the driver heap to about 64 bytes plus the UTF-8
+    * bytes of the docno per held docno, so 2^18 docnos of 32 bytes take
+    * about 25 MB.
+    */
+  private[graft] val MemoDocnos: Int = 1 << 18
+
+  /** Docno pages by ([[BuiltIndex.snapshotKey]], docid >> [[PageShift]]). */
+  private[graft] val docnoPages =
+    new BuiltIndex.PartMemo[(String, Long), Docnos](MemoDocnos, _.ids.length max 1)
+
+  /** A partition's (docid, docno) rows on the sorted docid `pages` as a
+    * pair of arrays, docnos copied out of the reused rows.
+    */
+  private def readPages(pages: Array[Long]) = (it: Iterator[InternalRow]) => {
     val ds = Array.newBuilder[Long]
     val ns = Array.newBuilder[UTF8String]
-    it.foreach { r => ds += r.getLong(0); ns += r.getUTF8String(1).clone() }
+    it.foreach { r =>
+      if (java.util.Arrays.binarySearch(pages, r.getLong(0) >> PageShift) >= 0) {
+        ds += r.getLong(0); ns += r.getUTF8String(1).clone()
+      }
+    }
     (ds.result(), ns.result())
   }
 

@@ -72,17 +72,27 @@ object StreamFixtures {
     try f finally spark.conf.set(key, prev)
   }
 
-  /** Run `build` once per root: skipped when the `_done` marker exists; a
-    * partial root (killed mid-build) is deleted and rebuilt.
+  /** Run `build` once per root: skipped when the `_done` marker records
+    * this root's path; a partial root (killed mid-build) is deleted and
+    * rebuilt. So is a root copied from another path: a file sink's log
+    * (`_spark_metadata`) names its output files by absolute path, so a
+    * copy would read the original's files, or none once they are gone.
     */
   def cachedRoot(spark: SparkSession, root: String)(build: => Unit): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
+    val path = new org.apache.hadoop.fs.Path(root)
+    val fs = path.getFileSystem(conf)
+    val here = fs.makeQualified(path).toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val done = new org.apache.hadoop.fs.Path(s"$root/_done")
-    if (!fs.exists(done)) {
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val built = fs.exists(done) && {
+      val in = fs.open(done)
+      try java.util.Arrays.equals(in.readAllBytes(), here) finally in.close()
+    }
+    if (!built) {
+      fs.delete(path, true)
       build
-      fs.create(done).close()
+      val out = fs.create(done)
+      try out.write(here) finally out.close()
     }
   }
 }

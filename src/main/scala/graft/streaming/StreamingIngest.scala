@@ -168,9 +168,6 @@ final class UnionIndex(spark0: SparkSession, val dirs: Seq[String], cfg0: IndexC
     extends BuiltIndex(spark0, dirs.head, cfg0) {
   import IndexLayout._
 
-  // a union's stat surface is the union of its branches
-  override def statsKey: String = s"${dirs.mkString("|")}|${cfg0.id}"
-
   // memoized like the base class's table handles (delta dirs are immutable
   // snapshots): one listing + schema read per table per handle
   private val unionedCache =
@@ -179,6 +176,7 @@ final class UnionIndex(spark0: SparkSession, val dirs: Seq[String], cfg0: IndexC
     unionedCache.getOrElseUpdate(sub,
       dirs.map(d => spark.read.parquet(s"$d/$sub")).reduce(_ unionByName _))
 
+  override protected def snapshotDirs: Seq[String] = dirs
   override def docs: DataFrame = unioned(DocsDir)
   // deltas mint docids in disjoint epochs, but distinct guards the case of
   // two deltas sharing a grp high-bits value: the batched complement scan

@@ -150,26 +150,26 @@ class CombinePassSpec extends AnyFunSuite {
     var near = Array.empty[graft.search.RunLine]
     val nearJobs = TestSpark.jobsOf { near = searcher.searchSpanNear(spans, 10).collect() }
     assert(near.nonEmpty)
-    // one range task with the collector in its stage, and the docno lookup
-    assert(nearJobs == 2, s"span-near jobs=$nearJobs")
+    // one range task with the collector in its stage
+    assert(nearJobs == 1, s"span-near jobs=$nearJobs")
 
     val topics = Seq(Topic("q", "apple pear plum"))
     searcher.searchQuery(topics, 10).collect()
     var tree = Array.empty[graft.search.RunLine]
     val treeJobs = TestSpark.jobsOf { tree = searcher.searchQuery(topics, 10).collect() }
     assert(tree.nonEmpty)
-    // one range task with the collector in its stage, and the docno lookup
-    assert(treeJobs == 2, s"searchQuery jobs=$treeJobs")
+    // one range task with the collector in its stage
+    assert(treeJobs == 1, s"searchQuery jobs=$treeJobs")
   }
 
-  test("job count: memo-warm phrase and synonym searches run 2 jobs") {
+  test("job count: memo-warm phrase and synonym searches run 1 job") {
     phraseAndSynonym.foreach { case (what, run) =>
       run() // warms the memo
       var hits = Array.empty[RunLine]
       val jobs = TestSpark.jobsOf { hits = run() }
       assert(hits.nonEmpty, what)
-      // one range task with the collector in its stage, and the docno lookup
-      assert(jobs == 2, s"$what jobs=$jobs")
+      // one range task with the collector in its stage
+      assert(jobs == 1, s"$what jobs=$jobs")
     }
   }
 }

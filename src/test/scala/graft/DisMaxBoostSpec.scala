@@ -121,8 +121,8 @@ class DisMaxBoostSpec extends AnyFunSuite {
       lines = searcher.searchDisMax(Seq(topic), k = 10).collect()
     }
     assert(lines.nonEmpty)
-    // one range task with the collector in its stage, and the docno
-    // lookup; no term_stats job
-    assert(jobs == 2, s"jobs=$jobs")
+    // one range task with the collector in its stage; no term_stats or
+    // docno job
+    assert(jobs == 1, s"jobs=$jobs")
   }
 }

@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[PlanRunner]], the search path's driver collect, returns exactly the
-  * rows `Dataset.collect` does — for the term-stats lookup and both docno
-  * lookup paths, on a plain index, a delete overlay and a [[UnionIndex]] —
-  * and runs no job for an empty plan.
+  * rows `Dataset.collect` does — for the term-stats lookup and the docno
+  * lookup, cold (pages loaded) and warm (from the page memo), on a plain
+  * index, a delete overlay and a [[UnionIndex]] — and runs no job for an
+  * empty plan.
   */
 class PlanRunnerSpec extends AnyFunSuite {
   import PlanRunnerSpec._
@@ -19,8 +20,8 @@ class PlanRunnerSpec extends AnyFunSuite {
 
   private val cfg = IndexConfig(analyzer = AnalyzerConfig(), buckets = 8, groupShift = 8, mergeShift = 1)
 
-  // over 4,096 docs per index, so a lookup of every docid takes the
-  // broadcast path
+  // over 4,096 docs per index, so a lookup of every docid spans
+  // several docno pages
   private def corpus(prefix: String, n: Int): Seq[(String, String)] =
     (0 until n).map(i => (f"$prefix$i%05d", s"w${i % 7} w${i % 13} x${i % 101}"))
 
@@ -70,14 +71,13 @@ class PlanRunnerSpec extends AnyFunSuite {
         assert(got.ids.toSeq == ids.distinct.sorted && got.docnos.length == got.ids.length, name)
         got.ids.toSeq.zip(got.docnos.map(d => if (d == null) null else d.toString))
       }
-      // the pushed-down docid set (≤ 4,096 ids), with an id no doc holds,
-      // unsorted and repeated
+      // the pages loaded, with an id no doc holds, unsorted and repeated
       val few = all.keys.toSeq.sorted.grouped(97).map(_.head).toSeq
       val missing = all.keys.max + 1
       assert(lookup(missing +: (few.reverse ++ few)) == few.map(d => d -> all(d)) :+ (missing -> null), name)
       val s0 = s.docnoLookup(few.toArray)
       assert(few.forall(d => s0(d).toString == all(d)) && s0(missing) == null, name)
-      // the broadcast docid array (> 4,096 ids)
+      // every id (> 4,096), now from the page memo
       assert(lookup(all.keys.toSeq) == all.toSeq.sorted, name)
     }
   }

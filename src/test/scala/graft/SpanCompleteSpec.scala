@@ -203,7 +203,7 @@ class SpanCompleteSpec extends AnyFunSuite {
     var lines = Array.empty[graft.search.RunLine]
     val jobs = TestSpark.jobsOf { lines = searcher.searchSpanFirst(spans, k = 10).collect() }
     assert(lines.nonEmpty)
-    // the scoring + collector stage and the docno lookup; no term_stats job
-    assert(jobs == 2, s"jobs=$jobs")
+    // the scoring + collector stage; no term_stats or docno job
+    assert(jobs == 1, s"jobs=$jobs")
   }
 }

@@ -1,15 +1,15 @@
 package graft
 
 import graft.analysis.AnalyzerConfig
-import graft.index.{BuiltIndex, IndexBuilder, IndexConfig}
+import graft.index.{BuiltIndex, IndexBuilder, IndexConfig, IndexLayout}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The read side's one term-access seam on [[BuiltIndex]]: `forTerms`
   * (bucket partition filter + pushed term IN; no scan for an empty term
-  * set) and `termStatsOf` (per-statsKey memo shared by every handle on the
-  * same statistics surface, absent terms included).
+  * set) and `termStatsOf` (a memo of whole term_stats buckets per
+  * snapshot, shared by every handle on it, absent terms answered too).
   */
 class TermAccessSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -46,7 +46,7 @@ class TermAccessSpec extends AnyFunSuite {
     assert(empty.schema == idx.postingsMatch.schema)
   }
 
-  test("termStatsOf: one lookup per unseen term, shared by every handle on the index") {
+  test("termStatsOf: one lookup per batch of unseen buckets, shared by every handle on the snapshot") {
     val terms = Seq("alpha", "beta", "nope")
     var first = Map.empty[String, (Long, Long)]
     val cold = TestSpark.jobsOf { first = idx.termStatsOf(terms) }
@@ -54,11 +54,12 @@ class TermAccessSpec extends AnyFunSuite {
     // absent terms have no entry; df/cf match the term_stats table
     assert(first == Map("alpha" -> (2L, 2L), "beta" -> (1L, 2L)))
     // a second handle on the same snapshot, the handle open() reads back
-    // from disk and a delete overlay share the memo (same statsKey): hits
-    // and the negative entry alike cost no job
+    // from disk and a delete overlay share the memo (same snapshotKey):
+    // hits and the absent term alike cost no job
     val again = new BuiltIndex(spark, dir, idx.cfg)
     Seq(idx, again, BuiltIndex.open(spark, dir),
         again.withDeletes(TestSpark.tmpDir("termaccess-del"))).foreach { h =>
+      assert(h.snapshotKey == idx.snapshotKey)
       var got = Map.empty[String, (Long, Long)]
       assert(TestSpark.jobsOf { got = h.termStatsOf(terms) } == 0)
       assert(got == first)
@@ -66,24 +67,79 @@ class TermAccessSpec extends AnyFunSuite {
     assert(TestSpark.jobsOf { assert(idx.termStatsOf(Nil).isEmpty) } == 0)
   }
 
-  test("termStatsOf: the memo is bounded, least recently used first out") {
-    assert(idx.termStatsOf(Seq("alpha", "beta")).size == 2)
-    // MemoTerms − 1 absent terms, "beta" read again halfway: every held
-    // entry read before "beta" is evicted, the negative ones counted
-    val fresh = (1 until BuiltIndex.MemoTerms).map(i => s"absent$i")
-    val (h1, h2) = fresh.splitAt(fresh.size / 2)
-    assert(idx.termStatsOf(h1).isEmpty)
-    assert(idx.termStatsOf(Seq("beta")) == Map("beta" -> (1L, 2L)))
-    assert(idx.termStatsOf(h2).isEmpty)
-    assert(BuiltIndex.statsMemo(idx.statsKey).size == BuiltIndex.MemoTerms)
+  test("termStatsOf: an absent term in a loaded bucket costs no job") {
+    val loaded = Set("alpha", "beta", "gamma", "delta").map(IndexLayout.bucketOf(_, idx.cfg.buckets))
+    idx.termStatsOf(Seq("alpha", "beta", "gamma", "delta"))
+    val absent = (0 until 1000).map(i => s"zz$i")
+      .filter(t => loaded(IndexLayout.bucketOf(t, idx.cfg.buckets))).take(20)
+    assert(absent.size == 20)
     var got = Map.empty[String, (Long, Long)]
-    assert(TestSpark.jobsOf { got = idx.termStatsOf(Seq("beta")) } == 0)
-    assert(TestSpark.jobsOf { got = idx.termStatsOf(Seq("alpha")) } == 1)
-    assert(got == Map("alpha" -> (2L, 2L)))
+    assert(TestSpark.jobsOf { got = idx.termStatsOf(absent :+ "gamma") } == 0)
+    assert(got == Map("gamma" -> (1L, 1L)))
+  }
 
-    // past MemoSnapshots statistics surfaces, the least recent one's memo goes
-    BuiltIndex.statsMemo("evict-0").put("alpha", None)
+  /** Over [[BuiltIndex.MemoTerms]] terms, one per doc: 20,000 terms in
+    * eight buckets, about 2,500 each, so six buckets fit the memo and
+    * seven do not.
+    */
+  private lazy val (wide, wideTerms) = {
+    import spark.implicits._
+    val terms = (0 until 20000).map(i => s"w$i")
+    val docs = terms.grouped(100).zipWithIndex.map { case (ts, i) => (s"wd$i", ts.mkString(" ")) }.toSeq
+    (IndexBuilder.build(docs.toDF("docno", "content"), TestSpark.tmpDir("termwide"),
+      IndexConfig(analyzer = AnalyzerConfig(), buckets = 8)), terms)
+  }
+
+  test("termStatsOf: the memo is bounded, least recently used first out") {
+    val byBucket = wideTerms.groupBy(IndexLayout.bucketOf(_, 8))
+    val sizes = (0 until 8).map(byBucket(_).size)
+    assert(sizes.take(6).sum <= BuiltIndex.MemoTerms && sizes.take(7).sum - sizes(1) <= BuiltIndex.MemoTerms &&
+      sizes.take(7).sum > BuiltIndex.MemoTerms, s"bucket sizes $sizes")
+    val memo = BuiltIndex.statsMemo(wide.snapshotKey)
+    wide.termStats // the handle's schema read: one job, not a memo's
+    def jobs(b: Int): Int = TestSpark.jobsOf {
+      assert(wide.termStatsOf(Seq(byBucket(b).head)) == Map(byBucket(b).head -> (1L, 1L)))
+    }
+    (0 until 5).foreach(b => assert(jobs(b) == 1))
+    assert(jobs(0) == 0) // bucket 0 is now the most recently used
+    assert(jobs(5) == 1 && memo.heldRows == sizes.take(6).sum)
+    // the seventh bucket evicts the least recently used one, bucket 1
+    assert(jobs(6) == 1)
+    assert(memo.heldRows == sizes.take(7).sum - sizes(1))
+    assert(jobs(0) == 0 && jobs(6) == 0)
+    assert(jobs(1) == 1)
+    assert(memo.heldRows <= BuiltIndex.MemoTerms)
+
+    // past MemoSnapshots snapshots, the least recent one's memo goes
+    val evicted = BuiltIndex.statsMemo("evict-0")
     (1 to BuiltIndex.MemoSnapshots).foreach(i => BuiltIndex.statsMemo(s"evict-$i"))
-    assert(BuiltIndex.statsMemo("evict-0").isEmpty)
+    assert(!(BuiltIndex.statsMemo("evict-0") eq evicted))
+  }
+
+  test("termStatsOf: a lookup past the memo's bound is still complete") {
+    // a term of every bucket: 20,000 rows loaded in one job, fewer kept
+    val probe = wideTerms.groupBy(IndexLayout.bucketOf(_, 8)).values.map(_.last).toSeq
+    var got = Map.empty[String, (Long, Long)]
+    assert(TestSpark.jobsOf { got = wide.termStatsOf(probe :+ "nope") } == 1)
+    assert(got == probe.map(_ -> (1L, 1L)).toMap)
+    assert(BuiltIndex.statsMemo(wide.snapshotKey).heldRows <= BuiltIndex.MemoTerms)
+  }
+
+  test("union term_stats buckets hold the rows of a monolithic build") {
+    import spark.implicits._
+    val cfg = IndexConfig(analyzer = AnalyzerConfig(), buckets = 8)
+    val docs = (0 until 300).map(i => (f"u$i%04d", s"a${i % 7} b${i % 11} c${i % 50} a${i % 3}"))
+    val mono = IndexBuilder.build(docs.toDF("docno", "content"), TestSpark.tmpDir("termmono"), cfg)
+    val root = TestSpark.tmpDir("termunion")
+    val deltas = docs.grouped(100).zipWithIndex.map { case (ds, b) =>
+      graft.streaming.StreamingIngest.ingestBatch(ds.toDF("docno", "content"), b, root, cfg)
+    }.toSeq
+    val union = new graft.streaming.UnionIndex(spark, deltas.map(_.dir), cfg)
+    def rows(ix: BuiltIndex) = ix.termStats.select("term", "bucket", "df", "max_tf", "cf")
+      .as[(String, Int, Long, Int, Long)].collect().toSeq.sorted
+    assert(rows(union) == rows(mono))
+    val terms = rows(mono).map(_._1) :+ "nope"
+    assert(union.termStatsOf(terms) == mono.termStatsOf(terms))
+    assert(union.termStatsOf(terms).size == terms.size - 1)
   }
 }

@@ -31,6 +31,23 @@ object TestSpark {
     java.nio.file.Files.createTempDirectory(target, prefix).toString
   }
 
+  /** Makes every snapshot's term-stats memo cold: the memos of as many
+    * fresh synthetic snapshots as the memo holds evict every other.
+    */
+  def coldTermStats(): Unit =
+    (1 to graft.index.BuiltIndex.MemoSnapshots).foreach(i =>
+      graft.index.BuiltIndex.statsMemo(s"cold-${System.nanoTime()}-$i"))
+
+  /** Makes every docno page cold: one synthetic page as large as the
+    * page memo's bound evicts every other.
+    */
+  def coldDocnos(): Unit = {
+    import graft.search.Searcher
+    val n = Searcher.MemoDocnos
+    Searcher.docnoPages.getAll(Seq((s"cold-${System.nanoTime()}", 0L)))(ks =>
+      ks.map(_ -> new Searcher.Docnos(Array.tabulate(n)(_.toLong), new Array(n))).toMap)
+  }
+
   /** Spark jobs `body` starts on this thread. A sentinel job in a second
     * group follows it; the listener bus delivers in order, so once the
     * sentinel's start arrives every measured job has been counted.

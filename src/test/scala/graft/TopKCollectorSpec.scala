@@ -17,8 +17,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - engine ≡ brute force (docno, rank and score bits) for OR, AND,
   *     minShouldMatch, a repeated topic term, a delete overlay, and one
   *     batch under 1 and 4 shuffle partitions;
-  *   - job-count pins for a fresh and a memo-warm single-topic search and
-  *     for a batch whose hits take the broadcast docno lookup (> 4,096 ids).
+  *   - job-count pins for a fresh and a memo-warm single-topic search, for
+  *     a search with one cold memo and for a warm batch past 4,096 hits.
   */
 class TopKCollectorSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -210,25 +210,46 @@ class TopKCollectorSpec extends AnyFunSuite {
 
   // ---- job-count pins --------------------------------------------------
 
-  test("job count: memo-warm single-topic OR search at k=10 runs 2 jobs") {
+  test("job count: memo-warm single-topic OR search at k=10 runs 1 job") {
     val s = new Searcher(fullIdx)
     val topic = Seq(Topic("w", "v3 v8"))
-    s.search(topic, k = 10).collect() // warms the term-stats memo
+    s.search(topic, k = 10).collect() // warms the term-stats and docno memos
     var lines = Array.empty[RunLine]
     val jobs = TestSpark.jobsOf { lines = s.search(topic, k = 10).collect() }
     assert(lines.length == 10)
     // scoring: one range task with no exchange, the heap in its stage;
-    // then one docno point lookup
-    assert(jobs == 2, s"jobs=$jobs")
+    // term stats and docnos come from the memos
+    assert(jobs == 1, s"jobs=$jobs")
   }
 
   test("job count: a fresh single-topic OR search at k=10 runs 3 jobs") {
-    // terms no other test of this index reads: the term-stats memo is cold
+    val s = new Searcher(fullIdx)
+    TestSpark.coldTermStats(); TestSpark.coldDocnos()
     var lines = Array.empty[RunLine]
-    val jobs = TestSpark.jobsOf { lines = new Searcher(fullIdx).search(Seq(Topic("f", "v6 v10")), k = 10).collect() }
+    val jobs = TestSpark.jobsOf { lines = s.search(Seq(Topic("f", "v6 v10")), k = 10).collect() }
     assert(lines.length == 10)
-    // one term-stats lookup, one range task, one docno point lookup
+    // one term-stats bucket load, one range task, one docno page load
     assert(jobs == 3, s"jobs=$jobs")
+  }
+
+  test("job count: a cold search runs one extra job per cold memo, never more") {
+    val s = new Searcher(fullIdx)
+    val topic = Seq(Topic("c", "v4 v17"))
+    val batch = (0 until 5).map(g => Topic(s"g$g", s"grp$g v$g v${g + 11}"))
+    assert(batch.flatMap(_.text.split(" ")).map(IndexLayout.bucketOf(_, cfg.buckets)).distinct.size > 1)
+    def jobs(ts: Seq[Topic]): Int = TestSpark.jobsOf { s.search(ts, k = 1000).collect() }
+    jobs(topic)
+    assert(jobs(topic) == 1)
+    // cold term stats: one bucket load and the range task
+    TestSpark.coldTermStats()
+    assert(jobs(topic) == 2)
+    // cold docno pages: the range task and one page load
+    TestSpark.coldDocnos()
+    assert(jobs(topic) == 2)
+    // both cold, a batch over several buckets and every page: one job each
+    TestSpark.coldTermStats(); TestSpark.coldDocnos()
+    assert(jobs(batch) == 3)
+    assert(jobs(batch) == 1)
   }
 
   test("codegen: fresh single-topic searches compile no class") {
@@ -246,7 +267,7 @@ class TopKCollectorSpec extends AnyFunSuite {
     assert(compiled == 0, s"$compiled classes compiled by three fresh searches")
   }
 
-  test("job count: a batch past 4,096 hits takes the one-job broadcast docno lookup") {
+  test("job count: a warm batch past 4,096 hits runs 1 job") {
     val s = new Searcher(fullIdx)
     // each topic matches exactly its own group's 1,000 docs: 5,000 ids
     val batch = (0 until 5).map(g => Topic(s"g$g", s"grp$g"))
@@ -254,7 +275,8 @@ class TopKCollectorSpec extends AnyFunSuite {
     var lines = Array.empty[RunLine]
     val jobs = TestSpark.jobsOf { lines = s.search(batch, k = 1000).collect() }
     assert(lines.map(_.docno).distinct.length > 4096)
-    // one scoring job (5,000 postings: one range, no exchange), one lookup
-    assert(jobs == 2, s"jobs=$jobs")
+    // one scoring job (5,000 postings: one range, no exchange); the
+    // docnos of every page come from the memo
+    assert(jobs == 1, s"jobs=$jobs")
   }
 }

@@ -60,19 +60,19 @@ class WandSpec extends AnyFunSuite {
     assert(prunedN > 0, s"expected pruned blocks, got decoded=$decoded pruned=$prunedN")
   }
 
-  test("job count: a memo-warm pruned single-topic search runs 2 jobs, and prunes") {
+  test("job count: a memo-warm pruned single-topic search runs 1 job, and prunes") {
     import spark.implicits._
     val idx = IndexBuilder.build(wandCorpus.toDF("docno", "content"), TestSpark.tmpDir("wandj"),
       IndexConfig(analyzer = AnalyzerConfig(), groupShift = 4, mergeShift = 1,
         rangePartitions = 2))
     val s = new Searcher(idx)
     val topic = Seq(Topic("q1", "needle hot"))
-    val exhaustive = s.search(topic, 3).collect().toSeq // warms the term-stats memo
+    val exhaustive = s.search(topic, 3).collect().toSeq // warms the memos
     var lines = Array.empty[RunLine]
     val jobs = TestSpark.jobsOf { lines = s.search(topic, 3, pruning = true).collect() }
     assert(lines.toSeq == exhaustive)
-    // one range task (no seed job, no bounds job) and the docno lookup
-    assert(jobs == 2, s"jobs=$jobs")
+    // one range task (no seed job, no bounds job); docnos from the memo
+    assert(jobs == 1, s"jobs=$jobs")
     val (decoded, prunedN) = s.lastPruning
     assert(prunedN > 0, s"expected pruned blocks, got decoded=$decoded pruned=$prunedN")
   }
