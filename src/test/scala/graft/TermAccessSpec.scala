@@ -46,7 +46,7 @@ class TermAccessSpec extends AnyFunSuite {
     assert(empty.schema == idx.postingsMatch.schema)
   }
 
-  test("termStatsOf: one lookup per batch of unseen buckets, shared by every handle on the snapshot") {
+  test("termStatsOf: one lookup per unseen term, shared by every handle on the index") {
     val terms = Seq("alpha", "beta", "nope")
     var first = Map.empty[String, (Long, Long)]
     val cold = TestSpark.jobsOf { first = idx.termStatsOf(terms) }
