@@ -83,35 +83,55 @@ class BuiltIndex(val spark: SparkSession, val dir: String, val cfg: IndexConfig)
 
   /** Per-term (docFreq, collectionFreq) of the indexed `terms` (≙ Lucene's
     * `TermStatistics`, consumed at `BM25.java:61`); absent terms have no
-    * entry. Answered from a memo of whole `bucket` partitions of
-    * term_stats per [[snapshotKey]] (bounded: [[BuiltIndex.MemoSnapshots]],
-    * [[BuiltIndex.MemoTerms]]): the buckets it lacks load in one job, and
+    * entry. Answered from a memo per [[snapshotKey]] (bounded:
+    * [[BuiltIndex.MemoSnapshots]], [[BuiltIndex.MemoTerms]]) whose parts
+    * load in one job. When the whole vocabulary fits the memo
+    * ([[wholeBuckets]]) a part is a `bucket` partition of term_stats, so
     * any later term of a loaded bucket, an absent one included, costs no
-    * job (≙ a terms-dictionary block read, not a per-term seek).
+    * job (≙ a terms-dictionary block read); otherwise a part is one term,
+    * read with a pushed-down term predicate (≙ a per-term seek).
     */
   def termStatsOf(terms: Iterable[String]): Map[String, (Long, Long)] = {
     val ts = terms.toSeq.distinct
-    val buckets = BuiltIndex.statsMemo(snapshotKey)
-      .getAll(ts.map(bucketOf(_, cfg.buckets)).distinct)(loadBuckets)
-    ts.flatMap(t => buckets(bucketOf(t, cfg.buckets)).get(t).map(t -> _)).toMap
+    val parts = BuiltIndex.statsMemo(snapshotKey).getAll(ts.map(statsPart).distinct)(loadStats)
+    ts.flatMap(t => parts(statsPart(t)).get(t).map(t -> _)).toMap
   }
 
-  /** The (bucket, term, df, cf) rows of the term_stats `buckets`: a
-    * partition filter ([[BuiltIndex.inSet]]) and no term predicate, so no
-    * term list compiles a class. A union's filter pushes below its
-    * re-aggregation.
+  /** Whether [[termStatsOf]]'s memo parts are whole buckets: only when the
+    * vocabulary the term_stats manifests record, summed over
+    * [[snapshotDirs]], fits one snapshot's memo, so every bucket a search
+    * touches stays held. A larger vocabulary, or one no manifest records,
+    * is memoized a term at a time: whole buckets of it would evict each
+    * other, each miss reading thousands of rows.
     */
-  private[graft] def bucketRows(buckets: Seq[Int]): DataFrame =
-    termStats.where(BuiltIndex.inSet(spark, "bucket", buckets, -_))
+  private lazy val wholeBuckets: Boolean = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val rows = snapshotDirs.map(d => Checkpoint.readManifest(s"$d/$TermStatsDir", conf).map(_.rowsOut))
+    rows.forall(_.exists(_ >= 0)) && rows.flatten.sum <= BuiltIndex.MemoTerms
+  }
+
+  /** The memo part of `term`: its bucket, or the term itself. */
+  private[graft] def statsPart(term: String): String =
+    if (wholeBuckets) bucketOf(term, cfg.buckets).toString else term
+
+  /** The (bucket, term, df, cf) rows of the memo `parts` ([[statsPart]]):
+    * a bucket partition filter and, for single terms, the pushed term
+    * set, both [[BuiltIndex.inSet]] predicates, so no part list compiles
+    * a class. A union's filter pushes below its re-aggregation.
+    */
+  private[graft] def statsRows(parts: Seq[String]): DataFrame =
+    (if (wholeBuckets) termStats.where(BuiltIndex.inSet(spark, "bucket", parts.map(_.toInt), -_))
+     else forTerms(termStats, parts))
       .select(col("bucket").cast("int"), col("term"), col("df"), col("cf"))
 
-  /** Every term_stats row of `buckets`, an empty bucket included, in one
-    * job.
+  /** Every term_stats row of the memo `parts`, an empty part included, in
+    * one job.
     */
-  private def loadBuckets(buckets: Seq[Int]): Map[Int, BuiltIndex.TermRows] = {
-    val byBucket = graft.PlanRunner.rows(bucketRows(buckets))(r =>
-      (r.getInt(0), r.getUTF8String(1).toString, r.getLong(2), r.getLong(3))).groupBy(_._1)
-    buckets.map(b => b -> BuiltIndex.TermRows(byBucket.getOrElse(b, Array.empty))).toMap
+  private def loadStats(parts: Seq[String]): Map[String, BuiltIndex.TermRows] = {
+    val byPart = graft.PlanRunner.rows(statsRows(parts))(r =>
+      (r.getInt(0), r.getUTF8String(1).toString, r.getLong(2), r.getLong(3)))
+      .groupBy(r => if (wholeBuckets) r._1.toString else r._2)
+    parts.map(p => p -> BuiltIndex.TermRows(byPart.getOrElse(p, Array.empty))).toMap
   }
 
   /** Postings view for paths that never read positions (scoring, WAND,
@@ -222,11 +242,12 @@ object BuiltIndex {
   private val PropsFile = IndexLayout.PropsFile
 
   /** Most snapshots ([[BuiltIndex.snapshotKey]]) holding a term-stat memo,
-    * and most term_stats rows, absent buckets counted as one, per memo:
-    * least recently used first out, a whole bucket at a time. Constants,
-    * not settings: they bound the driver heap a long-lived session
-    * (streaming snapshots, many distinct queries) spends on the memo,
-    * about 10 MB at most.
+    * and most term_stats rows, an empty part counted as one, per memo:
+    * least recently used first out, a whole part (bucket or term) at a
+    * time. Constants, not settings: they bound the driver heap a
+    * long-lived session (streaming snapshots, many distinct queries)
+    * spends on the memo, about 25 MB at most (a one-term part takes about
+    * 200 bytes, a bucket about 70 bytes a row).
     */
   private[graft] val MemoSnapshots = 8
   private[graft] val MemoTerms = 1 << 14
@@ -235,16 +256,18 @@ object BuiltIndex {
     * [[BuiltIndex.snapshotKey]]: every handle on the same snapshot (fresh
     * searchers, delete overlays) shares one.
     */
-  private val statsMemos = lru[String, PartMemo[Int, TermRows]](MemoSnapshots)
+  private val statsMemos = lru[String, PartMemo[String, TermRows]](MemoSnapshots)
 
-  private[graft] def statsMemo(key: String): PartMemo[Int, TermRows] =
-    statsMemos.computeIfAbsent(key, _ => new PartMemo[Int, TermRows](MemoTerms, _.size max 1))
+  private[graft] def statsMemo(key: String): PartMemo[String, TermRows] =
+    statsMemos.computeIfAbsent(key, _ => new PartMemo[String, TermRows](MemoTerms, _.size max 1))
 
-  /** One term_stats bucket's rows, sorted by term. */
+  /** One memo part's term_stats rows (a bucket's, or one term's), sorted
+    * by term.
+    */
   private[graft] final class TermRows private (terms: Array[String], df: Array[Long], cf: Array[Long]) {
     def size: Int = terms.length
 
-    /** (df, cf) of `term`; None when the bucket does not hold it. */
+    /** (df, cf) of `term`; None when the part does not hold it. */
     def get(term: String): Option[(Long, Long)] = {
       val at = java.util.Arrays.binarySearch(terms.asInstanceOf[Array[AnyRef]], term)
       if (at >= 0) Some((df(at), cf(at))) else None
@@ -252,15 +275,17 @@ object BuiltIndex {
   }
 
   private[graft] object TermRows {
-    /** From (bucket, term, df, cf) rows of one bucket. */
-    def apply(rows: Array[(Int, String, Long, Long)]): TermRows = {
+    private val Empty = new TermRows(Array.empty, Array.empty, Array.empty)
+
+    /** From (bucket, term, df, cf) rows of one part. */
+    def apply(rows: Array[(Int, String, Long, Long)]): TermRows = if (rows.isEmpty) Empty else {
       val s = rows.sortBy(_._2)
       new TermRows(s.map(_._2), s.map(_._3), s.map(_._4))
     }
   }
 
-  /** A memo of whole partitions of an index table (a term_stats bucket, a
-    * docid page of docs), bounded by the rows it holds: keeping a
+  /** A memo of whole partitions of an index table (a term_stats bucket or
+    * term, a docid page of docs), bounded by the rows it holds: keeping a
     * partition evicts the least recently used ones until the rows fit, and
     * a partition larger than the bound is not kept. Thread-safe.
     */
@@ -271,23 +296,31 @@ object BuiltIndex {
     /** Rows held. */
     def heldRows: Long = synchronized(held)
 
+    /** The partitions of `keys` the memo holds, each now most recently
+      * used.
+      */
+    def get(keys: Seq[K]): Map[K, V] = synchronized(keys.flatMap(k => Option(parts.get(k)).map(k -> _))).toMap
+
     /** The partitions `keys` (distinct) name: those held from the memo,
       * the rest from one `load`, which returns every key it is given and
       * whose partitions are kept. The answer is complete even where the
       * memo cannot keep all of it.
       */
     def getAll(keys: Seq[K])(load: Seq[K] => Map[K, V]): Map[K, V] = {
-      val hits = synchronized(keys.flatMap(k => Option(parts.get(k)).map(k -> _))).toMap
+      val hits = get(keys)
       val missing = keys.filterNot(hits.contains)
       if (missing.isEmpty) hits
       else {
         val loaded = load(missing)
-        missing.foreach(k => keep(k, loaded(k)))
+        missing.foreach(k => put(k, loaded(k)))
         hits ++ loaded
       }
     }
 
-    private def keep(k: K, v: V): Unit = synchronized {
+    /** Keeps partition `k`, evicting least recently used ones until its
+      * rows fit; one larger than the bound is not kept.
+      */
+    def put(k: K, v: V): Unit = synchronized {
       val old = parts.remove(k)
       if (old != null) held -= rows(old)
       val n = rows(v)

@@ -509,40 +509,59 @@ final class Searcher private[graft] (val index: BuiltIndex, forcedRanges: Int) {
 
   /** docid → docno for a driver-bounded docid set, answered from the
     * JVM-wide memo of docid pages ([[Searcher.PageShift]] docids each,
-    * keyed by [[BuiltIndex.snapshotKey]]): the pages it lacks load in one
-    * job, and a memo-warm lookup runs none (≙ a stored-fields chunk read,
-    * not a per-document seek). The docnos come back aligned with the ids'
-    * sorted, distinct array ([[Searcher.Docnos]]), null where no document
-    * holds an id: a loaded page is complete.
+    * keyed by [[BuiltIndex.snapshotKey]]; ≙ a stored-fields chunk read,
+    * not a per-document seek). A memo-warm lookup runs no job. Otherwise
+    * one job reads the pages the memo lacks whole and keeps them; when
+    * those pages span more than [[Searcher.PageLoadMax]] docids (a large
+    * hit set spread over a large index) it reads only the ids on them and
+    * keeps nothing. The docnos come back aligned with the ids' sorted,
+    * distinct array ([[Searcher.Docnos]]), null where no document holds
+    * an id: a loaded page is complete.
     */
   private[graft] def docnoLookup(ids: Array[Long]): Searcher.Docnos = {
+    import Searcher.{PageShift, docnoPages}
     val sorted = ids.distinct.sorted
     val key = index.snapshotKey
-    val pages = Searcher.docnoPages.getAll(
-      sorted.map(d => (key, d >> Searcher.PageShift)).distinct.toSeq)(loadPages)
-    new Searcher.Docnos(sorted, sorted.map(d => pages((key, d >> Searcher.PageShift))(d)))
+    val pages = sorted.map(_ >> PageShift).distinct
+    val held = docnoPages.get(pages.toSeq.map(key -> _))
+    val missing = pages.filterNot(p => held.contains(key -> p))
+    val read =
+      if (missing.isEmpty) new Searcher.Docnos(Array.emptyLongArray, Array.empty)
+      else if (missing.length.toLong << PageShift <= Searcher.PageLoadMax) {
+        val all = readDocnos(missing.flatMap(p => (p << PageShift) until ((p + 1) << PageShift)))
+        missing.foreach(p => docnoPages.put(key -> p, all.page(p)))
+        all
+      } else readDocnos(sorted.filterNot(d => held.contains(key -> (d >> PageShift))))
+    new Searcher.Docnos(sorted, sorted.map(d => held.get(key -> (d >> PageShift)).fold(read(d))(_(d))))
   }
 
-  /** Every docs row of the docid `pages`, an empty page included, in one
-    * job: the scan prunes grp partitions to the pages' docid ranges (a set
-    * predicate, [[BuiltIndex.inSet]], so no page list compiles a class),
-    * and the task keeps the rows on the pages' sorted array.
+  /** The docnos of the sorted, distinct `docids`, in one job: grp
+    * partition pruning over the docid-sorted doc files, plus either the
+    * docids as a pushed-down set predicate (≤ 4,096 of them; parquet skips
+    * row groups outside their range) or, for more, an in-task filter
+    * against their sorted array, which never builds a large predicate.
+    * Both predicates are set-valued ([[BuiltIndex.inSet]]): generated code
+    * references them, so a fresh search compiles no class. Aligned with
+    * `docids`, null where no document holds one.
     */
-  private def loadPages(keys: Seq[(String, Long)]): Map[(String, Long), Searcher.Docnos] = {
-    import Searcher.PageShift
-    val pages = keys.map(_._2).toArray.sorted
+  private def readDocnos(docids: Array[Long]): Searcher.Docnos = {
     val docShift = index.cfg.groupShift + index.cfg.mergeShift
-    val grps = pages.flatMap(p => (p << PageShift >> docShift) to (((p + 1) << PageShift) - 1 >> docShift))
-    val parts = PlanRunner.partitions(index.docs.where(BuiltIndex.inSet(spark, "grp", grps.toSeq.distinct, -_.toLong))
-      .select("docid", "docno"))(Searcher.readPages(pages))
-    val (ids, docnos) = (parts.flatMap(_._1), parts.flatMap(_._2))
-    val order = ids.indices.sortBy(ids(_)).toArray
-    val (ds, ns) = (order.map(i => ids(i)), order.map(i => docnos(i)))
-    def from(p: Long) = { val at = java.util.Arrays.binarySearch(ds, p << PageShift); if (at >= 0) at else -at - 1 }
-    keys.map { case k @ (_, p) =>
-      val (lo, hi) = (from(p), from(p + 1))
-      k -> new Searcher.Docnos(ds.slice(lo, hi), ns.slice(lo, hi))
-    }.toMap
+    val inGrps = BuiltIndex.inSet(spark, "grp", docids.map(_ >> docShift).distinct.toSeq, -_.toLong)
+    val parts =
+      if (docids.length <= 4096)
+        PlanRunner.partitions(index.docs.where(inGrps && BuiltIndex.inSet(spark, "docid", docids.toSeq, docids.head - _))
+          .select("docid", "docno"))(Searcher.docnoRows(None))
+      else PlanRunner.partitions(index.docs.where(inGrps).select("docid", "docno"))(Searcher.docnoRows(Some(docids)))
+    val docnos = new Array[UTF8String](docids.length)
+    parts.foreach { case (ds, ns) =>
+      var i = 0
+      while (i < ds.length) {
+        val at = java.util.Arrays.binarySearch(docids, ds(i))
+        if (at >= 0) docnos(at) = ns(i)
+        i += 1
+      }
+    }
+    new Searcher.Docnos(docids, docnos)
   }
 
   /** Per-document numeric boost table for [[searchFunctionScore]]: index
@@ -1595,13 +1614,28 @@ object Searcher {
       val at = java.util.Arrays.binarySearch(ids, docid)
       if (at >= 0) docnos(at) else null
     }
+
+    /** The documents of docid page `p` ([[PageShift]]), nulls dropped. */
+    def page(p: Long): Docnos = {
+      def from(d: Long) = { val at = java.util.Arrays.binarySearch(ids, d); if (at >= 0) at else -at - 1 }
+      val on = (from(p << PageShift) until from((p + 1) << PageShift)).filter(docnos(_) != null)
+      new Docnos(on.map(ids(_)).toArray, on.map(docnos(_)).toArray)
+    }
   }
 
   /** log2 of the docids per page of the docno memo ([[Searcher
     * .docnoLookup]]): docids are dense within a docid-range group, so a
-    * page of a built index holds up to 4,096 documents.
+    * page of a built index holds up to 256 documents. Small pages keep a
+    * cold lookup of a few scattered hits cheap on a large index.
     */
-  private[graft] val PageShift = 12
+  private[graft] val PageShift = 8
+
+  /** Most docids one lookup reads as whole pages ([[Searcher
+    * .docnoLookup]]): past it, the lookup reads only its own ids and keeps
+    * no page, so a cold lookup collects at most this many rows (about
+    * 1.5 MB of 32-byte docnos) where a point lookup would collect its ids'.
+    */
+  private[graft] val PageLoadMax: Int = 1 << 14
 
   /** Most docnos the JVM-wide page memo holds, every snapshot's pages
     * together, least recently used page first out. A constant, not a
@@ -1615,14 +1649,15 @@ object Searcher {
   private[graft] val docnoPages =
     new BuiltIndex.PartMemo[(String, Long), Docnos](MemoDocnos, _.ids.length max 1)
 
-  /** A partition's (docid, docno) rows on the sorted docid `pages` as a
-    * pair of arrays, docnos copied out of the reused rows.
+  /** A partition's (docid, docno) rows, only those on the sorted `keep`
+    * array when one is given, as a pair of arrays, docnos copied out of
+    * the reused rows.
     */
-  private def readPages(pages: Array[Long]) = (it: Iterator[InternalRow]) => {
+  private def docnoRows(keep: Option[Array[Long]]) = (it: Iterator[InternalRow]) => {
     val ds = Array.newBuilder[Long]
     val ns = Array.newBuilder[UTF8String]
     it.foreach { r =>
-      if (java.util.Arrays.binarySearch(pages, r.getLong(0) >> PageShift) >= 0) {
+      if (keep.forall(java.util.Arrays.binarySearch(_, r.getLong(0)) >= 0)) {
         ds += r.getLong(0); ns += r.getUTF8String(1).clone()
       }
     }

@@ -97,8 +97,8 @@ object Explain {
     println("\n========== scoring postings view (pos_blob/block_pos_off pruned out of ReadSchema) ==========")
     idx.forTerms(idx.postingsScoring, terms).explain("formatted")
 
-    println("\n========== term_stats bucket load (bucket partition pruning, no term predicate) ==========")
-    idx.bucketRows(terms.map(graft.index.IndexLayout.bucketOf(_, idx.cfg.buckets)).distinct).explain("formatted")
+    println("\n========== term_stats memo load (bucket partition pruning; a term predicate only past the memo's vocabulary) ==========")
+    idx.statsRows(terms.map(idx.statsPart).distinct).explain("formatted")
 
     println("\n========== docs scan for doclens (column pruning: docno, dl only) ==========")
     idx.docs.select("docno", "dl").explain("formatted")

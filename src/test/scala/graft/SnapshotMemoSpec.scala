@@ -15,6 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - a loaded page answers a docid no document holds with null;
   *   - pages are bounded and leave least recently used first, and a lookup
   *     past the bound is still complete;
+  *   - a cold lookup whose pages span more than the page-load cap reads
+  *     only its ids;
   *   - a union of deltas gives the docnos of a rebuild;
   *   - run lines are bit-identical whether the memos are cold or warm.
   */
@@ -77,8 +79,8 @@ class SnapshotMemoSpec extends AnyFunSuite {
     val pages = all.keys.groupBy(_ >> Searcher.PageShift).values.toSeq
     assert(pages.size > 1)
     val edges = pages.flatMap(p => Seq(p.min, p.max))
-    val absent = pages.map(_.max + 1)
-    assert(absent.forall(d => !all.contains(d) && pages.exists(_.head >> Searcher.PageShift == d >> Searcher.PageShift)))
+    val absent = pages.map(_.max + 1).filter(d => !all.contains(d) && d >> Searcher.PageShift == (d - 1) >> Searcher.PageShift)
+    assert(absent.nonEmpty)
     s.docnoLookup(edges.toArray)
     var got: Searcher.Docnos = null
     assert(TestSpark.jobsOf { got = s.docnoLookup((edges ++ absent).toArray) } == 0)
@@ -113,6 +115,27 @@ class SnapshotMemoSpec extends AnyFunSuite {
     assert(huge(("synthetic", 1L)).ids.length == Searcher.MemoDocnos + 1)
     assert(huge(("synthetic", 1L)).ids.length == Searcher.MemoDocnos + 1 && loads == 2)
     assert(memo.heldRows <= Searcher.MemoDocnos)
+  }
+
+  test("docno pages: a cold lookup spanning more than PageLoadMax docids reads only its ids and keeps no page") {
+    import Searcher.PageShift
+    val all = allDocs(idx)
+    TestSpark.coldDocnos()
+    val s = new Searcher(idx)
+    // three documents, and one docid on each of enough empty pages past
+    // the last document that the cold pages span more than PageLoadMax
+    val real = all.keys.toSeq.sorted.take(3)
+    val last = all.keys.max >> PageShift
+    val far = (1 to (Searcher.PageLoadMax >> PageShift) + 1).map(i => ((last + i) << PageShift) + 1)
+    val ids = (real ++ far).toArray
+    var got: Searcher.Docnos = null
+    assert(TestSpark.jobsOf { got = s.docnoLookup(ids) } == 1)
+    assert(real.forall(d => got(d).toString == all(d)) && far.forall(got(_) == null))
+    assert(TestSpark.jobsOf { s.docnoLookup(ids) } == 1)
+    // the three alone load their page, so a repeat runs no job
+    assert(TestSpark.jobsOf { got = s.docnoLookup(real.toArray) } == 1)
+    assert(TestSpark.jobsOf { got = s.docnoLookup(real.toArray) } == 0)
+    assert(real.forall(d => got(d).toString == all(d)))
   }
 
   test("docno pages: a union of deltas gives the docnos of a rebuild") {

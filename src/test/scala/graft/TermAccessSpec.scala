@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The read side's one term-access seam on [[BuiltIndex]]: `forTerms`
   * (bucket partition filter + pushed term IN; no scan for an empty term
-  * set) and `termStatsOf` (a memo of whole term_stats buckets per
-  * snapshot, shared by every handle on it, absent terms answered too).
+  * set) and `termStatsOf` (a memo per snapshot, shared by every handle
+  * on it, absent terms answered too: of whole term_stats buckets when the
+  * vocabulary fits it, else of single terms).
   */
 class TermAccessSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -78,36 +79,47 @@ class TermAccessSpec extends AnyFunSuite {
     assert(got == Map("gamma" -> (1L, 1L)))
   }
 
-  /** Over [[BuiltIndex.MemoTerms]] terms, one per doc: 20,000 terms in
-    * eight buckets, about 2,500 each, so six buckets fit the memo and
-    * seven do not.
+  /** A vocabulary past [[BuiltIndex.MemoTerms]]: 20,000 terms in one
+    * bucket, larger than the memo's bound on its own, so the memo holds
+    * single terms.
     */
   private lazy val (wide, wideTerms) = {
     import spark.implicits._
     val terms = (0 until 20000).map(i => s"w$i")
     val docs = terms.grouped(100).zipWithIndex.map { case (ts, i) => (s"wd$i", ts.mkString(" ")) }.toSeq
     (IndexBuilder.build(docs.toDF("docno", "content"), TestSpark.tmpDir("termwide"),
-      IndexConfig(analyzer = AnalyzerConfig(), buckets = 8)), terms)
+      IndexConfig(analyzer = AnalyzerConfig(), buckets = 1)), terms)
+  }
+
+  test("termStatsOf: past the memo's vocabulary, a bucket larger than the bound still answers repeats from memory") {
+    assert(wideTerms.size > BuiltIndex.MemoTerms)
+    wide.termStats // the handle's schema read: one job, not a memo's
+    var got = Map.empty[String, (Long, Long)]
+    assert(TestSpark.jobsOf { got = wide.termStatsOf(Seq("w1", "w2", "nope")) } == 1)
+    assert(got == Map("w1" -> (1L, 1L), "w2" -> (1L, 1L)))
+    // single terms are held, the absent one too: a repeat costs no job,
+    // another term of the same bucket one
+    assert(TestSpark.jobsOf { got = wide.termStatsOf(Seq("w2", "nope", "w1")) } == 0)
+    assert(got == Map("w1" -> (1L, 1L), "w2" -> (1L, 1L)))
+    assert(TestSpark.jobsOf { got = wide.termStatsOf(Seq("w3")) } == 1)
+    assert(BuiltIndex.statsMemo(wide.snapshotKey).heldRows == 4)
   }
 
   test("termStatsOf: the memo is bounded, least recently used first out") {
-    val byBucket = wideTerms.groupBy(IndexLayout.bucketOf(_, 8))
-    val sizes = (0 until 8).map(byBucket(_).size)
-    assert(sizes.take(6).sum <= BuiltIndex.MemoTerms && sizes.take(7).sum - sizes(1) <= BuiltIndex.MemoTerms &&
-      sizes.take(7).sum > BuiltIndex.MemoTerms, s"bucket sizes $sizes")
     val memo = BuiltIndex.statsMemo(wide.snapshotKey)
-    wide.termStats // the handle's schema read: one job, not a memo's
-    def jobs(b: Int): Int = TestSpark.jobsOf {
-      assert(wide.termStatsOf(Seq(byBucket(b).head)) == Map(byBucket(b).head -> (1L, 1L)))
-    }
-    (0 until 5).foreach(b => assert(jobs(b) == 1))
-    assert(jobs(0) == 0) // bucket 0 is now the most recently used
-    assert(jobs(5) == 1 && memo.heldRows == sizes.take(6).sum)
-    // the seventh bucket evicts the least recently used one, bucket 1
-    assert(jobs(6) == 1)
-    assert(memo.heldRows == sizes.take(7).sum - sizes(1))
-    assert(jobs(0) == 0 && jobs(6) == 0)
-    assert(jobs(1) == 1)
+    // "w1", then "w0", then MemoTerms − 1 other terms, absent ones
+    // counted, "w0" read again halfway: "w1" leaves, "w0" stays
+    val fresh = wideTerms.drop(10).take(BuiltIndex.MemoTerms / 2) ++
+      (0 until BuiltIndex.MemoTerms / 2 - 1).map(i => s"absent$i")
+    val (h1, h2) = fresh.splitAt(fresh.size / 2)
+    wide.termStatsOf(Seq("w1"))
+    wide.termStatsOf(Seq("w0"))
+    wide.termStatsOf(h1)
+    assert(wide.termStatsOf(Seq("w0")) == Map("w0" -> (1L, 1L)))
+    wide.termStatsOf(h2)
+    assert(memo.heldRows == BuiltIndex.MemoTerms)
+    assert(TestSpark.jobsOf { wide.termStatsOf(Seq("w0")) } == 0)
+    assert(TestSpark.jobsOf { wide.termStatsOf(Seq("w1")) } == 1)
     assert(memo.heldRows <= BuiltIndex.MemoTerms)
 
     // past MemoSnapshots snapshots, the least recent one's memo goes
@@ -117,11 +129,10 @@ class TermAccessSpec extends AnyFunSuite {
   }
 
   test("termStatsOf: a lookup past the memo's bound is still complete") {
-    // a term of every bucket: 20,000 rows loaded in one job, fewer kept
-    val probe = wideTerms.groupBy(IndexLayout.bucketOf(_, 8)).values.map(_.last).toSeq
+    // every term and an absent one: 20,001 parts loaded in one job, fewer kept
     var got = Map.empty[String, (Long, Long)]
-    assert(TestSpark.jobsOf { got = wide.termStatsOf(probe :+ "nope") } == 1)
-    assert(got == probe.map(_ -> (1L, 1L)).toMap)
+    assert(TestSpark.jobsOf { got = wide.termStatsOf(wideTerms :+ "nope") } == 1)
+    assert(got == wideTerms.map(_ -> (1L, 1L)).toMap)
     assert(BuiltIndex.statsMemo(wide.snapshotKey).heldRows <= BuiltIndex.MemoTerms)
   }
 
